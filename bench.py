@@ -549,7 +549,7 @@ def _loadavg() -> list[float]:
 # Per-query override of the best-of-2 rule.  ref_pipeline_scheduleA2's
 # generated projection (~300-field nested tree -> 40-column clean/cast)
 # is so large that HotSpot takes several EXECUTIONS to finish compiling
-# it: tools/profile_scheduleA2.py measured the same memoized plan at
+# it: a per-run profile measured the same memoized plan at
 # 1.9-6.8 s wall / 11-126 executor-s across consecutive runs, CPU-bound
 # (cpu_s ~= run_s), zero spill, shuffle flat at 16.1 MB — i.e. the
 # spread is interpreted-vs-JITted code, not the engine.  r12's 12.0 s /
@@ -800,7 +800,7 @@ def _scheduleA2_decompose(spark, queries, sf_dir: str) -> dict:
     projection interpreted — measured 6.8 s wall / 126 executor-s /
     110 cpu-s for the identical plan+data that later runs at 1.9 s /
     11 executor-s / 8 cpu-s, with zero spill and shuffle flat at
-    16.1 MB (tools/profile_scheduleA2.py) — r12's "303 executor-s"
+    16.1 MB (per-run stage profile) — r12's "303 executor-s"
     was this regime;
     (c) steady state: ~2 s at sf0.1, the number that scales.
     Reports each regime separately so round-over-round comparison can

@@ -131,12 +131,12 @@ def minhash_signatures(shingles: DataFrame, n_hashes: int = N_HASHES) -> DataFra
 
 
 def lsh_candidates(signatures: DataFrame, band_rows: int = BAND_ROWS,
-                   n_hashes: int = N_HASHES, materialize: bool = True) -> DataFrame:
+                   n_hashes: int = N_HASHES) -> DataFrame:
     """Band the signatures and emit distinct colliding pairs (doc1 < doc2).
 
-    ``materialize=True`` localCheckpoints the banded table before the
-    self-join: both join sides otherwise re-evaluate the ENTIRE
-    upstream lineage (corpus scan + shingle explode + K-wide min agg)
+    The banded table is localCheckpointed before the self-join: both
+    join sides otherwise re-evaluate the ENTIRE upstream lineage
+    (corpus scan + shingle explode + K-wide min agg)
     — at 100 TB that is two extra full-corpus passes to build a table
     that is only O(n_docs x n_bands) rows."""
     band_structs = [
@@ -151,8 +151,7 @@ def lsh_candidates(signatures: DataFrame, band_rows: int = BAND_ROWS,
     bands = signatures.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
         "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    if materialize:
-        bands = bands.localCheckpoint()
+    bands = bands.localCheckpoint()
     b1 = bands.select(F.col("doc_id").alias("doc1"), "band", "key")
     b2 = bands.select(F.col("doc_id").alias("doc2"), "band", "key")
     return (

@@ -118,41 +118,6 @@ def sample_frames(media: DataFrame, fps_every_s: float = 2.0) -> DataFrame:
     return media.mapInPandas(run, schema=FRAME_SCHEMA)
 
 
-def chunk_docs_udtf():
-    """Spark 4 Python UDTF twin of ``queries.pipeline_ops.
-    doc_chunk_windows`` — the 1->N table function API surface
-    (SURVEY §2.8; the reference's per-row explode loop generalized).
-
-    The builtin sequence/slice/explode plan is the hot path — this
-    exists to prove the UDTF surface and is equivalence-tested against
-    that plan in tests/test_functions.py.  Lateral-join usage::
-
-        spark.udtf.register("chunk_docs", chunk_docs_udtf())
-        spark.sql("SELECT c.* FROM documents, LATERAL chunk_docs(doc_id, text) c")
-    """
-    import hashlib
-
-    from pyspark.sql.functions import udtf
-
-    class ChunkDocs:
-        def eval(self, doc_id: int, text: str):
-            toks = text.split(" ")
-            n = len(toks)
-            for idx, start in enumerate(range(0, n, 24)):
-                chunk = toks[start:start + 32]
-                yield (
-                    doc_id,
-                    idx,
-                    len(chunk),
-                    hashlib.md5(" ".join(chunk).encode()).hexdigest(),
-                )
-
-    return udtf(
-        ChunkDocs,
-        returnType="doc_id long, chunk_idx int, chunk_tokens int, chunk_md5 string",
-    )
-
-
 RESIZE_SCHEMA = (
     "doc_id long, media_type string, in_width int, in_height int, "
     "out_width int, out_height int, resized_sha string"
@@ -211,53 +176,6 @@ def resize_media(media: DataFrame, target_w: int = 96, target_h: int = 64) -> Da
             )
 
     return media.mapInPandas(run, schema=RESIZE_SCHEMA)
-
-
-def extract_features_arrow(media: DataFrame) -> DataFrame:
-    """``mapInArrow`` twin of :func:`extract_features` — identical
-    semantics, different batch transport.  For BINARY payload columns
-    the Arrow path matters: ``mapInPandas`` materializes every payload
-    as a Python ``bytes`` object in an object-dtype Series (one heap
-    allocation + refcount per cell), while ``pyarrow.RecordBatch``
-    hands the payload buffer over zero-copy and only the per-row
-    ``as_py()`` touch pays Python cost.  Same shuffle story (none);
-    the choice is purely about batch-boundary overhead, which at
-    100 TB of media is the hot constant factor.  Equivalence with the
-    pandas path is test-enforced."""
-    import pyarrow as pa
-
-    def run(batches):
-        decoder = _try_real_decoder() or "fake-sha256"
-        for batch in batches:
-            doc_ids = batch.column("doc_id")
-            mtypes = batch.column("media_type")
-            payloads = batch.column("payload")
-            n = batch.num_rows
-            n_bytes, sha_prefix, widths, heights = [], [], [], []
-            for i in range(n):
-                buf = payloads[i].as_py()
-                h = hashlib.sha256(buf).hexdigest()
-                n_bytes.append(len(buf))
-                sha_prefix.append(h[:16])
-                widths.append(64 + int(h[:2], 16) % 64)
-                heights.append(64 + int(h[2:4], 16) % 64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    doc_ids,
-                    mtypes,
-                    pa.array(n_bytes, type=pa.int64()),
-                    pa.array(sha_prefix, type=pa.string()),
-                    pa.array(widths, type=pa.int32()),
-                    pa.array(heights, type=pa.int32()),
-                    pa.array([decoder] * n, type=pa.string()),
-                ],
-                names=[
-                    "doc_id", "media_type", "n_bytes", "sha_prefix",
-                    "fake_width", "fake_height", "decoder",
-                ],
-            )
-
-    return media.mapInArrow(run, schema=FEATURE_SCHEMA)
 
 
 # ------------------------------------------------------ real audio path

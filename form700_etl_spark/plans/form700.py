@@ -113,7 +113,13 @@ def synthesize_filings(
     analysis + codegen for the full ~300-field tree first — on a fresh
     JVM that cost ran 36 s for ref_pipeline_scheduleA2 at sf0.1 vs
     1.9 s warm (BENCH_DETAIL r10 queries_cold).  Pruned and unpruned
-    plans produce identical values for every retained column.
+    plans are NOT cell-identical: for a filing that has lineitems but
+    none qualifying for the schedule, a single-dataset build yields NULL
+    for that schedule's array where the full build yields ``[]`` (the
+    pre-filter below).  The two are equal only after ``explode_outer``
+    (both give one all-NULL schedule row), which is how every pipeline
+    dataset consumes them; a direct consumer of the array (``size``,
+    ``isnull``) sees the difference.
 
     Every synthesized expression is rendered as a SQL STRING and enters
     the plan through ONE ``F.expr``/``selectExpr`` parse per output
@@ -657,9 +663,7 @@ def pipeline_dataset(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     return _DATASET_PLAN_CACHE[key]
 
 
-def run_dual(
-    spark: SparkSession, sf_dir: str, reuse_source: bool = True
-) -> dict[str, DataFrame]:
+def run_dual(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """O2 dual-run (Form700.py:716-718): the same pipeline twice, once
     private and once redacted, redacted datasets keyed ``*_redacted``
     per the table registry.  Redaction is a source-side flag in the
@@ -667,18 +671,16 @@ def run_dual(
     modeled here as a source filter so the run parameterization matches
     the reference's shape.
 
-    ``reuse_source`` (default): the nested filings table is
-    ``localCheckpoint``-ed so the extraction/parse lineage runs ONCE and
-    all 16 downstream dataset plans read the materialized source — at
+    The nested filings table is ``localCheckpoint``-ed so the
+    extraction/parse lineage runs ONCE and all 16 downstream dataset
+    plans read the materialized source — at
     100 TB you re-read the extracted snapshot, you do not re-extract per
     dataset.  (The redacted twin derives from the same snapshot; masking
     is a projection on top.)  The checkpoint is lazy: it materializes on
     the first downstream action and every later dataset plan reads the
     snapshot instead of re-running the source lineage."""
     registry = load_table_registry()
-    filings = synthesize_filings(spark, sf_dir)
-    if reuse_source:
-        filings = filings.localCheckpoint(eager=False)
+    filings = synthesize_filings(spark, sf_dir).localCheckpoint(eager=False)
     out: dict[str, DataFrame] = {}
     for redacted in (False, True):
         src = filings

@@ -24,9 +24,9 @@ SURVEY §7 "hard parts" says design that out, not port it):
 4. audit (A2/A3) from per-partition count records returned by the write
    pass itself — one scan, and exact under task retry because Spark
    only surfaces results from each task's final successful attempt
-   (the commit-message pattern; the V2 writer in
-   ``sinks/chunked_datasource.py`` is the same design at the API level
-   and the primary path when the sink is addressable as a format).
+   (the commit-message pattern; the streaming writer in
+   ``sinks/chunked_datasource.py`` commits per micro-batch the same way
+   and cuts its chunks with the same ``row_chunks``).
 
 The client is an injectable protocol; ``LocalDirClient`` (one JSON
 file per chunk id — naturally idempotent) serves tests and local runs.
@@ -37,10 +37,11 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections.abc import Iterable, Iterator
 from dataclasses import dataclass
 from typing import Protocol
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 
 class SinkClient(Protocol):
@@ -145,7 +146,6 @@ class ChunkedSinkConfig:
     delay_s: float = 1.0
     backoff: float = 2.0
     throttle_s: float = 0.25  # reference throttle, Form700.py:495
-    mode: str = "replace"  # 'replace' | 'upsert'
 
 
 @dataclass
@@ -234,6 +234,20 @@ def write_job_report(reports: list[SinkReport], path: str, job_name: str = "form
     return "\n".join(lines)
 
 
+def row_chunks(rows: Iterable[Row], chunk_size: int) -> Iterator[list[dict]]:
+    """K1/K2: a task's rows as successive lists of at most ``chunk_size``
+    row dicts (``asDict(recursive=True)``, nested rows included) — the
+    chunking both the batch and the streaming writer deliver."""
+    chunk: list[dict] = []
+    for row in rows:
+        chunk.append(row.asDict(recursive=True))
+        if len(chunk) >= chunk_size:
+            yield chunk
+            chunk = []
+    if chunk:
+        yield chunk
+
+
 class ChunkedSink:
     def __init__(self, client: SinkClient, config: ChunkedSinkConfig = ChunkedSinkConfig()):
         self.client = client
@@ -242,9 +256,8 @@ class ChunkedSink:
     def write(self, df: DataFrame, dataset: str = "dataset") -> SinkReport:
         """ONE data pass: each partition writes its chunks and returns a
         tiny ``(rows_read, rows_client_reported)`` record, collected on
-        the driver — the same retry-safe commit-message idea as the V2
-        writer (sinks/chunked_datasource.py, the primary path when the
-        sink can be addressed as a DataFrame format).  ``collect`` only
+        the driver — the same retry-safe commit-message idea as the
+        streaming writer (sinks/chunked_datasource.py).  ``collect`` only
         returns results from the final *successful* attempt of each
         task, so a retried task never double-counts — the exactness an
         accumulator cannot give (accumulators re-add on re-execution)
@@ -257,27 +270,21 @@ class ChunkedSink:
         endpoint's ``upsert`` acknowledged."""
         config, client = self.config, self.client
 
-        if config.mode == "replace":
-            client.truncate()  # once, on the driver, before any writes
+        client.truncate()  # the replace: once, on the driver, before any writes
 
         def write_partition(rows_iter):
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
-            chunk: list[dict] = []
-            chunk_idx = 0
             rows_read = 0
             rows_reported = 0
-
-            def flush() -> None:
-                nonlocal chunk_idx, rows_reported
-                if not chunk:
-                    return
+            for chunk_idx, chunk in enumerate(row_chunks(rows_iter, config.chunk_size)):
                 chunk_id = f"{dataset}-p{pid:05d}-c{chunk_idx:05d}"
+                rows_read += len(chunk)
                 delay = config.delay_s
                 for attempt in range(config.tries):
                     try:
-                        rows_reported += client.upsert(chunk_id, list(chunk))
+                        rows_reported += client.upsert(chunk_id, chunk)
                         break
                     except Exception:
                         if attempt == config.tries - 1:
@@ -286,15 +293,6 @@ class ChunkedSink:
                         delay *= config.backoff
                 if config.throttle_s:
                     time.sleep(config.throttle_s)
-                chunk.clear()
-                chunk_idx += 1
-
-            for row in rows_iter:
-                chunk.append(row.asDict(recursive=True))
-                rows_read += 1
-                if len(chunk) >= config.chunk_size:
-                    flush()
-            flush()
             yield (rows_read, rows_reported)
 
         counts = df.rdd.mapPartitions(write_partition).collect()

@@ -1,21 +1,15 @@
-"""Chunked sink as a Spark Python DataSource WRITER (V2 API).
+"""Chunked sink as a Spark Python DataSource stream WRITER (V2 API).
 
-Complements ``sources/rest_datasource.py`` on the write side:
+Complements ``sources/rest_datasource.py`` on the write side of the
+continuous ETL:
 
     spark.dataSource.register(ChunkedDirDataSource)
-    (df.write.format("chunked_dir")
+    (stream_df.writeStream.format("chunked_dir")
        .option("path", "/sink/dir").option("chunk_size", "500")
-       .mode("append").save())
+       .option("checkpointLocation", "/ckpt").start())
 
-The V2 commit protocol gives the idempotence story for free at the API
-level: each task writes chunks named by (partition, chunk index) and
-returns a WriterCommitMessage listing them; ``commit`` runs ONCE on
-the driver after every task succeeded and publishes a ``_MANIFEST``
-naming the committed chunks plus the audited row count (the reference's
-A2/A3 reconciliation, Form700.py:611-618).  ``abort`` removes partial
-output.  A re-executed task overwrites its own deterministic chunk ids,
-so retries never double-count — the design fix for the reference's
-retry-after-partial-success bug (SURVEY §7).
+The batch load is ``sinks/chunked.py::ChunkedSink``; both cut a task's
+rows with the same ``row_chunks``.
 """
 
 from __future__ import annotations
@@ -27,9 +21,10 @@ from dataclasses import dataclass
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceStreamWriter,
-    DataSourceWriter,
     WriterCommitMessage,
 )
+
+from .chunked import row_chunks
 
 
 @dataclass
@@ -38,66 +33,8 @@ class ChunkCommit(WriterCommitMessage):
     rows: int
 
 
-class ChunkedDirWriter(DataSourceWriter):
-    def __init__(self, options, overwrite: bool):
-        self.path = options["path"]
-        self.chunk_size = int(options.get("chunk_size", "1000"))
-        self.overwrite = overwrite
-        os.makedirs(self.path, exist_ok=True)
-
-    def write(self, iterator) -> ChunkCommit:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId()
-        files: list[str] = []
-        rows = 0
-        chunk: list[dict] = []
-        chunk_idx = 0
-
-        def flush():
-            nonlocal chunk_idx, rows
-            if not chunk:
-                return
-            name = f"part-{pid:05d}-c{chunk_idx:05d}.json"
-            tmp = os.path.join(self.path, f".{name}.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(chunk, fh, default=str)
-            os.replace(tmp, os.path.join(self.path, name))  # atomic, idempotent
-            files.append(name)
-            rows += len(chunk)
-            chunk.clear()
-            chunk_idx += 1
-
-        for row in iterator:
-            chunk.append(row.asDict(recursive=True))
-            if len(chunk) >= self.chunk_size:
-                flush()
-        flush()
-        return ChunkCommit(files=tuple(files), rows=rows)
-
-    def commit(self, messages) -> None:
-        manifest = {
-            "files": sorted(f for m in messages for f in m.files),
-            "rows_inserted": sum(m.rows for m in messages),
-        }
-        tmp = os.path.join(self.path, "._MANIFEST.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self.path, "_MANIFEST"))
-
-    def abort(self, messages) -> None:
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.files:
-                try:
-                    os.unlink(os.path.join(self.path, f))
-                except FileNotFoundError:
-                    pass
-
-
 class ChunkedDirStreamWriter(DataSourceStreamWriter):
-    """Streaming twin of the chunked sink: micro-batch exactly-once via
+    """The streaming chunked sink: micro-batch exactly-once via
     per-batch manifests.
 
     The task-side ``write`` cannot know the batch id (the V2 stream
@@ -131,13 +68,7 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
         attempt = uuid.uuid4().hex[:8]  # unique per task attempt AND batch
         files: list[str] = []
         rows = 0
-        chunk: list[dict] = []
-        chunk_idx = 0
-
-        def flush():
-            nonlocal chunk_idx, rows
-            if not chunk:
-                return
+        for chunk_idx, chunk in enumerate(row_chunks(iterator, self.chunk_size)):
             name = f"stream-p{pid:05d}-{attempt}-c{chunk_idx:05d}.json"
             tmp = os.path.join(self.path, f".{name}.tmp")
             with open(tmp, "w") as fh:
@@ -145,14 +76,6 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
             os.replace(tmp, os.path.join(self.path, name))
             files.append(name)
             rows += len(chunk)
-            chunk.clear()
-            chunk_idx += 1
-
-        for row in iterator:
-            chunk.append(row.asDict(recursive=True))
-            if len(chunk) >= self.chunk_size:
-                flush()
-        flush()
         return ChunkCommit(files=tuple(files), rows=rows)
 
     def commit(self, messages, batchId: int) -> None:
@@ -203,9 +126,6 @@ class ChunkedDirDataSource(DataSource):
     @classmethod
     def name(cls) -> str:
         return "chunked_dir"
-
-    def writer(self, schema, overwrite: bool) -> ChunkedDirWriter:
-        return ChunkedDirWriter(self.options, overwrite)
 
     def streamWriter(self, schema, overwrite: bool) -> ChunkedDirStreamWriter:
         return ChunkedDirStreamWriter(self.options)

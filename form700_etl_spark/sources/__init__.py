@@ -1,3 +1,4 @@
 """Source connectors (reference SURVEY §2.1)."""
 
-from .rest import PaginatedRestSource, RestSourceConfig  # noqa: F401
+from .rest import RestSourceConfig  # noqa: F401
+from .rest_datasource import read_rest  # noqa: F401

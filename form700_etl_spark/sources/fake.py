@@ -3,8 +3,8 @@
 Serves tests, demos and offline benchmarking of the REST source — the
 page shape mirrors the reference API (``totalMatchingPages`` +
 ``filings`` list; see /root/reference/Form700.py:129-151 semantics).
-Lives in the package (not in tests/) so executor workers can unpickle
-it when it ships inside a ``mapInPandas`` closure.
+Lives in the package (not in tests/) so executor workers can import
+it by name as the REST reader's ``transport``.
 """
 
 from __future__ import annotations

@@ -1,4 +1,4 @@
-"""Paginated REST source — the reference's extract path, re-planned for Spark.
+"""Paginated REST source — configuration, transport and per-page retry.
 
 Reference behavior (SURVEY §2.1, /root/reference/Form700.py):
 - S1 ``grabCookies`` (:107-113): authenticate once, reuse cookies.
@@ -9,15 +9,10 @@ Reference behavior (SURVEY §2.1, /root/reference/Form700.py):
   list-concatenated (a UNION ALL across pages).
 - S4/S5: pluck ``'filings'`` / per-schedule keys, flatten.
 
-Spark re-plan: the driver fetches page 1 once to learn the page count
-(S3's in-flight cardinality discovery becomes a cheap probe), then the
-remaining pages are fetched **in parallel on executors** via
-``spark.range(n_pages)`` + ``mapInPandas`` (one HTTP call per page
-task, Arrow-batched rows out), and parsed with an explicit schema via
-``from_json`` — no driver bottleneck, no schema inference. At 100 TB
-the same shape holds: page ids are just a partitioned integer domain,
-and fetch parallelism is governed by ordinary task scheduling
-(plus ``max_parallel_pages`` to be polite to the upstream API).
+The scan itself is the Python DataSource in ``rest_datasource.py``
+(``read_rest`` for batch, ``readStream.format("paginated_rest")`` for
+streaming): the driver probes page 1 for the page count, then the pages
+are fetched in parallel on executors, each through ``_fetch_with_retry``.
 
 The HTTP transport is injectable (``fetch_page``) so tests run against
 an in-process fake; the real transport uses ``requests`` behind an
@@ -26,13 +21,8 @@ import-try (not baked into the test image).
 
 from __future__ import annotations
 
-import json
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass, field
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 FetchPage = Callable[["RestSourceConfig", int], dict]
 """(config, 1-based page index) -> decoded JSON page body."""
@@ -92,63 +82,3 @@ def requests_fetch_page(config: RestSourceConfig, page: int) -> dict:
     )
     resp.raise_for_status()
     return resp.json()
-
-
-class PaginatedRestSource:
-    """Parallel paginated scan: probe page 1 on the driver, fan the rest
-    out to executors, return one DataFrame of raw page payloads or a
-    parsed/flattened DataFrame when a schema is given."""
-
-    def __init__(self, config: RestSourceConfig, fetch_page: FetchPage = requests_fetch_page):
-        self.config = config
-        self.fetch_page = fetch_page
-
-    def probe(self) -> tuple[int, dict]:
-        """Driver-side page-1 probe: returns (total_pages, first_page)."""
-        first = _fetch_with_retry(self.fetch_page, self.config, 1)
-        return int(first.get("totalMatchingPages", 1)), first
-
-    def read_pages(self, spark: SparkSession, key_to_pluck: str | None = None) -> DataFrame:
-        """Fetch all pages; one row per record, column ``value`` holding
-        the record's JSON text plus a ``page`` provenance column."""
-        total_pages, first = self.probe()
-        config, fetch_page = self.config, self.fetch_page
-
-        def records_of(page_body: dict, page_idx: int) -> list[tuple[int, str]]:
-            payload = page_body.get(key_to_pluck) if key_to_pluck else page_body.get("items", page_body)
-            if not isinstance(payload, list):
-                payload = [payload]
-            return [(page_idx, json.dumps(rec, sort_keys=True)) for rec in payload]
-
-        first_rows = records_of(first, 1)
-
-        def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                out: list[tuple[int, str]] = []
-                for page_idx in pdf["id"].tolist():
-                    body = _fetch_with_retry(fetch_page, config, int(page_idx))
-                    out.extend(records_of(body, int(page_idx)))
-                yield pd.DataFrame(out, columns=["page", "value"])
-
-        if total_pages <= 1:
-            return spark.createDataFrame(first_rows, "page int, value string")
-        rest = (
-            spark.range(2, total_pages + 1)
-            .repartition(min(total_pages - 1, config.max_parallel_pages))
-            .mapInPandas(fetch_partition, schema="page int, value string")
-        )
-        head = spark.createDataFrame(first_rows, "page int, value string")
-        return head.unionByName(rest)
-
-    def read(
-        self,
-        spark: SparkSession,
-        schema: str,
-        key_to_pluck: str | None = None,
-    ) -> DataFrame:
-        """S4/S5: parse each record with an explicit schema (``from_json``)
-        and flatten the top-level struct — nested fields stay nested as
-        proper Spark structs/arrays (richer than the reference, which
-        destroys nesting eagerly with json_normalize)."""
-        raw = self.read_pages(spark, key_to_pluck=key_to_pluck)
-        return raw.select(F.from_json("value", schema).alias("r")).select("r.*")

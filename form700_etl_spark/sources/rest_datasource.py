@@ -1,8 +1,13 @@
-"""Paginated REST scan as a real Spark Python DataSource (V2 API).
+"""Paginated REST scan as a Spark Python DataSource (V2 API).
 
-The mapInPandas fetcher in ``rest.py`` is the workhorse; this module
-exposes the same scan through Spark 4's ``pyspark.sql.datasource``
-API so it composes with the normal reader surface:
+The one REST scan of the engine, for batch and stream alike:
+
+    df = read_rest(spark, RestSourceConfig(url=...), schema_ddl,
+                   key_to_pluck="filings", transport=fake_fetch_page)
+
+or, through the normal reader surface (options travel as strings — the
+V2 contract — so the transport is named as ``module:function`` and
+imported inside the executor)::
 
     spark.dataSource.register(PaginatedRestDataSource)
     df = (spark.read.format("paginated_rest")
@@ -14,18 +19,25 @@ API so it composes with the normal reader surface:
 
 Planning mirrors the reference's dynamic page-count discovery
 (/root/reference/Form700.py:129-144): ``partitions()`` probes page 1
-on the driver, then emits ONE InputPartition PER PAGE, so Spark
-schedules page fetches exactly like file splits — parallel, retryable
-per-task, locality-free.  Options travel as strings (the V2 contract),
-so the transport is named as ``module:function`` and imported inside
-the executor.
+on the driver, then packs the pages into at most ``max_parallel_pages``
+InputPartitions of contiguous pages (the cap keeps the engine polite to
+the upstream API), so Spark schedules page fetches exactly like file
+splits — parallel and locality-free.  Every fetch, driver probe
+included, goes through the config's per-page retry policy.  Records
+are yielded in schema order with nesting kept: nested fields arrive as
+proper Spark structs/arrays (richer than the reference, which destroys
+nesting eagerly with json_normalize), and the engine never infers a
+schema from a remote payload.
 """
 
 from __future__ import annotations
 
+import dataclasses
 import importlib
+import json
 from collections.abc import Iterator
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -33,7 +45,7 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .rest import RestSourceConfig
+from .rest import FetchPage, RestSourceConfig, _fetch_with_retry, requests_fetch_page
 
 
 def _load_transport(spec: str):
@@ -42,55 +54,84 @@ def _load_transport(spec: str):
 
 
 class _PagePartition(InputPartition):
-    def __init__(self, page: int):
-        self.page = page
+    def __init__(self, pages: tuple[int, ...]):
+        self.pages = pages
+
+
+def _config_to_options(config: RestSourceConfig) -> dict[str, str]:
+    """Every set ``RestSourceConfig`` field as a V2 string option."""
+    options = {}
+    for f in dataclasses.fields(config):
+        value = getattr(config, f.name)
+        if value is not None:
+            options[f.name] = json.dumps(value) if isinstance(value, (bool, dict)) else str(value)
+    return options
 
 
 def _options_to_config(options) -> RestSourceConfig:
-    return RestSourceConfig(
-        url=options.get("url", ""),
-        agency_prefix=options.get("agency_prefix", ""),
-        page_size=int(options.get("page_size", "1000")),
-        is_redacted=options.get("is_redacted", "false").lower() == "true",
-    )
+    """Inverse of ``_config_to_options``; each field is decoded by the type
+    of its default, and absent options keep the defaults."""
+    kwargs = {"url": ""}
+    for f in dataclasses.fields(RestSourceConfig):
+        raw = options.get(f.name)
+        if raw is None:
+            continue
+        default = f.default_factory() if f.default_factory is not dataclasses.MISSING else f.default
+        if isinstance(default, bool):
+            kwargs[f.name] = raw.lower() == "true"
+        elif isinstance(default, dict):
+            kwargs[f.name] = json.loads(raw)
+        elif isinstance(default, (int, float)):
+            kwargs[f.name] = type(default)(raw)
+        else:
+            kwargs[f.name] = raw
+    return RestSourceConfig(**kwargs)
 
 
-def _read_page(config, transport_spec, key_to_pluck, schema, page) -> Iterator[tuple]:
-    """Fetch one page on the executor and yield schema-ordered tuples —
-    shared by the batch and streaming readers (one page == one task)."""
-    fetch = _load_transport(transport_spec)
-    body = fetch(config, page)
-    payload = body.get(key_to_pluck) if key_to_pluck else body.get("items", body)
-    if not isinstance(payload, list):
-        payload = [payload]
-    field_names = [f.name for f in schema.fields]
-    for rec in payload:
-        yield tuple(_coerce(rec.get(name)) for name in field_names)
+class _PageScan:
+    """What the batch and stream readers share: the decoded config, the
+    page probe, the page packing and the per-page read."""
 
-
-class PaginatedRestReader(DataSourceReader):
     def __init__(self, schema, options):
         self.schema = schema
-        self.options = options
         self.config = _options_to_config(options)
         self.transport_spec = options["transport"]
         self.key_to_pluck = options.get("key_to_pluck")
 
-    def partitions(self):
-        fetch = _load_transport(self.transport_spec)
-        first = fetch(self.config, 1)
-        total = int(first.get("totalMatchingPages", 1))
-        return [_PagePartition(p) for p in range(1, total + 1)]
+    def _fetch(self, page: int) -> dict:
+        return _fetch_with_retry(_load_transport(self.transport_spec), self.config, page)
+
+    def _total_pages(self) -> int:
+        return int(self._fetch(1).get("totalMatchingPages", 1))
+
+    def _pack(self, first: int, last: int) -> list[_PagePartition]:
+        """Pages ``first..last`` as at most ``max_parallel_pages``
+        partitions of contiguous pages."""
+        n_pages = last - first + 1
+        if n_pages <= 0:
+            return []
+        n = min(n_pages, max(1, self.config.max_parallel_pages))
+        cuts = [first + n_pages * i // n for i in range(n + 1)]
+        return [_PagePartition(tuple(range(a, b))) for a, b in zip(cuts, cuts[1:])]
 
     def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        yield from _read_page(
-            self.config, self.transport_spec, self.key_to_pluck, self.schema,
-            partition.page,
-        )
+        field_names = [f.name for f in self.schema.fields]
+        for page in partition.pages:
+            body = self._fetch(page)
+            payload = body.get(self.key_to_pluck) if self.key_to_pluck else body.get("items", body)
+            if not isinstance(payload, list):
+                payload = [payload]
+            for rec in payload:
+                yield tuple(rec.get(name) for name in field_names)
 
 
-class PaginatedRestStreamReader(DataSourceStreamReader):
-    """Streaming twin of the paginated scan: the page index IS the offset.
+class PaginatedRestReader(_PageScan, DataSourceReader):
+    def partitions(self):
+        return self._pack(1, self._total_pages())
+
+
+class PaginatedRestStreamReader(_PageScan, DataSourceStreamReader):
+    """Streaming side of the paginated scan: the page index IS the offset.
 
     The reference re-extracts every page every run (Form700.py:129-144,
     full replace at :482).  The streaming reader instead treats the feed
@@ -103,9 +144,9 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
       batch of a run covers the backlog in one go (the Python stream
       API has no admission-control hook that sees the start offset, so
       a run-local throttle below the committed page would rewind);
-    - ``partitions(start, end)`` emits one InputPartition per page in
-      ``(start, end]`` — page fetches parallelize across executors and
-      retry per-task, exactly like the batch reader;
+    - ``partitions(start, end)`` packs the pages in ``(start, end]``
+      exactly like the batch reader — page fetches parallelize across
+      executors and retry per page;
     - offsets are checkpointed by the engine, so restart resumes after
       the last *committed* page instead of re-extracting the world —
       replace-the-world becomes exactly-once page tailing;
@@ -117,10 +158,7 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
     """
 
     def __init__(self, schema, options):
-        self.schema = schema
-        self.config = _options_to_config(options)
-        self.transport_spec = options["transport"]
-        self.key_to_pluck = options.get("key_to_pluck")
+        super().__init__(schema, options)
         self.max_pages_per_batch = int(options.get("max_pages_per_batch", "64"))
         self._last = 0
 
@@ -128,8 +166,7 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
         return {"page": 0}
 
     def latestOffset(self) -> dict:
-        fetch = _load_transport(self.transport_spec)
-        total = int(fetch(self.config, 1).get("totalMatchingPages", 1))
+        total = self._total_pages()
         if self._last == 0:
             # first report of this run: the true feed head.  The throttle
             # counter is reader-local, so after a restart reporting
@@ -147,25 +184,12 @@ class PaginatedRestStreamReader(DataSourceStreamReader):
         return {"page": self._last}
 
     def partitions(self, start: dict, end: dict):
-        return [_PagePartition(p) for p in range(start["page"] + 1, end["page"] + 1)]
-
-    def read(self, partition: _PagePartition) -> Iterator[tuple]:
-        yield from _read_page(
-            self.config, self.transport_spec, self.key_to_pluck, self.schema,
-            partition.page,
-        )
+        return self._pack(start["page"] + 1, end["page"])
 
     def commit(self, end: dict) -> None:
         # nothing to release — pages are immutable in the feed; the
         # engine's checkpoint is the durable record.
         pass
-
-
-def _coerce(value):
-    # nested dict/list values pass through as Rows via Spark's converter;
-    # plain dicts need tuple-ization only for struct fields — the Python
-    # DataSource accepts dicts/lists natively, so pass as-is.
-    return value
 
 
 class PaginatedRestDataSource(DataSource):
@@ -188,3 +212,23 @@ class PaginatedRestDataSource(DataSource):
 
 def register_rest_datasource(spark) -> None:
     spark.dataSource.register(PaginatedRestDataSource)
+
+
+def read_rest(
+    spark: SparkSession,
+    config: RestSourceConfig,
+    schema: str,
+    key_to_pluck: str | None = None,
+    transport: FetchPage = requests_fetch_page,
+) -> DataFrame:
+    """Batch scan of every page (S2-S5): one row per record of
+    ``key_to_pluck`` (or of the page's ``items``), typed by ``schema``.
+    ``transport`` must be a module-level function, so executors can
+    import it by name."""
+    register_rest_datasource(spark)
+    reader = spark.read.format(PaginatedRestDataSource.name()).schema(schema)
+    options = _config_to_options(config)
+    options["transport"] = f"{transport.__module__}:{transport.__name__}"
+    if key_to_pluck:
+        options["key_to_pluck"] = key_to_pluck
+    return reader.options(**options).load()

@@ -38,18 +38,16 @@ ROCKSDB_PROVIDER = (
 
 
 @contextmanager
-def rocksdb_state_store(spark: SparkSession, changelog_checkpointing: bool = True):
+def rocksdb_state_store(spark: SparkSession):
     """Run the enclosed streaming queries with the RocksDB state store
-    (restores the previous provider on exit).  Results are identical to
-    the default HDFS-backed provider — this trades heap for local disk,
-    it does not change semantics — which is exactly what the
-    equivalence test asserts."""
+    and changelog checkpointing (restores the previous settings on
+    exit).  Results are identical to the default HDFS-backed provider —
+    this trades heap for local disk, it does not change semantics —
+    which is exactly what the equivalence test asserts."""
     conf = spark.conf
     keys = {
         "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": str(
-            changelog_checkpointing
-        ).lower(),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
     }
     old: dict[str, str | None] = {}
     for k, v in keys.items():
@@ -88,14 +86,6 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", normalize_ts(schema["ts"].dataType))
 
 
-# Per-batch progress of the most recent run_to_completion drive, for
-# bench-side observability (VERDICT r9 task 7: the 40.9-66.2k events/s
-# round-over-round oscillation on identical code had no committed
-# per-batch explanation).  Each entry: batchId, numInputRows,
-# trigger/addBatch durations in ms — straight from StreamingQueryProgress.
-LAST_PROGRESS: list[dict] = []
-
-
 def run_to_completion(agg: DataFrame, output_mode: str) -> DataFrame:
     """Drive a streaming frame over the static fixture to completion
     through a memory sink; returns the materialized batch result."""
@@ -103,18 +93,6 @@ def run_to_completion(agg: DataFrame, output_mode: str) -> DataFrame:
     q = agg.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
     try:
         q.processAllAvailable()
-        LAST_PROGRESS.clear()
-        for p in q.recentProgress:
-            d = p if isinstance(p, dict) else json.loads(p.json)
-            dur = d.get("durationMs") or {}
-            LAST_PROGRESS.append(
-                {
-                    "batch_id": d.get("batchId"),
-                    "num_input_rows": d.get("numInputRows"),
-                    "trigger_ms": dur.get("triggerExecution"),
-                    "add_batch_ms": dur.get("addBatch"),
-                }
-            )
     finally:
         q.stop()
     spark = agg.sparkSession
@@ -196,7 +174,8 @@ def bench_tumbling_throughput(
     ignores the watermark's late filter, so every replayed batch is
     fully aggregated (asserted in tests).  Returns the per-batch
     progress breakdown so the number stays self-adjudicating round
-    over round.
+    over round, and the state-partition count the stateful operator
+    reported — raising if it is not the derived count.
     """
     import os
     import shutil
@@ -233,7 +212,9 @@ def bench_tumbling_throughput(
         # the stateful operator's partition count is pinned from
         # spark.sql.shuffle.partitions at query START; derive it from the
         # per-batch volume (one full-table replay per micro-batch) and
-        # restore the session value right after start
+        # restore the session value right after start.  That relies on
+        # the query cloning the session conf inside start(), so the count
+        # that actually applied is read back from the progress below.
         sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
         state_parts = derive_stream_state_partitions(n_events, sess_parts)
         spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
@@ -251,8 +232,12 @@ def bench_tumbling_throughput(
             q.processAllAvailable()
             total_sec = _time.perf_counter() - start
             batches = []
+            applied = set()
             for p in q.recentProgress:
                 d = p if isinstance(p, dict) else json.loads(p.json)
+                applied.update(
+                    op["numShufflePartitions"] for op in d.get("stateOperators", [])[:1]
+                )
                 if not d.get("numInputRows"):
                     continue
                 dur = d.get("durationMs") or {}
@@ -270,6 +255,10 @@ def bench_tumbling_throughput(
         spark.catalog.dropTempView(name)
     finally:
         shutil.rmtree(src, ignore_errors=True)
+    if applied != {state_parts}:
+        raise RuntimeError(
+            f"stream state partitions: derived {state_parts}, applied {sorted(applied)}"
+        )
     steady = [b for b in batches if b["batch_id"] and b["trigger_ms"]]
     steady_rows = sum(b["num_input_rows"] for b in steady)
     steady_ms = sum(b["trigger_ms"] for b in steady)
@@ -277,7 +266,7 @@ def bench_tumbling_throughput(
     return {
         "query": "stream_tumbling_hourly",
         "sec": round(total_sec, 3),
-        "state_partitions": state_parts,
+        "state_partitions": applied.pop(),  # read back from the progress
         "events": n_events,
         "events_processed": total_rows,  # n_batches full-table replays
         "result_rows": n_rows,
@@ -450,74 +439,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum(cents("value")) / F.lit(100.0)).alias("total_value"),
     )
     return run_to_completion(agg, "complete")
-
-
-def stream_tws_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Spark 4 ``transformWithStateInPandas`` twin of
-    ``stream_stateful_user_stats``: the new arbitrary-stateful-
-    processing API (SPARK-49564) replaces applyInPandasWithState's
-    single opaque state tuple with an object-style processor owning
-    named, typed state variables (ValueState here; ListState/MapState/
-    timers for richer operators).  Semantics are identical — per-user
-    running count + max carried across micro-batches — so the same
-    batch-aggregate oracle checks it.  Requires the RocksDB state
-    store provider (enforced by the API), which is exactly the
-    production configuration.
-
-    Environment gate: the TWS protocol speaks protobuf between the JVM
-    and the Python state server; containers without ``google.protobuf``
-    cannot run it (the driver worker crashes in pre-init), so this
-    operator is exercised by an importorskip-gated equivalence test
-    rather than a registered oracle query.  The applyInPandasWithState
-    twin above is the dependency-free equivalent and IS
-    oracle-registered."""
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserStats(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._stats = handle.getValueState("stats", "n long, vmax double")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if self._stats.exists():
-                n, vmax = self._stats.get()
-            else:
-                n, vmax = 0, float("-inf")
-            for pdf in rows:
-                if len(pdf):
-                    n += len(pdf)
-                    vmax = max(vmax, float(pdf["value"].max()))
-            self._stats.update((n, vmax))
-            # raw max out; Spark-side half-up rounding below (Python
-            # round() is half-even — see the applyInPandasWithState twin)
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "max_value": [vmax]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    events = read_events_stream(spark, sf_dir)
-    with rocksdb_state_store(spark):
-        out = events.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=UserStats(),
-            outputStructType="user_id long, n_events long, max_value double",
-            outputMode="Update",
-            timeMode="None",
-        )
-        out = out.withColumn("max_value", F.round("max_value", 2))
-        latest = run_to_completion(out, "update")
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
-    return (
-        latest.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def stream_cdc_merge_apply(

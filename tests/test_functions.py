@@ -367,27 +367,6 @@ def test_connected_components_small_path_is_two_actions(spark, sf_dir, monkeypat
     }, calls
 
 
-def test_udtf_chunker_matches_builtin_plan(spark, sf_dir):
-    """The Python UDTF twin must emit exactly the rows of the builtin
-    sequence/slice/explode chunker."""
-    from form700_etl_spark.operators.multimodal import chunk_docs_udtf
-    from form700_etl_spark.queries.pipeline_ops import doc_chunk_windows
-
-    spark.udtf.register("chunk_docs", chunk_docs_udtf())
-    from form700_etl_spark.io import register_views
-
-    register_views(spark, sf_dir)
-    via_udtf = {
-        tuple(r)
-        for r in spark.sql(
-            "SELECT c.* FROM documents, LATERAL chunk_docs(doc_id, text) c "
-            "WHERE documents.doc_id % 10 = 0"
-        ).collect()
-    }
-    builtin = {tuple(r) for r in doc_chunk_windows(spark, sf_dir).collect()}
-    assert via_udtf == builtin and len(builtin) > 0
-
-
 def test_countmin_mergeability_and_bounds(spark, sf_dir):
     """Count-min laws: (1) merging per-shard grids == building one grid
     over the whole input; (2) every estimate >= the true count (the
@@ -579,22 +558,6 @@ class TestCogroupAsof:
             for r in asof_last_purchase_per_event(spark, sf_dir).collect()
         }
         assert got == want
-
-
-class TestArrowFeatureExtract:
-    def test_arrow_twin_matches_pandas_path(self, spark, sf_dir):
-        """mapInArrow and mapInPandas feature extraction agree cell-for-
-        cell (same decode stub, different batch transport)."""
-        from form700_etl_spark.operators.multimodal import (
-            extract_features,
-            extract_features_arrow,
-            synthesize_media,
-        )
-
-        media = synthesize_media(spark, sf_dir)
-        a = {tuple(r) for r in extract_features_arrow(media).collect()}
-        b = {tuple(r) for r in extract_features(media).collect()}
-        assert a == b
 
 
 def test_kmv_sketch_mergeability_and_exactness_laws(spark, sf_dir):

@@ -11,20 +11,31 @@ from pyspark.sql import functions as F
 
 from form700_etl_spark.sinks.chunked import ChunkedSink, ChunkedSinkConfig, LocalDirClient
 from form700_etl_spark.sources.fake import FILING_SCHEMA, N_PAGES, PAGE_SIZE, fake_fetch_page
-from form700_etl_spark.sources.rest import PaginatedRestSource, RestSourceConfig
+from form700_etl_spark.sources.rest import RestSourceConfig
+from form700_etl_spark.sources.rest_datasource import read_rest
 from form700_etl_spark.io import table
 
 
 class TestPaginatedRestSource:
+    """The batch scan through ``read_rest``: driver page-1 probe, pages
+    packed into at most ``max_parallel_pages`` partitions, every fetch
+    under the config's retry policy."""
+
     def test_probe_discovers_page_count(self):
-        src = PaginatedRestSource(RestSourceConfig(url="fake://x"), fake_fetch_page)
-        total, first = src.probe()
-        assert total == N_PAGES
-        assert len(first["filings"]) == PAGE_SIZE
+        from form700_etl_spark.sources.rest_datasource import (
+            PaginatedRestReader,
+            _config_to_options,
+        )
+
+        options = _config_to_options(RestSourceConfig(url="fake://x"))
+        options["transport"] = "form700_etl_spark.sources.fake:fake_fetch_page"
+        parts = PaginatedRestReader(None, options).partitions()
+        assert [p for part in parts for p in part.pages] == list(range(1, N_PAGES + 1))
 
     def test_read_all_pages_union(self, spark):
-        src = PaginatedRestSource(RestSourceConfig(url="fake://x"), fake_fetch_page)
-        df = src.read(spark, FILING_SCHEMA, key_to_pluck="filings")
+        df = read_rest(
+            spark, RestSourceConfig(url="fake://x"), FILING_SCHEMA, "filings", fake_fetch_page
+        )
         rows = df.collect()
         assert len(rows) == N_PAGES * PAGE_SIZE
         ids = sorted(r.filingId for r in rows)
@@ -41,17 +52,48 @@ class TestPaginatedRestSource:
             retry_delay_s=0.01,
             extra={"fail_dir": str(tmp_path)},
         )
-        src = PaginatedRestSource(config, flaky_fetch_page)
-        df = src.read(spark, FILING_SCHEMA, key_to_pluck="filings")
-        assert df.count() == N_PAGES * PAGE_SIZE  # every page recovered
+        df = read_rest(spark, config, FILING_SCHEMA, "filings", flaky_fetch_page)
+        # every page failed its first fetch and was recovered by the retry
+        assert sorted(r.filingId for r in df.collect()) == list(range(N_PAGES * PAGE_SIZE))
+        assert len(os.listdir(tmp_path)) == N_PAGES
 
     def test_pages_fetched_in_parallel_partitions(self, spark):
-        src = PaginatedRestSource(
-            RestSourceConfig(url="fake://x", max_parallel_pages=4), fake_fetch_page
+        df = read_rest(
+            spark, RestSourceConfig(url="fake://x"), FILING_SCHEMA, "filings", fake_fetch_page
         )
-        raw = src.read_pages(spark, key_to_pluck="filings")
-        pages = sorted({r.page for r in raw.collect()})
-        assert pages == [1, 2, 3, 4, 5]
+        # under the default cap every page is its own task
+        per_partition = df.rdd.glom().map(lambda rows: sorted(r.filingId for r in rows)).collect()
+        assert [ids[0] // PAGE_SIZE for ids in per_partition] == list(range(N_PAGES))
+        assert all(len(ids) == PAGE_SIZE for ids in per_partition)
+
+    def test_max_parallel_pages_caps_partitions(self, spark):
+        config = RestSourceConfig(url="fake://x", max_parallel_pages=2)
+        df = read_rest(spark, config, FILING_SCHEMA, "filings", fake_fetch_page)
+        assert df.rdd.getNumPartitions() <= 2
+        assert sorted(r.filingId for r in df.collect()) == list(range(N_PAGES * PAGE_SIZE))
+
+    def test_config_round_trips_through_options(self):
+        from form700_etl_spark.sources.rest_datasource import (
+            _config_to_options,
+            _options_to_config,
+        )
+
+        config = RestSourceConfig(
+            url="https://api.example/filings",
+            agency_prefix="SFO",
+            is_redacted=True,
+            auth_url="https://api.example/login",
+            username="user",
+            password="secret",
+            extra={"Sort": ["filingDate"]},
+            max_parallel_pages=3,
+            tries=7,
+            retry_delay_s=0.05,
+            retry_backoff=3.0,
+        )
+        assert _options_to_config(_config_to_options(config)) == config
+        # unset fields keep their defaults
+        assert _options_to_config({"url": "u"}) == RestSourceConfig(url="u")
 
 
 class TestPaginatedRestDataSource:
@@ -268,8 +310,6 @@ class TestStreamingPipelineEquivalence:
             read_committed,
             register_chunked_datasource,
         )
-        from form700_etl_spark.sources.rest import PaginatedRestSource, RestSourceConfig
-        from form700_etl_spark.sources.fake import fake_fetch_page
         from form700_etl_spark.sources.rest_datasource import register_rest_datasource
 
         register_rest_datasource(spark)
@@ -299,8 +339,12 @@ class TestStreamingPipelineEquivalence:
                 for r in read_committed(f"{tmp}/out")
             )
 
-        src = PaginatedRestSource(RestSourceConfig(url="fake://filings"), fake_fetch_page)
-        batch = self._transform(src.read(spark, FILING_SCHEMA, key_to_pluck="filings"))
+        batch = self._transform(
+            read_rest(
+                spark, RestSourceConfig(url="fake://filings"), FILING_SCHEMA, "filings",
+                fake_fetch_page,
+            )
+        )
         want = sorted(
             (r.filing_id, r.filer_name, r.amount, r.offices) for r in batch.collect()
         )
@@ -319,12 +363,13 @@ class TestChunkedSink:
                 df, dataset="orders"
             )
             assert report.success, (report.total_records, report.rows_inserted)
-            written = sum(
+            chunk_sizes = [
                 len(json.load(open(os.path.join(tmp, f))))
                 for f in os.listdir(tmp)
                 if f.endswith(".json")
-            )
-            assert written == report.total_records == df.count()
+            ]
+            assert sum(chunk_sizes) == report.total_records == df.count()
+            assert max(chunk_sizes) <= 100  # every chunk respects the bound (K1)
 
     def test_retry_recovers_from_transient_failures(self, spark, sf_dir):
         df = table(spark, sf_dir, "region")
@@ -507,35 +552,6 @@ class TestParquetSink:
 
             dirs = [d for d in _os.listdir(out) if d.startswith("o_orderstatus=")]
             assert len(dirs) >= 2
-
-
-class TestChunkedDirDataSource:
-    """The chunked sink through Spark's Python DataSource V2 write path
-    (task commit messages -> driver commit -> manifest)."""
-
-    def test_write_commit_manifest(self, spark, sf_dir, tmp_path):
-        from form700_etl_spark.sinks.chunked_datasource import register_chunked_datasource
-
-        register_chunked_datasource(spark)
-        o = table(spark, sf_dir, "orders").select("o_orderkey", "o_orderstatus")
-        out = str(tmp_path / "chunks")
-        (
-            o.write.format("chunked_dir")
-            .option("path", out)
-            .option("chunk_size", "100")
-            .mode("append")
-            .save()
-        )
-        manifest = json.load(open(os.path.join(out, "_MANIFEST")))
-        assert manifest["rows_inserted"] == o.count()  # A3 reconciliation
-        total = sum(
-            len(json.load(open(os.path.join(out, f)))) for f in manifest["files"]
-        )
-        assert total == manifest["rows_inserted"]
-        # every committed chunk respects the chunk-size bound (K1)
-        assert all(
-            len(json.load(open(os.path.join(out, f)))) <= 100 for f in manifest["files"]
-        )
 
 
 class TestForm700Pipeline:

@@ -125,33 +125,6 @@ def test_rocksdb_state_store_equivalence(spark, sf_dir):
     )
 
 
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """Spark 4 transformWithStateInPandas (named typed state vars)
-    agrees with the batch aggregate — skipped where the protobuf
-    dependency its JVM<->Python state protocol needs is absent."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from pyspark.sql import functions as F
-
-    from form700_etl_spark.io import table
-    from form700_etl_spark.streaming.events_stream import stream_tws_user_stats
-
-    got = {
-        (r.user_id, r.n_events, r.max_value)
-        for r in stream_tws_user_stats(spark, sf_dir).collect()
-    }
-    want = {
-        (r.user_id, r.n_events, r.max_value)
-        for r in table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.max("value"), 2).alias("max_value"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
 def test_stream_cdc_merge_apply_converges_to_batch_latest(spark, sf_dir, tmp_path):
     """4 micro-batches of CDC upserts must leave the snapshot equal to
     the batch latest-row-per-user over the whole feed, and a re-run on
@@ -397,6 +370,25 @@ def test_bench_tumbling_throughput_steady_state(spark, sf_dir):
     assert 1 <= run["state_partitions"] <= int(
         spark.conf.get("spark.sql.shuffle.partitions")
     )
+
+
+def test_bench_stream_reports_applied_state_partitions(spark, sf_dir):
+    """The drive's ``state_partitions`` is the count the stateful operator
+    reported in its progress, so it must equal the count derived from
+    batch volume.  At the fixture's volume that is 1, below the session's
+    ``shuffle.partitions`` (>= 4): a conf restore that landed before the
+    query read its conf would show up here as the session value."""
+    from form700_etl_spark.streaming.events_stream import (
+        bench_tumbling_throughput,
+        derive_stream_state_partitions,
+    )
+
+    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    run = bench_tumbling_throughput(spark, sf_dir, n_batches=2)
+    assert run["state_partitions"] == derive_stream_state_partitions(
+        run["events"], session_parts
+    )
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_parts
 
 
 def test_derive_stream_state_partitions_bounds():
