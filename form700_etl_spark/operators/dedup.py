@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..io import ensure_parallelism
+
 N_HASHES = 12
 BAND_ROWS = 3  # -> 4 bands
 # Hot-shingle document-frequency cap used by the pair-join consumers
@@ -70,9 +72,7 @@ def shingle(documents: DataFrame, n: int = 3, text_col: str = "text", id_col: st
     fan the docs out first.  On a real corpus (many files >> cores) the
     condition is false and no extra shuffle happens.
     """
-    sc = documents.sparkSession.sparkContext
-    if documents.rdd.getNumPartitions() < sc.defaultParallelism:
-        documents = documents.repartition(sc.defaultParallelism)
+    documents = ensure_parallelism(documents)
     idx = ", ".join(f"toks[i+{k}]" for k in range(n))
     expr = (
         f"CASE WHEN size(toks) >= {n} THEN "

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..io import ensure_parallelism
+
 
 def vec_double(col: str | Column = "embedding") -> Column:
     """Promote a float32 vector to double BEFORE any arithmetic."""
@@ -72,12 +74,7 @@ def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int,
     probes = queries.withColumn(
         "__mask", F.explode(F.array(*[F.lit(m) for m in masks]))
     ).withColumn("__probe", F.col("bucket").bitwiseXOR(F.col("__mask")))
-    sc = corpus.sparkSession.sparkContext
-    # one driver-side plan conversion per CALL (not per row) to read the
-    # incoming partition count; the repartition only fires on
-    # under-partitioned local fixtures (see docstring caveat).
-    if corpus.rdd.getNumPartitions() < sc.defaultParallelism:
-        corpus = corpus.repartition(sc.defaultParallelism)
+    corpus = ensure_parallelism(corpus)  # see the docstring caveat
     cond = (F.col("query_id") != F.col("neighbor_id")) & (
         F.col("__probe") == F.col("nbucket")
     )
@@ -245,8 +242,6 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, n_centroids: int = 8
     import numpy as np
     import pandas as pd
 
-    from ..io import ensure_parallelism
-
     centroids = kmeans_centroids(corpus, n_centroids=n_centroids, iters=iters)
     # the rerank runs on the corpus side's tasks — spread an
     # under-partitioned scan first
@@ -368,9 +363,7 @@ def topk_neighbors(queries: DataFrame, corpus: DataFrame, k: int,
     # query side is broadcast); a small-file corpus scan would pin the
     # whole O(|Q| x |C| x d) compute onto one task — fan it out.  On a
     # real sharded corpus (partitions >= cores) this is a no-op.
-    sc = corpus.sparkSession.sparkContext
-    if corpus.rdd.getNumPartitions() < sc.defaultParallelism:
-        corpus = corpus.repartition(sc.defaultParallelism)
+    corpus = ensure_parallelism(corpus)
     joined = F.broadcast(queries).join(corpus, cond)
     sims = joined.withColumn("cosine", cosine(F.col("qvec"), F.col("nvec")))
     w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))

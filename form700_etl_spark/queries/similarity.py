@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import ensure_parallelism, table
 from ..registry import register
 
 _COS_SQL = """
@@ -733,9 +733,7 @@ def ann_hybrid_rrf_fusion(spark, sf_dir):
     )
     # small-file corpus scan would pin the O(Q x N x d) fold onto one
     # task (the topk_neighbors precedent) — fan it out first
-    sc = spark.sparkContext
-    if cand.rdd.getNumPartitions() < sc.defaultParallelism:
-        cand = cand.repartition(sc.defaultParallelism)
+    cand = ensure_parallelism(cand)
     d = _dot(F.col("qvec"), F.col("nvec"))
     pairs = (
         F.broadcast(q)

@@ -159,9 +159,7 @@ def stream_cdc_snapshot_latest(spark, sf_dir):
         feed = os.path.join(root, "feed")
         snap = os.path.join(root, "snap")
         table(spark, sf_dir, "events").repartition(4).write.parquet(feed)
-        stream_cdc_merge_apply(
-            spark, feed, snap, os.path.join(root, "ckpt"), key="user_id"
-        )
+        stream_cdc_merge_apply(spark, feed, snap, os.path.join(root, "ckpt"))
         out = spark.read.parquet(snap).select(
             "user_id",
             "event_id",

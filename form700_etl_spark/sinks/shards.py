@@ -143,13 +143,18 @@ def export_with_manifest(df: DataFrame, path: str, shard_key: str,
     return manifest
 
 
+# stream_export_shards: quality gate, shard count and per-file bound
+STREAM_EXPORT_MIN_CHARS = 100
+STREAM_EXPORT_SHARDS = 2
+STREAM_EXPORT_MAX_RECORDS_PER_FILE = 1000
+
+
 def stream_export_shards(spark: SparkSession, src_dir: str, out_path: str,
-                         checkpoint: str, min_chars: int = 100,
-                         n_shards: int = 2,
-                         max_records_per_file: int = 1000) -> None:
+                         checkpoint: str) -> None:
     """Streaming curation backfill: a file-source stream over the
-    ``documents`` fixture, a scan-side quality gate, and a
-    ``foreachBatch`` shard export under ``Trigger.AvailableNow`` —
+    ``documents`` fixture, a scan-side quality gate (``n_chars >=
+    STREAM_EXPORT_MIN_CHARS``), and a ``foreachBatch`` shard export
+    under ``Trigger.AvailableNow`` —
     the catch-up-then-stop trigger a scheduled ingestion job uses (all
     available input is processed in rate-limited micro-batches, then
     the query terminates; a later run resumes from the checkpoint and
@@ -162,17 +167,10 @@ def stream_export_shards(spark: SparkSession, src_dir: str, out_path: str,
     sink's per-batch manifests.  The corpus-level manifest is
     ``shard_manifest`` over the whole export tree (shard hashes are
     mergeable sums, so epochs compose)."""
-    from ..io import ensure_session_confs
+    from ..streaming.events_stream import parquet_stream
 
-    ensure_session_confs(spark)
-    schema = spark.read.parquet(os.path.join(src_dir, "documents.parquet")).schema
-    docs = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(src_dir)
-    )
-    curated = docs.filter(F.col("n_chars") >= min_chars)
+    docs = parquet_stream(spark, src_dir, "documents.parquet")
+    curated = docs.filter(F.col("n_chars") >= STREAM_EXPORT_MIN_CHARS)
 
     def write_batch(bdf: DataFrame, epoch_id: int) -> None:
         if bdf.isEmpty():
@@ -181,8 +179,8 @@ def stream_export_shards(spark: SparkSession, src_dir: str, out_path: str,
             bdf,
             os.path.join(out_path, f"epoch={epoch_id}"),
             "doc_id",
-            n_shards=n_shards,
-            max_records_per_file=max_records_per_file,
+            n_shards=STREAM_EXPORT_SHARDS,
+            max_records_per_file=STREAM_EXPORT_MAX_RECORDS_PER_FILE,
         )
 
     q = (

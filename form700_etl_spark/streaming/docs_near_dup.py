@@ -27,12 +27,10 @@ would break the completeness contract the oracle checks.
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .events_stream import replay_stream, run_to_completion
 
 _HAMMING_MAX = 3
 
@@ -129,8 +127,8 @@ def stream_simhash_near_dup(
 ) -> DataFrame:
     """Near-dup pairs (doc1 < doc2, hamming <= 3) from a simulated
     document feed: signatures of the documents table are replayed in
-    ``n_batches`` micro-batches (sliced by doc_id hash, one file per
-    batch, maxFilesPerTrigger=1); a stateful operator keyed by
+    ``n_batches`` micro-batches (sliced by doc_id hash, slice i as
+    micro-batch i through ``replay_stream``); a stateful operator keyed by
     (band, band_val) verifies each arrival against its bucket's state
     and appends it.  Emits each qualifying pair exactly once (at its
     lowest shared band, when its later member arrives).
@@ -142,28 +140,10 @@ def stream_simhash_near_dup(
     from ..queries.dedup import _simhash_sigs  # late import: no cycle
 
     sigs = _simhash_sigs(spark, sf_dir)
-    src = tempfile.mkdtemp(prefix="stream_neardup_src_")
-    try:
-        for i in range(n_batches):
-            stage = os.path.join(src, f"_stage{i}")
-            (
-                sigs.filter(F.col("doc_id") % n_batches == i)
-                .coalesce(1)
-                .write.parquet(stage)
-            )
-            part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-            shutil.move(
-                os.path.join(stage, part), os.path.join(src, f"batch{i}.parquet")
-            )
-            shutil.rmtree(stage)
-        schema = spark.read.parquet(os.path.join(src, "batch0.parquet")).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
-        )
+    slices = [
+        sigs.filter(F.col("doc_id") % n_batches == i) for i in range(n_batches)
+    ]
+    with replay_stream(spark, slices) as raw:
         band_structs = [
             F.struct(
                 F.lit(0).alias("b"),
@@ -207,11 +187,7 @@ def stream_simhash_near_dup(
             outputMode="append",
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
-        from .events_stream import run_to_completion
-
-        return run_to_completion(pairs, "append")
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
+        return run_to_completion(pairs, "append")[0]
 
 
 #: replay batches / window used by the REGISTERED windowed query (and

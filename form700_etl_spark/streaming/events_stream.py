@@ -11,6 +11,24 @@ engine-extension surface.  Design rules:
   ``processAllAvailable`` + a memory sink — on a real cluster the same
   code points at Kafka + a real sink, with watermarks bounding state.
 
+Every stream goes through three helpers, so no stream re-implements
+them:
+
+- ``parquet_stream`` is the one file-source reader.  It applies the
+  session confs, probes the schema only when the caller gives none,
+  and normalizes a ``ts`` column with the batch reader's
+  ``normalize_ts``, so streaming and batch twins read the same values.
+- ``replay_stream`` turns a list of batch frames into a stream that
+  delivers batch i as micro-batch i.  Each batch is one parquet file
+  with a pinned, strictly increasing mtime, and the file source takes
+  unprocessed files oldest-first one per trigger, so the mtimes are
+  the replay order.
+- ``run_to_completion`` is the one memory-sink drive.  It returns the
+  sink's rows and the parsed per-batch progress, and leaves no temp
+  view behind.  Given ``state_partitions`` it starts the query with
+  that many state partitions, reads the count that took effect back
+  from the progress, and raises if the two differ.
+
 State-at-scale notes: tumbling/sliding aggs keep one row of state per
 open (window, key); the watermark closes windows so state is O(open
 windows), not O(stream).  Session windows and dropDuplicates keep
@@ -25,6 +43,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 # Bundled with Spark since 3.2: per-key state in embedded RocksDB
 # instead of the JVM heap.  At 100 TB a stateful query's state
@@ -62,41 +81,137 @@ def rocksdb_state_store(spark: SparkSession):
             else:
                 conf.set(k, v)
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events fixture.  The stream schema is
-    taken from the actual parquet footer (a batch-read schema probe — file
-    sources require an explicit schema) rather than hardcoded, so fixture
-    encoding changes (int64-nanos vs TIMESTAMP_NTZ vs TIMESTAMP) surface
-    here once and are normalized by the same ``normalize_ts`` the batch
-    reader uses — streaming and batch twins always agree."""
-    import os
+# mtime of replay batch 0, in seconds; batch i gets REPLAY_MTIME0 + i
+REPLAY_MTIME0 = 1_000_000_000
 
+
+def parquet_stream(
+    spark: SparkSession,
+    path: str,
+    glob: str,
+    files_per_trigger: int | None = None,
+    schema: StructType | None = None,
+) -> DataFrame:
+    """File-source stream over the parquet files in ``path`` that match
+    ``glob``, taking ``files_per_trigger`` files per micro-batch (all
+    available ones when None).  File sources need an explicit schema;
+    without one it is probed from the files (one batch-read job), so
+    fixture encoding changes (int64-nanos vs TIMESTAMP_NTZ vs TIMESTAMP)
+    surface here and a ``ts`` column is normalized by the same
+    ``normalize_ts`` the batch reader uses."""
     from ..io import ensure_session_confs, normalize_ts
 
     ensure_session_confs(spark)
-    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
-    # the file stream source requires a directory; glob-filter to the
-    # events file inside the fixture dir
-    raw = (
+    if schema is None:
+        schema = spark.read.option("pathGlobFilter", glob).parquet(path).schema
+    reader = (
         spark.readStream.schema(schema)
         .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
+        .option("pathGlobFilter", glob)
     )
-    return raw.withColumn("ts", normalize_ts(schema["ts"].dataType))
+    if files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", files_per_trigger)
+    stream = reader.load(path)
+    if "ts" in schema.fieldNames():
+        stream = stream.withColumn("ts", normalize_ts(schema["ts"].dataType))
+    return stream
 
 
-def run_to_completion(agg: DataFrame, output_mode: str) -> DataFrame:
-    """Drive a streaming frame over the static fixture to completion
-    through a memory sink; returns the materialized batch result."""
+@contextmanager
+def replay_stream(spark: SparkSession, batches: list[DataFrame]):
+    """Yield a stream that delivers ``batches[i]`` as micro-batch i.
+
+    Each batch is written as one parquet file whose mtime is pinned to
+    ``REPLAY_MTIME0 + i``: the file source takes unprocessed files
+    oldest-first, one per trigger here, so the mtimes fix the order
+    (write order alone can tie at the filesystem's mtime granularity).
+    A batch that is the same frame as an earlier one is copied from
+    that batch's file, not written again.  The stream's schema is
+    ``batches[0].schema``, so no probe job runs.  The replay directory
+    is removed on exit."""
+    import os
+    import shutil
+    import tempfile
+
+    src = tempfile.mkdtemp(prefix="replay_stream_")
+    try:
+        files: list[tuple[DataFrame, str]] = []
+        for i, df in enumerate(batches):
+            dst = os.path.join(src, f"batch{i:05d}.parquet")
+            prior = next((f for d, f in files if d is df), None)
+            if prior is None:
+                stage = os.path.join(src, "_stage")
+                df.coalesce(1).write.parquet(stage)
+                part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
+                os.rename(os.path.join(stage, part), dst)
+                shutil.rmtree(stage)
+                files.append((df, dst))
+            else:
+                shutil.copyfile(prior, dst)
+            os.utime(dst, (REPLAY_MTIME0 + i, REPLAY_MTIME0 + i))
+        yield parquet_stream(
+            spark, src, "*.parquet", files_per_trigger=1, schema=batches[0].schema
+        )
+    finally:
+        shutil.rmtree(src, ignore_errors=True)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events fixture (one micro-batch)."""
+    return parquet_stream(spark, sf_dir, "events.parquet")
+
+
+def run_to_completion(
+    agg: DataFrame, mode: str, state_partitions: int | None = None
+) -> tuple[DataFrame, list[dict]]:
+    """Drive a streaming frame through a memory sink until all available
+    input is processed; return the sink's rows as a batch frame and the
+    per-trigger progress as dicts.
+
+    A stateful operator's partition count is pinned from
+    ``spark.sql.shuffle.partitions`` at query start, so with
+    ``state_partitions`` set that conf holds the given count for
+    ``start()`` only and the session value is restored right after.
+    That relies on the query cloning the session conf inside
+    ``start()``, so the count that actually applied is read back from
+    the progress and a mismatch raises.
+
+    The result frame resolves the sink's temp view when it is created,
+    so the view is dropped before returning (on failure too) and
+    repeated drives leave the session catalog as they found it."""
+    spark = agg.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    q = agg.writeStream.outputMode(output_mode).format("memory").queryName(name).start()
+    writer = agg.writeStream.outputMode(mode).format("memory").queryName(name)
+    if state_partitions is None:
+        q = writer.start()
+    else:
+        session_parts = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        try:
+            q = writer.start()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", session_parts)
     try:
         q.processAllAvailable()
+        progress = [
+            p if isinstance(p, dict) else json.loads(p.json) for p in q.recentProgress
+        ]
+        result = spark.table(name)
     finally:
         q.stop()
-    spark = agg.sparkSession
-    return spark.table(name)
+        spark.catalog.dropTempView(name)
+    if state_partitions is not None:
+        applied = {
+            op["numShufflePartitions"]
+            for p in progress
+            for op in p.get("stateOperators") or []
+        }
+        if applied != {state_partitions}:
+            raise RuntimeError(
+                f"stream state partitions: asked {state_partitions}, "
+                f"applied {sorted(applied)}"
+            )
+    return result, progress
 
 
 def derive_stream_state_partitions(
@@ -144,7 +259,7 @@ def _tumbling_hourly_agg(events: DataFrame) -> DataFrame:
 def stream_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of queries.events.events_tumbling_hourly (same oracle)."""
     events = read_events_stream(spark, sf_dir)
-    out = run_to_completion(_tumbling_hourly_agg(events), "complete")
+    out, _ = run_to_completion(_tumbling_hourly_agg(events), "complete")
     return out.select(
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
@@ -175,90 +290,37 @@ def bench_tumbling_throughput(
     fully aggregated (asserted in tests).  Returns the per-batch
     progress breakdown so the number stays self-adjudicating round
     over round, and the state-partition count the stateful operator
-    reported — raising if it is not the derived count.
+    reported — ``run_to_completion`` raises if it is not the derived
+    count.  ``sec`` is the wall time of that drive, query stop included.
     """
-    import os
-    import shutil
-    import tempfile
+    import time
 
-    from ..io import ensure_session_confs, normalize_ts, table
+    from ..io import table
 
-    ensure_session_confs(spark)
     events = table(spark, sf_dir, "events")
     n_events = events.count()
-    src = tempfile.mkdtemp(prefix="bench_stream_src_")
-    try:
-        stage = os.path.join(src, "_stage")
-        events.coalesce(1).write.parquet(stage)
-        part = next(f for f in os.listdir(stage) if f.endswith(".parquet"))
-        for i in range(n_batches):
-            shutil.copyfile(
-                os.path.join(stage, part), os.path.join(src, f"replay{i}.parquet")
-            )
-        shutil.rmtree(stage)
-        schema = spark.read.parquet(os.path.join(src, "replay0.parquet")).schema
-        raw = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(src)
+    # the stateful operator's partition count is derived from the
+    # per-batch volume (one full-table replay per micro-batch)
+    state_parts = derive_stream_state_partitions(
+        n_events, int(spark.conf.get("spark.sql.shuffle.partitions"))
+    )
+    with replay_stream(spark, [events] * n_batches) as stream:
+        start = time.perf_counter()
+        result, progress = run_to_completion(
+            _tumbling_hourly_agg(stream), "complete", state_parts
         )
-        stream = raw.withColumn("ts", normalize_ts(schema["ts"].dataType))
-        agg = _tumbling_hourly_agg(stream)
-        name = f"bench_stream_{uuid.uuid4().hex[:12]}"
-        import time as _time
-
-        # the stateful operator's partition count is pinned from
-        # spark.sql.shuffle.partitions at query START; derive it from the
-        # per-batch volume (one full-table replay per micro-batch) and
-        # restore the session value right after start.  That relies on
-        # the query cloning the session conf inside start(), so the count
-        # that actually applied is read back from the progress below.
-        sess_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        state_parts = derive_stream_state_partitions(n_events, sess_parts)
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_parts))
-        start = _time.perf_counter()
-        try:
-            q = (
-                agg.writeStream.outputMode("complete")
-                .format("memory")
-                .queryName(name)
-                .start()
-            )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", str(sess_parts))
-        try:
-            q.processAllAvailable()
-            total_sec = _time.perf_counter() - start
-            batches = []
-            applied = set()
-            for p in q.recentProgress:
-                d = p if isinstance(p, dict) else json.loads(p.json)
-                applied.update(
-                    op["numShufflePartitions"] for op in d.get("stateOperators", [])[:1]
-                )
-                if not d.get("numInputRows"):
-                    continue
-                dur = d.get("durationMs") or {}
-                batches.append(
-                    {
-                        "batch_id": d.get("batchId"),
-                        "num_input_rows": d.get("numInputRows"),
-                        "trigger_ms": dur.get("triggerExecution"),
-                        "add_batch_ms": dur.get("addBatch"),
-                    }
-                )
-            n_rows = spark.table(name).count()
-        finally:
-            q.stop()
-        spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-    if applied != {state_parts}:
-        raise RuntimeError(
-            f"stream state partitions: derived {state_parts}, applied {sorted(applied)}"
-        )
+        total_sec = time.perf_counter() - start
+    n_rows = result.count()
+    batches = [
+        {
+            "batch_id": d.get("batchId"),
+            "num_input_rows": d.get("numInputRows"),
+            "trigger_ms": (d.get("durationMs") or {}).get("triggerExecution"),
+            "add_batch_ms": (d.get("durationMs") or {}).get("addBatch"),
+        }
+        for d in progress
+        if d.get("numInputRows")
+    ]
     steady = [b for b in batches if b["batch_id"] and b["trigger_ms"]]
     steady_rows = sum(b["num_input_rows"] for b in steady)
     steady_ms = sum(b["trigger_ms"] for b in steady)
@@ -266,7 +328,7 @@ def bench_tumbling_throughput(
     return {
         "query": "stream_tumbling_hourly",
         "sec": round(total_sec, 3),
-        "state_partitions": applied.pop(),  # read back from the progress
+        "state_partitions": state_parts,  # checked against the progress
         "events": n_events,
         "events_processed": total_rows,  # n_batches full-table replays
         "result_rows": n_rows,
@@ -293,7 +355,7 @@ def stream_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
     )
-    out = run_to_completion(agg, "complete")
+    out, _ = run_to_completion(agg, "complete")
     return out.select(
         "user_id",
         F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias("session_start"),
@@ -342,7 +404,7 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = out.withColumn("max_value", F.round("max_value", 2))
-    latest = run_to_completion(out, "update")
+    latest, _ = run_to_completion(out, "update")
     # keep the last emitted state per user (single batch here, but the
     # dedup makes the result well-defined under any batching)
     from pyspark.sql import Window
@@ -362,7 +424,7 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = read_events_stream(spark, sf_dir)
     doubled = events.unionByName(events)
     deduped = doubled.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
-    out = run_to_completion(deduped, "append")
+    out, _ = run_to_completion(deduped, "append")
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -406,7 +468,7 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "AND purchase_ts <= click_ts + interval 1 hour"
         ),
     )
-    pairs = run_to_completion(joined, "append")
+    pairs, _ = run_to_completion(joined, "append")
     # batch-side audit: conversions per user (the pair list itself is
     # the operator output; the aggregate keeps the oracle result small)
     return pairs.groupBy(F.col("c_user").alias("user_id")).agg(
@@ -438,7 +500,11 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         (F.sum(cents("value")) / F.lit(100.0)).alias("total_value"),
     )
-    return run_to_completion(agg, "complete")
+    return run_to_completion(agg, "complete")[0]
+
+
+# the change feed's row key: the snapshot keeps its newest row per key
+CDC_KEY = "user_id"
 
 
 def stream_cdc_merge_apply(
@@ -446,8 +512,6 @@ def stream_cdc_merge_apply(
     feed_dir: str,
     snapshot_dir: str,
     checkpoint_dir: str,
-    key: str = "user_id",
-    max_files_per_trigger: int = 1,
 ) -> None:
     """Streaming CDC apply: treat the incoming event stream as a change
     feed and maintain a latest-row-per-key parquet snapshot via a
@@ -456,32 +520,23 @@ def stream_cdc_merge_apply(
     a stream), composed from the same batch merge operator so batch and
     streaming apply logic cannot drift.
 
-    Per micro-batch: reduce the batch to its newest row per key (max
-    ts, event_id tiebreak), merge into the current snapshot with
+    One feed file per micro-batch: reduce the batch to its newest row
+    per key (max ts, event_id tiebreak), merge into the current snapshot with
     last-writer-wins ON ts (a late-arriving batch cannot regress a
     key), then publish by write-to-temp + atomic-rename — a crash
     before the rename leaves the old snapshot intact, and the stream's
     checkpoint replays the batch (the merge is idempotent, so replay
     converges).  At scale the snapshot would be bucketed by the key so
-    the merge join is exchange-free."""
+    the merge join is exchange-free.  Keyed by ``CDC_KEY``."""
     import os
     import shutil
 
     from pyspark.sql import Window
 
-    from ..io import normalize_ts
-
-    schema = spark.read.parquet(feed_dir).schema
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(feed_dir)
-    )
-    stream = raw.withColumn("ts", normalize_ts(schema["ts"].dataType))
+    stream = parquet_stream(spark, feed_dir, "*.parquet", files_per_trigger=1)
 
     def apply_batch(batch_df, batch_id: int) -> None:
-        w = Window.partitionBy(key).orderBy(
+        w = Window.partitionBy(CDC_KEY).orderBy(
             F.col("ts").desc(), F.col("event_id").desc()
         )
         latest = (
@@ -497,11 +552,11 @@ def stream_cdc_merge_apply(
             # last-writer-wins on ts: keep whichever side is newer
             newer_src = latest.alias("s").join(
                 current.select(
-                    key,
+                    CDC_KEY,
                     F.col("ts").alias("__cur_ts"),
                     F.col("event_id").alias("__cur_eid"),
                 ),
-                key,
+                CDC_KEY,
                 "left",
             )
             winning = newer_src.filter(
@@ -512,7 +567,7 @@ def stream_cdc_merge_apply(
                     & (F.col("event_id") > F.col("__cur_eid"))
                 )
             ).drop("__cur_ts", "__cur_eid")
-            merged = merge_upsert(current, winning, key)
+            merged = merge_upsert(current, winning, CDC_KEY)
         else:
             merged = latest
         tmp = snapshot_dir + ".tmp"
@@ -532,17 +587,20 @@ def stream_cdc_merge_apply(
     q.awaitTermination()
 
 
+# reference window of the drift monitor: feed rows before this day
+DRIFT_CUT = "2024-01-16"
+
+
 def stream_drift_monitor(
     spark: SparkSession,
     feed_dir: str,
     checkpoint_dir: str,
     out_dir: str,
-    cut: str = "2024-01-16",
     max_files_per_trigger: int = 1,
 ) -> None:
     """Streaming data-quality gate: score every incoming micro-batch's
     value distribution against a broadcast REFERENCE histogram (built
-    once, batch-side, from the pre-``cut`` window) and append one PSI
+    once, batch-side, from the pre-``DRIFT_CUT`` window) and append one PSI
     report row per batch to ``out_dir`` — the shape of a per-shard
     drift gate in a training-ingest pipeline: reference stats are tiny
     and broadcast; each batch costs one scan + a 10-bin agg; the
@@ -553,12 +611,11 @@ def stream_drift_monitor(
     (p-q)*ln(p/q) in integer nano-units, summed exactly."""
     from ..io import normalize_ts
 
-    schema = spark.read.parquet(feed_dir).schema
+    feed = spark.read.parquet(feed_dir)
     bin_col = F.least(F.floor(F.col("value") / 50.0).cast("int"), F.lit(9)).alias("bin")
     ref = (
-        spark.read.parquet(feed_dir)
-        .withColumn("ts", normalize_ts(schema["ts"].dataType))
-        .filter(F.col("ts") < F.lit(cut).cast("timestamp"))
+        feed.withColumn("ts", normalize_ts(feed.schema["ts"].dataType))
+        .filter(F.col("ts") < F.lit(DRIFT_CUT).cast("timestamp"))
         .select(bin_col)
         .groupBy("bin")
         .agg(F.count(F.lit(1)).cast("bigint").alias("p_cnt"))
@@ -595,11 +652,8 @@ def stream_drift_monitor(
         )
         report.write.mode("append").parquet(out_dir)
 
-    raw = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .load(feed_dir)
+    raw = parquet_stream(
+        spark, feed_dir, "*.parquet", max_files_per_trigger, schema=feed.schema
     )
     q_stream = (
         raw.writeStream.foreachBatch(score_batch)
@@ -656,7 +710,7 @@ def stream_stream_left_outer_conversions(spark: SparkSession, sf_dir: str) -> Da
         ),
         "leftOuter",
     )
-    pairs = run_to_completion(joined, "append")
+    pairs, _ = run_to_completion(joined, "append")
     # deterministic emission horizon from the static fixture (one
     # bounded scalar agg; in production this is the live watermark)
     from ..io import table as _table
@@ -752,7 +806,7 @@ def stream_kmv_distinct(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    latest = run_to_completion(out, "update")
+    latest, _ = run_to_completion(out, "update")
     from pyspark.sql import Window
 
     w = Window.partitionBy("event_type").orderBy(F.col("n_seen").desc())
@@ -799,46 +853,21 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     update per group is that group's final count), NOT input - dropped —
     the two are reconciled by the oracle instead.
     """
-    import os
-    import shutil
-    import tempfile
-
     from ..io import table
 
     events = table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
-    staging = tempfile.mkdtemp(prefix="late_audit_stage_")
-    replay_dir = tempfile.mkdtemp(prefix="late_audit_")
     recent = F.lit(LATE_AUDIT_SPLIT_RECENT).cast("timestamp")
     old = F.lit(LATE_AUDIT_SPLIT_OLD).cast("timestamp")
-    batches_spec = (
-        ("0_recent", F.col("ts") >= recent, 1_000_000_000),
-        ("1_mid", (F.col("ts") >= old) & (F.col("ts") < recent), 2_000_000_000),
-        ("2_old", F.col("ts") < old, 3_000_000_000),
-    )
-    name = f"late_audit_{uuid.uuid4().hex}"
-    try:
-        for prefix, cond, mtime in batches_spec:
-            sub = os.path.join(staging, prefix)
-            events.where(cond).coalesce(1).write.parquet(sub, mode="overwrite")
-            part = next(f for f in os.listdir(sub) if f.endswith(".parquet"))
-            dst = os.path.join(replay_dir, f"{prefix}.parquet")
-            os.rename(os.path.join(sub, part), dst)
-            # the file source orders unprocessed files by modification time:
-            # pin mtimes so replay order is deterministic (write order
-            # usually suffices, but ms-granularity ties would flake)
-            os.utime(dst, (mtime, mtime))
-
-        stream = (
-            spark.readStream.schema(events.schema)
-            .format("parquet")
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", 1)
-            .load(replay_dir)
-        )
+    slices = [
+        events.where(F.col("ts") >= recent),
+        events.where((F.col("ts") >= old) & (F.col("ts") < recent)),
+        events.where(F.col("ts") < old),
+    ]
+    with replay_stream(spark, slices) as stream:
         # numRowsDroppedByWatermark counts POST-PARTIAL-AGG rows entering
         # the state operator, so its value is one-per-group only if each
         # batch's partial aggregation ran on a single input partition.
-        # The coalesce(1) files above guarantee that only while each file
+        # The one-file replay batches guarantee that only while each file
         # fits in one maxSplitBytes split; repartition(1) pins it for any
         # file size, making dropped_groups split-invariant (this is an
         # audit probe over one micro-batch's worth of late data, not a
@@ -850,45 +879,27 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        q = (
-            agg.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-            input_rows = 0
-            dropped_groups = 0
-            n_batches = 0
-            for p in q.recentProgress:
-                d = p if isinstance(p, dict) else json.loads(p.json)
-                if not d.get("numInputRows"):
-                    continue
-                n_batches += 1
-                input_rows += d["numInputRows"]
-                for op in d.get("stateOperators") or []:
-                    dropped_groups += op.get("numRowsDroppedByWatermark", 0)
-            # update-mode sink: one row per group per updating batch; the
-            # last (max) n per group is its final accepted count
-            accepted = (
-                spark.table(name)
-                .groupBy("w", "event_type")
-                .agg(F.max("n").alias("n"))
-                .agg(F.sum("n").alias("s"))
-                .collect()[0]["s"]
-                or 0
-            )
-        finally:
-            q.stop()
-        spark.catalog.dropTempView(name)
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(replay_dir, ignore_errors=True)
-    if n_batches < 3:
+        result, progress = run_to_completion(agg, "update")
+    batches = [d for d in progress if d.get("numInputRows")]
+    if len(batches) < 3:
         raise RuntimeError(
-            f"late-data audit needs the three-batch replay, got {n_batches}"
+            f"late-data audit needs the three-batch replay, got {len(batches)}"
         )
+    input_rows = sum(d["numInputRows"] for d in batches)
+    dropped_groups = sum(
+        op.get("numRowsDroppedByWatermark", 0)
+        for d in batches
+        for op in d.get("stateOperators") or []
+    )
+    # update-mode sink: one row per group per updating batch; the last
+    # (max) n per group is its final accepted count
+    accepted = (
+        result.groupBy("w", "event_type")
+        .agg(F.max("n").alias("n"))
+        .agg(F.sum("n").alias("s"))
+        .collect()[0]["s"]
+        or 0
+    )
     return spark.createDataFrame(
         [(input_rows, int(accepted), dropped_groups)],
         "input_rows bigint, accepted_rows bigint, dropped_groups bigint",

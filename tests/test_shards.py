@@ -104,7 +104,7 @@ class TestStreamExport:
 
         out = str(tmp_path / "stream_shards")
         ckpt = str(tmp_path / "ckpt")
-        stream_export_shards(spark, sf_dir, out, ckpt, min_chars=100)
+        stream_export_shards(spark, sf_dir, out, ckpt)
 
         src = table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 100)
         docs_schema = table(spark, sf_dir, "documents").schema
@@ -121,7 +121,7 @@ class TestStreamExport:
         mtimes = {f: os.path.getmtime(f) for f in first_files}
 
         # restart from the same checkpoint: no new input -> no new output
-        stream_export_shards(spark, sf_dir, out, ckpt, min_chars=100)
+        stream_export_shards(spark, sf_dir, out, ckpt)
         second_files = sorted(
             f for f in glob.glob(os.path.join(out, "**", "part-*"), recursive=True)
             if not f.endswith(".crc")
@@ -138,7 +138,7 @@ class TestStreamExport:
         from form700_etl_spark.sinks.shards import stream_export_shards
 
         out = str(tmp_path / "stream")
-        stream_export_shards(spark, sf_dir, out, str(tmp_path / "ckpt"), min_chars=100)
+        stream_export_shards(spark, sf_dir, out, str(tmp_path / "ckpt"))
         batch = str(tmp_path / "batch")
         curated = table(spark, sf_dir, "documents").filter(F.col("n_chars") >= 100)
         write_training_shards(curated, batch, "doc_id", n_shards=2,

@@ -142,7 +142,7 @@ def test_stream_cdc_merge_apply_converges_to_batch_latest(spark, sf_dir, tmp_pat
     ckpt = str(tmp_path / "ckpt")
     table(spark, sf_dir, "events").repartition(4).write.parquet(feed)
 
-    stream_cdc_merge_apply(spark, feed, snap, ckpt, key="user_id")
+    stream_cdc_merge_apply(spark, feed, snap, ckpt)
 
     w = Window.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
     expected = (
@@ -160,7 +160,7 @@ def test_stream_cdc_merge_apply_converges_to_batch_latest(spark, sf_dir, tmp_pat
     )
 
     before = sorted(os.listdir(snap))
-    stream_cdc_merge_apply(spark, feed, snap, ckpt, key="user_id")  # replay: no-op
+    stream_cdc_merge_apply(spark, feed, snap, ckpt)  # replay: no-op
     assert sorted(os.listdir(snap)) == before
 
 
@@ -227,6 +227,7 @@ def test_stream_incremental_kmv_sketch_maintenance(spark, sf_dir, tmp_path):
 
     from form700_etl_spark.io import table
     from form700_etl_spark.operators.sketches import KMV_K, kmv_merge, kmv_sketch
+    from form700_etl_spark.streaming.events_stream import parquet_stream
 
     feed = str(tmp_path / "feed")
     table(spark, sf_dir, "events").repartition(4).write.parquet(feed)
@@ -236,12 +237,8 @@ def test_stream_incremental_kmv_sketch_maintenance(spark, sf_dir, tmp_path):
         sk = kmv_sketch(batch_df, ["event_type"], "user_id", k=KMV_K)
         sk.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(parts)
 
-    schema = spark.read.parquet(feed).schema
     q = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("maxFilesPerTrigger", "1")
-        .load(feed)
+        parquet_stream(spark, feed, "*.parquet", files_per_trigger=1)
         .writeStream.foreachBatch(sketch_batch)
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
@@ -273,19 +270,17 @@ def test_stream_kmv_distinct_deterministic_across_micro_batches(
     results — this is exactly the case a sketch_size tie-break would
     break, since sketch_size saturates at k."""
     from form700_etl_spark.io import table
-    from form700_etl_spark.streaming.events_stream import stream_kmv_distinct
+    from form700_etl_spark.streaming.events_stream import (
+        parquet_stream,
+        stream_kmv_distinct,
+    )
 
     feed = str(tmp_path / "feed")
     table(spark, sf_dir, "events").repartition(4).write.parquet(feed)
-    schema = spark.read.parquet(feed).schema
 
     def run(max_files):
-        stream = (
-            spark.readStream.schema(schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", str(max_files))
-            .load(feed)
-            .withWatermark("ts", "10 seconds")
+        stream = parquet_stream(spark, feed, "*.parquet", max_files).withWatermark(
+            "ts", "10 seconds"
         )
         return {
             r["event_type"]: (r["sketch_size"], r["kmv_estimate"])
@@ -389,6 +384,43 @@ def test_bench_stream_reports_applied_state_partitions(spark, sf_dir):
         run["events"], session_parts
     )
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_parts
+
+
+def test_run_to_completion_leaves_no_temp_view(spark, sf_dir):
+    """Each memory-sink drive registers its sink as a temp view; the
+    drive must drop it once the result frame has resolved it, so
+    repeated runs leave the session catalog unchanged while every
+    returned frame still reads its rows."""
+    from form700_etl_spark.streaming.events_stream import stream_tumbling_counts
+
+    def catalog():
+        return sorted(t.name for t in spark.catalog.listTables())
+
+    before = catalog()
+    outs = [stream_tumbling_counts(spark, sf_dir) for _ in range(3)]
+    assert catalog() == before
+    rows = [sorted(tuple(r) for r in out.collect()) for out in outs]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
+
+
+def test_replay_stream_delivers_batch_i_as_micro_batch_i(spark):
+    """replay_stream's order contract: batch i arrives as micro-batch i,
+    so the per-batch input counts in the progress equal the slice
+    counts in order.  Slices of distinct sizes make any reordering
+    visible; the repeated slice exercises the copied-file path."""
+    from form700_etl_spark.streaming.events_stream import (
+        replay_stream,
+        run_to_completion,
+    )
+
+    ids = spark.range(100)
+    slices = [ids.where(F.col("id") < n) for n in (7, 40, 2, 19)]
+    slices.append(slices[1])
+    with replay_stream(spark, slices) as stream:
+        result, progress = run_to_completion(stream, "append")
+    got = [p["numInputRows"] for p in progress if p.get("numInputRows")]
+    assert got == [7, 40, 2, 19, 40]
+    assert result.count() == sum(got)
 
 
 def test_derive_stream_state_partitions_bounds():
