@@ -62,9 +62,11 @@ def _reverify_priority(here: str, last: dict[str, int]) -> list[str]:
     driver samples the name in a round >= fixed_round + 1, the committed
     CORRECTNESS artifact raises its last-sampled round past
     ``fixed_round`` and the entry stops matching (stale lines are inert,
-    so the file never needs emergency edits between rounds).
+    so the file never needs emergency edits between rounds).  A name
+    with several pending lines is returned once, at its first position,
+    so it takes one sample slot.
     """
-    out: list[str] = []
+    out: dict[str, None] = {}
     try:
         with open(os.path.join(here, "QUEUE_REVERIFY.txt")) as fh:
             for line in fh:
@@ -73,10 +75,10 @@ def _reverify_priority(here: str, last: dict[str, int]) -> list[str]:
                     continue
                 name, fixed_round = parts[0], int(parts[1])
                 if last.get(name, 0) <= fixed_round:
-                    out.append(name)
+                    out.setdefault(name)
     except OSError:
         pass
-    return out
+    return list(out)
 
 
 def _least_recently_sampled_first(names, here: str | None = None) -> list[str]:

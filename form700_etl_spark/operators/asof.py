@@ -4,9 +4,8 @@
 right row with right.ts <= left.ts per key" WITHOUT a join: union the
 tagged sides, sort within key by time, and carry the last-seen right
 value forward with ``last(ignorenulls=True)``.  One shuffle on the
-key, linear within partitions — the scalable plan for billions of rows
-(vs per-key ``pd.merge_asof``, kept here as the applyInPandas
-fallback for exotic tolerance semantics).
+key, linear within partitions — the scalable plan for billions of rows,
+with no per-key ``pd.merge_asof`` in Python.
 
 Tie rule: right rows are pre-deduped to one per (key, ts) (greatest id
 wins), so the as-of pick is total-ordered and engine-independent —
@@ -68,78 +67,3 @@ def asof_join_via_window(
         ],
     )
     return carried.filter(F.col("__is_left") == 1).drop("__is_left", *value_cols)
-
-
-def asof_join_via_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    value_cols: list[str],
-    schema: str,
-) -> DataFrame:
-    """applyInPandas fallback: per-key ``pd.merge_asof`` — for tolerance
-    windows / nearest-direction semantics the window plan doesn't cover.
-    Shuffles both sides once on the key; each group sorts in pandas."""
-    import pandas as pd
-
-    l_sel = left
-    r_sel = right.select(key, ts, *value_cols)
-
-    def merge(pdf_key, group: pd.DataFrame) -> pd.DataFrame:
-        lg = group[group["__side"] == "l"].drop(columns=["__side"]).sort_values(ts)
-        rg = group[group["__side"] == "r"].drop(columns=["__side"]).sort_values(ts)
-        rg = rg[[key, ts, *value_cols]].rename(columns={c: f"asof_{c}" for c in value_cols})
-        out = pd.merge_asof(lg, rg, on=ts, by=key, direction="backward")
-        return out
-
-    l_tag = l_sel.withColumn("__side", F.lit("l"))
-    r_tag = r_sel.withColumn("__side", F.lit("r"))
-    cols = set(l_tag.columns) | set(r_tag.columns)
-    conformed = [
-        df.select(*[(F.col(c) if c in df.columns else F.lit(None)).alias(c) for c in sorted(cols)])
-        for df in (l_tag, r_tag)
-    ]
-    unioned = conformed[0].unionByName(conformed[1])
-    return unioned.groupBy(key).applyInPandas(merge, schema=schema)
-
-
-def asof_join_via_cogroup(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    ts: str,
-    value_cols: list[str],
-    schema: str,
-) -> DataFrame:
-    """Cogroup form of the pandas fallback:
-    ``left.groupBy(key).cogroup(right.groupBy(key)).applyInPandas`` —
-    Spark's purpose-built surface for a custom TWO-sided per-key merge.
-    Unlike ``asof_join_via_pandas`` there is no tag column, no schema
-    conforming, and no union: each side shuffles once on the key and
-    arrives in the UDF as its own Arrow frame.  Prefer this shape
-    whenever per-key logic genuinely needs both sides in Python
-    (tolerance windows, nearest-direction, per-key model application);
-    prefer ``asof_join_via_window`` — one shuffle, zero Python — when
-    plain backward as-of is enough."""
-    import pandas as pd
-
-    r_sel = right.select(key, ts, *value_cols)
-
-    def merge(lg: pd.DataFrame, rg: pd.DataFrame) -> pd.DataFrame:
-        if lg.empty:
-            return pd.DataFrame(columns=list(lg.columns) + [f"asof_{c}" for c in value_cols])
-        lg = lg.sort_values(ts)
-        if rg.empty:
-            out = lg.copy()
-            for c in value_cols:
-                out[f"asof_{c}"] = pd.NA
-            return out
-        rg = rg.sort_values(ts).rename(columns={c: f"asof_{c}" for c in value_cols})
-        return pd.merge_asof(lg, rg, on=ts, by=key, direction="backward")
-
-    return (
-        left.groupBy(key)
-        .cogroup(r_sel.groupBy(key))
-        .applyInPandas(merge, schema=schema)
-    )

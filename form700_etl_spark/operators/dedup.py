@@ -1,61 +1,77 @@
-"""Deduplication operator library (build plan M5).
+"""Near-duplicate operator library (build plan M5): the one copy of
+every near-dup step.
 
-Reusable DataFrame->DataFrame builders; the oracle-checked queries in
-``queries/dedup.py`` are thin wrappers over these.  All base hashing is
-md5 (minhash permutations are affine maps over one md5-derived 32-bit
-int) so results are reproducible across engines and runs.
+The oracle-checked queries in ``queries/dedup.py`` and the capstone in
+``queries/pipeline_ops.py`` are thin callers of these.  Documents are
+``(doc_id, text)`` frames with space-separated tokens.  All base hashing
+is md5 (minhash permutations are affine maps over one md5-derived
+32-bit int) so results are reproducible across engines and runs.
 
-Scale design (100 TB):
-- ``shingle``: one narrow shuffle (distinct on (doc, shingle)).
+The single path, one function per step:
+
+- ``shingle``: word n-grams per doc, one narrow shuffle (distinct on
+  (doc, shingle)); ``max_shingle_df`` applies the hot-shingle cap
+  (``_drop_hot_shingles`` — the skew guard that keeps a 100 TB corpus
+  from shuffling a stop-phrase's n² pairs; also applied by the cached
+  capped table in ``queries/dedup.py``).
+- ``pair_overlaps``: the inverted-index all-pairs join — every doc pair
+  sharing a shingle with its overlap ``common`` and sizes ``n1``/``n2``.
+- ``jaccard`` / ``containment``: the two pair scores over those columns.
 - ``minhash_signatures``: the whole K-wide signature in ONE aggregation
   pass with map-side partial mins — state per doc is K fixed-width
-  strings, independent of doc length.
-- ``lsh_candidates``: bands shuffle on (band, key); only colliding
-  docs meet.  With b bands of r rows the match threshold is the usual
-  (1/b)^(1/r) S-curve.
-- ``verify_jaccard``: joins candidates back to the inverted index —
-  cost scales with candidate count, not n².
-- hot-shingle cap (``max_shingle_df``): drops shingles appearing in
-  more than N docs before any pair join — the skew guard that keeps a
-  100 TB corpus from shuffling a stop-phrase's n² pairs.
+  values, independent of doc length.
+- ``lsh_candidates`` (batch self-join) and ``incremental_lsh_probe``
+  (new batch vs existing index) band the signatures the same way
+  (``_bands``); only colliding docs meet.  With b bands of r rows the
+  match threshold is the usual (1/b)^(1/r) S-curve.
+- ``verify_jaccard``: exact scores for candidate pairs, re-shingling
+  only the candidate docs — cost scales with candidate count, not n².
+- ``connected_components``: pairs -> clusters (min doc_id canonical).
+
+Constants: ``N_HASHES`` = 12 permutations in ``N_BANDS`` = 4 bands of
+``BAND_ROWS`` = 3, ``MINHASH_P`` the affine-hash modulus,
+``MAX_SHINGLE_DF`` = 16 the pair-join consumers' cap, ``SCORE_DECIMALS``
+= 6 the verify rounding, ``CC_MAX_ITER`` = 20 label-propagation rounds.
 
 Algorithms from the public literature: MinHash resemblance sketches
 (Broder, "On the resemblance and containment of documents", 1997) with
 banded LSH (Leskovec/Rajaraman/Ullman, Mining of Massive Datasets
-ch. 3); SimHash (Charikar, "Similarity estimation techniques from
-rounding algorithms", STOC 2002).
+ch. 3).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..io import ensure_parallelism
 
 N_HASHES = 12
-BAND_ROWS = 3  # -> 4 bands
+BAND_ROWS = 3
+N_BANDS = N_HASHES // BAND_ROWS
+SCORE_DECIMALS = 6
+CC_MAX_ITER = 20
 # Hot-shingle document-frequency cap used by the pair-join consumers
-# (queries.dedup.dedup_ngram_jaccard / dedup_clusters_connected pass it
-# as shingle(max_shingle_df=...), with the identical df filter in their
-# DuckDB oracles): a shingle shared by k docs emits k^2/2 pair rows in
-# an inverted-index self-join, so one stop-phrase at corpus scale is a
-# shuffle-skew blowup.  df > MAX_SHINGLE_DF shingles are dropped BEFORE
-# the join and Jaccard is computed over the capped shingle space on
-# both engines, keeping oracle parity exact.
+# (queries.dedup.dedup_ngram_jaccard / dedup_clusters_connected read the
+# capped table, with the identical df filter in their DuckDB oracles): a
+# shingle shared by k docs emits k^2/2 pair rows in an inverted-index
+# self-join, so one stop-phrase at corpus scale is a shuffle-skew
+# blowup.  df > MAX_SHINGLE_DF shingles are dropped BEFORE the join and
+# Jaccard is computed over the capped shingle space on both engines,
+# keeping oracle parity exact.
 #
 # Recall caveat: an exact/near-duplicate cluster of more than
 # MAX_SHINGLE_DF docs shares ALL its shingles, so the cap erases the
 # whole cluster from the Jaccard/LSH view.  That is by design here —
-# identical-text clusters belong to exact_dedup_groups (one cheap
-# hash-groupBy, run it first; training_pipeline_end_to_end does), and
-# at a given corpus size the cap must be chosen above the largest
-# near-dup cluster that exact dedup cannot collapse.
+# identical-text clusters belong to exact dedup (one cheap md5
+# hash-groupBy, ``dedup_exact``; run it first, training_pipeline_end_to_end
+# does), and at a given corpus size the cap must be chosen above the
+# largest near-dup cluster that exact dedup cannot collapse.
 MAX_SHINGLE_DF = 16
 
 
-def shingle(documents: DataFrame, n: int = 3, text_col: str = "text", id_col: str = "doc_id",
-            max_shingle_df: int | None = None, distinct: bool = True) -> DataFrame:
+def shingle(documents: DataFrame, n: int = 3, max_shingle_df: int | None = None,
+            distinct: bool = True) -> DataFrame:
     """Word n-gram shingles per document: (doc_id, shingle).
 
     perf: the token array is materialized once per row before the
@@ -80,20 +96,68 @@ def shingle(documents: DataFrame, n: int = 3, text_col: str = "text", id_col: st
         "ELSE array() END"
     )
     out = (
-        documents.select(F.col(id_col).alias("doc_id"), F.split(text_col, " ").alias("toks"))
+        documents.select("doc_id", F.split("text", " ").alias("toks"))
         .select("doc_id", F.explode(F.expr(expr)).alias("shingle"))
     )
     if distinct:
         out = out.distinct()
     if max_shingle_df is not None:
-        hot = (
-            out.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") > max_shingle_df)
-            .select("shingle")
-        )
-        out = out.join(F.broadcast(hot), "shingle", "left_anti")
+        out = _drop_hot_shingles(out, max_shingle_df)
     return out
+
+
+def _drop_hot_shingles(shingles: DataFrame, max_df: int) -> DataFrame:
+    """The hot-shingle cap: drop shingles held by more than ``max_df``
+    docs (a df groupBy, broadcast anti-join) — see MAX_SHINGLE_DF."""
+    hot = (
+        shingles.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .filter(F.col("df") > max_df)
+        .select("shingle")
+    )
+    return shingles.join(F.broadcast(hot), "shingle", "left_anti")
+
+
+def jaccard() -> Column:
+    """|A ∩ B| / |A ∪ B| over a row carrying ``common``, ``n1``, ``n2``."""
+    return F.col("common").cast("double") / (F.col("n1") + F.col("n2") - F.col("common"))
+
+
+def containment() -> Column:
+    """Broder containment |A ∩ B| / min(|A|, |B|) over the same row —
+    the asymmetric overlap that catches a small document embedded
+    inside a much larger one, where Jaccard is diluted by the size gap
+    (Broder, "On the resemblance and containment of documents",
+    SEQUENCES 1997)."""
+    return F.col("common").cast("double") / F.least(F.col("n1"), F.col("n2"))
+
+
+def _with_sizes(common: DataFrame, shingles: DataFrame) -> DataFrame:
+    """Attach each side's distinct-shingle count (``n1``, ``n2``) to a
+    pair frame whose first two columns are the doc ids."""
+    c1, c2 = common.columns[:2]
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    s1 = sizes.select(F.col("doc_id").alias(c1), F.col("n").alias("n1"))
+    s2 = sizes.select(F.col("doc_id").alias(c2), F.col("n").alias("n2"))
+    return common.join(s1, c1).join(s2, c2)
+
+
+def pair_overlaps(shingles: DataFrame) -> DataFrame:
+    """Every doc pair sharing at least one shingle, via the inverted-index
+    self-join: (doc1, doc2, common, n1, n2) with doc1 < doc2.  Input is
+    distinct (doc_id, shingle) rows, normally df-capped first — the join
+    emits k²/2 rows per shingle held by k docs."""
+    # distinct output names on each side make the self-join condition
+    # unambiguous (same-attribute `shingle == shingle` is a trap Spark
+    # warns about)
+    a = shingles.select(F.col("doc_id").alias("doc1"), F.col("shingle").alias("s1"))
+    b = shingles.select(F.col("doc_id").alias("doc2"), F.col("shingle").alias("s2"))
+    common = (
+        a.join(b, (F.col("s1") == F.col("s2")) & (F.col("doc1") < F.col("doc2")))
+        .groupBy("doc1", "doc2")
+        .agg(F.count(F.lit(1)).alias("common"))
+    )
+    return _with_sizes(common, shingles)
 
 
 # Universal-hash minhash family (Broder 1997; Carter/Wegman universal
@@ -110,13 +174,13 @@ def shingle(documents: DataFrame, n: int = 3, text_col: str = "text", id_col: st
 MINHASH_P = 4_294_967_311  # smallest prime > 2^32
 
 
-def minhash_params(n_hashes: int = N_HASHES) -> list[tuple[int, int]]:
+def minhash_params() -> list[tuple[int, int]]:
     """Deterministic (A_k, B_k) affine coefficients, shared with the
     oracle SQL generator."""
-    return [(2_000_006 * (k + 1) + 1, 777_767 * (k + 1)) for k in range(n_hashes)]
+    return [(2_000_006 * (k + 1) + 1, 777_767 * (k + 1)) for k in range(N_HASHES)]
 
 
-def minhash_signatures(shingles: DataFrame, n_hashes: int = N_HASHES) -> DataFrame:
+def minhash_signatures(shingles: DataFrame) -> DataFrame:
     """K min-hashes per doc (columns h0..h{K-1}) in one aggregation
     pass.  The base hash x is projected BEFORE the aggregate so the md5
     runs once per shingle row regardless of K."""
@@ -125,13 +189,29 @@ def minhash_signatures(shingles: DataFrame, n_hashes: int = N_HASHES) -> DataFra
     return hashed.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * F.col("x") + F.lit(b)) % F.lit(MINHASH_P)).alias(f"h{k}")
-            for k, (a, b) in enumerate(minhash_params(n_hashes))
+            for k, (a, b) in enumerate(minhash_params())
         ]
     )
 
 
-def lsh_candidates(signatures: DataFrame, band_rows: int = BAND_ROWS,
-                   n_hashes: int = N_HASHES) -> DataFrame:
+def _bands(signatures: DataFrame) -> DataFrame:
+    """(doc_id, band, key): band b's key is the md5 of its BAND_ROWS
+    min-hashes, so two docs collide in a band iff all its rows agree."""
+    structs = [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.md5(
+                F.concat_ws(",", *[F.col(f"h{b * BAND_ROWS + r}") for r in range(BAND_ROWS)])
+            ).alias("key"),
+        )
+        for b in range(N_BANDS)
+    ]
+    return signatures.select("doc_id", F.explode(F.array(*structs)).alias("bk")).select(
+        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
+    )
+
+
+def lsh_candidates(signatures: DataFrame) -> DataFrame:
     """Band the signatures and emit distinct colliding pairs (doc1 < doc2).
 
     The banded table is localCheckpointed before the self-join: both
@@ -139,19 +219,7 @@ def lsh_candidates(signatures: DataFrame, band_rows: int = BAND_ROWS,
     (corpus scan + shingle explode + K-wide min agg)
     — at 100 TB that is two extra full-corpus passes to build a table
     that is only O(n_docs x n_bands) rows."""
-    band_structs = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(",", *[F.col(f"h{b * band_rows + r}") for r in range(band_rows)])
-            ).alias("key"),
-        )
-        for b in range(n_hashes // band_rows)
-    ]
-    bands = signatures.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
-    )
-    bands = bands.localCheckpoint()
+    bands = _bands(signatures).localCheckpoint()
     b1 = bands.select(F.col("doc_id").alias("doc1"), "band", "key")
     b2 = bands.select(F.col("doc_id").alias("doc2"), "band", "key")
     return (
@@ -162,66 +230,71 @@ def lsh_candidates(signatures: DataFrame, band_rows: int = BAND_ROWS,
     )
 
 
-def verify_jaccard(pairs: DataFrame, shingles: DataFrame, threshold: float | None = None,
-                   round_to: int = 6, shingles_distinct: bool = True,
-                   pairs_materialized: bool = False,
+def incremental_lsh_probe(sig_new: DataFrame, sig_old: DataFrame) -> DataFrame:
+    """Incremental near-dup: band an INCOMING batch's signatures and
+    probe them against the EXISTING corpus index — no self-join over
+    the whole corpus.  Returns candidate (new_doc, old_doc) pairs.
+
+    This is how dedup runs in production once the corpus exists: the
+    old side is a precomputed banded index (bucketed table on
+    (band, key) at scale — only matching buckets are read); the new
+    side is one batch, small enough to BROADCAST, so probing 1M new
+    docs against a 10B-doc index moves only the batch, never the
+    index.  Signatures use the same md5-affine family as the batch
+    operator, so an index built by one is probe-compatible with the
+    other."""
+    old_bands = _bands(sig_old).withColumnRenamed("doc_id", "old_doc")
+    new_bands = _bands(sig_new).withColumnRenamed("doc_id", "new_doc")
+    return (
+        old_bands.join(F.broadcast(new_bands), ["band", "key"])
+        .select("new_doc", "old_doc")
+        .distinct()
+    )
+
+
+def verify_jaccard(pairs: DataFrame, documents: DataFrame,
                    with_containment: bool = False) -> DataFrame:
-    """Exact Jaccard for each candidate pair via the inverted index:
-    the (doc2, shingle) join touches only shared shingles.
+    """Exact word-3-gram Jaccard for each candidate pair.  ``pairs``
+    has exactly two doc-id columns, in either orientation ((doc1, doc2)
+    from ``lsh_candidates``, (new_doc, old_doc) from
+    ``incremental_lsh_probe``); the output keeps their names and adds
+    ``jaccard`` (and ``containment`` with ``with_containment=True``),
+    rounded to SCORE_DECIMALS.  A pair sharing no shingle is absent.
 
-    ``with_containment=True`` additionally emits Broder containment
-    (common / min(n1, n2)) — the asymmetric overlap measure that
-    catches a small document embedded inside a much larger one, where
-    Jaccard is diluted by the size gap (Broder, "On the resemblance
-    and containment of documents", SEQUENCES 1997).
+    Only the candidate docs are re-shingled: one broadcast semi-join of
+    ``documents`` down to them — never a driver-side IN-list, since
+    candidate lists can be millions of ids — then distinct shingles, so
+    at scale a corpus-wide distinct shuffle becomes one over the
+    candidates.  The (pair, shingle) join touches only shared shingles.
 
-    With ``shingles_distinct=False`` the input may carry duplicate
-    (doc, shingle) rows; they are deduped HERE, after a broadcast
-    semi-join down to the candidate docs — at scale this replaces a
-    corpus-wide distinct shuffle with one over a few hundred docs.
-
-    The pair set and the candidate-restricted shingle set are each
-    consumed by MULTIPLE downstream joins; both are localCheckpointed
-    so the (potentially full-corpus) lineage behind them runs once,
-    not once per consumer.  Both are O(candidates) — tiny.  Callers
-    that already materialized ``pairs`` pass ``pairs_materialized=True``
-    to skip a redundant second checkpoint copy."""
-    if not pairs_materialized:
-        pairs = pairs.localCheckpoint()
-    if not shingles_distinct:
-        cand_docs = (
-            pairs.select(F.col("doc1").alias("doc_id"))
-            .unionByName(pairs.select(F.col("doc2").alias("doc_id")))
-            .distinct()
-        )
-        shingles = (
-            shingles.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-            .distinct()
-            .localCheckpoint()
-        )
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = shingles.select(F.col("doc_id").alias("doc1"), "shingle")
-    b = shingles.select(F.col("doc_id").alias("doc2"), "shingle")
+    The pair set and the candidate shingle set are each consumed by
+    MULTIPLE downstream joins; both are localCheckpointed so the
+    (potentially full-corpus) lineage behind them runs once, not once
+    per consumer.  Both are O(candidates) — tiny."""
+    c1, c2 = pairs.columns
+    pairs = pairs.localCheckpoint()
+    cand_docs = (
+        pairs.select(F.col(c1).alias("doc_id"))
+        .unionByName(pairs.select(F.col(c2).alias("doc_id")))
+        .distinct()
+    )
+    cand = documents.join(F.broadcast(cand_docs), "doc_id", "left_semi")
+    shingles = shingle(cand).localCheckpoint()
+    a = shingles.select(F.col("doc_id").alias(c1), "shingle")
+    b = shingles.select(F.col("doc_id").alias(c2), "shingle")
     common = (
-        pairs.join(a, "doc1")
-        .join(b, ["doc2", "shingle"])
-        .groupBy("doc1", "doc2")
+        pairs.join(a, c1)
+        .join(b, [c2, "shingle"])
+        .groupBy(c1, c2)
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
-    jac = F.col("common").cast("double") / (F.col("n1") + F.col("n2") - F.col("common"))
-    out = common.join(s1, "doc1").join(s2, "doc2")
-    if threshold is not None:
-        out = out.filter(jac >= threshold)
-    cols = ["doc1", "doc2", F.round(jac, round_to).alias("jaccard")]
+    cols = [c1, c2, F.round(jaccard(), SCORE_DECIMALS).alias("jaccard")]
     if with_containment:
-        cont = F.col("common").cast("double") / F.least(F.col("n1"), F.col("n2"))
-        cols.append(F.round(cont, round_to).alias("containment"))
-    return out.select(*cols)
+        cols.append(F.round(containment(), SCORE_DECIMALS).alias("containment"))
+    return _with_sizes(common, shingles).select(*cols)
 
 
-def connected_components(pairs: DataFrame, max_iter: int = 20,
+def connected_components(pairs: DataFrame,
                          driver_threshold: int = 1_000_000) -> DataFrame:
     """Connected components over an undirected pair graph
     ((doc1, doc2) edges) — near-dup PAIRS become dedup CLUSTERS (each
@@ -316,7 +389,7 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         .withColumn("label", F.col("doc_id"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ITER):
         neighbor_min = (
             edges.join(labels, edges.b == labels.doc_id)
             .groupBy(F.col("a").alias("doc_id"))
@@ -340,59 +413,3 @@ def connected_components(pairs: DataFrame, max_iter: int = 20,
         if changed == 0:
             break
     return labels.select("doc_id", F.col("label").alias("component_id"))
-
-
-def exact_dedup_groups(documents: DataFrame, key: F.Column | None = None,
-                       id_col: str = "doc_id") -> DataFrame:
-    """Hash-groupBy exact dedup: fingerprint -> (group_size, canonical
-    min-id representative)."""
-    fp = key if key is not None else F.md5("text")
-    d = documents.select(F.col(id_col).alias("doc_id"), fp.alias("fingerprint"))
-    return d.groupBy("fingerprint").agg(
-        F.count(F.lit(1)).alias("group_size"),
-        F.min("doc_id").alias("canonical_id"),
-    )
-
-
-def incremental_lsh_probe(
-    sig_new: DataFrame,
-    sig_old: DataFrame,
-    band_rows: int = BAND_ROWS,
-    n_hashes: int = N_HASHES,
-) -> DataFrame:
-    """Incremental near-dup: band an INCOMING batch's signatures and
-    probe them against the EXISTING corpus index — no self-join over
-    the whole corpus.  Returns candidate (new_doc, old_doc) pairs.
-
-    This is how dedup runs in production once the corpus exists: the
-    old side is a precomputed banded index (bucketed table on
-    (band, key) at scale — only matching buckets are read); the new
-    side is one batch, small enough to BROADCAST, so probing 1M new
-    docs against a 10B-doc index moves only the batch, never the
-    index.  Signatures use the same md5-affine family as the batch
-    operator, so an index built by one is probe-compatible with the
-    other."""
-
-    def _bands(sig: DataFrame, out: str) -> DataFrame:
-        structs = [
-            F.struct(
-                F.lit(b).alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        ",", *[F.col(f"h{b * band_rows + r}") for r in range(band_rows)]
-                    )
-                ).alias("key"),
-            )
-            for b in range(n_hashes // band_rows)
-        ]
-        return sig.select(
-            F.col("doc_id").alias(out), F.explode(F.array(*structs)).alias("bk")
-        ).select(out, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-
-    old_bands = _bands(sig_old, "old_doc")
-    new_bands = _bands(sig_new, "new_doc")
-    return (
-        old_bands.join(F.broadcast(new_bands), ["band", "key"])
-        .select("new_doc", "old_doc")
-        .distinct()
-    )

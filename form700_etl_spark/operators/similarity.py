@@ -90,11 +90,6 @@ def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int,
     )
 
 
-def _sq_dist(a: Column, b: Column) -> Column:
-    d = F.zip_with(a, b, lambda x, y: (x - y) * (x - y))
-    return F.aggregate(d, F.lit(0.0), lambda acc, x: acc + x)
-
-
 def kmeans_centroids(corpus: DataFrame, n_centroids: int = 8, iters: int = 2,
                      id_col: str = "neighbor_id", vec_col: str = "nvec",
                      train_sample: int | None = 16_384) -> list:

@@ -1,11 +1,16 @@
-"""Deduplication operators over the ``documents`` table (build plan M5).
+"""Deduplication queries over the ``documents`` table (build plan M5).
+
+The near-dup builders are thin callers of ``operators/dedup.py``, which
+holds the one copy of each step (shingles and the hot-shingle cap, the
+inverted-index pair overlaps, the Jaccard/containment scores, MinHash
+signatures, LSH banding and the exact verify); this module adds the
+DuckDB oracles and the session-cached shingle tables.
 
 Scale design (100 TB):
 - exact dedup: hash-groupBy on a 128-bit fingerprint — one shuffle on
   the fingerprint, map-side partial dedup first.
-- n-gram Jaccard: shuffle by shingle (inverted index), pair-count, then
-  per-pair verify.  At scale you add a document-frequency cap on hot
-  shingles before the pair join (noted inline).
+- n-gram Jaccard: shuffle by shingle (inverted index) after the
+  hot-shingle document-frequency cap, pair-count, then score.
 - MinHash+LSH: fixed-width signature computed in ONE aggregation pass
   (K min-aggregates), banded into LSH keys; only band-collisions are
   verified — the candidate set, not the n² pair space, is shuffled.
@@ -13,7 +18,8 @@ Scale design (100 TB):
   (Manku/Jain/Sarma WWW 2007), Hamming verification via bit_count(xor).
 
 Determinism: all hashing is md5 (identical hex output in Spark and
-DuckDB); min-over-hex-strings is a valid random-permutation min.
+DuckDB); MinHash permutations are affine maps over one md5-derived
+32-bit integer, computed identically by both engines.
 """
 
 from __future__ import annotations
@@ -22,15 +28,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..io import table
-from ..operators.dedup import BAND_ROWS as _BAND_ROWS
-from ..operators.dedup import MAX_SHINGLE_DF
-from ..operators.dedup import N_HASHES as _N_HASHES
+from ..operators.dedup import (
+    BAND_ROWS,
+    MAX_SHINGLE_DF,
+    MINHASH_P,
+    N_BANDS,
+    _drop_hot_shingles,
+    connected_components,
+    containment,
+    incremental_lsh_probe,
+    jaccard,
+    lsh_candidates,
+    minhash_params,
+    minhash_signatures,
+    pair_overlaps,
+    shingle,
+    verify_jaccard,
+)
 from ..registry import register
 
 # ------------------------------------------------------------- shared pieces
 
-# Distinct word-3-gram shingles per document, as portable SQL and as a
-# DataFrame builder.  Tokens are space-separated in the fixture corpus.
+# Distinct word-3-gram shingles per document as portable SQL (the Spark
+# side is operators.dedup.shingle).  Tokens are space-separated in the
+# fixture corpus.
 _SHINGLES_SQL = """
     SELECT DISTINCT doc_id, shingle FROM (
         SELECT doc_id,
@@ -59,12 +80,6 @@ _CAPPED_SHINGLES_SQL = """
 """
 
 
-def _shingles(spark, sf_dir, max_df: int | None = None) -> DataFrame:
-    from ..operators.dedup import shingle
-
-    return shingle(table(spark, sf_dir, "documents"), n=3, max_shingle_df=max_df)
-
-
 # One cached shingle table per (application, sf_dir, cap): several dedup
 # queries share it, and repeat invocations (bench best-of-N, the oracle
 # harness) would otherwise re-cache an identical plan each call.  Keyed
@@ -89,47 +104,17 @@ def _shingles_cached(spark, sf_dir, max_df: int | None = None) -> DataFrame:
         if max_df is not None:
             # Derive the capped table from the CACHED uncapped one
             # instead of re-running the full scan+explode+distinct
-            # lineage: the cap is just a df-groupBy + broadcast
-            # anti-join on top of the distinct shingle set, identical
-            # to what operators.dedup.shingle(max_shingle_df=...)
-            # computes internally.  Cold-profiling (r12) showed each
-            # variant cost ~5-7 s to populate independently at sf0.1 —
-            # almost all of it the shared upstream stages.
+            # lineage: the same cap shingle(max_shingle_df=...) applies,
+            # on top of the distinct shingle set.  Cold-profiling (r12)
+            # showed each variant cost ~5-7 s to populate independently
+            # at sf0.1 — almost all of it the shared upstream stages.
             base = _shingles_cached(spark, sf_dir, max_df=None)
-            hot = (
-                base.groupBy("shingle")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .filter(F.col("df") > max_df)
-                .select("shingle")
-            )
-            df = base.join(F.broadcast(hot), "shingle", "left_anti").cache()
+            df = _drop_hot_shingles(base, max_df).cache()
         else:
-            df = _shingles(spark, sf_dir, max_df=max_df).cache()
+            df = shingle(table(spark, sf_dir, "documents"), n=3).cache()
         _SHINGLE_CACHE[key] = df
     return df
 
-
-
-def _candidate_shingles(docs, pairs, left_col="doc1", right_col="doc2",
-                        distinct=False):
-    """Shingles restricted to the docs named by a candidate-pair frame:
-    union both id columns, broadcast-semi-join against the corpus, and
-    re-shingle only those docs.  The broadcast semi-join — never a
-    driver-side IN-list — is the 100 TB-safe restriction (candidate
-    lists can be millions of ids).  Shared by every verify stage that
-    re-reads the source for candidate docs only."""
-    from ..operators.dedup import shingle
-
-    cand_docs = (
-        pairs.select(F.col(left_col).alias("doc_id"))
-        .unionByName(pairs.select(F.col(right_col).alias("doc_id")))
-        .distinct()
-    )
-    return shingle(
-        docs.join(F.broadcast(cand_docs), "doc_id", "left_semi"),
-        n=3,
-        distinct=distinct,
-    )
 
 
 # ---------------------------------------------------------------- exact dedup
@@ -224,42 +209,24 @@ def dedup_exact_normalized(spark, sf_dir):
 )
 def dedup_ngram_jaccard(spark, sf_dir):
     sh = _shingles_cached(spark, sf_dir, max_df=MAX_SHINGLE_DF)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    # distinct output names on each side make the self-join condition
-    # unambiguous (same-attribute `shingle == shingle` is a trap Spark
-    # warns about)
-    a = sh.select(F.col("doc_id").alias("doc1"), F.col("shingle").alias("s1"))
-    b = sh.select(F.col("doc_id").alias("doc2"), F.col("shingle").alias("s2"))
-    pairs = (
-        a.join(b, (F.col("s1") == F.col("s2")) & (F.col("doc1") < F.col("doc2")))
-        .groupBy("doc1", "doc2")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
-    jac = F.col("common").cast("double") / (F.col("n1") + F.col("n2") - F.col("common"))
     return (
-        pairs.join(s1, "doc1")
-        .join(s2, "doc2")
-        .filter(jac >= 0.1)
-        .select("doc1", "doc2", F.round(jac, 6).alias("jaccard"))
+        pair_overlaps(sh)
+        .filter(jaccard() >= 0.1)
+        .select("doc1", "doc2", F.round(jaccard(), 6).alias("jaccard"))
     )
 
 
 # --------------------------------------------------------------- MinHash-LSH
 
 
-
 def _minhash_sql() -> str:
-    from ..operators.dedup import MINHASH_P, minhash_params
-
     mins = ",\n               ".join(
         f"MIN(({a} * x + {b}) % {MINHASH_P}) AS h{k}"
-        for k, (a, b) in enumerate(minhash_params(_N_HASHES))
+        for k, (a, b) in enumerate(minhash_params())
     )
     bands = []
-    for b in range(_N_HASHES // _BAND_ROWS):
-        cols = ", ".join(f"h{b * _BAND_ROWS + r}" for r in range(_BAND_ROWS))
+    for b in range(N_BANDS):
+        cols = ", ".join(f"h{b * BAND_ROWS + r}" for r in range(BAND_ROWS))
         bands.append(f"struct_pack(band := {b}, key := md5(concat_ws(',', {cols})))")
     return f"""
     sigs AS (
@@ -308,20 +275,17 @@ def _minhash_sql() -> str:
     ),
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    from ..operators.dedup import lsh_candidates, minhash_signatures, shingle, verify_jaccard
+    return _minhash_lsh_verified(spark, sf_dir)
 
-    # raw (non-distinct) shingles: min() is duplicate-insensitive, so the
-    # signature pass skips the corpus-wide dedup shuffle
+
+def _minhash_lsh_verified(spark, sf_dir, with_containment: bool = False) -> DataFrame:
+    """The MinHash -> LSH -> exact-verify path both LSH pair queries run."""
     docs = table(spark, sf_dir, "documents")
-    raw = shingle(docs, n=3, distinct=False)
-    sig = minhash_signatures(raw, n_hashes=_N_HASHES)
-    candidates = lsh_candidates(sig, band_rows=_BAND_ROWS, n_hashes=_N_HASHES).localCheckpoint()
-    # the Jaccard verify touches only candidate docs (broadcast semi-join
-    # restriction, _candidate_shingles)
-    raw_cand = _candidate_shingles(docs, candidates)
-    return verify_jaccard(
-        candidates, raw_cand, shingles_distinct=False, pairs_materialized=True
-    )
+    # raw (non-distinct) shingles: min() is duplicate-insensitive, so the
+    # signature pass skips the corpus-wide dedup shuffle; the verify
+    # re-shingles only the candidate docs
+    sig = minhash_signatures(shingle(docs, n=3, distinct=False))
+    return verify_jaccard(lsh_candidates(sig), docs, with_containment=with_containment)
 
 
 # Shared CTE chain: capped shingles -> Jaccard>=0.1 pairs -> true
@@ -383,8 +347,6 @@ _COMPONENTS_WITH_SQL = f"""
     ),
 )
 def dedup_clusters_connected(spark, sf_dir):
-    from ..operators.dedup import connected_components
-
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc1", "doc2")
     return connected_components(pairs)
 
@@ -736,7 +698,6 @@ def _quality_sql() -> str:
 def dedup_canonical_per_cluster(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    from ..operators.dedup import connected_components
     from .textops import text_quality_score
 
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc1", "doc2")
@@ -795,49 +756,13 @@ def dedup_canonical_per_cluster(spark, sf_dir):
     ),
 )
 def dedup_incremental_minhash_probe(spark, sf_dir):
-    from ..operators.dedup import (
-        incremental_lsh_probe,
-        minhash_signatures,
-        shingle,
-    )
-
     docs = table(spark, sf_dir, "documents")
-    raw = shingle(docs, n=3, distinct=False)
-    sig = minhash_signatures(raw, n_hashes=_N_HASHES)
+    sig = minhash_signatures(shingle(docs, n=3, distinct=False))
     cand = incremental_lsh_probe(
         sig.filter(F.col("doc_id") % 5 == 0),
         sig.filter(F.col("doc_id") % 5 != 0),
-        band_rows=_BAND_ROWS,
-        n_hashes=_N_HASHES,
-    ).localCheckpoint()
-    # exact-Jaccard verify restricted to candidate docs (distinct
-    # shingle sets), mirroring the oracle's COUNT-over-distinct join.
-    sh = _candidate_shingles(docs, cand, left_col="new_doc",
-                             right_col="old_doc", distinct=True)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("new_doc"), "shingle")
-    b = sh.select(F.col("doc_id").alias("old_doc"), "shingle")
-    common = (
-        cand.join(a, "new_doc")
-        .join(b, ["old_doc", "shingle"])
-        .groupBy("new_doc", "old_doc")
-        .agg(F.count(F.lit(1)).alias("common"))
     )
-    s1 = sizes.select(F.col("doc_id").alias("new_doc"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("old_doc"), F.col("n").alias("n2"))
-    return (
-        common.join(s1, "new_doc")
-        .join(s2, "old_doc")
-        .select(
-            "new_doc",
-            "old_doc",
-            F.round(
-                F.col("common").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("common")),
-                6,
-            ).alias("jaccard"),
-        )
-    )
+    return verify_jaccard(cand, docs)
 
 
 # ------------------------------------------------- cross-split decontamination
@@ -889,20 +814,7 @@ from ..functions.splits import split_col as _split_col
     ),
 )
 def dedup_cross_split_leakage(spark, sf_dir):
-    from ..operators.dedup import lsh_candidates, minhash_signatures, shingle, verify_jaccard
-
-    docs = table(spark, sf_dir, "documents")
-    raw = shingle(docs, n=3, distinct=False)
-    sig = minhash_signatures(raw, n_hashes=_N_HASHES)
-    candidates = lsh_candidates(sig, band_rows=_BAND_ROWS, n_hashes=_N_HASHES).localCheckpoint()
-    raw_cand = _candidate_shingles(docs, candidates)
-    scored = verify_jaccard(
-        candidates,
-        raw_cand,
-        shingles_distinct=False,
-        pairs_materialized=True,
-        with_containment=True,
-    )
+    scored = _minhash_lsh_verified(spark, sf_dir, with_containment=True)
     return (
         scored.select(
             "doc1",
@@ -1008,28 +920,15 @@ def dedup_ngram_coverage(spark, sf_dir):
 )
 def dedup_containment_pairs(spark, sf_dir):
     sh = _shingles_cached(spark, sf_dir, max_df=MAX_SHINGLE_DF)
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("doc1"), F.col("shingle").alias("s1"))
-    b = sh.select(F.col("doc_id").alias("doc2"), F.col("shingle").alias("s2"))
-    pairs = (
-        a.join(b, (F.col("s1") == F.col("s2")) & (F.col("doc1") < F.col("doc2")))
-        .groupBy("doc1", "doc2")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
-    min_n = F.least(F.col("n1"), F.col("n2"))
-    cont = F.col("common").cast("double") / min_n
     return (
-        pairs.join(s1, "doc1")
-        .join(s2, "doc2")
-        .filter(cont >= 0.5)
+        pair_overlaps(sh)
+        .filter(containment() >= 0.5)
         .select(
             "doc1",
             "doc2",
             "common",
-            min_n.alias("min_shingles"),
-            F.round(cont, 6).alias("containment"),
+            F.least(F.col("n1"), F.col("n2")).alias("min_shingles"),
+            F.round(containment(), 6).alias("containment"),
         )
     )
 
@@ -1192,9 +1091,8 @@ def dedup_prefix_filter_join(spark, sf_dir):
             F.size(F.array_intersect("arr1", "arr2")).alias("common"),
         )
     )
-    jac = F.col("common").cast("double") / (F.col("n1") + F.col("n2") - F.col("common"))
-    return common.filter(jac >= 0.5).select(
-        "doc1", "doc2", F.round(jac, 6).alias("jaccard")
+    return common.filter(jaccard() >= 0.5).select(
+        "doc1", "doc2", F.round(jaccard(), 6).alias("jaccard")
     )
 
 
@@ -1249,19 +1147,15 @@ def dedup_cluster_size_distribution(spark, sf_dir):
 
 # ---------------------------------------------------- LSH s-curve report
 
-from ..operators.dedup import BAND_ROWS as _SC_R, N_HASHES as _SC_K  # noqa: E402
-
-_SC_B = _SC_K // _SC_R  # bands
-
 
 @register(
     "dedup_lsh_scurve_report",
     oracle=f"""
     SELECT CAST(k AS BIGINT) AS step,
            CAST(k AS DOUBLE) / 20 AS jaccard_s,
-           round(1 - pow(1 - pow(CAST(k AS DOUBLE) / 20, {_SC_R}), {_SC_B}), 6)
+           round(1 - pow(1 - pow(CAST(k AS DOUBLE) / 20, {BAND_ROWS}), {N_BANDS}), 6)
              AS p_candidate,
-           round(pow(1.0 / {_SC_B}, 1.0 / {_SC_R}), 6) AS band_threshold
+           round(pow(1.0 / {N_BANDS}, 1.0 / {BAND_ROWS}), 6) AS band_threshold
     FROM (SELECT unnest(range(1, 20)) AS k)
     ORDER BY step
     """,
@@ -1285,10 +1179,10 @@ def dedup_lsh_scurve_report(spark, sf_dir):
             F.col("id").cast("bigint").alias("step"),
             s.alias("jaccard_s"),
             F.round(
-                1 - F.pow(1 - F.pow(s, F.lit(_SC_R)), F.lit(_SC_B)), 6
+                1 - F.pow(1 - F.pow(s, F.lit(BAND_ROWS)), F.lit(N_BANDS)), 6
             ).alias("p_candidate"),
             F.round(
-                F.pow(F.lit(1.0 / _SC_B), F.lit(1.0 / _SC_R)), 6
+                F.pow(F.lit(1.0 / N_BANDS), F.lit(1.0 / BAND_ROWS)), 6
             ).alias("band_threshold"),
         )
         .orderBy("step")
@@ -1361,37 +1255,14 @@ _RECALL_J = 0.5  # near-dup threshold the eval grades recall at
     ),
 )
 def dedup_lsh_recall_eval(spark, sf_dir):
-    from ..operators.dedup import lsh_candidates, minhash_signatures
-
     sh = _shingles_cached(spark, sf_dir, max_df=MAX_SHINGLE_DF).localCheckpoint()
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n")).localCheckpoint()
-
-    def thresholded(pairs):
-        s1 = sizes.select(F.col("doc_id").alias("doc1"), F.col("n").alias("n1"))
-        s2 = sizes.select(F.col("doc_id").alias("doc2"), F.col("n").alias("n2"))
-        return (
-            pairs.join(s1, "doc1")
-            .join(s2, "doc2")
-            .filter(
-                F.col("common").cast("double")
-                / (F.col("n1") + F.col("n2") - F.col("common"))
-                >= _RECALL_J
-            )
-            .select("doc1", "doc2")
-        )
-
-    a = sh.select(F.col("doc_id").alias("doc1"), F.col("shingle").alias("s1"))
-    b = sh.select(F.col("doc_id").alias("doc2"), F.col("shingle").alias("s2"))
-    # materialized once: the exact arm now feeds n_exact AND the LSH
-    # arm's verification (below), and its lineage is the expensive
+    # materialized once: the exact arm feeds n_exact AND the LSH arm's
+    # verification (below), and its lineage is the expensive
     # inverted-index self-join
-    exact_pairs = thresholded(
-        a.join(b, (F.col("s1") == F.col("s2")) & (F.col("doc1") < F.col("doc2")))
-        .groupBy("doc1", "doc2")
-        .agg(F.count(F.lit(1)).alias("common"))
-    ).localCheckpoint()
-    sig = minhash_signatures(sh, n_hashes=_N_HASHES)
-    cand = lsh_candidates(sig, band_rows=_BAND_ROWS, n_hashes=_N_HASHES).localCheckpoint()
+    exact_pairs = (
+        pair_overlaps(sh).filter(jaccard() >= _RECALL_J).select("doc1", "doc2").localCheckpoint()
+    )
+    cand = lsh_candidates(minhash_signatures(sh)).localCheckpoint()
     # A candidate verified at J>=0.5 shares >=1 shingle, so it IS an
     # exact-arm pair: lsh_pairs = candidates INTERSECT exact_pairs
     # (both sides distinct, doc1 < doc2).  The semi-join replaces the
@@ -1570,8 +1441,6 @@ def text_ngram_novelty_score(spark, sf_dir):
     ),
 )
 def split_leakage_safe_assignment(spark, sf_dir):
-    from ..operators.dedup import connected_components
-
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc1", "doc2")
     comp = connected_components(pairs)
     d = table(spark, sf_dir, "documents").select("doc_id")

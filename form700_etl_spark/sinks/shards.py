@@ -28,17 +28,9 @@ Spark-first design (no driver-side row handling anywhere):
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-@dataclass(frozen=True)
-class ShardManifestRow:
-    shard_file: str
-    n_rows: int
-    content_hash: int
 
 
 def content_hash_col(df: DataFrame) -> Column:

@@ -446,6 +446,36 @@ def test_shingle_df_cap_drops_hot_shingles_only(spark):
     assert shingle(docs, n=3, max_shingle_df=5).count() == 6
 
 
+def test_verify_jaccard_exact_scores_either_orientation(spark):
+    """verify_jaccard on a hand-built corpus: exact Jaccard and
+    containment over DISTINCT word-3-gram sets, pair columns kept in
+    whatever orientation the caller passes, and a candidate pair that
+    shares no shingle is absent from the output."""
+    from form700_etl_spark.operators.dedup import verify_jaccard
+
+    docs = spark.createDataFrame(
+        [
+            (1, "a b c d e"),  # {abc, bcd, cde}
+            (2, "a b c d e a b c"),  # {abc, bcd, cde, dea, eab}: abc twice
+            (3, "x y z w"),  # {xyz, yzw}: shares nothing with doc 1
+            (4, "c d e x y z"),  # {cde, dex, exy, xyz}
+        ],
+        "doc_id long, text string",
+    )
+    pairs = spark.createDataFrame([(1, 2), (1, 3), (1, 4)], "doc1 long, doc2 long")
+    got = {
+        (r.doc1, r.doc2): (r.jaccard, r.containment)
+        for r in verify_jaccard(pairs, docs, with_containment=True).collect()
+    }
+    # 3 / (3 + 5 - 3) and 3 / min(3, 5); 1 / (3 + 4 - 1) and 1 / 3
+    assert got == {(1, 2): (0.6, 1.0), (1, 4): (0.166667, 0.333333)}
+
+    probe = spark.createDataFrame([(4, 1), (3, 1)], "new_doc long, old_doc long")
+    out = verify_jaccard(probe, docs)
+    assert out.columns == ["new_doc", "old_doc", "jaccard"]
+    assert [tuple(r) for r in out.collect()] == [(4, 1, 0.166667)]
+
+
 def test_pq_recall_against_exact(spark, sf_dir):
     """PQ ANN must recover most exact top-5 neighbors after the ADC
     shortlist + exact rerank (recall tested the same way as IVF), and
@@ -524,42 +554,6 @@ def test_table_diff_all_four_statuses(spark):
     assert got == {1: "removed", 2: "unchanged", 3: "changed", 4: "added"}
 
 
-class TestCogroupAsof:
-    def test_cogroup_matches_window_plan(self, spark, sf_dir):
-        """The cogroup/applyInPandas as-of (two-sided per-key merge via
-        Spark's purpose-built cogroup surface) agrees row-for-row with
-        the production union+window JVM plan."""
-        from pyspark.sql import functions as F
-
-        from form700_etl_spark.io import table
-        from form700_etl_spark.operators.asof import asof_join_via_cogroup
-        from form700_etl_spark.queries.events import asof_last_purchase_per_event
-
-        e = table(spark, sf_dir, "events")
-        left = e.select("event_id", "user_id", "ts")
-        right = (
-            e.filter(F.col("event_type") == "purchase")
-            .groupBy("user_id", "ts")
-            .agg(F.max("event_id").alias("purchase_id"))
-        )
-        out = asof_join_via_cogroup(
-            left,
-            right,
-            key="user_id",
-            ts="ts",
-            value_cols=["purchase_id"],
-            schema="event_id long, user_id long, ts timestamp, asof_purchase_id long",
-        )
-        got = {
-            (r.event_id, r.asof_purchase_id) for r in out.collect()
-        }
-        want = {
-            (r.event_id, r.last_purchase_id)
-            for r in asof_last_purchase_per_event(spark, sf_dir).collect()
-        }
-        assert got == want
-
-
 def test_kmv_sketch_mergeability_and_exactness_laws(spark, sf_dir):
     """KMV laws: (1) merging per-day partial sketches == the whole-set
     sketch (identical hash arrays, not just close estimates — KMV
@@ -602,7 +596,8 @@ def test_prefix_filter_join_is_complete_vs_naive(spark, sf_dir):
     same threshold — no candidate a prefix collision missed."""
     from pyspark.sql import functions as F
 
-    from form700_etl_spark.queries.dedup import _shingles
+    from form700_etl_spark.io import table
+    from form700_etl_spark.operators.dedup import shingle
     from form700_etl_spark.registry import all_queries
 
     got = {
@@ -610,7 +605,7 @@ def test_prefix_filter_join_is_complete_vs_naive(spark, sf_dir):
         for r in all_queries()["dedup_prefix_filter_join"].fn(spark, sf_dir).collect()
     }
 
-    sh = _shingles(spark, sf_dir)  # uncapped distinct (doc_id, shingle)
+    sh = shingle(table(spark, sf_dir, "documents"), n=3)  # uncapped distinct
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a = sh.select(F.col("doc_id").alias("doc1"), F.col("shingle").alias("s1"))
     b = sh.select(F.col("doc_id").alias("doc2"), F.col("shingle").alias("s2"))
@@ -1018,8 +1013,6 @@ def test_lsh_recall_eval_semi_join_equivalence(spark, sf_dir):
     )
     from form700_etl_spark.queries.dedup import (
         MAX_SHINGLE_DF,
-        _BAND_ROWS,
-        _N_HASHES,
         _RECALL_J,
         _shingles_cached,
     )
@@ -1050,11 +1043,7 @@ def test_lsh_recall_eval_semi_join_equivalence(spark, sf_dir):
         .groupBy("doc1", "doc2")
         .agg(F.count(F.lit(1)).alias("common"))
     )
-    cand = lsh_candidates(
-        minhash_signatures(sh, n_hashes=_N_HASHES),
-        band_rows=_BAND_ROWS,
-        n_hashes=_N_HASHES,
-    ).localCheckpoint()
+    cand = lsh_candidates(minhash_signatures(sh)).localCheckpoint()
     # OLD shape: re-verify every candidate against the shingle table
     ca = cand.join(a, "doc1").select("doc1", "doc2", "s1")
     b2 = sh.select(F.col("doc_id").alias("bd2"), F.col("shingle").alias("s2"))

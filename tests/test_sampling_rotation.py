@@ -73,6 +73,23 @@ def test_priority_names_lead_and_rest_stay_lrs(tmp_path):
     ) == ["r", "p", "q"]
 
 
+def test_duplicate_queue_lines_take_one_sample_slot(tmp_path):
+    """A name queued on several pending lines is prioritized once, at
+    its first position, even when more than 50 names are pending."""
+    pending = [f"q{i:02d}" for i in range(55)]
+    lines = [f"{n}\t9" for n in pending]
+    lines.insert(3, "q40\t8")  # an earlier-round line for a later name
+    lines.append("q01\t9")  # a repeat of an already queued name
+    (tmp_path / "QUEUE_REVERIFY.txt").write_text("\n".join(lines) + "\n")
+    prio = adapter._reverify_priority(str(tmp_path), {})
+    assert prio == pending[:3] + ["q40"] + pending[3:40] + pending[41:]
+    names = adapter._least_recently_sampled_first(
+        pending + ["old", "new"], here=str(tmp_path)
+    )
+    assert len(names) == len(set(names)) == 57
+    assert names[:50] == prio[:50]
+
+
 # ------------------------------------------------------------- real repo
 
 
@@ -99,4 +116,4 @@ def test_next_sample_leads_with_reverify_queue_then_stalest():
     tail_rounds = [last.get(n, 0) for n in names[k:50]]
     # the rest of the 50-sample is strictly the stalest of the registry
     rest_sorted = sorted(last.get(n, 0) for n in names[k:])
-    assert tail_rounds == rest_sorted[: 50 - k]
+    assert tail_rounds == rest_sorted[: max(0, 50 - k)]

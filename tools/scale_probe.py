@@ -404,10 +404,9 @@ def _shingle_stages(spark, sf_dir: str) -> dict:
     shuffle.  Expect ~SCALEx wall per stage at 10x docs."""
     import time as _t
 
-    from pyspark.sql import functions as F
-
     from form700_etl_spark.operators.dedup import (
         MAX_SHINGLE_DF,
+        _drop_hot_shingles,
         lsh_candidates,
         minhash_signatures,
         shingle,
@@ -421,13 +420,7 @@ def _shingle_stages(spark, sf_dir: str) -> dict:
     populate_s = _t.perf_counter() - t0
 
     t0 = _t.perf_counter()
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .filter(F.col("df") > MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    capped = sh.join(F.broadcast(hot), "shingle", "left_anti").localCheckpoint()
+    capped = _drop_hot_shingles(sh, MAX_SHINGLE_DF).localCheckpoint()
     n_capped = capped.count()
     cap_s = _t.perf_counter() - t0
 
