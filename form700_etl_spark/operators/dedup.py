@@ -10,10 +10,10 @@ is md5 (minhash permutations are affine maps over one md5-derived
 The single path, one function per step:
 
 - ``shingle``: word n-grams per doc, one narrow shuffle (distinct on
-  (doc, shingle)); ``max_shingle_df`` applies the hot-shingle cap
-  (``_drop_hot_shingles`` — the skew guard that keeps a 100 TB corpus
-  from shuffling a stop-phrase's n² pairs; also applied by the cached
-  capped table in ``queries/dedup.py``).
+  (doc, shingle)).
+- ``drop_hot_shingles``: the hot-shingle cap — the skew guard that
+  keeps a 100 TB corpus from shuffling a stop-phrase's n² pairs
+  (applied by the cached capped table in ``queries/dedup.py``).
 - ``pair_overlaps``: the inverted-index all-pairs join — every doc pair
   sharing a shingle with its overlap ``common`` and sizes ``n1``/``n2``.
 - ``jaccard`` / ``containment``: the two pair scores over those columns.
@@ -31,7 +31,7 @@ The single path, one function per step:
 Constants: ``N_HASHES`` = 12 permutations in ``N_BANDS`` = 4 bands of
 ``BAND_ROWS`` = 3, ``MINHASH_P`` the affine-hash modulus,
 ``MAX_SHINGLE_DF`` = 16 the pair-join consumers' cap, ``SCORE_DECIMALS``
-= 6 the verify rounding, ``CC_MAX_ITER`` = 20 label-propagation rounds.
+= 6 the rounding of every Jaccard/containment score, ``CC_MAX_ITER`` = 20 label-propagation rounds.
 
 Algorithms from the public literature: MinHash resemblance sketches
 (Broder, "On the resemblance and containment of documents", 1997) with
@@ -70,8 +70,7 @@ CC_MAX_ITER = 20
 MAX_SHINGLE_DF = 16
 
 
-def shingle(documents: DataFrame, n: int = 3, max_shingle_df: int | None = None,
-            distinct: bool = True) -> DataFrame:
+def shingle(documents: DataFrame, n: int = 3, distinct: bool = True) -> DataFrame:
     """Word n-gram shingles per document: (doc_id, shingle).
 
     perf: the token array is materialized once per row before the
@@ -101,12 +100,10 @@ def shingle(documents: DataFrame, n: int = 3, max_shingle_df: int | None = None,
     )
     if distinct:
         out = out.distinct()
-    if max_shingle_df is not None:
-        out = _drop_hot_shingles(out, max_shingle_df)
     return out
 
 
-def _drop_hot_shingles(shingles: DataFrame, max_df: int) -> DataFrame:
+def drop_hot_shingles(shingles: DataFrame, max_df: int) -> DataFrame:
     """The hot-shingle cap: drop shingles held by more than ``max_df``
     docs (a df groupBy, broadcast anti-join) — see MAX_SHINGLE_DF."""
     hot = (

@@ -33,9 +33,10 @@ from ..operators.dedup import (
     MAX_SHINGLE_DF,
     MINHASH_P,
     N_BANDS,
-    _drop_hot_shingles,
+    SCORE_DECIMALS,
     connected_components,
     containment,
+    drop_hot_shingles,
     incremental_lsh_probe,
     jaccard,
     lsh_candidates,
@@ -104,12 +105,12 @@ def _shingles_cached(spark, sf_dir, max_df: int | None = None) -> DataFrame:
         if max_df is not None:
             # Derive the capped table from the CACHED uncapped one
             # instead of re-running the full scan+explode+distinct
-            # lineage: the same cap shingle(max_shingle_df=...) applies,
-            # on top of the distinct shingle set.  Cold-profiling (r12)
-            # showed each variant cost ~5-7 s to populate independently
-            # at sf0.1 — almost all of it the shared upstream stages.
+            # lineage: the cap applies on top of the distinct shingle
+            # set.  Cold-profiling (r12) showed each variant cost ~5-7 s
+            # to populate independently at sf0.1 — almost all of it the
+            # shared upstream stages.
             base = _shingles_cached(spark, sf_dir, max_df=None)
-            df = _drop_hot_shingles(base, max_df).cache()
+            df = drop_hot_shingles(base, max_df).cache()
         else:
             df = shingle(table(spark, sf_dir, "documents"), n=3).cache()
         _SHINGLE_CACHE[key] = df
@@ -212,7 +213,7 @@ def dedup_ngram_jaccard(spark, sf_dir):
     return (
         pair_overlaps(sh)
         .filter(jaccard() >= 0.1)
-        .select("doc1", "doc2", F.round(jaccard(), 6).alias("jaccard"))
+        .select("doc1", "doc2", F.round(jaccard(), SCORE_DECIMALS).alias("jaccard"))
     )
 
 
@@ -928,7 +929,7 @@ def dedup_containment_pairs(spark, sf_dir):
             "doc2",
             "common",
             F.least(F.col("n1"), F.col("n2")).alias("min_shingles"),
-            F.round(containment(), 6).alias("containment"),
+            F.round(containment(), SCORE_DECIMALS).alias("containment"),
         )
     )
 
@@ -1092,7 +1093,7 @@ def dedup_prefix_filter_join(spark, sf_dir):
         )
     )
     return common.filter(jaccard() >= 0.5).select(
-        "doc1", "doc2", F.round(jaccard(), 6).alias("jaccard")
+        "doc1", "doc2", F.round(jaccard(), SCORE_DECIMALS).alias("jaccard")
     )
 
 

@@ -233,7 +233,7 @@ def text_language_id(spark, sf_dir):
 def text_fingerprint(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     ntext = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    # token array materialized once per row (see dedup._shingles note)
+    # token array materialized once per row (see operators/dedup.py::shingle)
     win_fp = F.expr(
         "array_min(CASE WHEN size(toks) >= 4 THEN "
         "transform(sequence(0, size(toks) - 4), "

@@ -426,11 +426,11 @@ def test_titleize_and_schema_bootstrap(tmp_path):
 
 
 def test_shingle_df_cap_drops_hot_shingles_only(spark):
-    """The hot-shingle document-frequency cap (operators.dedup.shingle
-    max_shingle_df) must drop exactly the shingles shared by more than
+    """The hot-shingle document-frequency cap (operators.dedup
+    drop_hot_shingles) must drop exactly the shingles shared by more than
     the cap's doc count, and leave rarer shingles' rows intact — the
     skew guard wired into dedup_ngram_jaccard / dedup_clusters_connected."""
-    from form700_etl_spark.operators.dedup import shingle
+    from form700_etl_spark.operators.dedup import drop_hot_shingles, shingle
 
     # 5 docs share the same 3-gram ("a b c"); 1 doc is unique
     docs = spark.createDataFrame(
@@ -439,11 +439,11 @@ def test_shingle_df_cap_drops_hot_shingles_only(spark):
     )
     uncapped = shingle(docs, n=3)
     assert uncapped.count() == 6
-    capped = shingle(docs, n=3, max_shingle_df=4)
+    capped = drop_hot_shingles(uncapped, 4)
     rows = {(r.doc_id, r.shingle) for r in capped.collect()}
     assert rows == {(99, "x y z")}  # hot shingle gone, rare one intact
     # cap at exactly the df keeps it (cap is "more than", not "at least")
-    assert shingle(docs, n=3, max_shingle_df=5).count() == 6
+    assert drop_hot_shingles(uncapped, 5).count() == 6
 
 
 def test_verify_jaccard_exact_scores_either_orientation(spark):

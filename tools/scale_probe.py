@@ -406,7 +406,7 @@ def _shingle_stages(spark, sf_dir: str) -> dict:
 
     from form700_etl_spark.operators.dedup import (
         MAX_SHINGLE_DF,
-        _drop_hot_shingles,
+        drop_hot_shingles,
         lsh_candidates,
         minhash_signatures,
         shingle,
@@ -420,7 +420,7 @@ def _shingle_stages(spark, sf_dir: str) -> dict:
     populate_s = _t.perf_counter() - t0
 
     t0 = _t.perf_counter()
-    capped = _drop_hot_shingles(sh, MAX_SHINGLE_DF).localCheckpoint()
+    capped = drop_hot_shingles(sh, MAX_SHINGLE_DF).localCheckpoint()
     n_capped = capped.count()
     cap_s = _t.perf_counter() - t0
 
