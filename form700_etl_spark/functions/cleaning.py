@@ -1,32 +1,34 @@
-"""Schema-driven cleaning/casting expressions — reference parity.
+"""Schema-driven cleaning/casting rules — reference parity.
 
 Rebuilds the reference's ``cleanDataSet`` column pipeline
-(/root/reference/Form700.py:246-298) as composable Column expressions.
-The reference interprets a per-column type map (text/number/checkbox/
-date, SURVEY §1.3) and applies row-at-a-time pandas casts; here each
-declared type compiles once into a Catalyst expression, so the whole
-clean pass is a single projected ``select`` inside whole-stage codegen
-— no Python per row, and the same expression tree scales to any number
-of executors.
+(Form700.py:246-298).  The reference interprets a per-column type map
+(text/number/checkbox/date, SURVEY §1.3) and applies row-at-a-time
+pandas casts; here each rule is ONE body of Spark SQL text, so a
+dataset's whole clean pass is a single rendered
+``selectExpr`` inside whole-stage codegen — no Python per row, one
+parse per column instead of a py4j round trip per composed Column call,
+and the same expression tree scales to any number of executors.  Query
+builders and tests apply a rule with ``selectExpr``/``F.expr``.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable, Mapping
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def qcol(name: str) -> Column:
-    """Column ref for a LITERAL column name.  The reference's schema
+def quote(name: str) -> str:
+    """SQL identifier for a LITERAL column name.  The reference's schema
     CSVs carry dotted field names (``loan.address``,
     /root/reference/form700_schemas/form700_scheduleB_schema.csv:20-30)
-    — a bare ``F.col`` would parse the dot as struct access."""
-    return F.col("`" + name + "`")
+    — a bare name would parse the dot as struct access."""
+    return "`" + name + "`"
 
 
-def number_cast(col: str | Column) -> Column:
+def number_cast(expr: str) -> str:
     """Reference 'number' cast (Form700.py:261-273): stringify, replace
     every letter and ``%`` with ``'0'`` (letters become zeros *inside*
     the number — that is the reference's documented, if odd, semantics),
@@ -34,26 +36,27 @@ def number_cast(col: str | Column) -> Column:
 
     The reference tries int first and falls back to a float column; we
     normalize the output type to double (one engine type per declared
-    type).  DuckDB oracle mirror:
+    type; ``0.0D`` is a DOUBLE literal, a bare ``0.0`` would be DECIMAL).
+    ``try_cast``, not ``CAST``: Spark 4 runs ANSI mode, where a malformed
+    cast throws; the reference's semantics are "unparseable -> 0".
+    DuckDB oracle mirror:
     ``coalesce(TRY_CAST(regexp_replace(CAST(x AS VARCHAR), '[a-zA-Z%]', '0', 'g') AS DOUBLE), 0.0)``.
     """
-    c = F.col(col) if isinstance(col, str) else col
-    cleaned = F.regexp_replace(c.cast("string"), "[a-zA-Z%]", "0")
-    # try_cast, not cast: Spark 4 runs ANSI mode, where a malformed cast
-    # throws; the reference's semantics are "unparseable -> 0".
-    return F.coalesce(cleaned.try_cast("double"), F.lit(0.0))
+    return (
+        f"coalesce(try_cast(regexp_replace(CAST({expr} AS STRING), '[a-zA-Z%]', '0')"
+        " AS DOUBLE), 0.0D)"
+    )
 
 
-def text_cast(col: str | Column, ascii_compat: bool = False) -> Column:
+def text_cast(expr: str) -> str:
     """Reference 'text' cast (Form700.py:274-279): NULL -> '' then
     stringify.  The Py2 ascii-backslashreplace fallback is moot on
-    UTF-8-native Spark — UTF-8 text flows through unmangled by default;
-    ``ascii_compat=True`` opts into the byte-faithful reference
-    behavior via :func:`ascii_translit` for consumers that require the
-    legacy escaped form."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.coalesce(c.cast("string"), F.lit(""))
-    return ascii_translit(out) if ascii_compat else out
+    UTF-8-native Spark — UTF-8 text flows through unmangled; a consumer
+    that needs the legacy escaped form wraps the result in
+    :func:`ascii_translit`.  Also the declared 'date' type: the
+    reference's date branch is commented out (Form700.py:285-288), so
+    dates flow through as text."""
+    return f"coalesce(CAST({expr} AS STRING), '')"
 
 
 def ascii_translit(col: str | Column) -> Column:
@@ -63,9 +66,8 @@ def ascii_translit(col: str | Column) -> Column:
     escape, ASCII passes through.  Pure built-in expression (per-code-
     point transform + hex), codegen'd JVM-side; unit-tested char-exact
     against CPython's backslashreplace output, including astral-plane
-    code points.  Off by default: Spark is UTF-8-native, so the engine
-    only applies this when a consumer opts into the legacy bytes form
-    (``text_cast(..., ascii_compat=True)``)."""
+    code points.  Not part of the clean pass: Spark is UTF-8-native, so
+    only a consumer that requires the legacy bytes form applies it."""
     c = F.col(col) if isinstance(col, str) else col
 
     def _escape(ch: Column) -> Column:
@@ -81,27 +83,16 @@ def ascii_translit(col: str | Column) -> Column:
     return F.concat_ws("", F.transform(F.split(c, ""), _escape))
 
 
-def checkbox_cast(col: str | Column) -> Column:
+def checkbox_cast(expr: str) -> str:
     """Reference 'checkbox' cast (Form700.py:280-284): NULL -> False."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(c.cast("boolean"), F.lit(False))
+    return f"coalesce(CAST({expr} AS BOOLEAN), false)"
 
 
-def date_cast_yyyymmdd(col: str | Column, compat: bool = False) -> Column:
-    """Reference 'date' cast.  The reference's date branch is commented
-    out (Form700.py:285-288) so dates flow through as text; ``compat=True``
-    reproduces that.  The engine default does the cast properly."""
-    c = F.col(col) if isinstance(col, str) else col
-    if compat:
-        return text_cast(c)
-    return F.to_date(c.cast("string"), "yyyyMMdd")
-
-
-def strip_newlines(col: str | Column) -> Column:
+def strip_newlines(expr: str) -> str:
     """Reference ``removeNewLines`` (Form700.py:296-298): whole-frame
-    regex replace of ``\\n`` with ``''`` — applied per string column here."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, "\n", "")
+    regex replace of ``\\n`` with ``''`` — applied per text column here
+    (the SQL literal ``'\\n'`` unescapes to the newline character)."""
+    return f"regexp_replace({expr}, '\\n', '')"
 
 
 _SNAKE_1 = re.compile(r"([A-Z]+)([A-Z][a-z])")
@@ -116,10 +107,6 @@ def snake_case(name: str) -> str:
     name = _SNAKE_1.sub(r"\1_\2", name)
     name = _SNAKE_2.sub(r"\1_\2", name)
     return name.replace("-", "_").lower()
-
-
-def snake_case_columns(df: DataFrame) -> DataFrame:
-    return df.toDF(*(snake_case(c) for c in df.columns))
 
 
 def titleize(name: str) -> str:
@@ -137,36 +124,30 @@ def titleize(name: str) -> str:
     return re.sub(r"\b('?[a-z])", lambda m: m.group(1).capitalize(), word)
 
 
-def schema_projection(df: DataFrame, fieldnames: list[str]) -> DataFrame:
-    """Reference P1 (Form700.py:253): select exactly the declared schema
-    columns, in schema order; extras dropped, missing columns raise."""
-    missing = [f for f in fieldnames if f not in df.columns]
+def schema_projection(sources: Mapping[str, str], fieldnames: Iterable[str]) -> list[str]:
+    """Reference P1 (Form700.py:253): the source expression of exactly
+    the declared schema columns, in schema order; extras dropped,
+    missing columns raise.  ``sources`` maps each available column name
+    to its SQL source — read once by the caller, not per field."""
+    fieldnames = list(fieldnames)
+    missing = [f for f in fieldnames if f not in sources]
     if missing:
         raise KeyError(f"schema projection: missing columns {missing}")
-    return df.select(*(qcol(f) for f in fieldnames))
+    return [sources[f] for f in fieldnames]
 
 
-CAST_DISPATCH = {
-    "number": number_cast,
-    "text": text_cast,
-    "checkbox": checkbox_cast,
-    "date": date_cast_yyyymmdd,
-}
-
-
-def cast_fields(df: DataFrame, type_map: dict[str, str], date_compat: bool = False) -> DataFrame:
-    """Reference ``castFields`` (Form700.py:259-289): apply the declared
-    cast to each mapped column, leave others untouched.  Compiles to one
-    ``select`` — Catalyst folds the whole pipeline into a single stage."""
-    cols = []
-    for name in df.columns:
-        decl = type_map.get(name)
-        if decl is None:
-            cols.append(qcol(name))
-        elif decl == "date":
-            cols.append(date_cast_yyyymmdd(qcol(name), compat=date_compat).alias(name))
-        elif decl in CAST_DISPATCH:
-            cols.append(CAST_DISPATCH[decl](qcol(name)).alias(name))
-        else:
-            raise ValueError(f"unknown declared type {decl!r} for column {name!r}")
-    return df.select(*cols)
+def clean_field(expr: str, decl: str, name: str) -> str:
+    """One schema field's whole clean pass as one SQL expression: C7
+    newline strip (text only) -> C1 ``castFields`` cast by declared type
+    (Form700.py:259-289) -> C9 snake_case output name."""
+    if decl == "text":
+        out = text_cast(strip_newlines(expr))
+    elif decl == "date":
+        out = text_cast(expr)
+    elif decl == "number":
+        out = number_cast(expr)
+    elif decl == "checkbox":
+        out = checkbox_cast(expr)
+    else:
+        raise ValueError(f"unknown declared type {decl!r} for column {name!r}")
+    return f"{out} AS {quote(snake_case(name))}"

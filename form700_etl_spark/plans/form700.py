@@ -9,8 +9,12 @@ strip newlines (C7, :296-298), cast per declared type (C1/C2, :259-289)
 → load — all eager pandas, one thread, twice (private + redacted,
 :716-718).  Here the same dataflow is a dict of lazy Catalyst plans:
 each explode is linear (not the reference's O(n²) loop), the enrichment
-join broadcasts the filer side, and the clean pass folds into one
-projected select inside whole-stage codegen per table.
+join broadcasts the filer side, and the clean pass is ONE rendered
+``selectExpr`` per table: a dataset build reads ``filings.schema`` once,
+walks it in Python, and renders per schema-CSV field source path
+(dotted leaf, stringified list, or prefixed explode child) → C7 → C1 →
+``AS`` snake_case (C9) from the SQL-text rule bodies in ``functions/``
+— 54-100 py4j round trips per dataset, not 3,100-6,900.
 
 The routing is DATA, not code: ``resources/form700_tables.csv`` (the
 reference's registry shape — df_name, list_columns ``:``-split,
@@ -33,17 +37,18 @@ DuckDB-oracle-checkable end to end.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from ..functions.cleaning import (
-    cast_fields,
-    qcol,
-    schema_projection,
-    snake_case_columns,
-    strip_newlines,
+from ..functions.cleaning import clean_field, quote, schema_projection
+from ..functions.nested import (
+    Columns,
+    explode_outer_flat,
+    schema_columns,
+    stringify_structs,
+    struct_leaves,
 )
-from ..functions.nested import explode_outer_flat, flatten_dotted, stringify_structs
 from ..io import maybe_broadcast, table
 from ..schema_registry import TableInfo, load_schema, load_table_registry
 
@@ -123,14 +128,8 @@ def synthesize_filings(
 
     Every synthesized expression is rendered as a SQL STRING and enters
     the plan through ONE ``F.expr``/``selectExpr`` parse per output
-    column (round 15): the former per-field Column composition paid
-    thousands of py4j round trips through a cold JVM — measured
-    17.9 s → ~3 s fresh-JVM plan construction for the scheduleA2
-    pipeline, the dominant term of the fresh-JVM ritual
-    (BENCH_DETAIL.scheduleA2_decomposition ``plan_build_s``).  The
-    rendered strings parse to the same Catalyst expressions the Column
-    API built; every dataset cell stays pinned by the ref_* DuckDB
-    oracles (cell-exact at sf0.01 AND sf0.1)."""
+    column, like the clean pass: per-field Column composition pays a
+    py4j round trip per call."""
     want = set(datasets) if datasets is not None else None
 
     def need(name: str) -> bool:
@@ -546,42 +545,33 @@ def synthesize_filings(
     ).drop(*counts.values())
 
 
-def route_list_columns(df: DataFrame, info: TableInfo) -> DataFrame:
-    """N3 ``checkForListColumns`` (Form700.py:325-344), registry-driven:
-    stringify every listed array column EXCEPT gifts/realProperties,
-    which explode (realProperties with the E2 prefix).  The stringify
-    canonical key order is the struct's declared field order (the Py2
-    dict-iteration order is undefined; SURVEY §7 'hard parts')."""
+def clean_dataset(df: DataFrame, cols: Columns, info: TableInfo) -> DataFrame:
+    """C11 ``cleanDataSet`` (Form700.py:246-256) over ``df``, whose
+    columns ``cols`` describes.  N3 ``checkForListColumns``
+    (Form700.py:325-344) routes each registry list column: N2 stringify
+    (keys in declared field order), except gifts/realProperties, which
+    explode (realProperties with the E2 prefix).  Then ONE
+    ``selectExpr`` renders P1 -> C7 -> C1 -> C9 per schema field.
+    Redacted twins share the base schema CSV."""
+    cols = dict(cols)
     for col in info.list_columns:
-        if col not in df.columns:
+        if col not in cols:
             raise KeyError(
                 f"{info.df_name}: registry lists {col!r} but the table has no such column"
             )
         if col in EXPLODE_COLUMNS:
-            df = explode_outer_flat(df, col, prefix=EXPLODE_COLUMNS[col])
+            df, cols = explode_outer_flat(df, cols, col, prefix=EXPLODE_COLUMNS[col])
         else:
-            fields = [f.name for f in df.schema[col].dataType.elementType.fields]
-            df = df.withColumn(col, stringify_structs(col, fields))
-    return df
-
-
-def clean_dataset(df: DataFrame, info: TableInfo) -> DataFrame:
-    """C11 ``cleanDataSet`` (Form700.py:246-256): N3 routing -> P1 schema
-    projection -> C7 newline strip -> C1 casts, all one Catalyst plan.
-    Redacted twins share the base schema CSV (the reference's pairs are
-    column-identical)."""
+            src, dtype = cols[col]
+            cols[col] = (stringify_structs(src, dtype.elementType.names), T.StringType())
     schema = load_schema(info.base_name)
-    df = route_list_columns(df, info)
-    df = schema_projection(df, list(schema.fields))
-    df = df.select(
-        *[
-            strip_newlines(qcol(name)).alias(name)
-            if schema.type_map[name] == "text"
-            else qcol(name)
-            for name in schema.fields
-        ]
+    sources = schema_projection({n: src for n, (src, _) in cols.items()}, schema.fields)
+    return df.selectExpr(
+        *(
+            clean_field(src, schema.type_map[name], name)
+            for name, src in zip(schema.fields, sources)
+        )
     )
-    return cast_fields(df, schema.type_map, date_compat=True)
 
 
 def run_form700_pipeline(
@@ -595,8 +585,8 @@ def run_form700_pipeline(
 
     Per schedule: S5 per-key extraction (``explode_outer`` of the
     filing-level array — read once, 8 projections, vs the reference's
-    re-traversal per schedule), N1 dotted flatten, then the
-    registry-driven clean pass.
+    re-traversal per schedule), N1 dotted flatten of the exploded row,
+    then the registry-driven clean pass.
 
     J1 note: the reference left-joins filer columns back onto every
     schedule row (Form700.py:346-352) because its schedule tables were
@@ -613,32 +603,31 @@ def run_form700_pipeline(
     nested source tree, so single-table callers shouldn't pay for the
     other seven."""
     registry = registry or load_table_registry()
+    top = schema_columns(filings.schema)
     out: dict[str, DataFrame] = {}
     for base in datasets or ("cover",) + SCHEDULE_NAMES:
         info = registry[base + suffix]
         if base == "cover":
-            df = filings.drop(*SCHEDULE_NAMES)
+            df = filings
+            cols = {n: c for n, c in top.items() if n not in SCHEDULE_NAMES}
         else:
-            rows = filings.select(
-                *FILER_COLS, F.explode_outer(base).alias("__row")
+            df = filings.selectExpr(
+                *(quote(c) for c in FILER_COLS), f"explode_outer({quote(base)}) AS __row"
             )
-            df = flatten_dotted(rows, "__row")
-        # C9: snake_case on the way to the sink (Form700.py:464-468) —
-        # this is also where dotted loan.* names lose their dots
-        out[info.df_name] = snake_case_columns(clean_dataset(df, info))
+            cols = {c: top[c] for c in FILER_COLS}
+            cols.update(struct_leaves("__row", top[base][1].elementType))
+        out[info.df_name] = clean_dataset(df, cols, info)
     return out
 
 
 # Memoized single-dataset pipeline plans, keyed by (applicationId, sf_dir,
 # base).  A DataFrame is an immutable lazy plan, so handing the same object
-# back to repeat callers is semantically identical to rebuilding it — but
-# building THIS plan is the most expensive driver-side tree in the repo
-# (nested 39-field structs x 7 schedule arrays -> explode -> flatten ->
-# ~40-column clean/cast projection): ~2.5-3 s of pure Catalyst/py4j work per
-# construction even with a warm JIT, and 4-22 s un-JITted.  Rounds 7-9's
-# bench record swung ref_pipeline_scheduleA2 4.3/9.3/22.6 s fresh-JVM on
-# byte-identical code with a flat CPU canary — that swing was this analysis
-# cost, not execution (sf0.01 profile: build 2.4-2.9 s vs execute 0.5-1.1 s).
+# back to repeat callers is semantically identical to rebuilding it.  With
+# the clean pass rendered as SQL text, an uncached warm build at sf0.001
+# (4-core host) takes 0.38-0.55 s for cover/scheduleA2/scheduleB, mostly
+# the three ``io.table`` schema-inference jobs in ``synthesize_filings``
+# (~0.45 s), so the cache still pays until relations resolve their schema
+# once per session.  Un-JITted, fresh-JVM builds cost several times more.
 # Keying by applicationId makes stale entries from stopped sessions
 # unreachable (a new session gets a new id); the cache holds lazy plans
 # only, no materialized data.

@@ -26,13 +26,22 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import checkbox_cast, number_cast, snake_case, strip_newlines, text_cast
+from ..functions.cleaning import (
+    checkbox_cast,
+    number_cast,
+    quote,
+    schema_projection,
+    snake_case,
+    strip_newlines,
+    text_cast,
+)
 from ..functions.money import cents, cents_sql
-from ..functions.nested import stringify_structs
+from ..functions.nested import explode_outer_flat, schema_columns, stringify_structs
 from ..io import maybe_broadcast, table
 from ..registry import register
 
-# Dirty-value construction shared by Spark and SQL (identical CASE logic).
+# Dirty-value construction shared by Spark and DuckDB (one CASE text;
+# Spark SQL spells the string type STRING).
 _DIRTY_SQL = """
     CASE CAST(p_partkey % 5 AS INT)
         WHEN 0 THEN concat(p_brand, '-', CAST(p_size AS VARCHAR))
@@ -42,18 +51,7 @@ _DIRTY_SQL = """
         ELSE concat('x', CAST(p_size AS VARCHAR), 'y')
     END
 """
-
-
-def _dirty_col():
-    p5 = (F.col("p_partkey") % 5).cast("int")
-    size_s = F.col("p_size").cast("string")
-    return (
-        F.when(p5 == 0, F.concat(F.col("p_brand"), F.lit("-"), size_s))
-        .when(p5 == 1, size_s)
-        .when(p5 == 2, F.lit(None).cast("string"))
-        .when(p5 == 3, F.concat(size_s, F.lit("%")))
-        .otherwise(F.concat(F.lit("x"), size_s, F.lit("y")))
-    )
+_DIRTY_SPARK = _DIRTY_SQL.replace("VARCHAR", "STRING")
 
 
 @register(
@@ -70,11 +68,10 @@ def _dirty_col():
 )
 def ref_number_cast_dirty(spark, sf_dir):
     p = table(spark, sf_dir, "part")
-    dirty = _dirty_col()
-    return p.select(
+    return p.selectExpr(
         "p_partkey",
-        dirty.alias("raw_value"),
-        number_cast(dirty).alias("number_value"),
+        f"{_DIRTY_SPARK} AS raw_value",
+        f"{number_cast(_DIRTY_SPARK)} AS number_value",
     )
 
 
@@ -93,10 +90,11 @@ def ref_number_cast_dirty(spark, sf_dir):
 )
 def ref_text_clean_newlines(spark, sf_dir):
     c = table(spark, sf_dir, "customer")
-    raw = F.when(
-        F.col("c_custkey") % 7 == 0, F.lit(None).cast("string")
-    ).otherwise(F.concat(F.col("c_name"), F.lit("\n"), F.col("c_mktsegment")))
-    return c.select("c_custkey", strip_newlines(text_cast(raw)).alias("cleaned"))
+    raw = (
+        "CASE WHEN c_custkey % 7 = 0 THEN CAST(NULL AS STRING)"
+        " ELSE concat(c_name, '\\n', c_mktsegment) END"
+    )
+    return c.selectExpr("c_custkey", f"{strip_newlines(text_cast(raw))} AS cleaned")
 
 
 @register(
@@ -112,10 +110,8 @@ def ref_text_clean_newlines(spark, sf_dir):
 )
 def ref_checkbox_cast(spark, sf_dir):
     c = table(spark, sf_dir, "customer")
-    raw = F.when(F.col("c_custkey") % 3 == 0, F.lit(None).cast("boolean")).otherwise(
-        F.col("c_acctbal") > 0
-    )
-    return c.select("c_custkey", checkbox_cast(raw).alias("is_positive"))
+    raw = "CASE WHEN c_custkey % 3 = 0 THEN CAST(NULL AS BOOLEAN) ELSE c_acctbal > 0 END"
+    return c.selectExpr("c_custkey", f"{checkbox_cast(raw)} AS is_positive")
 
 
 @register(
@@ -174,10 +170,9 @@ def ref_snake_case_rename(spark, sf_dir):
     doc="P1: select exactly the declared schema columns, in schema order.",
 )
 def ref_schema_projection(spark, sf_dir):
-    from ..functions.cleaning import schema_projection
-
     c = table(spark, sf_dir, "customer")
-    return schema_projection(c, ["c_name", "c_custkey", "c_mktsegment"])
+    sources = {n: quote(n) for n in c.columns}
+    return c.selectExpr(*schema_projection(sources, ["c_name", "c_custkey", "c_mktsegment"]))
 
 
 @register(
@@ -197,11 +192,9 @@ def ref_schema_projection(spark, sf_dir):
 )
 def ref_stringify_structs(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
-    arr = F.sort_array(
-        F.collect_list(F.struct(F.col("o_orderkey").alias("id"), F.col("o_orderstatus").alias("status")))
-    )
+    arr = "sort_array(collect_list(named_struct('id', o_orderkey, 'status', o_orderstatus)))"
     return o.groupBy("o_custkey").agg(
-        stringify_structs(arr, ["id", "status"]).alias("orders_str")
+        F.expr(f"{stringify_structs(arr, ['id', 'status'])} AS orders_str")
     )
 
 
@@ -245,8 +238,6 @@ def ref_explode_outer_tokens(spark, sf_dir):
     ),
 )
 def ref_explode_prefix_rename(spark, sf_dir):
-    from ..functions.nested import explode_outer_flat
-
     o = table(spark, sf_dir, "orders")
     l = table(spark, sf_dir, "lineitem")
     nested = (
@@ -263,8 +254,11 @@ def ref_explode_prefix_rename(spark, sf_dir):
     parent = o.join(nested, o.o_orderkey == nested.l_orderkey, "left").select(
         "o_orderkey", "o_orderstatus", "items"
     )
-    flat = explode_outer_flat(parent, "items", prefix="item")
-    return flat.select("o_orderkey", "o_orderstatus", "itemLinenumber", "itemQuantity")
+    flat, cols = explode_outer_flat(
+        parent, schema_columns(parent.schema), "items", prefix="item"
+    )
+    keep = ("o_orderkey", "o_orderstatus", "itemLinenumber", "itemQuantity")
+    return flat.selectExpr(*(f"{cols[n][0]} AS {n}" for n in keep))
 
 
 @register(

@@ -6,12 +6,17 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from form700_etl_spark.functions.cleaning import (
-    cast_fields,
+    clean_field,
     number_cast,
     snake_case,
     text_cast,
 )
-from form700_etl_spark.functions.nested import explode_outer_flat, prefix_rename, stringify_structs
+from form700_etl_spark.functions.nested import (
+    explode_outer_flat,
+    prefix_rename,
+    schema_columns,
+    stringify_structs,
+)
 
 
 def test_snake_case_matches_inflection_semantics():
@@ -30,7 +35,7 @@ def test_prefix_rename():
 
 def test_number_cast_reference_semantics(spark):
     rows = [("12",), ("12k",), ("1.5",), ("a%b",), (None,), ("",), ("Brand#3",)]
-    df = spark.createDataFrame(rows, "raw string").select(number_cast("raw").alias("v"))
+    df = spark.createDataFrame(rows, "raw string").selectExpr(f"{number_cast('raw')} AS v")
     got = [r.v for r in df.collect()]
     #                12     12k->120   1.5   a%b->000  NULL  ''   '00000#3'
     assert got == [12.0, 120.0, 1.5, 0.0, 0.0, 0.0, 0.0]
@@ -38,23 +43,44 @@ def test_number_cast_reference_semantics(spark):
 
 def test_number_cast_idempotent_on_clean_numbers(spark):
     df = spark.createDataFrame([("42",), ("0.5",)], "raw string")
-    once = df.select(number_cast("raw").alias("v"))
-    twice = once.select(number_cast(F.col("v").cast("string")).alias("v"))
+    once = df.selectExpr(f"{number_cast('raw')} AS v")
+    twice = once.selectExpr(f"{number_cast('CAST(v AS STRING)')} AS v")
     assert [r.v for r in once.collect()] == [r.v for r in twice.collect()]
 
 
 def test_text_cast_fills_null(spark):
     df = spark.createDataFrame([(None,), ("x",)], "raw string")
-    assert [r.v for r in df.select(text_cast("raw").alias("v")).collect()] == ["", "x"]
+    assert [r.v for r in df.selectExpr(f"{text_cast('raw')} AS v").collect()] == ["", "x"]
 
 
-def test_cast_fields_unknown_type_raises(spark):
-    df = spark.createDataFrame([("1",)], "a string")
+def test_clean_field_unknown_type_raises():
     try:
-        cast_fields(df, {"a": "geometry"})
+        clean_field("a", "geometry", "a")
         raise AssertionError("expected ValueError")
     except ValueError as e:
         assert "geometry" in str(e)
+
+
+def test_clean_field_rules_per_declared_type(spark):
+    """C7 strips newlines from text only; date stays text (the
+    reference's date branch is commented out); number is DOUBLE, not
+    the DECIMAL a bare SQL 0.0 literal would give; names snake_case."""
+    df = spark.createDataFrame(
+        [("a\nb", "2020\n0101", None, None)], "t string, d string, n string, c boolean"
+    )
+    out = df.selectExpr(
+        clean_field("t", "text", "someText"),
+        clean_field("d", "date", "d"),
+        clean_field("n", "number", "n"),
+        clean_field("c", "checkbox", "loan.isOk"),
+    )
+    assert [(f.name, f.dataType.simpleString(), f.nullable) for f in out.schema.fields] == [
+        ("some_text", "string", False),
+        ("d", "string", False),
+        ("n", "double", False),
+        ("loanis_ok", "boolean", False),
+    ]
+    assert tuple(out.collect()[0]) == ("ab", "2020\n0101", 0.0, False)
 
 
 def test_explode_outer_row_count_law(spark):
@@ -71,8 +97,9 @@ def test_explode_outer_row_count_law(spark):
 def test_explode_outer_flat_prefix_and_null_children(spark):
     rows = [(1, [{"a": "x", "b": "y"}]), (2, [])]
     df = spark.createDataFrame(rows, "id int, items array<struct<a:string,b:string>>")
-    flat = explode_outer_flat(df, "items", prefix="item")
-    assert set(flat.columns) == {"id", "itemA", "itemB"}
+    flat, cols = explode_outer_flat(df, schema_columns(df.schema), "items", prefix="item")
+    assert set(cols) == {"id", "itemA", "itemB"}
+    flat = flat.selectExpr(*(f"{src} AS {name}" for name, (src, _) in cols.items()))
     by_id = {r.id: r for r in flat.collect()}
     assert by_id[1].itemA == "x"
     assert by_id[2].itemA is None  # empty array keeps parent with NULL child
@@ -87,7 +114,7 @@ def test_stringify_structs_reference_format(spark):
     df = spark.createDataFrame(rows, "id int, arr array<struct<k:string,m:string>>")
     out = {
         r.id: r.s
-        for r in df.select("id", stringify_structs("arr", ["k", "m"]).alias("s")).collect()
+        for r in df.selectExpr("id", f"{stringify_structs('arr', ['k', 'm'])} AS s").collect()
     }
     assert out[1] == "k:v,m:w|k:q"
     assert out[2] == "m:only"
@@ -734,18 +761,18 @@ def test_ascii_translit_matches_py2_backslashreplace(spark):
     castAscii semantics, Form700.py:291-294) across Latin-1, BMP, and
     astral-plane code points; ASCII passes through untouched."""
     from form700_etl_spark.functions.cleaning import ascii_translit, text_cast
-    from pyspark.sql import functions as F
 
     samples = ["héllo wörld", "café 你好 𝄞 ok", "plain ascii", ""]
     df = spark.createDataFrame([(s,) for s in samples], "s string")
     got = [r.v for r in df.select(ascii_translit("s").alias("v")).collect()]
     want = [s.encode("ascii", "backslashreplace").decode() for s in samples]
     assert got == want
-    # flag plumbed through text_cast; default stays UTF-8-native
+    # composed over the text cast by the consumer; the cast stays UTF-8-native
     df2 = spark.createDataFrame([(None,), ("é",)], "raw string")
-    compat = [r.v for r in df2.select(text_cast("raw", ascii_compat=True).alias("v")).collect()]
+    text = F.expr(text_cast("raw"))
+    compat = [r.v for r in df2.select(ascii_translit(text).alias("v")).collect()]
     assert compat == ["", "\\xe9"]
-    plain = [r.v for r in df2.select(text_cast("raw").alias("v")).collect()]
+    plain = [r.v for r in df2.select(text.alias("v")).collect()]
     assert plain == ["", "é"]
 
 

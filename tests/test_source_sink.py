@@ -7,6 +7,7 @@ import json
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from form700_etl_spark.sinks.chunked import ChunkedSink, ChunkedSinkConfig, LocalDirClient
@@ -295,11 +296,11 @@ class TestStreamingPipelineEquivalence:
         from form700_etl_spark.functions.cleaning import number_cast, snake_case
         from form700_etl_spark.functions.nested import stringify_structs
 
-        out = df.select(
+        out = df.selectExpr(
             "filingId",
             "filerName",
-            number_cast("amount").alias("amount"),
-            stringify_structs("offices", ["office", "position"]).alias("offices"),
+            f"{number_cast('amount')} AS amount",
+            f"{stringify_structs('offices', ['office', 'position'])} AS offices",
         )
         return out.toDF(*[snake_case(c) for c in out.columns])
 
@@ -610,6 +611,55 @@ class TestForm700Pipeline:
         assert out["cover"].count() == out["cover_redacted"].count()
         names = {r.filer_name for r in out["cover_redacted"].select("filer_name").distinct().collect()}
         assert names == {"[REDACTED]"}
+        # output contract of every dataset: snake_case names in schema-CSV
+        # order, the declared types (dates stay text, numbers DOUBLE — a
+        # bare SQL 0.0 would make them DECIMAL), and no nullable column
+        # (every clean rule coalesces NULL away)
+        from form700_etl_spark.functions.cleaning import snake_case
+        from form700_etl_spark.schema_registry import load_schema
+
+        for name, df in out.items():
+            declared = load_schema(name.removesuffix("_redacted")).struct_type(date_compat=True)
+            want = [(snake_case(f.name), f.dataType, False) for f in declared.fields]
+            assert [(f.name, f.dataType, f.nullable) for f in df.schema.fields] == want, name
+
+    @pytest.mark.parametrize("base", ["cover", "scheduleA2", "scheduleB", "scheduleD"])
+    def test_build_round_trip_budget(self, spark, sf_dir, base, monkeypatch):
+        """One dataset's clean plan is a few rendered ``selectExpr``
+        calls over one schema read, not a py4j round trip per composed
+        Column call: at most 150 gateway commands (5,585-6,888 when each
+        rule composed Columns).  Covers cover, the dotted ``loan.*``
+        leaves (scheduleB), the prefixed ``realProperties`` explode
+        (scheduleA2) and the ``gifts`` explode (scheduleD).  Proxy
+        releases are not counted: Python's GC sends them for objects of
+        earlier tests."""
+        from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
+        from form700_etl_spark.plans.form700 import run_form700_pipeline, synthesize_filings
+
+        filings = synthesize_filings(spark, sf_dir, datasets=(base,))
+        client = spark.sparkContext._gateway._gateway_client  # noqa: SLF001
+        send, calls = client.send_command, []
+        release = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+        def counting(command, *args, **kwargs):
+            if not command.startswith(release):
+                calls.append(command)
+            return send(command, *args, **kwargs)
+
+        monkeypatch.setattr(client, "send_command", counting)
+        run_form700_pipeline(filings, datasets=(base,))
+        monkeypatch.undo()
+        assert 0 < len(calls) <= 150, len(calls)
+
+    def test_missing_columns_raise_key_error(self, spark, sf_dir):
+        from form700_etl_spark.plans.form700 import run_form700_pipeline, synthesize_filings
+
+        filings = synthesize_filings(spark, sf_dir, datasets=("cover",))
+        with pytest.raises(KeyError, match="registry lists 'offices'"):
+            run_form700_pipeline(filings.drop("offices"), datasets=("cover",))
+        with pytest.raises(KeyError, match=r"missing columns \['agency'\]"):
+            run_form700_pipeline(filings.drop("agency"), datasets=("cover",))
 
 
 class TestFormatSurface:
