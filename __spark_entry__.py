@@ -89,9 +89,10 @@ def _least_recently_sampled_first(names, here: str | None = None) -> list[str]:
     and the driver would re-check the same 50-name prefix forever.  The
     new ordering is:
 
-    1. QUEUE_REVERIFY.txt names fixed after their last driver sample
-       (in file order) — so a post-sample correctness fix always gets
-       driver re-verification the very next round;
+    1. QUEUE_REVERIFY.txt names fixed after their last driver sample,
+       in file order — the first 50 pending names get driver
+       re-verification the very next round; a name past slot 50 waits
+       one round for each 50 pending names ahead of it, in file order;
     2. everything else by last-sampled round ASCENDING (never-sampled
        queries sort first at round 0, preserving the old guarantee for
        newly registered queries), tie-broken by registration order.

@@ -1,17 +1,25 @@
-"""Test-table loaders.
+"""Test-table loaders and the session cache.
 
 The driver fixtures (TESTDATA.md) are one parquet file per table under
 ``/root/testdata/sf{0.001,0.01,0.1}``.  Loading goes through
 ``spark.read.parquet`` so Catalyst gets predicate pushdown, column
 pruning and partition-sized splits for free — at 100 TB these would be
 directories of many row-grouped files and the same code holds.
+
+Each fixture's schema is inferred once per session and per (mtime,
+size) of its path, then bound with ``spark.read.schema(s)``, which runs
+no job.  ``session_cached`` is the one memo of such per-session
+artifacts; it is dropped whole when a new SparkContext starts.
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
+
+V = TypeVar("V")
 
 TABLE_NAMES = (
     "region",
@@ -52,13 +60,45 @@ def ensure_session_confs(spark: SparkSession) -> None:
             spark.conf.set(key, value)
 
 
+_SESSION_CACHE: dict = {}
+_APP_ID = object()  # the key under which _SESSION_CACHE records its context's id
+
+
+def session_cached(spark: SparkSession, key: Hashable, build: Callable[[], V]) -> V:
+    """``build()``, memoized per ``key`` for the life of ``spark``'s
+    SparkContext.  A context with a new application id drops every
+    entry: only one SparkContext lives in a process, so older entries
+    belong to a stopped context (their cached blocks died with it).
+    Checked by that id, not ``id(spark)``, which the allocator can reuse
+    for a new session.  A ``build`` that raises caches nothing; two
+    threads missing one key may both build it (the later store wins)."""
+    app_id = spark.sparkContext.applicationId
+    if _SESSION_CACHE.get(_APP_ID) != app_id:
+        _SESSION_CACHE.clear()
+        _SESSION_CACHE[_APP_ID] = app_id
+    if key not in _SESSION_CACHE:
+        _SESSION_CACHE[key] = build()
+    return _SESSION_CACHE[key]
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    try:
+        st = os.stat(path)
+    except OSError:  # a remote URI or a missing path: Spark resolves (or reports) it
+        schema = spark.read.parquet(path).schema
+    else:
+        schema = session_cached(
+            spark,
+            ("schema", path, st.st_mtime_ns, st.st_size),
+            lambda: spark.read.parquet(path).schema,
+        )
+    df = spark.read.schema(schema).parquet(path)
     if name == "events":
-        df = df.withColumn("ts", normalize_ts(df.schema["ts"].dataType))
+        df = df.withColumn("ts", normalize_ts(schema["ts"].dataType))
     return df
 
 

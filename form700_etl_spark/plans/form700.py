@@ -49,7 +49,7 @@ from ..functions.nested import (
     stringify_structs,
     struct_leaves,
 )
-from ..io import maybe_broadcast, table
+from ..io import maybe_broadcast, session_cached, table
 from ..schema_registry import TableInfo, load_schema, load_table_registry
 
 SCHEDULE_NAMES = (
@@ -620,36 +620,26 @@ def run_form700_pipeline(
     return out
 
 
-# Memoized single-dataset pipeline plans, keyed by (applicationId, sf_dir,
-# base).  A DataFrame is an immutable lazy plan, so handing the same object
-# back to repeat callers is semantically identical to rebuilding it.  With
-# the clean pass rendered as SQL text, an uncached warm build at sf0.001
-# (4-core host) takes 0.38-0.55 s for cover/scheduleA2/scheduleB, mostly
-# the three ``io.table`` schema-inference jobs in ``synthesize_filings``
-# (~0.45 s), so the cache still pays until relations resolve their schema
-# once per session.  Un-JITted, fresh-JVM builds cost several times more.
-# Keying by applicationId makes stale entries from stopped sessions
-# unreachable (a new session gets a new id); the cache holds lazy plans
-# only, no materialized data.
-_DATASET_PLAN_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def pipeline_dataset(spark: SparkSession, sf_dir: str, base: str) -> DataFrame:
     """EP1 single-dataset entry: the cleaned flat table for ``base``
-    (cover or one schedule) over the synthesized nested filings, with the
-    constructed plan memoized per (session, sf_dir, base)."""
-    key = (spark.sparkContext.applicationId, sf_dir, base)
-    if key not in _DATASET_PLAN_CACHE:
-        if len(_DATASET_PLAN_CACHE) > 256:  # bound across many test sessions
-            _DATASET_PLAN_CACHE.clear()
-        # prune the SOURCE construction to this dataset too (round 11):
-        # the un-pruned nested tree cost 36 s of fresh-JVM driver work
-        # at sf0.1 before Catalyst ever pruned a column
+    (cover or one schedule) over the synthesized nested filings.
+
+    The plan is memoized per (session, sf_dir, base) through
+    ``io.session_cached``; a DataFrame is an immutable lazy plan, so
+    handing the same object back is the same as rebuilding it.  An
+    uncached warm build at sf0.001 (4-core host, medians of 10) runs no
+    job now that ``io.table`` resolves each schema once, and still takes
+    0.19-0.34 s for cover/scheduleA2/scheduleB (0.59-0.78 s with the
+    three inference jobs), more on an un-JITted JVM; the memo saves it
+    per repeat call.  The SOURCE construction is pruned to this dataset
+    too (round 11): the un-pruned nested tree cost 36 s of fresh-JVM
+    driver work at sf0.1 before Catalyst ever pruned a column."""
+
+    def build() -> DataFrame:
         filings = synthesize_filings(spark, sf_dir, datasets=(base,))
-        _DATASET_PLAN_CACHE[key] = run_form700_pipeline(
-            filings, datasets=(base,)
-        )[base]
-    return _DATASET_PLAN_CACHE[key]
+        return run_form700_pipeline(filings, datasets=(base,))[base]
+
+    return session_cached(spark, ("pipeline_dataset", sf_dir, base), build)
 
 
 def run_dual(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

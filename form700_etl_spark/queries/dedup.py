@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import session_cached, table
 from ..operators.dedup import (
     BAND_ROWS,
     MAX_SHINGLE_DF,
@@ -81,41 +81,24 @@ _CAPPED_SHINGLES_SQL = """
 """
 
 
-# One cached shingle table per (application, sf_dir, cap): several dedup
-# queries share it, and repeat invocations (bench best-of-N, the oracle
-# harness) would otherwise re-cache an identical plan each call.  Keyed
-# by applicationId — not id(spark), which the allocator can reuse for a
-# NEW session after the old one is GC'd (stale-plan hazard); entries
-# from other applications are evicted so the dict cannot grow across
-# session restarts.
-_SHINGLE_CACHE: dict[tuple[str, str, int | None], DataFrame] = {}
-
-
 def _shingles_cached(spark, sf_dir, max_df: int | None = None) -> DataFrame:
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _SHINGLE_CACHE if k[0] != app_id]:
-        try:
-            _SHINGLE_CACHE[k].unpersist()
-        except Exception:
-            pass  # session already stopped; the JVM cache died with it
-        del _SHINGLE_CACHE[k]
-    key = (app_id, sf_dir, max_df)
-    df = _SHINGLE_CACHE.get(key)
-    if df is None:
-        if max_df is not None:
-            # Derive the capped table from the CACHED uncapped one
-            # instead of re-running the full scan+explode+distinct
-            # lineage: the cap applies on top of the distinct shingle
-            # set.  Cold-profiling (r12) showed each variant cost ~5-7 s
-            # to populate independently at sf0.1 — almost all of it the
-            # shared upstream stages.
-            base = _shingles_cached(spark, sf_dir, max_df=None)
-            df = drop_hot_shingles(base, max_df).cache()
-        else:
-            df = shingle(table(spark, sf_dir, "documents"), n=3).cache()
-        _SHINGLE_CACHE[key] = df
-    return df
+    """The cached distinct (doc_id, shingle) table, capped at ``max_df``
+    when given, one per (session, sf_dir, cap): several dedup queries
+    share it, and repeat invocations (bench best-of-N, the oracle
+    harness) would otherwise re-cache an identical plan each call."""
 
+    def build() -> DataFrame:
+        if max_df is None:
+            return shingle(table(spark, sf_dir, "documents"), n=3).cache()
+        # Derive the capped table from the CACHED uncapped one instead
+        # of re-running the full scan+explode+distinct lineage: the cap
+        # applies on top of the distinct shingle set.  Cold-profiling
+        # (r12) showed each variant cost ~5-7 s to populate
+        # independently at sf0.1 — almost all of it the shared upstream
+        # stages.
+        return drop_hot_shingles(_shingles_cached(spark, sf_dir), max_df).cache()
+
+    return session_cached(spark, ("shingles", sf_dir, max_df), build)
 
 
 # ---------------------------------------------------------------- exact dedup

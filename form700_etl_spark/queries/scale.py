@@ -10,7 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import maybe_broadcast, table
+from ..io import maybe_broadcast, session_cached, table
 from ..registry import register
 
 
@@ -1294,7 +1294,7 @@ def clean_winsorize_event_values(spark, sf_dir):
     )
 
 
-# One cached DISTINCT co-purchase pair table per (application, sf_dir):
+# One cached DISTINCT co-purchase pair table per (session, sf_dir):
 # four graph queries (triangle, BFS, jaccard, adamic-adar) consume the
 # IDENTICAL edge list and each rebuilt it from lineitem per invocation
 # (~1.5-2 s of per-query wall at sf0.1) — the same legitimate
@@ -1304,26 +1304,13 @@ def clean_winsorize_event_values(spark, sf_dir):
 # instead of a self-join's two, pairs emitted by an array transform
 # inside codegen (measured 1.4x faster than the equi-self-join at
 # sf0.1).  Order baskets are small (<= ~7 parts), so the per-row
-# quadratic transform is constant-bounded.  Keyed by applicationId so
-# stale entries from stopped sessions evict (not id(spark), which the
-# allocator can reuse).
-_CO_PAIRS_CACHE: dict = {}
-
-
+# quadratic transform is constant-bounded.
 def _co_pairs_cached(spark, sf_dir):
     """DISTINCT (u < v) part co-purchase pairs, session-cached."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _CO_PAIRS_CACHE if k[0] != app_id]:
-        try:
-            _CO_PAIRS_CACHE[k].unpersist()
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-        del _CO_PAIRS_CACHE[k]
-    key = (app_id, sf_dir)
-    df = _CO_PAIRS_CACHE.get(key)
-    if df is None:
+
+    def build():
         li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        df = (
+        return (
             li.groupBy("l_orderkey")
             .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
             .select(F.explode(F.expr(
@@ -1334,8 +1321,8 @@ def _co_pairs_cached(spark, sf_dir):
             .distinct()
             .cache()
         )
-        _CO_PAIRS_CACHE[key] = df
-    return df
+
+    return session_cached(spark, ("co_pairs", sf_dir), build)
 
 
 @register(
@@ -1884,9 +1871,6 @@ _STABLE_CO_SQL = """
 """
 
 
-_STABLE_CO_CACHE: dict = {}
-
-
 def _stable_co_edges(spark, sf_dir):
     """DISTINCT (u < v) part pairs co-purchased in >= 2 orders, plus the
     symmetric adjacency — the per-order pair explode is linear via the
@@ -1899,18 +1883,10 @@ def _stable_co_edges(spark, sf_dir):
     NOT derivable from _co_pairs_cached — the support count needs one
     row per co-purchasing order, which the distinct table has already
     collapsed."""
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _STABLE_CO_CACHE if k[0] != app_id]:
-        try:
-            _STABLE_CO_CACHE[k].unpersist()
-        except Exception:  # noqa: BLE001 — session already stopped
-            pass
-        del _STABLE_CO_CACHE[k]
-    key = (app_id, sf_dir)
-    co = _STABLE_CO_CACHE.get(key)
-    if co is None:
+
+    def build():
         li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        co = (
+        return (
             li.groupBy("l_orderkey")
             .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
             .select(
@@ -1928,7 +1904,8 @@ def _stable_co_edges(spark, sf_dir):
             .select("u", "v")
             .cache()
         )
-        _STABLE_CO_CACHE[key] = co
+
+    co = session_cached(spark, ("stable_co", sf_dir), build)
     # checkpoint OVER the cache: the per-call localCheckpoint reads the
     # cached table (one cheap scan instead of the lineitem rebuild) and
     # truncates it out of downstream plans, so every consumer's

@@ -173,6 +173,71 @@ def test_partitioned_write_enables_partition_pruning(spark, sf_dir, tmp_path):
     assert back.count() == expected > 0
 
 
+def test_table_infers_each_fixture_schema_once(spark, sf_dir, tmp_path):
+    """A repeat ``table`` read binds the session's cached schema and runs
+    no parquet schema job; a fixture rewritten in place (new mtime or
+    size) is inferred afresh, so a stale schema is never served."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from form700_etl_spark.io import table
+
+    jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001 — the status store has no Python API
+
+    def jobs() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return jsc.statusStore().jobsList(None).size()
+
+    table(spark, sf_dir, "orders")
+    before = jobs()
+    table(spark, sf_dir, "orders")
+    assert jobs() - before == 0
+
+    docs = {"doc_id": pa.array([1, 2], pa.int64()), "text": pa.array(["a b c", "d e f"])}
+    path = str(tmp_path / "documents.parquet")
+    pq.write_table(pa.table(docs), path)
+    assert table(spark, str(tmp_path), "documents").columns == ["doc_id", "text"]
+    pq.write_table(pa.table({**docs, "split": pa.array(["train", "test"])}), path)
+    back = table(spark, str(tmp_path), "documents")
+    assert back.columns == ["doc_id", "text", "split"]
+    assert sorted(r.split for r in back.collect()) == ["test", "train"]
+
+
+def test_session_cached_lives_for_one_application(monkeypatch):
+    """``session_cached`` builds once per key under one application id,
+    drops every entry when the id changes, and caches nothing for a
+    ``build`` that raises."""
+    from types import SimpleNamespace
+
+    from form700_etl_spark import io
+
+    monkeypatch.setattr(io, "_SESSION_CACHE", {})
+    app_a, app_b = (
+        SimpleNamespace(sparkContext=SimpleNamespace(applicationId=i)) for i in ("a", "b")
+    )
+    built: list[str] = []
+
+    def build(value: str):
+        return lambda: built.append(value) or value
+
+    assert io.session_cached(app_a, "k1", build("a1")) == "a1"
+    assert io.session_cached(app_a, "k1", build("a1 again")) == "a1"
+    assert io.session_cached(app_a, "k2", build("a2")) == "a2"
+    assert built == ["a1", "a2"]
+
+    assert io.session_cached(app_b, "k1", build("b1")) == "b1"
+    assert io.session_cached(app_b, "k2", build("b2")) == "b2"
+    assert built == ["a1", "a2", "b1", "b2"]
+
+    def boom():
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        io.session_cached(app_b, "k3", boom)
+    assert io.session_cached(app_b, "k3", build("b3")) == "b3"
+    assert built[-1] == "b3"
+
+
 def test_pipeline_prunes_unused_schedule_arrays(spark, sf_dir):
     """Building one dataset must not pay for the other schedules'
     nested-array construction: cover needs only the count(when)
