@@ -1,4 +1,4 @@
-"""Test-table loaders and the session cache.
+"""Test-table loaders, the session cache and the one materialization.
 
 The driver fixtures (TESTDATA.md) are one parquet file per table under
 ``/root/testdata/sf{0.001,0.01,0.1}``.  Loading goes through
@@ -10,6 +10,9 @@ Each fixture's schema is inferred once per session and per (mtime,
 size) of its path, then bound with ``spark.read.schema(s)``, which runs
 no job.  ``session_cached`` is the one memo of such per-session
 artifacts; it is dropped whole when a new SparkContext starts.
+
+``materialize`` is the one place a query cuts its plan: an eager local
+checkpoint whose jobs carry the description ``materialize: <reason>``.
 """
 
 from __future__ import annotations
@@ -100,6 +103,31 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name == "events":
         df = df.withColumn("ts", normalize_ts(schema["ts"].dataType))
     return df
+
+
+def materialize(df: DataFrame, reason: str) -> DataFrame:
+    """``df`` computed once and pinned as the leaf of every plan that
+    reads the result (``Scan ExistingRDD``).
+
+    Materialize only a frame that two or more jobs or plan branches
+    read, that a loop iterates over, or whose nondeterministic values
+    must be frozen (a ``spark_partition_id`` both passes must agree on).
+    Anything else stays lazy, so Catalyst optimizes it with its
+    consumer.
+
+    The checkpoint is local (executor block store) and always eager: the
+    materialization is its own job, so the code that follows can rely on
+    it.  Every job it launches carries the description
+    ``materialize: <reason>``; the caller's description comes back
+    afterwards, and its job group is never touched, so a profiler that
+    attributes jobs by group still sees them as the caller's."""
+    sc = df.sparkSession.sparkContext
+    prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(f"materialize: {reason}")
+    try:
+        return df.localCheckpoint()
+    finally:
+        sc.setLocalProperty("spark.job.description", prev)
 
 
 def normalize_ts(dtype, col: str = "ts"):

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism
+from ..io import ensure_parallelism, materialize
 
 N_HASHES = 12
 BAND_ROWS = 3
@@ -216,7 +216,7 @@ def lsh_candidates(signatures: DataFrame) -> DataFrame:
     (corpus scan + shingle explode + K-wide min agg)
     — at 100 TB that is two extra full-corpus passes to build a table
     that is only O(n_docs x n_bands) rows."""
-    bands = _bands(signatures).localCheckpoint()
+    bands = materialize(_bands(signatures), "lsh_candidates bands: both self-join sides")
     b1 = bands.select(F.col("doc_id").alias("doc1"), "band", "key")
     b2 = bands.select(F.col("doc_id").alias("doc2"), "band", "key")
     return (
@@ -269,14 +269,14 @@ def verify_jaccard(pairs: DataFrame, documents: DataFrame,
     (potentially full-corpus) lineage behind them runs once, not once
     per consumer.  Both are O(candidates) — tiny."""
     c1, c2 = pairs.columns
-    pairs = pairs.localCheckpoint()
+    pairs = materialize(pairs, "verify_jaccard candidate pairs: doc filter and both joins")
     cand_docs = (
         pairs.select(F.col(c1).alias("doc_id"))
         .unionByName(pairs.select(F.col(c2).alias("doc_id")))
         .distinct()
     )
     cand = documents.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    shingles = shingle(cand).localCheckpoint()
+    shingles = materialize(shingle(cand), "verify_jaccard shingles: both pair sides and sizes")
     a = shingles.select(F.col("doc_id").alias(c1), "shingle")
     b = shingles.select(F.col("doc_id").alias(c2), "shingle")
     common = (
@@ -328,13 +328,13 @@ def connected_components(pairs: DataFrame,
     # huge graphs, but CollectLimit executes as several incremental
     # scale-up jobs and the full count is never wasted here: it
     # populates the cache that either the small path's Arrow toPandas or
-    # the Pregel path's localCheckpoint immediately drains.  Small path
-    # total: exactly two actions, pair lineage computed once.  The probe
-    # cache is DISK_ONLY: on the big path the localCheckpoint writes a
-    # second (block-store) copy before this one is dropped, and holding
-    # two memory-resident copies of a billion-edge list at peak would
-    # undercut the any-edge-count claim — spilling the probe copy keeps
-    # the peak at one in-memory copy plus one sequential-disk copy.
+    # the Pregel path's edge materialization immediately drains.  Small
+    # path total: exactly two actions, pair lineage computed once.  The
+    # probe cache is DISK_ONLY: on the big path the edge materialization
+    # writes a second (block-store) copy before this one is dropped, and
+    # holding two memory-resident copies of a billion-edge list at peak
+    # would undercut the any-edge-count claim — spilling the probe copy
+    # keeps the peak at one in-memory copy plus one sequential-disk copy.
     from pyspark import StorageLevel
 
     pairs = pairs.select("doc1", "doc2").persist(StorageLevel.DISK_ONLY)
@@ -363,28 +363,25 @@ def connected_components(pairs: DataFrame,
         spark = pairs.sparkSession
         out = [(x, find(x)) for x in parent]
         return spark.createDataFrame(out, "doc_id long, component_id long")
-    # Pregel path: materialize the pairs once (the symmetrizing union
-    # has two branches that would each re-run the pair lineage), then
-    # iterate min-label propagation.  localCheckpoint is eager, so the
-    # probe-time cache can be dropped immediately after.
-    pairs_cached = pairs
-    pairs = pairs.localCheckpoint()
-    pairs_cached.unpersist()
-    edges = (
+    # Pregel path: both directions of the symmetrized edge list read the
+    # probe cache, so the pair lineage still runs once, and the list is
+    # exactly 2 * n_pairs rows.  Size the loop's parallelism to the
+    # graph, not the session default — per-iteration scheduling overhead
+    # dominates at high partition counts.  materialize is eager, so the
+    # probe cache can be dropped right after.
+    n_parts = max(1, min(32, 2 * n_pairs // 100_000 + 1))
+    edges = materialize(
         pairs.select(F.col("doc1").alias("a"), F.col("doc2").alias("b"))
         .unionByName(pairs.select(F.col("doc2").alias("a"), F.col("doc1").alias("b")))
-        .localCheckpoint()
+        .repartition(n_parts, "b"),
+        "connected_components edges: every propagation round",
     )
-    n_edges = edges.count()
-    # size the loop's parallelism to the graph, not the session default —
-    # per-iteration scheduling overhead dominates at high partition counts
-    n_parts = max(1, min(32, n_edges // 100_000 + 1))
-    edges = edges.repartition(n_parts, "b").localCheckpoint()
-    labels = (
+    pairs.unpersist()
+    labels = materialize(
         edges.select(F.col("a").alias("doc_id"))
         .distinct()
-        .withColumn("label", F.col("doc_id"))
-        .localCheckpoint()
+        .withColumn("label", F.col("doc_id")),
+        "connected_components labels: the first propagation round",
     )
     for _ in range(CC_MAX_ITER):
         neighbor_min = (
@@ -392,13 +389,13 @@ def connected_components(pairs: DataFrame,
             .groupBy(F.col("a").alias("doc_id"))
             .agg(F.min("label").alias("nmin"))
         )
-        new_labels = (
+        new_labels = materialize(
             labels.join(neighbor_min, "doc_id", "left")
             .select(
                 "doc_id",
                 F.least(F.col("label"), F.coalesce(F.col("nmin"), F.col("label"))).alias("label"),
-            )
-            .localCheckpoint()
+            ),
+            "connected_components labels: the next round and the change count",
         )
         changed = (
             new_labels.alias("n")

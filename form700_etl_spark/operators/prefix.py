@@ -48,6 +48,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..io import materialize
+
+
 def _default_partitions(df: DataFrame) -> int:
     """Pass-1 partition count when the caller does not size it: the
     session's shuffle parallelism (`spark.sql.shuffle.partitions`,
@@ -96,11 +99,10 @@ def partitioned_prefix_sum(
     if num_partitions is None:
         num_partitions = _default_partitions(df)
     order_cols = list(order_cols)
-    parts = (
+    parts = materialize(
         df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        # pid must be identical for the totals pass and the fix-up join
-        .localCheckpoint()
+        .withColumn("__pid", F.spark_partition_id()),
+        "partitioned_prefix_sum: freeze __pid for the totals pass and the fix-up join",
     )
     aggs = [F.count(F.lit(1)).cast("long").alias("__p_rows")]
     aggs += [F.sum(c).alias(f"__p_{c}") for c in sum_cols]

@@ -22,6 +22,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..io import materialize
+
 
 def exact_fraction_thresholds(
     df: DataFrame,
@@ -38,10 +40,10 @@ def exact_fraction_thresholds(
     the input lineage runs once for total + cumulative window; the
     result row is meant to be crossJoin(broadcast(...))-ed back.
     """
-    vals = (
+    vals = materialize(
         df.groupBy(col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "exact_fraction_thresholds value counts: total and cumulative window",
     )
     tot = vals.agg(F.sum("cnt").alias("big_n"))
     cum = vals.withColumn("cum_n", F.sum("cnt").over(W.orderBy(col)))

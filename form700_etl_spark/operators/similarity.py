@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism
+from ..io import ensure_parallelism, materialize
 
 
 def vec_double(col: str | Column = "embedding") -> Column:
@@ -471,7 +471,7 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int, n_subspaces: int = 8,
 
     spark = queries.sparkSession
     books = pq_train_codebooks(corpus, n_subspaces=n_subspaces, n_codes=n_codes)
-    encoded = pq_encode(corpus, books).localCheckpoint()
+    encoded = materialize(pq_encode(corpus, books), "pq_topk codes: both shortlist branches")
 
     q_rows = queries.select("query_id", "qvec").limit(max_queries + 1).collect()
     if len(q_rows) > max_queries:

@@ -49,7 +49,7 @@ from ..functions.nested import (
     stringify_structs,
     struct_leaves,
 )
-from ..io import maybe_broadcast, session_cached, table
+from ..io import materialize, maybe_broadcast, session_cached, table
 from ..schema_registry import TableInfo, load_schema, load_table_registry
 
 SCHEDULE_NAMES = (
@@ -650,16 +650,16 @@ def run_dual(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     modeled here as a source filter so the run parameterization matches
     the reference's shape.
 
-    The nested filings table is ``localCheckpoint``-ed so the
-    extraction/parse lineage runs ONCE and all 16 downstream dataset
-    plans read the materialized source — at
-    100 TB you re-read the extracted snapshot, you do not re-extract per
-    dataset.  (The redacted twin derives from the same snapshot; masking
-    is a projection on top.)  The checkpoint is lazy: it materializes on
-    the first downstream action and every later dataset plan reads the
-    snapshot instead of re-running the source lineage."""
+    The nested filings table is materialized (``io.materialize``) so
+    the extraction/parse lineage runs ONCE and all 16 downstream
+    dataset plans read the snapshot — at 100 TB you re-read the
+    extracted snapshot, you do not re-extract per dataset.  (The
+    redacted twin derives from the same snapshot; masking is a
+    projection on top.)  The materialization is eager: ``run_dual``
+    runs its job before it returns, so the dataset plans it returns
+    start from a built snapshot."""
     registry = load_table_registry()
-    filings = synthesize_filings(spark, sf_dir).localCheckpoint(eager=False)
+    filings = materialize(synthesize_filings(spark, sf_dir), "run_dual filings: every dataset plan")
     out: dict[str, DataFrame] = {}
     for redacted in (False, True):
         src = filings

@@ -10,7 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import maybe_broadcast, table
+from ..io import materialize, maybe_broadcast, table
 from ..registry import register
 
 
@@ -1053,7 +1053,7 @@ def stats_ks_two_sample(spark, sf_dir):
     e = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click")
     )
-    s = (
+    s = materialize(
         e.groupBy(F.round(F.col("value") * 100).cast("long").alias("v"))
         .agg(
             F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
@@ -1062,8 +1062,8 @@ def stats_ks_two_sample(spark, sf_dir):
             F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
             .cast("long")
             .alias("c2"),
-        )
-        .localCheckpoint()  # feeds the totals AND the ECDF window
+        ),
+        "stats_ks_two_sample value counts: totals and the ECDF window",
     )
     tot = s.agg(F.sum("c1").alias("n1"), F.sum("c2").alias("n2"))
     wv = W.orderBy("v").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -1491,7 +1491,10 @@ def sketch_histogram_quantiles(spark, sf_dir):
     binned = l.select(
         F.floor(_HQ_SUBBINS * F.log2(cents_e)).cast("long").alias("bin")
     )
-    hist = binned.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt")).localCheckpoint()
+    hist = materialize(
+        binned.groupBy("bin").agg(F.count(F.lit(1)).alias("cnt")),
+        "sketch_histogram_quantiles histogram: total and the cumulative window",
+    )
     big_n = hist.agg(F.sum("cnt").alias("big_n"))
     cum = hist.withColumn("cum", F.sum("cnt").over(W.orderBy("bin")))
     targets = (
@@ -1576,13 +1579,13 @@ def stats_spearman_rank_corr(spark, sf_dir):
     # ONE fact scan: reduce to (quantity, cents) pair grain with
     # multiplicities, checkpoint, and derive both rank maps plus the
     # weighted moments from that bounded-domain table.
-    pairs = (
+    pairs = materialize(
         li.groupBy(
             F.col("l_quantity").cast("long").alias("q"),
             cents("l_extendedprice").alias("p"),
         )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stats_spearman_rank_corr pairs: both rank maps and the join",
     )
     def rank_map(col):
         g = pairs.groupBy(col).agg(F.sum("c").cast("long").alias("c"))
@@ -1951,10 +1954,10 @@ def stats_bootstrap_ci_poisson(spark, sf_dir):
 )
 def skyline_pareto_frontier(spark, sf_dir):
     p = table(spark, sf_dir, "part")
-    g = (
+    g = materialize(
         p.groupBy("p_size")
-        .agg(F.min(cents("p_retailprice")).cast("long").alias("pmin"))
-        .localCheckpoint()
+        .agg(F.min(cents("p_retailprice")).cast("long").alias("pmin")),
+        "skyline_pareto_frontier size grain: the dominance window",
     )
     wd = W.orderBy(F.col("p_size").desc()).rowsBetween(W.unboundedPreceding, -1)
     frontier = (
@@ -2047,13 +2050,13 @@ def skyline_pareto_frontier(spark, sf_dir):
 )
 def stats_kruskal_wallis(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    vt = (
+    vt = materialize(
         e.groupBy(
             F.round(F.col("value") * 100).cast("long").alias("v"),
             "event_type",
         )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()  # value-grain + rank window both re-consume
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stats_kruskal_wallis value counts: value grain and the rank window",
     )
     vv = vt.groupBy("v").agg(F.sum("c").cast("long").alias("t"))
     w = W.orderBy("v").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -2190,13 +2193,13 @@ def stats_kruskal_wallis(spark, sf_dir):
 )
 def stats_brown_forsythe(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    vt = (
+    vt = materialize(
         e.groupBy(
             F.col("event_type").alias("g"),
             F.round(F.col("value") * 100).cast("long").alias("v"),
         )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()  # median window + spread join both re-consume
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stats_brown_forsythe value counts: median window and spread join",
     )
     nt = vt.groupBy("g").agg(F.sum("c").cast("long").alias("n_g"))
     wcum = W.partitionBy("g").orderBy("v").rowsBetween(
@@ -2337,22 +2340,25 @@ def events_markov_stationary(spark, sf_dir):
     seq = e.select(
         "user_id", "event_type", F.lead("event_type").over(w).alias("next_type")
     )
-    trans = (
+    trans = materialize(
         seq.filter(F.col("next_type").isNotNull())
         .groupBy("event_type", "next_type")
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-        .localCheckpoint()  # every power-iteration round re-consumes it
+        .agg(F.count(F.lit(1)).cast("long").alias("n")),
+        "events_markov_stationary transitions: totals and the join",
     )
     totals = trans.groupBy("event_type").agg(
         F.sum("n").cast("long").alias("n_from")
     )
-    tz = trans.join(F.broadcast(totals), "event_type").localCheckpoint()
+    tz = materialize(
+        trans.join(F.broadcast(totals), "event_type"),
+        "events_markov_stationary chain: every power-iteration round",
+    )
     k = tz.select("event_type").distinct().count()
     pi = tz.select("event_type").distinct().select(
         "event_type", F.lit(1000000000 // k).cast("long").alias("p_e9")
     )
     for _ in range(_MARKOV_ROUNDS):
-        pi = (
+        pi = materialize(
             tz.join(F.broadcast(pi), "event_type")
             .select(
                 F.col("next_type").alias("event_type"),
@@ -2365,8 +2371,8 @@ def events_markov_stationary(spark, sf_dir):
                 .alias("term"),
             )
             .groupBy("event_type")
-            .agg(F.sum("term").cast("long").alias("p_e9"))
-            .localCheckpoint()
+            .agg(F.sum("term").cast("long").alias("p_e9")),
+            "events_markov_stationary distribution: the next round",
         )
     tot = pi.agg(F.sum("p_e9").cast("double").alias("z"))
     return (
@@ -2458,13 +2464,13 @@ def events_markov_stationary(spark, sf_dir):
 )
 def clean_quantile_normalize_groups(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    vt = (
+    vt = materialize(
         e.groupBy(
             F.col("event_type").alias("g"),
             F.round(F.col("value") * 100).cast("long").alias("v"),
         )
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()  # group ranks, pooled CDF, totals all re-consume
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "clean_quantile_normalize_groups value counts: ranks, pooled CDF, totals",
     )
     nt = vt.groupBy("g").agg(F.sum("c").cast("long").alias("n_g"))
     n_tot = vt.agg(F.sum("c").cast("long").alias("n"))
@@ -2588,11 +2594,11 @@ def stats_ks_exponential_interarrival(spark, sf_dir):
     us = F.expr("unix_micros(ts)")  # exact integer microseconds —
     # never a double round-trip (ulp at epoch scale is ~0.5 us)
     seq = e.select((us - F.lag(us).over(wl)).alias("gap_us"))
-    gaps = (
+    gaps = materialize(
         seq.filter(F.col("gap_us").isNotNull() & (F.col("gap_us") > 0))
         .groupBy(F.col("gap_us").cast("long").alias("x"))
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()  # totals + the CDF window both re-consume
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "stats_ks_exponential_interarrival gaps: totals and the CDF window",
     )
     tot = gaps.agg(
         F.sum("c").cast("long").alias("n"),
@@ -2695,11 +2701,14 @@ def stats_permutation_test_means(spark, sf_dir):
     e = table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "view")
     )
-    pool = e.select(
-        "event_id",
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("g"),
-    ).localCheckpoint()  # observed stats + the B-way fan both re-consume
+    pool = materialize(
+        e.select(
+            "event_id",
+            F.round(F.col("value") * 100).cast("long").alias("v"),
+            F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("g"),
+        ),
+        "stats_permutation_test_means pool: observed stats and the B-way fan",
+    )
     obs = pool.agg(
         F.sum(F.when(F.col("g") == 1, 1).otherwise(0)).cast("long").alias("n1"),
         F.sum(F.when(F.col("g") == 0, 1).otherwise(0)).cast("long").alias("n2"),
@@ -2978,14 +2987,17 @@ _BH_B = 32
 )
 def stats_benjamini_hochberg_fdr(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    pool = e.select(
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("v"),
-        F.when(F.dayofweek(F.to_date("ts")).isin(1, 7), 1)
-        .otherwise(0)
-        .alias("g"),
-    ).localCheckpoint()
+    pool = materialize(
+        e.select(
+            "event_id",
+            "event_type",
+            F.round(F.col("value") * 100).cast("long").alias("v"),
+            F.when(F.dayofweek(F.to_date("ts")).isin(1, 7), 1)
+            .otherwise(0)
+            .alias("g"),
+        ),
+        "stats_benjamini_hochberg_fdr pool: observed stats and the permutation fan",
+    )
     obs = pool.groupBy("event_type").agg(
         F.sum(F.when(F.col("g") == 1, F.col("v")).otherwise(0))
         .cast("long")
@@ -3125,11 +3137,14 @@ def stats_benjamini_hochberg_fdr(spark, sf_dir):
 def stats_cohens_d_effect_sizes(spark, sf_dir):
     e = table(spark, sf_dir, "events")
     vc = F.round(F.col("value") * 100).cast("long")
-    m = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(vc).cast("long").alias("s"),
-        F.sum((vc * vc).cast("decimal(38,0)")).alias("ss"),
-    ).localCheckpoint()  # both pair-grid sides re-consume it
+    m = materialize(
+        e.groupBy("event_type").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum(vc).cast("long").alias("s"),
+            F.sum((vc * vc).cast("decimal(38,0)")).alias("ss"),
+        ),
+        "stats_cohens_d_effect_sizes moments: both pair-grid sides",
+    )
     a = m.select(
         F.col("event_type").alias("type_a"),
         F.col("n").alias("na"),
@@ -3379,10 +3394,13 @@ def agg_weighted_percentiles(spark, sf_dir):
 )
 def stats_kendall_tau(spark, sf_dir):
     li = table(spark, sf_dir, "lineitem")
-    cells = li.groupBy(
-        F.col("l_quantity").cast("long").alias("x"),
-        F.round(F.col("l_discount") * 100).cast("long").alias("y"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("n")).localCheckpoint()
+    cells = materialize(
+        li.groupBy(
+            F.col("l_quantity").cast("long").alias("x"),
+            F.round(F.col("l_discount") * 100).cast("long").alias("y"),
+        ).agg(F.count(F.lit(1)).cast("long").alias("n")),
+        "stats_kendall_tau cells: both pair-grid sides",
+    )
     a = cells.select(
         F.col("x").alias("xa"), F.col("y").alias("ya"), F.col("n").alias("na")
     )
@@ -3487,9 +3505,12 @@ def stats_kendall_tau(spark, sf_dir):
 )
 def stats_cramers_v(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
-    cells = o.groupBy(
-        F.col("o_orderpriority").alias("r"), F.col("o_orderstatus").alias("c")
-    ).agg(F.count(F.lit(1)).cast("long").alias("o")).localCheckpoint()
+    cells = materialize(
+        o.groupBy(
+            F.col("o_orderpriority").alias("r"), F.col("o_orderstatus").alias("c")
+        ).agg(F.count(F.lit(1)).cast("long").alias("o")),
+        "stats_cramers_v cells: row, column and grand totals",
+    )
     rt = cells.groupBy("r").agg(F.sum("o").cast("long").alias("nr"))
     ct = cells.groupBy("c").agg(F.sum("o").cast("long").alias("nc"))
     n = cells.agg(F.sum("o").cast("long").alias("n"))
@@ -3582,9 +3603,12 @@ def stats_theil_u(spark, sf_dir):
         F.col("event_type").alias("x"),
         F.date_format("ts", "HH").cast("long").alias("y"),
     )
-    cells = base.groupBy("x", "y").agg(
-        F.count(F.lit(1)).cast("long").alias("n")
-    ).localCheckpoint()
+    cells = materialize(
+        base.groupBy("x", "y").agg(
+            F.count(F.lit(1)).cast("long").alias("n")
+        ),
+        "stats_theil_u cells: both marginals and the total",
+    )
     xt = cells.groupBy("x").agg(F.sum("n").cast("long").alias("nx"))
     yt = cells.groupBy("y").agg(F.sum("n").cast("long").alias("ny"))
     n = cells.agg(F.sum("n").cast("long").alias("n"))
@@ -4294,10 +4318,10 @@ def events_markov_removal_attribution(spark, sf_dir):
     chains = spark.createDataFrame(
         [(c,) for c in ("FULL",) + _REMOVAL_CHANNELS], "chain string"
     )
-    trans_c = (
+    trans_c = materialize(
         trans.join(F.broadcast(totals), "from_state")
-        .crossJoin(F.broadcast(chains))
-        .localCheckpoint()  # every value-iteration round re-consumes it
+        .crossJoin(F.broadcast(chains)),
+        "events_markov_removal_attribution chains: every value-iteration round",
     )
     pi = trans_c.select(
         "chain", F.col("from_state").alias("state")
@@ -4314,7 +4338,7 @@ def events_markov_removal_attribution(spark, sf_dir):
             .when(F.col("to_state") == F.col("chain"), F.lit(0))
             .otherwise(F.coalesce(F.col("v_e9"), F.lit(0)))
         )
-        pi = (
+        pi = materialize(
             trans_c.join(
                 F.broadcast(p),
                 (F.col("chain") == F.col("p_chain"))
@@ -4329,8 +4353,8 @@ def events_markov_removal_attribution(spark, sf_dir):
                 .alias("term"),
             )
             .groupBy("chain", "state")
-            .agg(F.sum("term").cast("long").alias("v_e9"))
-            .localCheckpoint()
+            .agg(F.sum("term").cast("long").alias("v_e9")),
+            "events_markov_removal_attribution values: the next round",
         )
     v = pi.filter(F.col("state") == "START").select("chain", "v_e9")
     full = v.filter(F.col("chain") == "FULL").select(
@@ -4409,15 +4433,15 @@ def events_markov_removal_attribution(spark, sf_dir):
 )
 def stats_hodges_lehmann_shift(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    daily = (
+    daily = materialize(
         e.filter(F.col("event_type") == "purchase")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(F.sum(cents("value")).cast("long").alias("c"))
         .select(
             "c",
             F.dayofweek("day").isin(1, 7).cast("int").alias("is_weekend"),
-        )
-        .localCheckpoint()  # day-grain; feeds x, y, and the counts
+        ),
+        "stats_hodges_lehmann_shift days: x, y and the counts",
     )
     x = daily.filter(F.col("is_weekend") == 0).select(F.col("c").alias("cx"))
     y = daily.filter(F.col("is_weekend") == 1).select(F.col("c").alias("cy"))
@@ -4509,7 +4533,7 @@ _SIGNFLIP_B = 200  # sign-flip replicates (deterministic md5 stream)
 def stats_signflip_permutation_test(spark, sf_dir):
     e = table(spark, sf_dir, "events")
     pc = cents("value")
-    daily = (
+    daily = materialize(
         e.filter(F.col("event_type") == "purchase")
         .groupBy(F.to_date("ts").alias("day"))
         .agg(
@@ -4519,8 +4543,8 @@ def stats_signflip_permutation_test(spark, sf_dir):
             )
             .cast("long")
             .alias("d")
-        )
-        .localCheckpoint()  # day grain; feeds obs AND the replicate explode
+        ),
+        "stats_signflip_permutation_test days: observed stat and the replicates",
     )
     obs = daily.agg(
         F.abs(F.sum("d")).cast("long").alias("t_obs"),

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import session_cached, table
+from ..io import materialize, session_cached, table
 from ..operators.dedup import (
     BAND_ROWS,
     MAX_SHINGLE_DF,
@@ -524,7 +524,7 @@ SIMHASH_HAMMING_ORACLE = f"""
     ),
 )
 def dedup_simhash_hamming(spark, sf_dir):
-    sigs = _simhash_sigs(spark, sf_dir).localCheckpoint()
+    sigs = materialize(_simhash_sigs(spark, sf_dir), "dedup_simhash_hamming sigs: both band sides")
     band_structs = [
         F.struct(F.lit(0).alias("b"), F.col("simhash_lo").bitwiseAND(F.lit(65535)).alias("band_val")),
         F.struct(F.lit(1).alias("b"), F.shiftright("simhash_lo", 16).alias("band_val")),
@@ -1039,10 +1039,13 @@ def dedup_prefix_filter_join(spark, sf_dir):
     # suffix filter (PPJoin+) was considered and skipped: it prunes
     # candidates entering verification, but verification is now cheaper
     # per candidate than the filter's own per-collision binary search.
-    doc_sets = sh.groupBy("doc_id").agg(
-        F.collect_list("shingle").alias("arr"),
-        F.count(F.lit(1)).alias("n"),
-    ).localCheckpoint(eager=False)  # consumed by both candidate sides
+    doc_sets = materialize(
+        sh.groupBy("doc_id").agg(
+            F.collect_list("shingle").alias("arr"),
+            F.count(F.lit(1)).alias("n"),
+        ),
+        "dedup_prefix_filter_join doc sets: both candidate sides",
+    )
     # explicit partition count: at fixture scale AQE coalesces the
     # ~2 MB candidate list to ONE partition, which would serialize all
     # the array intersections onto a single core; an explicit N keeps
@@ -1239,14 +1242,21 @@ _RECALL_J = 0.5  # near-dup threshold the eval grades recall at
     ),
 )
 def dedup_lsh_recall_eval(spark, sf_dir):
-    sh = _shingles_cached(spark, sf_dir, max_df=MAX_SHINGLE_DF).localCheckpoint()
+    sh = materialize(
+        _shingles_cached(spark, sf_dir, max_df=MAX_SHINGLE_DF),
+        "dedup_lsh_recall_eval shingles: exact and LSH arms",
+    )
     # materialized once: the exact arm feeds n_exact AND the LSH arm's
     # verification (below), and its lineage is the expensive
     # inverted-index self-join
-    exact_pairs = (
-        pair_overlaps(sh).filter(jaccard() >= _RECALL_J).select("doc1", "doc2").localCheckpoint()
+    exact_pairs = materialize(
+        pair_overlaps(sh).filter(jaccard() >= _RECALL_J).select("doc1", "doc2"),
+        "dedup_lsh_recall_eval exact pairs: n_exact and the LSH semi-join",
     )
-    cand = lsh_candidates(minhash_signatures(sh)).localCheckpoint()
+    cand = materialize(
+        lsh_candidates(minhash_signatures(sh)),
+        "dedup_lsh_recall_eval candidates: n_lsh and n_common",
+    )
     # A candidate verified at J>=0.5 shares >=1 shingle, so it IS an
     # exact-arm pair: lsh_pairs = candidates INTERSECT exact_pairs
     # (both sides distinct, doc1 < doc2).  The semi-join replaces the
@@ -1303,7 +1313,7 @@ def dedup_cdc_chunks(spark, sf_dir):
     from ..operators.cdc import cdc_chunk_table
 
     d = table(spark, sf_dir, "documents")
-    chunks = cdc_chunk_table(d).localCheckpoint()  # totals + uniques re-consume
+    chunks = materialize(cdc_chunk_table(d), "dedup_cdc_chunks chunks: totals and uniques")
     uniq = chunks.groupBy("chunk_hash").agg(
         F.min("chunk_len").alias("chunk_len")
     )

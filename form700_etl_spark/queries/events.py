@@ -13,7 +13,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import table
+from ..io import materialize, table
 from ..registry import register
 
 
@@ -988,13 +988,13 @@ def events_kaplan_meier_conversion(spark, sf_dir):
         .alias("t"),
         F.when(F.col("t_purch").isNotNull(), 1).otherwise(0).alias("ev"),
     )
-    grain = (
+    grain = materialize(
         durations.groupBy("t")
         .agg(
             F.sum("ev").cast("long").alias("d"),
             F.sum(1 - F.col("ev")).cast("long").alias("c"),
-        )
-        .localCheckpoint()  # totals + the ordered window re-consume it
+        ),
+        "events_kaplan_meier_conversion day counts: totals and the ordered window",
     )
     total = grain.agg(F.sum(F.col("d") + F.col("c")).cast("long").alias("tot"))
     wcum = W.orderBy("t").rowsBetween(W.unboundedPreceding, W.currentRow)
@@ -1262,10 +1262,10 @@ def events_cohort_ltv_curve(spark, sf_dir):
 )
 def events_dau_wau_mau_stickiness(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    du = (
+    du = materialize(
         e.select(F.to_date("ts").alias("d"), "user_id")
-        .distinct()
-        .localCheckpoint()  # dau + both fan-outs re-consume it
+        .distinct(),
+        "events_dau_wau_mau_stickiness daily users: dau and both fan-outs",
     )
     days = du.select("d").distinct()
     dau = du.groupBy("d").agg(F.count(F.lit(1)).cast("long").alias("dau"))

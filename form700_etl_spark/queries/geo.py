@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import materialize, table
 from ..registry import register
 
 # Search radius and grid sizes.  Cell edges must be >= the phase
@@ -156,17 +156,18 @@ def geo_knn_grid_join(spark, sf_dir):
         (-122.0 + F.conv(F.substring(h, 9, 8), 16, 10).cast("long") % 200000 / 100000.0)
         .alias("lon"),
     )
-    # 5 narrow columns + 4 cell keys; checkpointed once so both phases
-    # (4 consumers) never re-scan the corpus
-    celled = pts.select(
-        "c_custkey",
-        "lat",
-        "lon",
-        F.floor(F.col("lat") / _CELL_DEG).alias("cx"),
-        F.floor(F.col("lon") / _CELL_DEG).alias("cy"),
-        F.floor(F.col("lat") / _FINE_DEG).alias("fx"),
-        F.floor(F.col("lon") / _FINE_DEG).alias("fy"),
-    ).localCheckpoint()
+    celled = materialize(
+        pts.select(
+            "c_custkey",
+            "lat",
+            "lon",
+            F.floor(F.col("lat") / _CELL_DEG).alias("cx"),
+            F.floor(F.col("lon") / _CELL_DEG).alias("cy"),
+            F.floor(F.col("lat") / _FINE_DEG).alias("fx"),
+            F.floor(F.col("lon") / _FINE_DEG).alias("fy"),
+        ),
+        "geo_knn_grid_join celled points: both passes, both join sides",
+    )
 
     def probe9(df, kx, ky):
         offs = F.explode(F.array(*[F.lit(d) for d in (-1, 0, 1)]))
@@ -213,9 +214,8 @@ def geo_knn_grid_join(spark, sf_dir):
 
     wp = W.partitionBy("c_custkey")
     # phase 1: fine 1 km pass over every point.  The ranked sub-1 km
-    # pair set IS the phase-1 result — checkpoint it so the top-3
-    # branch and the satisfied-set branch don't re-run the fine join.
-    fine_ranked = (
+    # pair set IS the phase-1 result.
+    fine_ranked = materialize(
         cands(celled, "fx", "fy")
         .filter(F.col("d_km") <= _FINE_KM)
         .select(
@@ -226,8 +226,8 @@ def geo_knn_grid_join(spark, sf_dir):
             F.count(F.lit(1))
             .over(wp.rowsBetween(W.unboundedPreceding, W.unboundedFollowing))
             .alias("cnt"),
-        )
-        .localCheckpoint()
+        ),
+        "geo_knn_grid_join fine ranks: top-3 and satisfied-set branches",
     )
     fine_top = fine_ranked.filter(
         (F.col("cnt") >= _TOP_K) & (F.col("rank") <= _TOP_K)
@@ -409,32 +409,37 @@ def geo_dbscan_clusters(spark, sf_dir):
     # point-level graph: intra-cell edges are implied by the diag
     # bound, cross-cell supernode edges exist iff some core-core point
     # pair within eps crosses the cells.
-    celled = pts.select(
-        "c_custkey",
-        "lat",
-        "lon",
-        F.floor(F.col("lat") / _CELL_DEG).alias("cx"),
-        F.floor(F.col("lon") / _CELL_DEG).alias("cy"),
-        F.floor(F.col("lat") / _FINE_DEG).alias("fx"),
-        F.floor(F.col("lon") / _FINE_DEG).alias("fy"),
-    ).localCheckpoint()  # every phase re-consumes the celled points
+    celled = materialize(
+        pts.select(
+            "c_custkey",
+            "lat",
+            "lon",
+            F.floor(F.col("lat") / _CELL_DEG).alias("cx"),
+            F.floor(F.col("lon") / _CELL_DEG).alias("cy"),
+            F.floor(F.col("lat") / _FINE_DEG).alias("fx"),
+            F.floor(F.col("lon") / _FINE_DEG).alias("fy"),
+        ),
+        "geo_dbscan_clusters celled points: every phase",
+    )
     cell_stats = (
         celled.groupBy("fx", "fy")
         .agg(
             F.count(F.lit(1)).alias("cell_n"),
             F.min("c_custkey").alias("cell_node"),
         )
-        .localCheckpoint()  # joined by flagging + relabel phases
     )
-    flagged = celled.join(cell_stats, ["fx", "fy"]).select(
-        "c_custkey",
-        "lat",
-        "lon",
-        "cx",
-        "cy",
-        "cell_node",
-        (F.col("cell_n") >= _MIN_PTS).alias("is_dense"),
-    ).localCheckpoint()
+    flagged = materialize(
+        celled.join(cell_stats, ["fx", "fy"]).select(
+            "c_custkey",
+            "lat",
+            "lon",
+            "cx",
+            "cy",
+            "cell_node",
+            (F.col("cell_n") >= _MIN_PTS).alias("is_dense"),
+        ),
+        "geo_dbscan_clusters flagged points: probe, build and border phases",
+    )
 
     offs = F.explode(F.array(*[F.lit(d) for d in (-1, 0, 1)]))
 
@@ -491,13 +496,13 @@ def geo_dbscan_clusters(spark, sf_dir):
         .groupBy("a_key")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    core_sparse = (
+    core_sparse = materialize(
         sparse.join(
             sparse_counts, sparse.c_custkey == sparse_counts.a_key, "left"
         )
         .filter(F.coalesce(F.col("cnt"), F.lit(0)) + 1 >= _MIN_PTS)
-        .select("c_custkey", "lat", "lon", "cx", "cy", "cell_node", "is_dense")
-        .localCheckpoint()  # edges + labels + classify re-consume
+        .select("c_custkey", "lat", "lon", "cx", "cy", "cell_node", "is_dense"),
+        "geo_dbscan_clusters core points: edges, labels and classify",
     )
     # supernode ids: dense point -> its cell's min custkey; sparse core
     # -> own key.  Core-core eps pairs collapse to DISTINCT node edges
@@ -514,7 +519,7 @@ def geo_dbscan_clusters(spark, sf_dir):
         .distinct()
     )
     comp = connected_components(edges)
-    node_labels = (
+    node_labels = materialize(
         core_probe.select(
             F.when(F.col("is_dense"), F.col("cell_node"))
             .otherwise(F.col("c_custkey"))
@@ -525,8 +530,8 @@ def geo_dbscan_clusters(spark, sf_dir):
         .select(
             "c_custkey",
             F.coalesce(F.col("component_id"), F.col("node")).alias("cluster_id"),
-        )
-        .localCheckpoint()  # border join + final classify re-consume
+        ),
+        "geo_dbscan_clusters core labels: border join and final classify",
     )
     # border: sparse non-core points take the MIN cluster label among
     # their core eps-neighbors (deterministic assignment)

@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import materialize, table
 from ..registry import register
 
 # --------------------------------------------------- target encoding
@@ -85,17 +85,13 @@ def feature_target_encode_smoothed(spark, sf_dir):
     rev = l.join(p, l.l_partkey == p.p_partkey).select(
         "p_brand", (pc * (100 - dc)).alias("rev_e4")
     )
-    # materialize the 25-row category partials once: per_brand feeds
-    # BOTH the prior re-aggregation and the final blend, and without the
-    # checkpoint Spark re-derives the whole fact join per consumer —
-    # two scans of lineitem instead of one (the winnowing pattern).
-    per_brand = (
+    per_brand = materialize(
         rev.groupBy("p_brand")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("rev_e4").cast("decimal(38,0)")).cast("double").alias("s"),
-        )
-        .localCheckpoint()
+        ),
+        "feature_target_encode_smoothed brand sums: rows and the global prior",
     )
     glob = per_brand.agg(
         F.sum("n").cast("double").alias("big_n"), F.sum("s").alias("big_s")
@@ -217,12 +213,10 @@ def feature_hash_trick(spark, sf_dir):
 )
 def clean_quantile_bins(spark, sf_dir):
     c = table(spark, sf_dir, "customer")
-    # value-grain counts feed both the total and the cumulative window;
-    # checkpoint so the customer table is scanned once, not twice
-    vals = (
+    vals = materialize(
         c.groupBy(F.round(F.col("c_acctbal") * 100).cast("long").alias("v_cents"))
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).alias("cnt")),
+        "clean_quantile_bins value counts: total and the cumulative window",
     )
     tot = vals.agg(F.sum("cnt").alias("big_n"))
     cum = vals.withColumn("cum_n", F.sum("cnt").over(W.orderBy("v_cents")))
@@ -329,15 +323,15 @@ def embedding_pca_covariance(spark, sf_dir):
         F.struct(F.lit(i).alias("i"), F.lit(-1).alias("j"), xq[i].alias("p"))
         for i in range(_PCA_DIMS)
     ]
-    sums = (
+    sums = materialize(
         e.select(F.explode(F.array(*structs)).alias("u"))
         .select("u.i", "u.j", "u.p")
         .groupBy("i", "j")
         .agg(
             F.sum(F.col("p").cast("decimal(38,0)")).cast("double").alias("s_ij"),
             F.count(F.lit(1)).cast("double").alias("n"),
-        )
-        .localCheckpoint()
+        ),
+        "embedding_pca_covariance sums: pair and diagonal branches",
     )
     psums = sums.filter(F.col("j") >= 0)
     dsums = sums.filter(F.col("j") == -1).select("i", F.col("s_ij").alias("s"))
@@ -489,16 +483,15 @@ def _kmeans_oracle() -> str:
 )
 def embedding_kmeans_lloyd(spark, sf_dir):
     e = table(spark, sf_dir, "embeddings")
-    q = (
+    q = materialize(
         e.select(
             "vec_id",
             F.transform(
                 "embedding",
                 lambda x: F.round(x.cast("double") * 1000).cast("long"),
             ).alias("xq"),
-        )
-        # every assignment round + both update aggs re-consume it
-        .localCheckpoint()
+        ),
+        "embedding_kmeans_lloyd points: every assignment round and both update aggs",
     )
     init = q.orderBy("vec_id").limit(_KM_K).collect()
     centroids = {
@@ -681,14 +674,14 @@ def embedding_power_iteration_top_pc(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("sd"),
     )
-    y = (
+    y = materialize(
         exploded.join(F.broadcast(stats), "i0")
         .select(
             "vec_id",
             (F.col("i0") + 1).cast("int").alias("i"),
             (F.col("n") * F.col("x") - F.col("sd")).cast("long").alias("yd"),
-        )
-        .localCheckpoint()  # consumed by both sides of the Gram join
+        ),
+        "embedding_power_iteration_top_pc centered rows: both Gram join sides",
     )
     dec = lambda c: F.col(c).cast("decimal(18,0)")  # noqa: E731
     gram_rows = (
@@ -826,21 +819,24 @@ def _lr_oracle() -> str:
 )
 def mlprep_logistic_regression_gd(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
-    base = o.select(
-        F.when(F.col("o_orderpriority") == "1-URGENT", 1)
-        .otherwise(0)
-        .alias("y"),
-        F.round(1e6 * F.col("o_totalprice") / 600000.0)
-        .cast("long")
-        .alias("x1q"),
-        F.round(
-            1e6
-            * F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01"))
-            / 2500.0
-        )
-        .cast("long")
-        .alias("x2q"),
-    ).localCheckpoint()  # every GD round + the loss pass re-consume it
+    base = materialize(
+        o.select(
+            F.when(F.col("o_orderpriority") == "1-URGENT", 1)
+            .otherwise(0)
+            .alias("y"),
+            F.round(1e6 * F.col("o_totalprice") / 600000.0)
+            .cast("long")
+            .alias("x1q"),
+            F.round(
+                1e6
+                * F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01"))
+                / 2500.0
+            )
+            .cast("long")
+            .alias("x2q"),
+        ),
+        "mlprep_logistic_regression_gd features: every GD round and the loss pass",
+    )
     w = (0, 0, 0)  # e9 fixed-point (bounded driver state, like k-means)
     n = None
     for _ in range(_LR_ROUNDS):
@@ -1181,8 +1177,8 @@ def mlprep_conformal_intervals(spark, sf_dir):
     # plan re-scans lineitem 4-5x (measured 6.8-9.7 s steady at sf0.1
     # vs ~4 s with them; the resid copy is the bounded calib+test
     # sample, legitimate to pin at any SF)
-    model = model.localCheckpoint()
-    resid = (
+    model = materialize(model, "mlprep_conformal_intervals model: calibration and test residuals")
+    resid = materialize(
         li.where(F.col("bucket").isin(2, 3))
         .crossJoin(F.broadcast(model))
         .select(
@@ -1194,8 +1190,8 @@ def mlprep_conformal_intervals(spark, sf_dir):
                     - F.col("icept_num")
                 ).cast(dec)
             ).alias("abs_r"),
-        )
-        .localCheckpoint()
+        ),
+        "mlprep_conformal_intervals residuals: calibration quantile and coverage",
     )
     calib = (
         resid.where(F.col("bucket") == 2)
@@ -1588,13 +1584,13 @@ def feature_target_encode_oof(spark, sf_dir):
         (u16 % 5).cast("int").alias("fold"),
         (pc * (100 - dc)).alias("rev_e4"),
     )
-    cells = (
+    cells = materialize(
         rev.groupBy("p_brand", "fold")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n"),
             F.sum(F.col("rev_e4").cast("decimal(38,0)")).cast("double").alias("s"),
-        )
-        .localCheckpoint()  # feeds the brand window AND the global prior
+        ),
+        "feature_target_encode_oof brand sums: brand window and global prior",
     )
     wb = W.partitionBy("p_brand")
     tot = cells.select(
@@ -1737,16 +1733,19 @@ def mlprep_isotonic_calibration(spark, sf_dir):
     )
     # 24-row calibration grain from here down; the single-partition
     # windows and the O(k^3) interval enumeration never touch the corpus.
-    pre = pos.select(
-        "hr",
-        "n1",
-        "k1",
-        "n_t",
-        "k_t",
-        "r",
-        F.sum("n_t").over(W.orderBy("r")).alias("cn"),
-        F.sum("k_t").over(W.orderBy("r")).alias("ck"),
-    ).localCheckpoint()
+    pre = materialize(
+        pos.select(
+            "hr",
+            "n1",
+            "k1",
+            "n_t",
+            "k_t",
+            "r",
+            F.sum("n_t").over(W.orderBy("r")).alias("cn"),
+            F.sum("k_t").over(W.orderBy("r")).alias("ck"),
+        ),
+        "mlprep_isotonic_calibration prefix sums: the three interval sides",
+    )
     a = pre.select(F.col("r").alias("i"), F.col("cn").alias("cn_i"), F.col("ck").alias("ck_i"))
     a2 = pre.select((F.col("r") + 1).alias("i"), F.col("cn").alias("cn_p"), F.col("ck").alias("ck_p"))
     b = pre.select(F.col("r").alias("j"), F.col("cn").alias("cn_j"), F.col("ck").alias("ck_j"))

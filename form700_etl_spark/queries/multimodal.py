@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..io import materialize
 from ..operators.multimodal import extract_features, sample_frames, synthesize_media
 from ..registry import register
 
@@ -190,9 +191,10 @@ def multimodal_video_frames_real(spark, sf_dir):
 def multimodal_image_dhash_neardup(spark, sf_dir):
     from ..operators.multimodal import image_dhash, synthesize_dedup_images
 
-    hashes = image_dhash(
-        synthesize_dedup_images(spark, sf_dir)
-    ).localCheckpoint()  # both join sides + bands re-consume the decode
+    hashes = materialize(
+        image_dhash(synthesize_dedup_images(spark, sf_dir)),
+        "multimodal_image_dhash_neardup hashes: bands and both join sides",
+    )
     bands = hashes.select(
         "doc_id",
         "dhash",
@@ -253,9 +255,10 @@ def multimodal_image_dhash_neardup(spark, sf_dir):
 def multimodal_audio_fp_neardup(spark, sf_dir):
     from ..operators.multimodal import audio_fingerprints, synthesize_dedup_audio
 
-    hashes = audio_fingerprints(
-        synthesize_dedup_audio(spark, sf_dir)
-    ).localCheckpoint()
+    hashes = materialize(
+        audio_fingerprints(synthesize_dedup_audio(spark, sf_dir)),
+        "multimodal_audio_fp_neardup fingerprints: bands and both join sides",
+    )
     bands = hashes.select(
         "doc_id",
         "afp",
@@ -314,9 +317,10 @@ def multimodal_audio_fp_neardup(spark, sf_dir):
 def multimodal_image_phash_neardup(spark, sf_dir):
     from ..operators.multimodal import image_phash, synthesize_dedup_images
 
-    hashes = image_phash(
-        synthesize_dedup_images(spark, sf_dir)
-    ).localCheckpoint()  # both join sides + bands re-consume the decode
+    hashes = materialize(
+        image_phash(synthesize_dedup_images(spark, sf_dir)),
+        "multimodal_image_phash_neardup hashes: bands and both join sides",
+    )
     bands = hashes.select(
         "doc_id",
         "phash",

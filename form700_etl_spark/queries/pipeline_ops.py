@@ -19,7 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..functions.splits import TRAIN_MAX_H2, split_case_sql, split_col
-from ..io import table
+from ..io import materialize, table
 from ..registry import register
 
 # md5 hex is lowercase in both Spark and DuckDB, so a lexical compare
@@ -353,7 +353,7 @@ def contamination_ngram_overlap(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     # ONE shingle pass over the corpus, then split by membership — the
     # two-branch version scans + explodes + dedups the whole table twice
-    all_shingles = shingle(d, n=5).localCheckpoint()
+    all_shingles = materialize(shingle(d, n=5), "contamination_ngram_overlap shingles: both splits")
     is_bench = F.col("doc_id") % 97 == 0
     bench = (
         all_shingles.filter(is_bench)
@@ -699,7 +699,7 @@ def training_pipeline_near_dedup_curriculum(spark, sf_dir):
         .select("doc_id")
     )
     d = table(spark, sf_dir, "documents")
-    survivors = (
+    survivors = materialize(
         d.join(drops, "doc_id", "left_anti")
         .join(quality, "doc_id")
         .select(
@@ -707,8 +707,8 @@ def training_pipeline_near_dedup_curriculum(spark, sf_dir):
             "lang",
             F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
             "m",
-        )
-        .localCheckpoint()  # reused by the threshold pass + the final audit
+        ),
+        "training_pipeline_near_dedup_curriculum docs: threshold pass and audit",
     )
     # value-grain cumulative-window thresholds (operators/quantiles.py):
     # same ceil(f*n)-th-smallest semantics as before, but no global

@@ -18,7 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql, money, money_sql
-from ..io import maybe_broadcast, table
+from ..io import materialize, maybe_broadcast, table
 from ..registry import register
 
 # ---------------------------------------------------------------- M1 flagship
@@ -1267,13 +1267,13 @@ def q2_min_cost_supplier(spark, sf_dir):
 def q11_important_stock(spark, sf_dir):
     l = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
-    val = (
+    val = materialize(
         l.join(maybe_broadcast(p), l.l_partkey == p.p_partkey)
         .groupBy("l_suppkey")
         .agg(
             F.sum(F.col("l_quantity").cast("long") * cents("p_retailprice")).alias("value_c")
-        )
-        .localCheckpoint()  # consumed twice (rows + global total); one pass
+        ),
+        "q11_important_stock supplier values: rows and the global total",
     )
     total = val.agg(
         (F.sum("value_c").cast("double") * F.lit(1.05) / F.count(F.lit(1))).alias("thresh")
@@ -1316,10 +1316,10 @@ def q15_top_supplier(spark, sf_dir):
         (F.col("l_shipdate") >= "1997-01-01") & (F.col("l_shipdate") < "1997-04-01")
     )
     rev = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
-    revenue = (
+    revenue = materialize(
         l.groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(F.sum(rev).alias("total_c"))
-        .localCheckpoint()
+        .agg(F.sum(rev).alias("total_c")),
+        "q15_top_supplier revenue: the max and the filter join",
     )
     mx = revenue.agg(F.max("total_c").alias("mx"))
     s = table(spark, sf_dir, "supplier")

@@ -10,7 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import maybe_broadcast, session_cached, table
+from ..io import materialize, maybe_broadcast, session_cached, table
 from ..registry import register
 
 
@@ -617,9 +617,12 @@ def graph_pagerank_bipartite(spark, sf_dir):
         )
         .distinct()
     )
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)  # reused by every iteration
+    edges = materialize(
+        pairs.unionByName(
+            pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ),
+        "graph_pagerank_bipartite edges: degrees and every iteration",
+    )
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
     ranks = deg.select(F.col("u").alias("node"), F.lit(1000000).cast("long").alias("rank"))
     for _ in range(_PR_ITERS):
@@ -713,9 +716,12 @@ def graph_personalized_pagerank(spark, sf_dir):
         )
         .distinct()
     )
-    edges = pairs.unionByName(
-        pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    ).localCheckpoint(eager=False)  # reused by deg, src, and every iteration
+    edges = materialize(
+        pairs.unionByName(
+            pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        ),
+        "graph_personalized_pagerank edges: degrees, sources and every iteration",
+    )
     deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
     src = edges.filter(F.col("u") % 2 == 0).agg(F.min("u").alias("node"))
     ranks = src.select("node", F.lit(1000000).cast("long").alias("rank"))
@@ -1393,13 +1399,13 @@ def graph_triangle_count(spark, sf_dir):
     okey = deg.select("node", (F.col("d") * 1000000000 + F.col("node")).alias("k"))
     ku = okey.select(F.col("node").alias("u"), F.col("k").alias("ku"))
     kv = okey.select(F.col("node").alias("v"), F.col("k").alias("kv"))
-    oriented = (
+    oriented = materialize(
         co.join(ku, "u").join(kv, "v")
         .select(
             F.when(F.col("ku") < F.col("kv"), F.col("u")).otherwise(F.col("v")).alias("s"),
             F.when(F.col("ku") < F.col("kv"), F.col("v")).otherwise(F.col("u")).alias("t"),
-        )
-        .localCheckpoint(eager=False)  # adjacency build + closing joins
+        ),
+        "graph_triangle_count oriented edges: adjacency build and closing joins",
     )
     # Triangle closing via adjacency-set intersection (the edge-iterator
     # of Latapy 2008 / compact-forward): build each node's ORIENTED
@@ -1650,16 +1656,16 @@ def graph_bfs_hops(spark, sf_dir):
     # `visited` stays a lazy union over the already-materialized levels
     # — its consumers just re-scan k cached RDDs, so checkpointing the
     # union again was one pure-scheduling job per level for nothing
-    visited = src.localCheckpoint()
+    visited = materialize(src, "graph_bfs_hops sources: the expansion join and the visited union")
     frontier = visited
     for h in range(1, _BFS_MAX_HOPS + 1):
-        nxt = (
+        nxt = materialize(
             frontier.join(adj, frontier.node == adj.w)
             .select(F.col("nbr").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .select("node", F.lit(h).cast("long").alias("hop"))
-            .localCheckpoint()
+            .select("node", F.lit(h).cast("long").alias("hop")),
+            "graph_bfs_hops level: the next expansion and the visited union",
         )
         visited = visited.unionAll(nxt)
         frontier = nxt
@@ -1715,12 +1721,10 @@ def graph_bfs_hops(spark, sf_dir):
 def audit_benford_first_digit(spark, sf_dir):
     o = table(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
     digit = F.substring(cents("o_totalprice").cast("string"), 1, 1).cast("long")
-    # checkpoint the 9-row digit table: totals, chi-square terms, and
-    # the final projection all re-consume it off ONE parquet scan
-    obs = (
+    obs = materialize(
         o.groupBy(digit.alias("digit"))
-        .agg(F.count(F.lit(1)).cast("long").alias("n_obs"))
-        .localCheckpoint()
+        .agg(F.count(F.lit(1)).cast("long").alias("n_obs")),
+        "audit_benford_first_digit digit counts: totals, terms and output",
     )
     tot = obs.agg(F.sum("n_obs").cast("long").alias("n"))
     expected = F.col("n").cast("double") * F.log10(1.0 + 1.0 / F.col("digit"))
@@ -1809,7 +1813,10 @@ def graph_jaccard_neighbors(spark, sf_dir):
     adj = co.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
         co.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
     )
-    deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("d")).localCheckpoint()
+    deg = materialize(
+        adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("d")),
+        "graph_jaccard_neighbors degrees: the cap join and both degree sides",
+    )
     capped = (
         adj.join(deg, "w")
         .filter(F.col("d").between(2, _AA_MAX_CENTER_DEGREE))
@@ -1906,13 +1913,12 @@ def _stable_co_edges(spark, sf_dir):
         )
 
     co = session_cached(spark, ("stable_co", sf_dir), build)
-    # checkpoint OVER the cache: the per-call localCheckpoint reads the
-    # cached table (one cheap scan instead of the lineitem rebuild) and
-    # truncates it out of downstream plans, so every consumer's
-    # plan contract ("Scan ExistingRDD", no parquet re-scan) holds
-    # verbatim and per-round loops iterate over an RDD leaf exactly as
-    # before.
-    co = co.localCheckpoint()
+    # materialize OVER the cache: each call reads the cached table (one
+    # cheap scan instead of the lineitem rebuild) and truncates it out of
+    # downstream plans, so every consumer's plan contract ("Scan
+    # ExistingRDD", no parquet re-scan) holds verbatim and per-round
+    # loops iterate over an RDD leaf exactly as before.
+    co = materialize(co, "_stable_co_edges co-pairs: every consumer's adjacency and loop")
     adj = co.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
         co.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
     )
@@ -1979,11 +1985,14 @@ def _kcore_oracle() -> str:
 )
 def graph_kcore_peel_profile(spark, sf_dir):
     _, adj = _stable_co_edges(spark, sf_dir)
-    adj = adj.localCheckpoint()
-    keep = adj.select("w").distinct().localCheckpoint()
+    adj = materialize(adj, "graph_kcore_peel_profile adjacency: every peel round")
+    keep = materialize(
+        adj.select("w").distinct(),
+        "graph_kcore_peel_profile survivors: both semi-joins of the first round",
+    )
     survivors: list[DataFrame] = []
     for _ in range(_KCORE_ROUNDS):
-        keep = (
+        keep = materialize(
             adj.join(keep, "w", "left_semi")
             .join(
                 keep.select(F.col("w").alias("nbr")), "nbr", "left_semi"
@@ -1991,8 +2000,8 @@ def graph_kcore_peel_profile(spark, sf_dir):
             .groupBy("w")
             .agg(F.count(F.lit(1)).alias("d"))
             .filter(F.col("d") >= _KCORE_K)
-            .select("w")
-            .localCheckpoint()  # consumed by BOTH semi-joins next round
+            .select("w"),
+            "graph_kcore_peel_profile survivors: both semi-joins of the next round",
         )
         survivors.append(keep)
     # ONE action for every per-round profile count: union the (already
@@ -2057,7 +2066,7 @@ def graph_kcore_peel_profile(spark, sf_dir):
 )
 def graph_local_clustering_coeff(spark, sf_dir):
     co, adj = _stable_co_edges(spark, sf_dir)
-    adj = adj.localCheckpoint()
+    adj = materialize(adj, "graph_local_clustering_coeff adjacency: degrees and the wedge joins")
     deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("d"))
     x = adj.alias("x")
     y = adj.alias("y")
@@ -2129,7 +2138,7 @@ def _lpa_oracle() -> str:
 def _lpa_labels(spark, sf_dir):
     """Run the synchronous LPA rounds; returns (co, adj, labels)."""
     co, adj = _stable_co_edges(spark, sf_dir)
-    adj = adj.localCheckpoint()
+    adj = materialize(adj, "_lpa_labels adjacency: every LPA round")
     labels = adj.select("w").distinct().select("w", F.col("w").alias("label"))
     for _ in range(_LPA_ROUNDS):
         counted = (
@@ -2315,10 +2324,10 @@ def basket_association_rules(spark, sf_dir):
     # ONE basket-grain intermediate (a row per order, sorted distinct
     # parts) serves all three consumers — strictly smaller than the
     # (order, part) grain, and the only corpus-scale shuffle
-    baskets = (
+    baskets = materialize(
         li.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-        .localCheckpoint()
+        .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps")),
+        "basket_association_rules baskets: count, items and pairs",
     )
     n_b = baskets.agg(F.count(F.lit(1)).cast("long").alias("n"))
     item = (
@@ -2456,11 +2465,11 @@ def _hits_sql(iters: int) -> str:
 def graph_hits_hubs_authorities(spark, sf_dir):
     o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
+    edges = materialize(
         o.join(l, o.o_orderkey == l.l_orderkey)
         .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct()
-        .localCheckpoint(eager=False)  # reused by every half-round
+        .distinct(),
+        "graph_hits_hubs_authorities edges: every half-round",
     )
     h = edges.select("c").distinct().select(
         "c", F.lit(1000000).cast("long").alias("h")
@@ -2480,16 +2489,16 @@ def graph_hits_hubs_authorities(spark, sf_dir):
         # (~|nodes| rows), so its consumers replay only that, and the
         # action count drops from 4 to 2 materializations per round
         # (r12: 12.9 -> ~6.5 s at sf0.1, scheduling cost not row work).
-        a_raw = a_raw.localCheckpoint()
+        a_raw = materialize(a_raw, "graph_hits_hubs_authorities authorities: max and normalization")
         amax = a_raw.agg(F.max("a_raw").alias("amax"))
         a = a_raw.crossJoin(F.broadcast(amax)).select(
             "s", F.expr("CAST((a_raw * 1000000) DIV amax AS BIGINT)").alias("a")
         )
-        h_raw = (
+        h_raw = materialize(
             edges.join(a, "s")
             .groupBy("c")
-            .agg(F.sum("a").cast("long").alias("h_raw"))
-            .localCheckpoint()
+            .agg(F.sum("a").cast("long").alias("h_raw")),
+            "graph_hits_hubs_authorities hubs: max and normalization",
         )
         hmax = h_raw.agg(F.max("h_raw").alias("hmax"))
         h = h_raw.crossJoin(F.broadcast(hmax)).select(
@@ -2608,7 +2617,7 @@ def _modularity_oracle() -> str:
 )
 def graph_modularity_lpa(spark, sf_dir):
     co, adj, labels = _lpa_labels(spark, sf_dir)
-    labels = labels.localCheckpoint()  # consumed by three aggregates
+    labels = materialize(labels, "graph_modularity_lpa labels: three aggregates")
     deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("d"))
     m = co.agg(F.count(F.lit(1)).cast("long").alias("m"))
     lu = labels.select(F.col("w").alias("u"), F.col("label").alias("lab_u"))

@@ -19,7 +19,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism, table
+from ..io import ensure_parallelism, materialize, table
 from ..registry import register
 
 _COS_SQL = """
@@ -1023,9 +1023,12 @@ def _matryoshka_rank_sql(dim: int) -> str:
 def embedding_matryoshka_recall(spark, sf_dir):
     from pyspark.sql import Window as W
 
-    v = table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vec_double().alias("vec")
-    ).localCheckpoint()  # 4 dim budgets re-consume both sides
+    v = materialize(
+        table(spark, sf_dir, "embeddings").select(
+            "vec_id", _vec_double().alias("vec")
+        ),
+        "embedding_matryoshka_recall vectors: both sides of every dim budget",
+    )
     q = v.where(F.col("vec_id") % _MATRYOSHKA_QUERY_MOD == 0)
     ranked = None
     for d in _MATRYOSHKA_DIMS:
@@ -1075,7 +1078,7 @@ def embedding_matryoshka_recall(spark, sf_dir):
             .where(F.col("rk") <= _MATRYOSHKA_K)
         )
         ranked = part if ranked is None else ranked.unionByName(part)
-    top = ranked.localCheckpoint()  # full-dim reference + overlap join
+    top = materialize(ranked, "embedding_matryoshka_recall top-k: reference and overlap join")
     full_top = top.where(F.col("dim") == _MATRYOSHKA_DIMS[0]).select(
         F.col("query_id").alias("fq"), F.col("neighbor_id").alias("fn")
     )

@@ -16,7 +16,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import register_views, table
+from ..io import materialize, register_views, table
 from ..registry import register
 
 
@@ -765,26 +765,26 @@ def sketch_kmv_set_ops(spark, sf_dir):
     from ..operators.sketches import kmv_hash
 
     e = table(spark, sf_dir, "events")
-    du = (
+    du = materialize(
         e.select(F.col("event_type").alias("t"), F.col("user_id").alias("u"))
-        .distinct()
-        .localCheckpoint()  # sketch build + exact self-eval both consume
+        .distinct(),
+        "sketch_kmv_set_ops user pairs: sketch build and exact self-eval",
     )
     hh = du.select("t", kmv_hash(F.col("u")).alias("h")).distinct()
     wk = W.partitionBy("t").orderBy("h")
-    sk = (
+    sk = materialize(
         hh.withColumn("rk", F.row_number().over(wk))
         .filter(F.col("rk") <= 64)
-        .select("t", "h")
-        .localCheckpoint()  # consumed by theta/common/unionk/jac
+        .select("t", "h"),
+        "sketch_kmv_set_ops sketches: theta, common, union and Jaccard",
     )
     theta = sk.groupBy("t").agg(F.max("h").alias("u_k"))
     types = du.select("t").distinct()
-    pairs = (
+    pairs = materialize(
         types.alias("a")
         .join(types.alias("b"), F.col("a.t") < F.col("b.t"))
-        .select(F.col("a.t").alias("ta"), F.col("b.t").alias("tb"))
-        .localCheckpoint()
+        .select(F.col("a.t").alias("ta"), F.col("b.t").alias("tb")),
+        "sketch_kmv_set_ops type pairs: member map and the common join",
     )
     # (pair, member-type) mapping keeps the sketch join a HASH join
     # (the SQL `IN (ta, tb)` form would go nested-loop in Spark)
@@ -800,14 +800,14 @@ def sketch_kmv_set_ops(spark, sf_dir):
         .groupBy("ta", "tb")
         .agg(F.count(F.lit(1)).cast("long").alias("n_common"))
     )
-    unionk = (
+    unionk = materialize(
         pm.join(sk, "t")
         .select("ta", "tb", "h")
         .distinct()
         .withColumn(
             "rk", F.row_number().over(W.partitionBy("ta", "tb").orderBy("h"))
-        )
-        .localCheckpoint()
+        ),
+        "sketch_kmv_set_ops union ranks: union size and the exact eval",
     )
     uk = unionk.groupBy("ta", "tb").agg(
         F.max(F.when(F.col("rk") <= 64, F.col("h"))).alias("u64"),

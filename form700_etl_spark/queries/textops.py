@@ -13,7 +13,7 @@ import math
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import materialize, table
 from ..registry import register
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
@@ -1057,8 +1057,8 @@ def _bpe_apply_top(toks, top):
 
 def _bpe_merge_round(toks):
     """One BPE round over ``toks(doc_id, tk)``: returns (top_pair_df,
-    merged_toks_df).  top is a 1-row frame, lazily localCheckpoint-ed:
-    its pair-count aggregate is the round's dominant stage (a full
+    merged_toks_df).  top is a materialized 1-row frame: its
+    pair-count aggregate is the round's dominant stage (a full
     corpus scan + shuffle), and every CONSUMER plan embedding the lazy
     1-row frame re-executed that subtree through its own
     BroadcastExchange — twice per round in text_bpe_train_merges (the
@@ -1069,12 +1069,12 @@ def _bpe_merge_round(toks):
     3.4-4.8 -> 2.7 s, train_merges 2.7 -> 2.4 s, compression_stats —
     single consumer — unchanged)."""
     pairs = _bpe_pairs(toks)
-    top = (
+    top = materialize(
         pairs.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy(F.desc("n"), F.asc("w1"), F.asc("w2"))
-        .limit(1)
-        .localCheckpoint(eager=False)
+        .limit(1),
+        "_bpe_merge_round top pair: the apply and the caller's consumers",
     )
     return top, _bpe_apply_top(toks, top)
 
@@ -1088,8 +1088,9 @@ def _bpe_merge_round(toks):
         "count adjacent pairs over the current tokenization, adopt the "
         "top pair (count desc, pair asc — deterministic), apply it "
         "greedily left-to-right (run-grouped window keeps alternating "
-        "overlapping starts), recount.  Fully lazy — each round's top "
-        "pair re-enters the plan by broadcast, no driver action; the "
+        "overlapping starts), recount.  Each round's top pair is "
+        "materialized as a 1-row frame and re-enters the plan by "
+        "broadcast, never through a driver collect; the "
         "oracle replays the identical rounds as layered CTEs.  Output "
         "is the learned merge table."
     ),
@@ -1116,7 +1117,7 @@ def text_bpe_train_merges(spark, sf_dir):
             # each round's tokenization feeds three downstream subtrees
             # (pairs, positions, reassembly of the NEXT round); a local
             # checkpoint caps the plan depth and recompute fan-out.
-            toks = toks.localCheckpoint(eager=False)
+            toks = materialize(toks, "text_bpe_train_merges tokens: the next round")
     return reduce(DataFrame.unionByName, tops).orderBy("round")
 
 
@@ -1246,7 +1247,7 @@ def text_bpe_compression_stats(spark, sf_dir):
     for r in range(_BPE_ROUNDS):
         _, cur = _bpe_merge_round(cur)
         if r < _BPE_ROUNDS - 1:
-            cur = cur.localCheckpoint(eager=False)
+            cur = materialize(cur, "text_bpe_compression_stats tokens: the next round")
     after = cur.agg(F.sum(F.size("tk")).cast("long").alias("tokens_after"))
     return before.crossJoin(after).select(
         "tokens_before",
@@ -1856,9 +1857,12 @@ def text_winnowing_shared_pairs(spark, sf_dir):
         .select("doc_id", "selkey")
         .distinct()
     )
-    fps = sel.select(
-        "doc_id", (F.col("selkey") / 1048576).cast("long").alias("fp")
-    ).distinct().localCheckpoint(eager=False)  # reused by df cap + both join sides
+    fps = materialize(
+        sel.select(
+            "doc_id", (F.col("selkey") / 1048576).cast("long").alias("fp")
+        ).distinct(),
+        "text_winnowing_shared_pairs fingerprints: df cap and both join sides",
+    )
     df_ok = fps.groupBy("fp").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= _WINNOW_MAX_DF
     ).select("fp")
@@ -2064,8 +2068,8 @@ def text_bpe_encode_heldout(spark, sf_dir):
         top, cur_t = _bpe_merge_round(cur_t)
         cur_e = _bpe_apply_top(cur_e, top)
         if r < _BPE_ROUNDS - 1:
-            cur_t = cur_t.localCheckpoint(eager=False)
-            cur_e = cur_e.localCheckpoint(eager=False)
+            cur_t = materialize(cur_t, "text_bpe_encode_heldout train tokens: the next round")
+            cur_e = materialize(cur_e, "text_bpe_encode_heldout heldout tokens: the next round")
     enc = cur_e.select("doc_id", F.size("tk").cast("bigint").alias("n_tokens_encoded"))
     return raw.join(enc, "doc_id").select(
         "doc_id", "n_tokens_raw", "n_tokens_encoded",
@@ -2157,10 +2161,9 @@ def text_rake_keywords(spark, sf_dir):
         .select(F.trim("p").alias("phrase"))
         .filter(F.col("phrase") != "")
     )
-    # distinct-phrase grain drives everything downstream; checkpoint so
-    # the scan/tokenize pass runs once, not once per consumer
-    pdist = (
-        occ.groupBy("phrase").agg(F.count(F.lit(1)).alias("n_occ")).localCheckpoint()
+    pdist = materialize(
+        occ.groupBy("phrase").agg(F.count(F.lit(1)).alias("n_occ")),
+        "text_rake_keywords phrases: word stats and the scoring join",
     )
     ptok = pdist.select(
         "phrase",
@@ -2439,16 +2442,17 @@ _PMI_TOP_K = 25
 )
 def text_pmi_cooccurrence(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    # tokenize ONCE: the checkpointed per-doc token array (raw order)
-    # feeds pair generation, occurrence counts, and both totals
-    tok = d.select("doc_id", F.split("text", " ").alias("ts")).localCheckpoint()
-    pos = tok.select("doc_id", F.explode("ts").alias("term"))
-    freq = (
-        pos.groupBy("term")
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-        .localCheckpoint()  # vocabulary-sized; feeds floor + both joins
+    tok = materialize(
+        d.select("doc_id", F.split("text", " ").alias("ts")),
+        "text_pmi_cooccurrence tokens: pairs, counts and both totals",
     )
-    pairs = (
+    pos = tok.select("doc_id", F.explode("ts").alias("term"))
+    freq = materialize(
+        pos.groupBy("term")
+        .agg(F.count(F.lit(1)).cast("long").alias("f")),
+        "text_pmi_cooccurrence vocabulary: floor and both joins",
+    )
+    pairs = materialize(
         tok.select(
             F.explode(
                 F.expr(
@@ -2460,8 +2464,8 @@ def text_pmi_cooccurrence(spark, sf_dir):
         )
         .filter(F.col("p.u") != F.col("p.v"))
         .groupBy("p.u", "p.v")
-        .agg(F.count(F.lit(1)).cast("long").alias("c_uv"))
-        .localCheckpoint()  # feeds the pair total and the scoring join
+        .agg(F.count(F.lit(1)).cast("long").alias("c_uv")),
+        "text_pmi_cooccurrence pair counts: the pair total and the scoring join",
     )
     fk = freq.filter(F.col("f") >= _PMI_MIN_F)
     tot = (
@@ -2571,10 +2575,10 @@ def text_good_turing_mass(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     grams = d.select(F.explode(F.expr(_FIVE_GRAM_EXPR)).alias("g"))
     freq = grams.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("r"))
-    coc = (
+    coc = materialize(
         freq.groupBy("r")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_r"))
-        .localCheckpoint()  # count-grain (<= max term frequency rows)
+        .agg(F.count(F.lit(1)).cast("long").alias("n_r")),
+        "text_good_turing_mass count-of-counts: every mass term",
     )
     tot = coc.agg(
         F.sum(F.col("r") * F.col("n_r")).cast("long").alias("n_tokens"),
@@ -2742,12 +2746,12 @@ def stats_zipf_slope(spark, sf_dir):
     ),
 )
 def stats_cohens_kappa_langid(spark, sf_dir):
-    conf = (
+    conf = materialize(
         text_langid_confusion(spark, sf_dir)
         .select(
             "labeled_lang", "predicted_lang", F.col("n").cast("long").alias("c")
-        )
-        .localCheckpoint()  # class-grain; 4 downstream consumers
+        ),
+        "stats_cohens_kappa_langid confusion: four consumers",
     )
     rows_m = conf.groupBy(F.col("labeled_lang").alias("cls")).agg(
         F.sum("c").cast("long").alias("r")
@@ -2887,11 +2891,11 @@ def text_kneser_ney_nll(spark, sf_dir):
         )
         .select("doc_id", "lang", "split", "bg.w1", "bg.w2")
     )
-    lm = (
+    lm = materialize(
         big.filter(F.col("split") == "train")
         .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("c_bg"))
-        .localCheckpoint()  # ctx, cont, types, and the apply join re-consume
+        .agg(F.count(F.lit(1)).cast("long").alias("c_bg")),
+        "text_kneser_ney_nll bigrams: contexts, continuations, types and apply",
     )
     ctx = lm.groupBy("w1").agg(
         F.sum("c_bg").cast("long").alias("c_ctx"),
@@ -3010,10 +3014,10 @@ def text_naive_bayes_langid(spark, sf_dir):
     train_tok = docs.filter(F.col("split") == "train").select(
         "lang", F.explode("toks").alias("token")
     )
-    likel = (
+    likel = materialize(
         train_tok.groupBy("lang", "token")
-        .agg(F.count(F.lit(1)).cast("long").alias("c_tok"))
-        .localCheckpoint()  # totals, vocab, and the apply join re-consume
+        .agg(F.count(F.lit(1)).cast("long").alias("c_tok")),
+        "text_naive_bayes_langid likelihoods: totals, vocab and the apply join",
     )
     lang_tot = likel.groupBy("lang").agg(
         F.sum("c_tok").cast("long").alias("c_lang")
@@ -3021,11 +3025,11 @@ def text_naive_bayes_langid(spark, sf_dir):
     vocab = likel.agg(
         F.countDistinct("token").cast("long").alias("v_size")
     )
-    prior = (
+    prior = materialize(
         docs.filter(F.col("split") == "train")
         .groupBy("lang")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
-        .localCheckpoint()  # k rows; the prior join + n_train re-consume
+        .agg(F.count(F.lit(1)).cast("long").alias("n_docs")),
+        "text_naive_bayes_langid priors: the prior join and n_train",
     )
     n_train = prior.agg(F.sum("n_docs").cast("long").alias("n"))
     eval_tok = docs.filter(F.col("split") != "train").select(
@@ -3138,10 +3142,10 @@ def text_js_divergence_sources(spark, sf_dir):
     tok = d.select(
         "source", F.explode(F.split(F.lower("text"), " ")).alias("token")
     )
-    st = (
+    st = materialize(
         tok.groupBy("source", "token")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint()  # marginals + both KL sides re-consume it
+        .agg(F.count(F.lit(1)).cast("long").alias("c")),
+        "text_js_divergence_sources counts: marginals and both KL sides",
     )
     s_tot = st.groupBy("source").agg(F.sum("c").cast("long").alias("n_s"))
     corpus = st.groupBy("token").agg(F.sum("c").cast("long").alias("cc"))
@@ -3256,9 +3260,12 @@ def text_js_divergence_sources(spark, sf_dir):
 )
 def text_heaps_vocab_growth(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token")
-    ).localCheckpoint()  # first-seen agg + the per-doc join re-consume
+    tok = materialize(
+        d.select(
+            "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token")
+        ),
+        "text_heaps_vocab_growth tokens: first-seen agg and the per-doc join",
+    )
     first_seen = tok.groupBy("token").agg(
         F.min("doc_id").cast("long").alias("d0")
     )
@@ -3277,7 +3284,7 @@ def text_heaps_vocab_growth(spark, sf_dir):
     # whole corpus — the shape the plan-contract suite bans.
     from ..operators.prefix import partitioned_prefix_sum
 
-    cum = (
+    cum = materialize(
         partitioned_prefix_sum(
             per_doc, ["doc_id"], sum_cols=("n_tok", "n_new"), rank_col="rk"
         )
@@ -3286,8 +3293,8 @@ def text_heaps_vocab_growth(spark, sf_dir):
             "rk",
             F.col("cum_n_tok").alias("cum_tokens"),
             F.col("cum_n_new").alias("cum_types"),
-        )
-        .localCheckpoint()  # count + checkpoint join re-consume
+        ),
+        "text_heaps_vocab_growth curve: count and the decile join",
     )
     n_docs = cum.agg(F.count(F.lit(1)).cast("long").alias("n"))
     deciles = spark.range(1, 11).select(F.col("id").alias("decile"))
@@ -3302,17 +3309,20 @@ def text_heaps_vocab_growth(spark, sf_dir):
         )
         .join(cum, "rk")
     )
-    lns = checkpoints.select(
-        "decile",
-        F.col("cum_tokens").cast("long").alias("cum_tokens"),
-        F.col("cum_types").cast("long").alias("cum_types"),
-        F.round(1e9 * F.log(F.col("cum_tokens").cast("double")))
-        .cast("long")
-        .alias("lx"),
-        F.round(1e9 * F.log(F.col("cum_types").cast("double")))
-        .cast("long")
-        .alias("ly"),
-    ).localCheckpoint()  # the fit + output rows re-consume
+    lns = materialize(
+        checkpoints.select(
+            "decile",
+            F.col("cum_tokens").cast("long").alias("cum_tokens"),
+            F.col("cum_types").cast("long").alias("cum_types"),
+            F.round(1e9 * F.log(F.col("cum_tokens").cast("double")))
+            .cast("long")
+            .alias("lx"),
+            F.round(1e9 * F.log(F.col("cum_types").cast("double")))
+            .cast("long")
+            .alias("ly"),
+        ),
+        "text_heaps_vocab_growth logs: the fit and the output rows",
+    )
     fit = lns.agg(
         F.count(F.lit(1)).cast("double").alias("k"),
         F.sum("lx").cast("double").alias("sx"),
@@ -3816,13 +3826,13 @@ def _textrank_sql(iters: int) -> str:
 )
 def text_textrank_keywords(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    tok = (
+    tok = materialize(
         d.select(
             "doc_id",
             F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "w"),
         )
-        .where(F.length("w") >= 4)
-        .localCheckpoint()  # both sides of the window self-join
+        .where(F.length("w") >= 4),
+        "text_textrank_keywords positions: both window self-join sides",
     )
     a = tok.select("doc_id", F.col("pos").alias("pa"), F.col("w").alias("u"))
     b = tok.select("doc_id", F.col("pos").alias("pb"), F.col("w").alias("v"))
@@ -3835,13 +3845,13 @@ def text_textrank_keywords(spark, sf_dir):
         .groupBy("u", "v")
         .agg(F.count(F.lit(1)).cast("long").alias("wt"))
     )
-    edges = (
+    edges = materialize(
         pairs.unionByName(
             pairs.select(F.col("v").alias("u"), F.col("u").alias("v"), "wt")
         )
         .groupBy("u", "v")
-        .agg(F.sum("wt").cast("long").alias("wt"))
-        .localCheckpoint(eager=False)  # reused every round
+        .agg(F.sum("wt").cast("long").alias("wt")),
+        "text_textrank_keywords graph: every rank round",
     )
     wdeg = edges.groupBy("u").agg(F.sum("wt").cast("long").alias("d"))
     ranks = wdeg.select(
@@ -4215,11 +4225,11 @@ def text_impact_sparse_retrieval(spark, sf_dir):
     stats = tf.agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs")
     )
-    impacts = (
+    impacts = materialize(
         tf.join(F.broadcast(dfc), "term")
         .join(F.broadcast(stats))
-        .select("doc_id", "term", F.expr(_IMPACT_SQL).alias("impact"))
-        .localCheckpoint(eager=False)  # postings + query vectors re-consume
+        .select("doc_id", "term", F.expr(_IMPACT_SQL).alias("impact")),
+        "text_impact_sparse_retrieval impacts: postings and query vectors",
     )
     wpost = W.partitionBy("term").orderBy(F.col("impact").desc(), "doc_id")
     postings = (

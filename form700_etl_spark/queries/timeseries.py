@@ -31,7 +31,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql, money, money_sql
-from ..io import table
+from ..io import materialize, table
 from ..registry import register
 
 
@@ -462,15 +462,16 @@ def timeseries_seasonal_decompose(spark, sf_dir):
                    "ROWS BETWEEN 3 PRECEDING AND 3 FOLLOWING) + 7) div 14"),
         ),
     )
-    # the 30-row detrended day spine feeds both the seasonal means and
-    # the final select; checkpoint so raw events aggregate once
-    det = trended.select(
-        "day",
-        "v_cents",
-        "trend_e4",
-        (F.dayofweek("day") - 1).cast("long").alias("dow"),
-        (100 * F.col("v_cents") - F.col("trend_e4")).alias("det_e4"),
-    ).localCheckpoint()
+    det = materialize(
+        trended.select(
+            "day",
+            "v_cents",
+            "trend_e4",
+            (F.dayofweek("day") - 1).cast("long").alias("dow"),
+            (100 * F.col("v_cents") - F.col("trend_e4")).alias("det_e4"),
+        ),
+        "timeseries_seasonal_decompose detrended days: seasonal means and output",
+    )
     seasonal = (
         det.filter(F.col("det_e4").isNotNull())
         .groupBy("dow")
@@ -548,9 +549,7 @@ _XCORR_R_SQL = (
 )
 def timeseries_cross_correlation_lag(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    # both self-join sides read the day spine; checkpoint so the raw
-    # events table aggregates once instead of once per side
-    daily = (
+    daily = materialize(
         e.groupBy(F.to_date("ts").alias("day"))
         .agg(
             F.sum(
@@ -559,8 +558,8 @@ def timeseries_cross_correlation_lag(spark, sf_dir):
             F.sum(
                 F.when(F.col("event_type") == "purchase", 1).otherwise(0)
             ).alias("p_cnt"),
-        )
-        .localCheckpoint()
+        ),
+        "timeseries_cross_correlation_lag days: both lag join sides",
     )
     lags = spark.range(_XCORR_MAX_LAG + 1).select(F.col("id").alias("lag"))
     a = daily.alias("a")
@@ -706,12 +705,10 @@ def timeseries_spike_detector(spark, sf_dir):
 )
 def timeseries_cusum_changepoint(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
-    # day-grain agg first; checkpoint the tiny spine so the totals
-    # branch and the CUSUM walk share ONE parquet scan
-    daily = (
+    daily = materialize(
         o.groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.sum(cents("o_totalprice")).cast("long").alias("rev_c"))
-        .localCheckpoint()
+        .agg(F.sum(cents("o_totalprice")).cast("long").alias("rev_c")),
+        "timeseries_cusum_changepoint days: totals and the CUSUM walk",
     )
     tot = daily.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
@@ -780,14 +777,14 @@ def timeseries_cusum_changepoint(spark, sf_dir):
 )
 def timeseries_theil_sen_slope(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = materialize(
         o.groupBy(
             F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01"))
             .cast("long")
             .alias("x")
         )
-        .agg(F.sum(cents("o_totalprice")).cast("long").alias("y"))
-        .localCheckpoint()
+        .agg(F.sum(cents("o_totalprice")).cast("long").alias("y")),
+        "timeseries_theil_sen_slope days: both pair sides",
     )
     a = daily.select(F.col("x").alias("x1"), F.col("y").alias("y1"))
     b = daily.select(F.col("x").alias("x2"), F.col("y").alias("y2"))
@@ -866,16 +863,14 @@ _ACF_MAX_LAG = 10
 )
 def timeseries_acf(spark, sf_dir):
     o = table(spark, sf_dir, "orders")
-    daily = (
+    daily = materialize(
         o.groupBy(
             F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01"))
             .cast("long")
             .alias("t")
         )
-        .agg(F.sum(cents("o_totalprice")).cast("long").alias("x"))
-        # day grain; bounds + the spine join + totals all re-consume it,
-        # so the fact scans ONCE, not once per consumer
-        .localCheckpoint()
+        .agg(F.sum(cents("o_totalprice")).cast("long").alias("x")),
+        "timeseries_acf days: bounds, spine join and totals",
     )
     bounds = daily.agg(
         F.min("t").alias("lo"), F.max("t").alias("hi")
@@ -893,10 +888,10 @@ def timeseries_acf(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("x").cast("long").alias("s"),
     )
-    centered = (
+    centered = materialize(
         spine.crossJoin(F.broadcast(tot))
-        .select("t", (F.col("n") * F.col("x") - F.col("s")).alias("c"))
-        .localCheckpoint()  # den + both join sides re-consume it
+        .select("t", (F.col("n") * F.col("x") - F.col("s")).alias("c")),
+        "timeseries_acf centered days: denominator and both join sides",
     )
     dec = lambda col: F.col(col).cast("decimal(18,0)")  # noqa: E731
     den = centered.agg(
@@ -1300,7 +1295,7 @@ def timeseries_holt_linear(spark, sf_dir):
         init = F.array(F.col("ys")[0], F.lit(0.0))
         return F.aggregate(F.slice("ys", 2, i - 1), init, merge)
 
-    fits = (
+    fits = materialize(
         packed.select(
             "n",
             "days",
@@ -1315,8 +1310,8 @@ def timeseries_holt_linear(spark, sf_dir):
             "ys",
             "idx",
             state_at(F.col("idx").cast("int")).alias("st"),
-        )
-        .localCheckpoint()  # fit rows + final-state forecast re-consume
+        ),
+        "timeseries_holt_linear states: fit rows and the final forecast",
     )
     fit_rows = fits.select(
         F.date_format(F.element_at("days", F.col("idx").cast("int")), "yyyy-MM-dd").alias("day"),

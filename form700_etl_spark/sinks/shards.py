@@ -32,6 +32,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..io import materialize
+
 
 def content_hash_col(df: DataFrame) -> Column:
     """THE canonical per-row content hash: xxhash64 of the row rendered
@@ -116,11 +118,10 @@ def export_with_manifest(df: DataFrame, path: str, shard_key: str,
     df = df.observe(obs, F.count(F.lit(1)).alias("n_rows"))
     write_training_shards(df, path, shard_key, n_shards, max_records_per_file, fmt=fmt)
     expected = obs.get["n_rows"]
-    # one read-back scan total: the manifest is per-shard-file rows
-    # (tiny), but its lineage is a full corpus read — materialize it
-    # once so the count audit, the CSV write, and the caller's use
-    # don't each rescan every shard
-    manifest = shard_manifest(spark, path, fmt=fmt, schema=df.schema).localCheckpoint()
+    manifest = materialize(
+        shard_manifest(spark, path, fmt=fmt, schema=df.schema),
+        "export_with_manifest manifest: count audit, CSV write and caller",
+    )
     written = manifest.agg(F.sum("n_rows")).collect()[0][0] or 0
     if written != expected:
         raise RuntimeError(

@@ -238,6 +238,60 @@ def test_session_cached_lives_for_one_application(monkeypatch):
     assert built[-1] == "b3"
 
 
+def test_materialize_names_its_jobs_and_restores_the_caller(spark, sf_dir):
+    """``materialize`` pins the frame as a ``Scan ExistingRDD`` leaf,
+    every job it launches carries ``materialize: <reason>`` and the
+    caller's job group, and the caller's description is back afterwards,
+    also when the materializing job fails."""
+    import pyspark.sql.functions as F
+    from pyspark.errors import PySparkException
+
+    from form700_etl_spark.io import materialize, table
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()  # noqa: SLF001 — the status store has no Python API
+
+    def jobs_after(job_id: int) -> list:
+        """Jobs newer than ``job_id`` (the store evicts the oldest, so
+        compare ids, not positions)."""
+        jsc.listenerBus().waitUntilEmpty()
+        it, js = jsc.statusStore().jobsList(None).iterator(), []
+        while it.hasNext():
+            j = it.next()
+            if j.jobId() > job_id:
+                js.append(j)
+        return js
+
+    def opt(o):
+        return o.get() if o.isDefined() else None
+
+    agg = table(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n"))
+    sc.setJobGroup("materialize-test", "caller")
+    try:
+        before = max((j.jobId() for j in jobs_after(-1)), default=-1)
+        out = materialize(agg, "test aggregate")
+        launched = jobs_after(before)
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        plan = out._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+            out._jdf.queryExecution(), "formatted"
+        )
+        assert "Scan ExistingRDD" in plan, plan
+        # AQE may add stage jobs: each one is named, none is unnamed
+        assert launched
+        for j in launched:
+            assert opt(j.description()) == "materialize: test aggregate", j.name()
+            assert opt(j.jobGroup()) == "materialize-test", j.name()
+
+        failing = agg.select(F.when(F.col("n") > 0, F.raise_error(F.lit("boom"))).alias("x"))
+        with pytest.raises(PySparkException, match="boom"):
+            materialize(failing, "failing job")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+        assert sc.getLocalProperty("spark.jobGroup.id") == "materialize-test"
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_pipeline_prunes_unused_schedule_arrays(spark, sf_dir):
     """Building one dataset must not pay for the other schedules'
     nested-array construction: cover needs only the count(when)
@@ -1131,8 +1185,8 @@ def test_prefix_filter_ssjoin_all_hash_no_python(spark, sf_dir):
 
 def test_bpe_heldout_iterations_checkpoint_and_topk_partial(spark, sf_dir):
     """text_bpe_encode_heldout: each merge round re-reads checkpointed
-    state (Scan ExistingRDD) and the 1-row top pair is itself lazily
-    checkpointed (round 15), so its full-corpus pair-count aggregate
+    state (Scan ExistingRDD) and the 1-row top pair is itself
+    materialized (round 15), so its full-corpus pair-count aggregate
     executes ONCE per round instead of once per consumer plan — the
     outer plan must therefore contain NO pair aggregation or top-k at
     all (both live inside the checkpointed subplans), and the top-pair
