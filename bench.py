@@ -22,6 +22,7 @@ import os
 import re
 import time
 
+from form700_etl_spark import profile
 from form700_etl_spark.registry import all_queries
 from form700_etl_spark.session import get_spark
 
@@ -320,45 +321,6 @@ R4_SET = HEADLINE[:24]
 CANARY_REF_S = 0.2436  # BENCH_r07 committed canary reading (r7 host units)
 
 
-def _stage_totals(spark) -> dict[str, float]:
-    """Cumulative per-stage executor metrics from the AppStatusStore
-    (works with spark.ui.enabled=false — the store backs the UI, not the
-    other way round).  Differencing two snapshots around a query gives
-    the query's shuffle-write / spill / scan volume — the fields VERDICT
-    r9 task 1b asks for, so a volatile wall-clock self-adjudicates
-    (spill pressure vs plan drift vs host noise)."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    darr = sc._gateway.new_array(sc._gateway.jvm.double, 0)
-    empty = sc._jvm.java.util.ArrayList()
-    totals = {
-        "shuffle_write_mb": 0.0,
-        "shuffle_read_mb": 0.0,
-        "mem_spill_mb": 0.0,
-        "disk_spill_mb": 0.0,
-        "input_mb": 0.0,
-        "executor_run_s": 0.0,
-        # run_s INCLUDES GC and interpretation; cpu_s is actual CPU.
-        # run_s >> cpu_s -> GC / scheduling stalls; cpu_s itself high on
-        # a small input -> code running interpreted (JIT queue/code cache).
-        "executor_cpu_s": 0.0,
-        "executor_gc_s": 0.0,
-    }
-    it = store.stageList(None, False, False, darr, empty).iterator()
-    mb = 1024.0 * 1024.0
-    while it.hasNext():
-        s = it.next()
-        totals["shuffle_write_mb"] += s.shuffleWriteBytes() / mb
-        totals["shuffle_read_mb"] += s.shuffleReadBytes() / mb
-        totals["mem_spill_mb"] += s.memoryBytesSpilled() / mb
-        totals["disk_spill_mb"] += s.diskBytesSpilled() / mb
-        totals["input_mb"] += s.inputBytes() / mb
-        totals["executor_run_s"] += s.executorRunTime() / 1000.0
-        totals["executor_cpu_s"] += s.executorCpuTime() / 1e9
-        totals["executor_gc_s"] += s.jvmGcTime() / 1000.0
-    return totals
-
-
 def _canary(spark) -> float:
     best = float("inf")
     for _ in range(3):
@@ -555,8 +517,9 @@ def _loadavg() -> list[float]:
 # spread is interpreted-vs-JITted code, not the engine.  r12's 12.0 s /
 # 303 executor-s row was exactly such an interpreted pair.  Best-of-4
 # gives the JIT enough executions to reach steady state (the 100 TB
-# operating point, where every plan runs hot for hours); the full
-# decomposition lives in BENCH_DETAIL["scheduleA2_decomposition"].
+# operating point, where every plan runs hot for hours).  Its split into
+# build, Catalyst and execution seconds, cold and per timed run, is in
+# the r4 fresh-JVM run's "queries_build_exec" (BENCH_DETAIL["r4_fresh_jvm"]).
 #
 # linkage_fs_scores (r12: 2.39 -> 5.88 s, VERDICT task 6) is the same
 # JIT story at smaller amplitude: fresh-session profile at sf0.1 reads
@@ -752,16 +715,14 @@ def _run_presteps(spark, sf_dir: str) -> dict[str, float]:
     return presteps
 
 
-def _r4_fresh_jvm_once(sf_dir: str, subset: str = "r4") -> dict | None:
-    """Run a named subset in a FRESH JVM subprocess.
+def _r4_fresh_jvm_once(sf_dir: str) -> dict | None:
+    """Run the r4 subset in a FRESH JVM subprocess.
 
     Round 5's in-suite r4 subtotal inflated ~1.2x purely from single-JVM
     pressure (JIT code cache / heap history of the 111-query suite); every
     query re-measured in a fresh session matched its r4 time.  Running the
     comparable set in its own process makes value_r4_query_set reflect the
     plans, not the session, at the cost of ~30s extra bench wall-clock.
-    subset="scheduleA2" runs the plan-build/execution decomposition the
-    same way (fresh JVM -> honest plan_build_s and JIT progression).
     """
     import subprocess
     import sys
@@ -770,7 +731,7 @@ def _r4_fresh_jvm_once(sf_dir: str, subset: str = "r4") -> dict | None:
         env = os.environ.copy()
         env["SPARK_GRAFT_SF_DIR"] = sf_dir  # honor the caller's dir
         proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--subset", subset],
+            [sys.executable, os.path.abspath(__file__), "--subset", "r4"],
             capture_output=True,
             text=True,
             timeout=600,
@@ -788,56 +749,6 @@ def _r4_fresh_jvm_once(sf_dir: str, subset: str = "r4") -> dict | None:
 
 
 _R4_RUNS = 3
-
-
-def _scheduleA2_decompose(spark, queries, sf_dir: str) -> dict:
-    """Decompose ref_pipeline_scheduleA2 into plan construction vs
-    execution (VERDICT r12 task 1): the row's historic 1.26/4.3/9.3/
-    12.0/22.6 s spread mixes three regimes with different owners —
-    (a) plan BUILD: ~5-7 s of fresh-JVM Catalyst/py4j analysis of the
-    ~300-field nested tree, paid once per session (memoized);
-    (b) JIT warm-up: the first few EXECUTIONS run the giant generated
-    projection interpreted — measured 6.8 s wall / 126 executor-s /
-    110 cpu-s for the identical plan+data that later runs at 1.9 s /
-    11 executor-s / 8 cpu-s, with zero spill and shuffle flat at
-    16.1 MB (per-run stage profile) — r12's "303 executor-s"
-    was this regime;
-    (c) steady state: ~2 s at sf0.1, the number that scales.
-    Reports each regime separately so round-over-round comparison can
-    target (c)."""
-    fn = queries["ref_pipeline_scheduleA2"].fn
-    start = time.perf_counter()
-    df = fn(spark, sf_dir)  # lazy — pure driver-side plan construction
-    plan_build_s = round(time.perf_counter() - start, 3)
-    execs: list[dict] = []
-    for i in range(5):
-        before = _stage_totals(spark)
-        start = time.perf_counter()
-        df.count()
-        wall = round(time.perf_counter() - start, 3)
-        after = _stage_totals(spark)
-        execs.append(
-            {
-                "wall_s": wall,
-                "executor_run_s": round(
-                    after["executor_run_s"] - before["executor_run_s"], 1
-                ),
-                "executor_cpu_s": round(
-                    after["executor_cpu_s"] - before["executor_cpu_s"], 1
-                ),
-                "shuffle_write_mb": round(
-                    after["shuffle_write_mb"] - before["shuffle_write_mb"], 1
-                ),
-            }
-        )
-    walls = sorted(e["wall_s"] for e in execs)
-    return {
-        "plan_build_s": plan_build_s,
-        "executions": execs,
-        "exec_steady_s": walls[0],
-        "exec_median_s": walls[(len(walls) - 1) // 2],
-        "dominant_term": "jit_warmup_then_steady_state",
-    }
 
 
 def _r4_fresh_jvm(sf_dir: str) -> tuple[dict | None, dict | None]:
@@ -884,8 +795,8 @@ def _r4_fresh_jvm(sf_dir: str) -> tuple[dict | None, dict | None]:
     values = [r["value_r4_query_set"] for r in ordered]
     # STABLE gate series (VERDICT r13 task 5): the same runs with
     # ref_pipeline_scheduleA2 excluded — its fresh-JVM JIT pathology has
-    # its own decomposed measurement (BENCH_DETAIL.scheduleA2_
-    # decomposition) and dominated r13's 0.78 relative spread; the gate
+    # its own build/exec split (the runs' "queries_build_exec") and
+    # dominated r13's 0.78 relative spread; the gate
     # ratio should be computed on the set that measures the engine.
     # A run record missing the scheduleA2 timing must NOT silently
     # subtract 0 — that would leave the pathology this series exists to
@@ -937,9 +848,8 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
     subset_r4 = "--subset" in sys.argv and "r4" in sys.argv
-    subset_a2 = "--subset" in sys.argv and "scheduleA2" in sys.argv
 
-    if not (subset_r4 or subset_a2):
+    if not subset_r4:
         # Quiet-host gate BEFORE any measurement (r15 task 3): the r14
         # artifact was committed off a loadavg-6-15 run; wait (bounded)
         # for co-tenants to drain and record the trace.
@@ -947,20 +857,11 @@ def main() -> None:
         # Fresh-JVM passes for the comparable subtotal BEFORE this process
         # builds up suite pressure (and so its JSON can't interleave).
         r4_fresh, r4_spread = _r4_fresh_jvm(sf_dir)
-        a2_decomp = _r4_fresh_jvm_once(sf_dir, subset="scheduleA2")
     else:
-        host_gate, r4_fresh, r4_spread, a2_decomp = None, None, None, None
+        host_gate, r4_fresh, r4_spread = None, None, None
 
     spark = get_spark("form700-etl-spark-bench")
     queries = all_queries()
-
-    if subset_a2:
-        out = _scheduleA2_decompose(spark, queries, sf_dir)
-        out["metric"] = "scheduleA2_decomposition"
-        out["sf"] = sf
-        print(json.dumps(out))
-        spark.stop()
-        return
 
     # Host-speed canary FIRST — before any suite pressure (see
     # CANARY_REF_S).  The full-suite path re-measures (bounded) until
@@ -983,29 +884,32 @@ def main() -> None:
         # canary — cold-parquet/page-cache state the canary can't see.
         # The timed region tracks steady-state (the record's stated
         # methodology: every plan runs hot at 100 TB); the cold column plus
-        # per-query shuffle/spill/scan deltas make any residual swing
-        # self-adjudicating instead of un-diagnosable.
-        cold: dict[str, float] = {}
-        metrics: dict[str, dict[str, float]] = {}
-        for name in R4_SET:
-            start = time.perf_counter()
-            queries[name].fn(spark, sf_dir).count()
-            cold[name] = round(time.perf_counter() - start, 3)
-        timings = {}
+        # per-query shuffle/spill/scan counters and build/exec splits make
+        # any residual swing self-adjudicating instead of un-diagnosable.
+        cold_runs = {n: profile.run_query(spark, n, sf_dir) for n in R4_SET}
+        timed_runs = {}
         for name in R4_SET:
             spark.sparkContext._jvm.System.gc()
-            before = _stage_totals(spark)
-            best = float("inf")
-            for _ in range(2):
-                start = time.perf_counter()
-                queries[name].fn(spark, sf_dir).count()
-                best = min(best, time.perf_counter() - start)
-            after = _stage_totals(spark)
-            timings[name] = round(best, 3)
-            # delta over the 2 timed runs -> halve to per-run volumes
+            timed_runs[name] = [
+                profile.run_query(spark, name, sf_dir) for _ in range(2)
+            ]
+        # The status store is read only now, after every timed run.
+        cold, timings, metrics, build_exec = {}, {}, {}, {}
+        for name in R4_SET:
+            recs = [profile.record(spark, r) for r in timed_runs[name]]
+            c = profile.record(spark, cold_runs[name])
+            cold[name] = round(c["build_s"] + c["exec_s"], 3)
+            timings[name] = round(min(r["build_s"] + r["exec_s"] for r in recs), 3)
+            # per-run volumes: the mean of the 2 timed runs
             metrics[name] = {
-                k: round((after[k] - before[k]) / 2.0, 2) for k in after
+                k: round(sum(r["totals"][k] for r in recs) / 2.0, 2)
+                for k in profile.COUNTERS
+                if k != "tasks"  # queries_metrics keeps its eight keys
             }
+            build_exec[name] = [
+                [round(r[k], 3) for k in ("build_s", "exec_s", "catalyst_s")]
+                for r in [c, *recs]
+            ]
         subtotal = round(sum(timings.values()), 3)
         print(
             json.dumps(
@@ -1020,6 +924,8 @@ def main() -> None:
                     "queries": timings,
                     "queries_cold": cold,
                     "queries_metrics": metrics,
+                    # [build_s, exec_s, catalyst_s]: cold run, then timed
+                    "queries_build_exec": build_exec,
                     "sf": sf,
                 }
             )
@@ -1103,7 +1009,6 @@ def main() -> None:
         "host_gate": host_gate,
         "canary_trace": canary_trace,
         "suite_quality": suite_quality,
-        "scheduleA2_decomposition": a2_decomp,
         "r4_fresh_jvm": r4_fresh,
         "r4_spread": r4_spread,
         "value_r4_in_suite": in_suite_r4,
@@ -1112,7 +1017,7 @@ def main() -> None:
         "method": (
             "best-of-2 per query (steady-state; scheduleA2 best-of-4, see"
             " EXTRA_RUNS); shared-cache populates timed as presteps, kept"
-            " out of value; r4 set + scheduleA2 decomposition in fresh JVMs"
+            " out of value; r4 set in fresh JVMs"
         ),
         # the r4 set gained an untimed warm-up pass in round 10, which
         # makes value_r4_query_set steady-state-only; tag the change so
@@ -1166,8 +1071,8 @@ def main() -> None:
                 ),
                 "value_r4_query_set": r4_value,
                 # the STABLE gate number: same runs minus scheduleA2's
-                # fresh-JVM JIT pathology (decomposed separately in
-                # BENCH_DETAIL.scheduleA2_decomposition)
+                # fresh-JVM JIT pathology (split into build and exec in
+                # the r4 runs' queries_build_exec)
                 "value_r4_ex_scheduleA2": (r4_spread or {}).get(
                     "median_ex_scheduleA2"
                 ),

@@ -161,53 +161,6 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-# ------------------------------------------------------- broadcast hinting
-
-# Forced-broadcast ceiling for maybe_broadcast, in bytes of Catalyst's
-# own plan-size estimate.  Runtime-settable SQL conf so a deployment (or
-# a test) can tighten/disable hinting without code changes; <= 0 turns
-# hinting off entirely and leaves the strategy to AQE.
-BROADCAST_HINT_CONF = "spark.graft.broadcastHintMaxBytes"
-DEFAULT_BROADCAST_HINT_MAX_BYTES = 256 * 1024 * 1024
-
-
-def plan_size_bytes(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes estimate for the optimized subplan — no
-    job is run; the estimate comes from file sizes and column stats,
-    which is exactly the signal the planner itself would use."""
-    stats = df._jdf.queryExecution().optimizedPlan().stats()  # noqa: SLF001
-    return int(stats.sizeInBytes().toString())
-
-
-def maybe_broadcast(df: DataFrame) -> DataFrame:
-    """Size-aware broadcast hint for join sides that are dimension-LIKE
-    but scale with the corpus (customer/supplier/part grow with SF;
-    nation/region do not and may hint unconditionally).
-
-    A hard ``F.broadcast()`` on an SF-scaling table is the inverse of
-    the small-side-not-broadcast anti-pattern: correct at sf0.1, a
-    driver/executor OOM at the 100 TB design point.  This helper applies
-    the hint only while Catalyst's own size estimate stays under
-    ``spark.graft.broadcastHintMaxBytes`` (default 256 MiB); above the
-    bound — or when the conf is set <= 0 — the frame is returned
-    unhinted and AQE picks the strategy at runtime from true sizes.
-    """
-    spark = df.sparkSession
-    try:
-        limit = int(spark.conf.get(BROADCAST_HINT_CONF, str(DEFAULT_BROADCAST_HINT_MAX_BYTES)))
-    except ValueError:
-        limit = DEFAULT_BROADCAST_HINT_MAX_BYTES
-    if limit <= 0:
-        return df
-    try:
-        size = plan_size_bytes(df)
-    except Exception:
-        return df  # estimate unavailable (e.g. Spark Connect) — defer to AQE
-    from pyspark.sql import functions as F
-
-    return F.broadcast(df) if size <= limit else df
-
-
 def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition up to the cluster's default parallelism
     when the frame arrives with fewer partitions.  Per-row compute that

@@ -53,20 +53,15 @@ from ..io import materialize
 
 def _default_partitions(df: DataFrame) -> int:
     """Pass-1 partition count when the caller does not size it: the
-    session's shuffle parallelism (`spark.sql.shuffle.partitions`,
-    falling back to `sc.defaultParallelism`).  A fixed constant here
-    (the pre-r15 `32`) made pass-2's per-task sort size corpus/32 — an
+    session's shuffle parallelism (`spark.sql.shuffle.partitions`).  A
+    fixed constant (the pre-r15 `32`) made pass-2's per-task sort size corpus/32 — an
     O(N) per-task term that silently undercut the operator's 100 TB
     contract (ADVICE r14).  On a real cluster shuffle.partitions is
     sized to the fleet, so deriving from it keeps each pass-2 sort at
     corpus/parallelism; scale-sensitive callers with better knowledge
     of their input size should still pass ``num_partitions``
     explicitly."""
-    spark = df.sparkSession
-    try:
-        return int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except Exception:
-        return spark.sparkContext.defaultParallelism
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
 
 def partitioned_prefix_sum(

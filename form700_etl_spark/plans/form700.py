@@ -49,7 +49,7 @@ from ..functions.nested import (
     stringify_structs,
     struct_leaves,
 )
-from ..io import materialize, maybe_broadcast, session_cached, table
+from ..io import materialize, session_cached, table
 from ..schema_registry import TableInfo, load_schema, load_table_registry
 
 SCHEDULE_NAMES = (
@@ -510,7 +510,7 @@ def synthesize_filings(
             " 'comment', concat('Line1\\nLine2-', o_orderstatus),"
             " 'transactionType', o_orderstatus)) AS comments"
         )
-    cover = o.join(maybe_broadcast(c), o.o_custkey == c.c_custkey, "left").selectExpr(
+    cover = o.join(c, o.o_custkey == c.c_custkey, "left").selectExpr(
         *cover_exprs
     )
     if items is None:

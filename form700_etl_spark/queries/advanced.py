@@ -10,7 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import materialize, maybe_broadcast, table
+from ..io import materialize, table
 from ..registry import register
 
 
@@ -104,7 +104,7 @@ def q18_large_volume_orders(spark, sf_dir):
     )
     return (
         big.join(o, big.l_orderkey == o.o_orderkey)
-        .join(maybe_broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .select(
             "o_orderkey",
             "c_name",
@@ -369,7 +369,7 @@ def events_user_zscore_outliers(spark, sf_dir):
     # filter on the UNROUNDED z (as the oracle does) — filtering after
     # rounding would disagree on values within half an ulp of 2.5
     return (
-        e.join(maybe_broadcast(stats), e.user_id == F.col("uid"))
+        e.join(stats, e.user_id == F.col("uid"))
         .filter(F.abs(z) > 2.5)
         .select(
             "event_id",
@@ -1596,8 +1596,8 @@ def stats_spearman_rank_corr(spark, sf_dir):
     rq = rank_map("q").withColumnRenamed("r2", "x")
     rp = rank_map("p").withColumnRenamed("r2", "y")
     joined = (
-        pairs.join(maybe_broadcast(rq), "q")
-        .join(maybe_broadcast(rp), "p")
+        pairs.join(rq, "q")
+        .join(rp, "p")
         .select("c", "x", "y")
     )
     dec = lambda c: F.col(c).cast("decimal(38,0)")
@@ -1954,11 +1954,7 @@ def stats_bootstrap_ci_poisson(spark, sf_dir):
 )
 def skyline_pareto_frontier(spark, sf_dir):
     p = table(spark, sf_dir, "part")
-    g = materialize(
-        p.groupBy("p_size")
-        .agg(F.min(cents("p_retailprice")).cast("long").alias("pmin")),
-        "skyline_pareto_frontier size grain: the dominance window",
-    )
+    g = p.groupBy("p_size").agg(F.min(cents("p_retailprice")).cast("long").alias("pmin"))
     wd = W.orderBy(F.col("p_size").desc()).rowsBetween(W.unboundedPreceding, -1)
     frontier = (
         g.select("p_size", "pmin", F.min("pmin").over(wd).alias("best_larger"))

@@ -17,7 +17,7 @@ Scale design
   100 TB the standard guard is a per-basket item cap before the join;
   the cap constant is exposed and the doc states the tradeoff.
 - Item degree (order count per item) is an SF-scaling dimension
-  aggregate -> size-gated ``maybe_broadcast`` join, never a hard hint.
+  aggregate -> an unhinted join (Catalyst's threshold and AQE decide).
 - Top-k per item is a window over the CANDIDATE PAIRS (already
   co-occurrence-pruned), not over the item cross product.
 """
@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import maybe_broadcast, table
+from ..io import table
 from ..registry import register
 
 # Baskets beyond this many distinct items are truncated (rarest-key
@@ -95,7 +95,7 @@ _TOP_K = 3
         "order key, so fan-out is sum(basket choose 2) — linear in "
         "orders for capped baskets (cap {cap}) — and co-occurrence "
         "counting is one hash agg; item degrees join back via "
-        "size-gated maybe_broadcast; ranking is a window over the "
+        "unhinted joins; ranking is a window over the "
         "pruned candidate pairs only.  Ties in the double Jaccard "
         "break by (co DESC, partner ASC) — a total order, so the "
         "top-3 per item is unique and the oracle replays cell-exact."
@@ -126,10 +126,8 @@ def recsys_item_item_jaccard_topk(spark, sf_dir):
     ).unionByName(
         pairs.select(F.col("p2").alias("item"), F.col("p1").alias("partner"), "co")
     )
-    d1 = maybe_broadcast(deg.select(F.col("pk").alias("item"), F.col("d").alias("d1")))
-    d2 = maybe_broadcast(
-        deg.select(F.col("pk").alias("partner"), F.col("d").alias("d2"))
-    )
+    d1 = deg.select(F.col("pk").alias("item"), F.col("d").alias("d1"))
+    d2 = deg.select(F.col("pk").alias("partner"), F.col("d").alias("d2"))
     scored = (
         sym.filter(F.col("co") >= 2)
         .join(d1, "item")

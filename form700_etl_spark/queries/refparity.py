@@ -37,7 +37,7 @@ from ..functions.cleaning import (
 )
 from ..functions.money import cents, cents_sql
 from ..functions.nested import explode_outer_flat, schema_columns, stringify_structs
-from ..io import maybe_broadcast, table
+from ..io import table
 from ..registry import register
 
 # Dirty-value construction shared by Spark and DuckDB (one CASE text;
@@ -272,9 +272,9 @@ def ref_explode_prefix_rename(spark, sf_dir):
     tags=("refparity", "join"),
     doc=(
         "J1: left enrichment join — attach parent (cover) columns to every "
-        "child row.  Parent side hints broadcast only under the "
-        "maybe_broadcast size bound (orders scales with SF; at 100 TB AQE "
-        "plans the exchange instead)."
+        "child row.  The parent side carries no broadcast hint (orders "
+        "scales with SF): Catalyst's auto-broadcast threshold and AQE "
+        "pick the join."
     ),
 )
 def ref_enrichment_join(spark, sf_dir):
@@ -282,7 +282,7 @@ def ref_enrichment_join(spark, sf_dir):
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderpriority", "o_orderdate"
     )
-    return l.join(maybe_broadcast(o), l.l_orderkey == o.o_orderkey, "left").select(
+    return l.join(o, l.l_orderkey == o.o_orderkey, "left").select(
         "l_orderkey",
         "l_linenumber",
         "o_custkey",

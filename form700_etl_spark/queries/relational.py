@@ -18,7 +18,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql, money, money_sql
-from ..io import materialize, maybe_broadcast, table
+from ..io import materialize, table
 from ..registry import register
 
 # ---------------------------------------------------------------- M1 flagship
@@ -50,7 +50,7 @@ def flagship_mktsegment_revenue(spark, sf_dir):
     rev = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     return (
         l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(maybe_broadcast(c), o.o_custkey == c.c_custkey)
+        .join(c, o.o_custkey == c.c_custkey)
         .groupBy("c_mktsegment")
         .agg(
             F.countDistinct("o_orderkey").alias("n_orders"),
@@ -138,8 +138,7 @@ def q3_top_unshipped_orders(spark, sf_dir):
     l = table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-03-15")
     rev_c = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     return (
-        maybe_broadcast(c)
-        .join(o, c.c_custkey == o.o_custkey)
+        c.join(o, c.c_custkey == o.o_custkey)
         .join(l, o.o_orderkey == l.l_orderkey)
         .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
         .agg(F.sum(rev_c).alias("_rev_c"))
@@ -186,7 +185,7 @@ def q5_region_nation_revenue(spark, sf_dir):
     return (
         c.join(o, c.c_custkey == o.o_custkey)
         .join(l, o.o_orderkey == l.l_orderkey)
-        .join(maybe_broadcast(s), (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
+        .join(s, (l.l_suppkey == s.s_suppkey) & (c.c_nationkey == s.s_nationkey))
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
@@ -231,8 +230,7 @@ def q7_nation_trade_flows(spark, sf_dir):
     n2 = n.select(F.col("n_nationkey").alias("nk2"), F.col("n_name").alias("cust_nation"))
     rev = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     return (
-        maybe_broadcast(s)
-        .join(l, s.s_suppkey == l.l_suppkey)
+        s.join(l, s.s_suppkey == l.l_suppkey)
         .join(o, o.o_orderkey == l.l_orderkey)
         .join(c, c.c_custkey == o.o_custkey)
         .join(F.broadcast(n1), s.s_nationkey == F.col("nk1"))
@@ -302,7 +300,7 @@ def q14_promo_revenue_share(spark, sf_dir):
     p = table(spark, sf_dir, "part")
     rev = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(F.lit(0))
-    return l.join(maybe_broadcast(p), l.l_partkey == p.p_partkey).agg(
+    return l.join(p, l.l_partkey == p.p_partkey).agg(
         F.round(
             F.lit(100.0) * F.sum(promo).cast("double") / F.sum(rev).cast("double"), 6
         ).alias("promo_revenue_pct"),
@@ -348,7 +346,7 @@ def q8_nation_market_share(spark, sf_dir):
     trade = (
         l.join(o, l.l_orderkey == o.o_orderkey)
         .join(c, o.o_custkey == c.c_custkey)
-        .join(maybe_broadcast(s), l.l_suppkey == s.s_suppkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .join(F.broadcast(cn), c.c_nationkey == F.col("cnk"))
         .join(F.broadcast(r), F.col("crk") == r.r_regionkey)
@@ -390,7 +388,7 @@ def q19_disjunctive_predicate_revenue(spark, sf_dir):
         | ((p.p_brand == "Brand#3") & p.p_size.between(20, 50) & l.l_quantity.between(20, 50))
     )
     return (
-        l.join(maybe_broadcast(p), p.p_partkey == l.l_partkey)
+        l.join(p, p.p_partkey == l.l_partkey)
         .filter(cond)
         .agg(
             (F.sum(rev) / F.lit(10000.0)).alias("revenue"),
@@ -990,9 +988,9 @@ def q9_product_profit(spark, sf_dir):
     rev = cents("l_extendedprice") * (F.lit(100) - cents("l_discount"))
     cost = F.col("l_quantity").cast("long") * cents("p_retailprice")
     return (
-        l.join(maybe_broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .join(o, l.l_orderkey == o.o_orderkey)
-        .join(maybe_broadcast(s), l.l_suppkey == s.s_suppkey)
+        .join(s, l.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
         .groupBy(
             F.col("n_name").alias("nation"),
@@ -1117,7 +1115,7 @@ def q17_small_quantity_revenue(spark, sf_dir):
         )
     )
     return (
-        l.join(maybe_broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .join(pq, l.l_partkey == pq.pk)
         .filter(
             F.lit(5) * F.col("l_quantity").cast("long") * F.col("n") < F.col("sum_qty")
@@ -1227,8 +1225,8 @@ def q2_min_cost_supplier(spark, sf_dir):
         .filter(F.col("rk") == 1)
     )
     return (
-        ranked.join(maybe_broadcast(p), ranked.l_partkey == p.p_partkey)
-        .join(maybe_broadcast(s), ranked.l_suppkey == s.s_suppkey)
+        ranked.join(p, ranked.l_partkey == p.p_partkey)
+        .join(s, ranked.l_suppkey == s.s_suppkey)
         .select(
             "p_partkey",
             "p_name",
@@ -1268,7 +1266,7 @@ def q11_important_stock(spark, sf_dir):
     l = table(spark, sf_dir, "lineitem")
     p = table(spark, sf_dir, "part")
     val = materialize(
-        l.join(maybe_broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .groupBy("l_suppkey")
         .agg(
             F.sum(F.col("l_quantity").cast("long") * cents("p_retailprice")).alias("value_c")
@@ -1326,7 +1324,7 @@ def q15_top_supplier(spark, sf_dir):
     return (
         revenue.join(F.broadcast(mx))
         .filter(F.col("total_c") == F.col("mx"))
-        .join(maybe_broadcast(s), F.col("supplier_no") == s.s_suppkey)
+        .join(s, F.col("supplier_no") == s.s_suppkey)
         .select(
             "s_suppkey",
             "s_name",
@@ -1362,8 +1360,8 @@ def q16_supplier_part_counts(spark, sf_dir):
     )
     bad = table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0.0).select("s_suppkey")
     return (
-        l.join(maybe_broadcast(p), l.l_partkey == p.p_partkey)
-        .join(maybe_broadcast(bad), l.l_suppkey == bad.s_suppkey, "left_anti")
+        l.join(p, l.l_partkey == p.p_partkey)
+        .join(bad, l.l_suppkey == bad.s_suppkey, "left_anti")
         .groupBy("p_brand", "p_size")
         .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
     )
@@ -1400,12 +1398,12 @@ def q20_excess_shippers(spark, sf_dir):
     p = table(spark, sf_dir, "part").filter(F.col("p_name").like("%red%"))
     s = table(spark, sf_dir, "supplier")
     qty = (
-        l.join(maybe_broadcast(p), l.l_partkey == p.p_partkey)
+        l.join(p, l.l_partkey == p.p_partkey)
         .groupBy("l_suppkey")
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("red_qty"))
         .filter(F.col("red_qty") > 100)
     )
-    return qty.join(maybe_broadcast(s), qty.l_suppkey == s.s_suppkey).select(
+    return qty.join(s, qty.l_suppkey == s.s_suppkey).select(
         "s_suppkey", "s_name", "red_qty"
     )
 
@@ -1461,7 +1459,7 @@ def q21_sole_late_supplier(spark, sf_dir):
     )
     return (
         per_order.filter((F.col("n_supp") > 1) & (F.col("n_late") == 1))
-        .join(maybe_broadcast(s), F.col("late_supp") == s.s_suppkey)
+        .join(s, F.col("late_supp") == s.s_suppkey)
         .groupBy("s_name")
         .agg(F.count(F.lit(1)).alias("numwait"))
     )

@@ -10,7 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import materialize, maybe_broadcast, session_cached, table
+from ..io import materialize, session_cached, table
 from ..registry import register
 
 
@@ -440,10 +440,9 @@ def table_checksum_orders(spark, sf_dir):
     doc=(
         "Referential-integrity audit: orphan counts for every declared "
         "FK edge, one row per edge.  Each edge is a LEFT ANTI join "
-        "counted — parent key sides hint broadcast only while their "
-        "size estimate stays under the maybe_broadcast bound (nation "
-        "always; orders/customer only at small SF — at 100 TB those "
-        "edges fall back to an AQE-planned shuffled anti join); the "
+        "counted — parent key sides carry no hint: Catalyst's "
+        "auto-broadcast threshold and AQE pick each join (at 100 TB "
+        "the orders/customer edges become shuffled anti joins); the "
         "pipeline-health check run before any enrichment join is trusted."
     ),
 )
@@ -462,7 +461,7 @@ def audit_referential_integrity(spark, sf_dir):
     for fk, child, ckey, parent, pkey in edges:
         c = table(spark, sf_dir, child)
         p = table(spark, sf_dir, parent).select(pkey)
-        orphans = c.join(maybe_broadcast(p), c[ckey] == p[pkey], "left_anti")
+        orphans = c.join(p, c[ckey] == p[pkey], "left_anti")
         outs.append(
             c.agg(F.count(F.lit(1)).alias("n_child"))
             .crossJoin(orphans.agg(F.count(F.lit(1)).alias("n_orphans")))

@@ -106,8 +106,8 @@ def get_spark(app_name: str = "form700_etl_spark", shuffle_partitions: int | Non
         # steady state unchanged).  At 100 TB the equivalent win is the
         # first task wave of each stage running compiled, not interpreted.
         .config("spark.sql.codegen.methodSplitThreshold", "256")
-        # keep the whole bench run's stages in the status store so
-        # bench._stage_totals snapshots never lose history between deltas
+        # keep the whole bench run's stages in the status store, so the
+        # profile.jobs readout after a timed region still finds them
         .config("spark.ui.retainedStages", "10000")
     )
     spark = builder.getOrCreate()

@@ -479,21 +479,21 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static enrichment join: each micro-batch of the event
-    stream probes the static customer dimension (broadcast while its
-    size estimate stays under the maybe_broadcast bound — the static
+    stream probes the static customer dimension (no hint: Catalyst's
+    auto-broadcast threshold and AQE pick the join — the static
     side is re-planned per batch, never stateful) and the enriched
     stream aggregates per market segment.  The canonical "enrich a
     stream against a slowly-changing dim table" shape; unmatched users
     keep their rows via the left join (streaming outer joins against
     static sides need no watermark)."""
     from ..functions.money import cents
-    from ..io import maybe_broadcast, table
+    from ..io import table
 
     events = read_events_stream(spark, sf_dir)
     cust = table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), "c_mktsegment"
     )
-    joined = events.join(maybe_broadcast(cust), "user_id", "left")
+    joined = events.join(cust, "user_id", "left")
     agg = joined.groupBy(
         F.coalesce("c_mktsegment", F.lit("UNKNOWN")).alias("segment")
     ).agg(

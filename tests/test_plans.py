@@ -73,26 +73,13 @@ def test_dimension_joins_broadcast(spark, sf_dir):
     assert "BroadcastHashJoin" in plan, plan
 
 
-def test_sf_scaling_broadcast_hint_is_size_gated(spark, sf_dir):
-    """customer/supplier/part (SF-scaling tables) hint broadcast through
-    maybe_broadcast, not a hard F.broadcast: under the default bound they
-    still broadcast at test SF, but with the bound set to 0 no forced
-    hint survives in the analyzed plan — the strategy belongs to AQE.
-    (A hard hint on an SF-scaling side is a driver OOM at 100 TB.)"""
-    from form700_etl_spark.io import (
-        BROADCAST_HINT_CONF,
-        DEFAULT_BROADCAST_HINT_MAX_BYTES,
-    )
-
+def test_sf_scaling_sides_broadcast_unhinted(spark, sf_dir):
+    """customer/supplier/part (SF-scaling tables) carry no broadcast
+    hint; at test SF Catalyst's auto-broadcast threshold still picks a
+    broadcast join.  (A hard hint on an SF-scaling side is a driver OOM
+    at 100 TB.)"""
     plan = plan_of(spark, sf_dir, "q18_large_volume_orders")
     assert "BroadcastHashJoin" in plan, plan
-    spark.conf.set(BROADCAST_HINT_CONF, "0")
-    try:
-        df = QUERIES["q18_large_volume_orders"].fn(spark, sf_dir)
-        analyzed = df._jdf.queryExecution().analyzed().toString()  # noqa: SLF001
-        assert "ResolvedHint" not in analyzed, analyzed
-    finally:
-        spark.conf.set(BROADCAST_HINT_CONF, str(DEFAULT_BROADCAST_HINT_MAX_BYTES))
 
 
 def test_q5_all_dims_broadcast_one_fact_shuffle(spark, sf_dir):
@@ -180,18 +167,13 @@ def test_table_infers_each_fixture_schema_once(spark, sf_dir, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from form700_etl_spark import profile
     from form700_etl_spark.io import table
 
-    jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001 — the status store has no Python API
-
-    def jobs() -> int:
-        jsc.listenerBus().waitUntilEmpty()
-        return jsc.statusStore().jobsList(None).size()
-
     table(spark, sf_dir, "orders")
-    before = jobs()
+    before = profile.last_job_id(spark)
     table(spark, sf_dir, "orders")
-    assert jobs() - before == 0
+    assert profile.jobs(spark, after=before) == []
 
     docs = {"doc_id": pa.array([1, 2], pa.int64()), "text": pa.array(["a b c", "d e f"])}
     path = str(tmp_path / "documents.parquet")
@@ -246,41 +228,27 @@ def test_materialize_names_its_jobs_and_restores_the_caller(spark, sf_dir):
     import pyspark.sql.functions as F
     from pyspark.errors import PySparkException
 
+    from form700_etl_spark import profile
     from form700_etl_spark.io import materialize, table
 
     sc = spark.sparkContext
-    jsc = sc._jsc.sc()  # noqa: SLF001 — the status store has no Python API
-
-    def jobs_after(job_id: int) -> list:
-        """Jobs newer than ``job_id`` (the store evicts the oldest, so
-        compare ids, not positions)."""
-        jsc.listenerBus().waitUntilEmpty()
-        it, js = jsc.statusStore().jobsList(None).iterator(), []
-        while it.hasNext():
-            j = it.next()
-            if j.jobId() > job_id:
-                js.append(j)
-        return js
-
-    def opt(o):
-        return o.get() if o.isDefined() else None
-
     agg = table(spark, sf_dir, "lineitem").groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n"))
     sc.setJobGroup("materialize-test", "caller")
     try:
-        before = max((j.jobId() for j in jobs_after(-1)), default=-1)
+        before = profile.last_job_id(spark)
         out = materialize(agg, "test aggregate")
-        launched = jobs_after(before)
+        launched = profile.jobs(spark, "materialize-test", after=before)
         assert sc.getLocalProperty("spark.job.description") == "caller"
         plan = out._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
             out._jdf.queryExecution(), "formatted"
         )
         assert "Scan ExistingRDD" in plan, plan
+        # read by the caller's group: a job that lost it is missing here
+        assert launched == profile.jobs(spark, after=before)
         # AQE may add stage jobs: each one is named, none is unnamed
         assert launched
         for j in launched:
-            assert opt(j.description()) == "materialize: test aggregate", j.name()
-            assert opt(j.jobGroup()) == "materialize-test", j.name()
+            assert j["description"] == "materialize: test aggregate", j["name"]
 
         failing = agg.select(F.when(F.col("n") > 0, F.raise_error(F.lit("boom"))).alias("x"))
         with pytest.raises(PySparkException, match="boom"):
@@ -290,6 +258,48 @@ def test_materialize_names_its_jobs_and_restores_the_caller(spark, sf_dir):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_profile_record_splits_build_from_exec(spark, sf_dir):
+    """A query's record holds every job its call launched: the build
+    group's (dedup_clusters_connected runs jobs in its builder) and the
+    count's, with the same executor CPU as the jobs read over the whole
+    call."""
+    from form700_etl_spark import profile
+
+    before = profile.last_job_id(spark)
+    rec = profile.record(spark, profile.run_query(spark, "dedup_clusters_connected", sf_dir))
+    every = profile.jobs(spark, after=before)
+    assert rec["build_jobs"] and rec["exec_jobs"]
+    assert sorted(j["job"] for j in rec["build_jobs"] + rec["exec_jobs"]) == [j["job"] for j in every]
+    cpu = rec["totals"]["executor_cpu_s"]
+    assert cpu > 0
+    assert cpu == pytest.approx(profile.totals(every)["executor_cpu_s"], abs=1e-9)
+    assert rec["build_s"] > 0 and rec["exec_s"] > 0 and rec["catalyst_s"] > 0
+
+
+def test_profile_record_warm_join_builds_without_jobs(spark, sf_dir):
+    """A warm q5 build resolves its six tables from the session cache and
+    runs no job (traced perfbench reads 0 ``queries.build_jobs`` for it);
+    all its jobs belong to the count."""
+    from form700_etl_spark import profile
+
+    profile.run_query(spark, "q5_region_nation_revenue", sf_dir)  # infers schemas once
+    rec = profile.record(spark, profile.run_query(spark, "q5_region_nation_revenue", sf_dir))
+    assert rec["build_jobs"] == []
+    assert rec["exec_jobs"] and rec["totals"]["tasks"] > 0
+
+
+def test_profile_attributes_materializations_to_the_build(spark, sf_dir):
+    """Every job a builder's ``materialize`` launches (q15 materializes
+    its revenue table) carries its ``materialize: `` description and
+    lands in the record's build jobs, never in the count's."""
+    from form700_etl_spark import profile
+
+    before = profile.last_job_id(spark)
+    rec = profile.record(spark, profile.run_query(spark, "q15_top_supplier", sf_dir))
+    named = {j["job"] for j in profile.jobs(spark, after=before) if (j["description"] or "").startswith("materialize: ")}
+    assert named and named <= {j["job"] for j in rec["build_jobs"]}
 
 
 def test_pipeline_prunes_unused_schedule_arrays(spark, sf_dir):
@@ -853,12 +863,21 @@ def test_bootstrap_single_scan_replicate_partials(spark, sf_dir):
 
 
 def test_skyline_dominance_window_runs_over_size_grain(spark, sf_dir):
-    """The dominance test must collapse to one window over the
-    checkpointed size-grain table (bounded domain), with the frontier
-    broadcast back for the joinback — never an n^2 dominance join."""
+    """The dominance test must collapse to one window over the size-grain
+    aggregate (bounded domain), with the frontier broadcast back for the
+    joinback — never an n^2 dominance join."""
     plan = plan_of(spark, sf_dir, "skyline_pareto_frontier")
-    assert "Scan ExistingRDD" in plan, plan
     assert plan.count("+- Window (") == 1, plan
+    # the window's input is the min-price-per-p_size aggregate's output
+    blocks = plan.split("\n\n")
+    (window,) = [b for b in blocks if re.match(r"\(\d+\) Window\n", b)]
+    pmin = re.search(r"Input \[2\]: \[p_size#\d+, (pmin#\d+L?)\]", window).group(1)
+    assert any(
+        re.match(r"\(\d+\) HashAggregate\n", b)
+        and re.search(r"Keys \[1\]: \[p_size#\d+\]", b)
+        and f"AS {pmin}]" in b
+        for b in blocks
+    ), plan
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
 
