@@ -13,6 +13,8 @@ artifacts; it is dropped whole when a new SparkContext starts.
 
 ``materialize`` is the one place a query cuts its plan: an eager local
 checkpoint whose jobs carry the description ``materialize: <reason>``.
+``local_frame`` hands a driver-held result back to Spark without a
+Python worker.
 """
 
 from __future__ import annotations
@@ -128,6 +130,20 @@ def materialize(df: DataFrame, reason: str) -> DataFrame:
         return df.localCheckpoint()
     finally:
         sc.setLocalProperty("spark.job.description", prev)
+
+
+def local_frame(spark: SparkSession, schema: str, columns: list[list]) -> DataFrame:
+    """A result the driver already holds, as a frame whose plan is a
+    ``LocalTableScan``: ``columns`` (one list per field of the DDL
+    ``schema``) go to the JVM as one Arrow table.  A list of rows through
+    ``createDataFrame`` would instead start a Python-worker task per
+    partition just to re-pickle them."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    struct = _parse_datatype_string(schema)
+    return spark.createDataFrame(pa.table(columns, schema=to_arrow_schema(struct)), struct)
 
 
 def normalize_ts(dtype, col: str = "ts"):

@@ -44,7 +44,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism, materialize
+from ..io import ensure_parallelism, local_frame, materialize
 
 N_HASHES = 12
 BAND_ROWS = 3
@@ -360,9 +360,12 @@ def connected_components(pairs: DataFrame,
                 # union by MIN root so the canonical label is min(doc_id)
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        spark = pairs.sparkSession
-        out = [(x, find(x)) for x in parent]
-        return spark.createDataFrame(out, "doc_id long, component_id long")
+        nodes = list(parent)
+        return local_frame(
+            pairs.sparkSession,
+            "doc_id long, component_id long",
+            [nodes, [find(x) for x in nodes]],
+        )
     # Pregel path: both directions of the symmetrized edge list read the
     # probe cache, so the pair lineage still runs once, and the list is
     # exactly 2 * n_pairs rows.  Size the loop's parallelism to the

@@ -10,7 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import materialize, session_cached, table
+from ..io import local_frame, materialize, session_cached, table
 from ..registry import register
 
 
@@ -1859,8 +1859,9 @@ def graph_jaccard_neighbors(spark, sf_dir):
 # and leaves a graph whose 3-core peeling takes many rounds — the
 # interesting regime for an iterative-peel operator.
 _KCORE_K = 3
-_KCORE_ROUNDS = 10  # both fixture SFs converge by round 9; the
-#                     `converged` column cross-checks that at any SF
+_KCORE_ROUNDS = 10  # sf0.001 is stable after round 1; sf0.01 has not
+#                     converged by round 10 (936 -> 935), which the
+#                     `converged` column reports at any SF
 
 # co/adj MATERIALIZED: consumers reference them many times (the k-core
 # oracle's 10 unrolled layers each hit adj), and DuckDB inlines plain
@@ -1975,23 +1976,37 @@ def _kcore_oracle() -> str:
         "edges), the Pregel peel shape; the surviving-set DataFrame is "
         "checkpointed per round so round r+1 never re-derives the "
         "chain.  Rounds past the fixpoint are no-ops by construction "
-        "(membership is stable), so the fixed round count is "
-        "deterministic at every SF while the `converged` column "
+        "(membership is stable), so once a round keeps every node the "
+        "rest are filled in without running, and the fixed round count "
+        "is deterministic at every SF while the `converged` column "
         "cross-checks that the unrolled oracle reached the same "
         "fixpoint.  Per-round node counts are bounded driver scalars "
         "(the profile IS the output)."
     ),
 )
 def graph_kcore_peel_profile(spark, sf_dir):
+    from pyspark.sql import Observation
+
     _, adj = _stable_co_edges(spark, sf_dir)
     adj = materialize(adj, "graph_kcore_peel_profile adjacency: every peel round")
-    keep = materialize(
+
+    def survivors(df, reason):
+        # the survivor count rides on the materialization's own job (an
+        # observed metric), so the fixed-point check launches no job
+        obs = Observation()
+        kept = materialize(df.observe(obs, F.count(F.lit(1)).alias("n")), reason)
+        return kept, obs.get["n"]
+
+    keep, n = survivors(
         adj.select("w").distinct(),
         "graph_kcore_peel_profile survivors: both semi-joins of the first round",
     )
-    survivors: list[DataFrame] = []
-    for _ in range(_KCORE_ROUNDS):
-        keep = materialize(
+    # Each round's survivors are a subset of the previous round's, so an
+    # equal count means an equal set: every later round repeats it, and
+    # the rounds past the fixed point are filled in without running.
+    counts: list[int] = []
+    while len(counts) < _KCORE_ROUNDS:
+        keep, kept = survivors(
             adj.join(keep, "w", "left_semi")
             .join(
                 keep.select(F.col("w").alias("nbr")), "nbr", "left_semi"
@@ -2002,28 +2017,15 @@ def graph_kcore_peel_profile(spark, sf_dir):
             .select("w"),
             "graph_kcore_peel_profile survivors: both semi-joins of the next round",
         )
-        survivors.append(keep)
-    # ONE action for every per-round profile count: union the (already
-    # materialized) survivor sets tagged by round and count per tag —
-    # replaces _KCORE_ROUNDS separate count() jobs whose per-job
-    # scheduling cost dominated this query's wall (the r11 lesson:
-    # iterative-graph cost is per-round ACTIONS, not per-row work).
-    tagged = survivors[0].sparkSession.createDataFrame([], "round int, w long")
-    for i, s in enumerate(survivors):
-        tagged = tagged.unionByName(s.select(F.lit(i + 1).alias("round"), "w"))
-    counts_by_round = {
-        r: n
-        for r, n in tagged.groupBy("round")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    counts = [counts_by_round.get(i + 1, 0) for i in range(_KCORE_ROUNDS)]
-    converged = len(counts) >= 2 and counts[-1] == counts[-2]
-    rows = [
-        (i + 1, n, converged) for i, n in enumerate(counts)
-    ]
-    return spark.createDataFrame(
-        rows, "round bigint, nodes_remaining bigint, converged boolean"
+        counts.append(kept)
+        if kept == n:
+            counts += [kept] * (_KCORE_ROUNDS - len(counts))
+        n = kept
+    converged = counts[-1] == counts[-2]
+    return local_frame(
+        spark,
+        "round bigint, nodes_remaining bigint, converged boolean",
+        [list(range(1, _KCORE_ROUNDS + 1)), counts, [converged] * _KCORE_ROUNDS],
     ).orderBy("round")
 
 

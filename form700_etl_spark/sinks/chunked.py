@@ -134,7 +134,7 @@ class LocalDirClient:
         tmp = os.path.join(self.path, f".{chunk_id}.tmp")
         final = os.path.join(self.path, f"{chunk_id}.json")
         with open(tmp, "w") as fh:
-            json.dump(rows, fh, default=str)
+            fh.write(json.dumps(rows, default=str))
         os.replace(tmp, final)
         return len(rows)
 

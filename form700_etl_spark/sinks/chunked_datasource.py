@@ -72,7 +72,7 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
             name = f"stream-p{pid:05d}-{attempt}-c{chunk_idx:05d}.json"
             tmp = os.path.join(self.path, f".{name}.tmp")
             with open(tmp, "w") as fh:
-                json.dump(chunk, fh, default=str)
+                fh.write(json.dumps(chunk, default=str))
             os.replace(tmp, os.path.join(self.path, name))
             files.append(name)
             rows += len(chunk)

@@ -1156,7 +1156,7 @@ def test_knn_eval_broadcasts_capped_query_side_corpus_never_sorted(spark, sf_dir
 def test_schedule_pipeline_single_agg_broadcast_enrichment(spark, sf_dir):
     """ref_pipeline_scheduleA2 (the bench's heaviest plan): ONE
     hash-aggregate pair builds the schedule arrays (partial+final over the
-    explicit l_orderkey repartition), the cover enrichment broadcasts, and
+    keyed l_orderkey repartition), the cover enrichment broadcasts, and
     nothing sort-merges — the filing synthesis plus explode/flatten/clean
     stays a single shuffle of lineitem."""
     plan = plan_of(spark, sf_dir, "ref_pipeline_scheduleA2")
@@ -1168,6 +1168,25 @@ def test_schedule_pipeline_single_agg_broadcast_enrichment(spark, sf_dir):
     # array is being re-aggregated per consumer
     assert tree_nodes(plan, "HashAggregate") <= 4, plan
     assert "EvalPython" not in plan, plan
+
+
+def test_filing_synthesis_shuffle_is_sized_by_aqe(spark, sf_dir):
+    """synthesize_filings' l_orderkey pre-shuffle states a distribution,
+    not a task count: a keyed repartition is REPARTITION_BY_COL, which
+    AQE coalesces by bytes, where a fixed count (REPARTITION_BY_NUM)
+    would run every aggregate task over a tiny shuffle.  After the
+    collect, the final plan reads that shuffle through a coalesced
+    AQEShuffleRead."""
+    plan = plan_of(spark, sf_dir, "ref_pipeline_scheduleA2")
+    keyed = re.findall(r"hashpartitioning\(l_orderkey#\d+L?, \d+\), (\w+)", plan)
+    assert keyed and set(keyed) == {"REPARTITION_BY_COL"}, plan
+    assert "REPARTITION_BY_NUM" not in plan, plan
+    final = executed_plan_of(spark, sf_dir, "ref_pipeline_scheduleA2").split("== Initial Plan ==")[0]
+    assert re.search(
+        r"AQEShuffleRead coalesced\n\s*\+- ShuffleQueryStage \d+\n"
+        r"\s*\+- Exchange hashpartitioning\(l_orderkey#\d+L?, \d+\), REPARTITION_BY_COL",
+        final,
+    ), final
 
 
 def test_repeated_substring_spans_joinless_two_window(spark, sf_dir):
@@ -1297,11 +1316,13 @@ def test_minhash_lsh_band_joins_hash_over_checkpointed_signatures(spark, sf_dir)
 
 def test_connected_components_result_is_materialized_not_relineaged(spark, sf_dir):
     """dedup_clusters_connected: at test SF the union-find runs gated
-    driver-side and the result must come back as a materialized local
-    relation/RDD scan — NOT a re-derivation of the edge lineage per
-    consumer (the Pregel fallback path is exercised by its own test)."""
+    driver-side and the result must come back as a local relation
+    (``LocalTableScan``, built from Arrow with no Python worker) — NOT a
+    re-derivation of the edge lineage per consumer (the Pregel fallback
+    path is exercised by its own test)."""
     plan = plan_of(spark, sf_dir, "dedup_clusters_connected")
-    assert "Scan ExistingRDD" in plan, plan
+    assert "LocalTableScan" in plan, plan
+    assert "Scan parquet" not in plan, plan
     assert "CartesianProduct" not in plan, plan
 
 

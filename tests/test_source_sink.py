@@ -389,6 +389,57 @@ class TestChunkedSink:
             ChunkedSink(LocalDirClient(tmp), ChunkedSinkConfig(throttle_s=0.0)).write(df, "region")
             assert not os.path.exists(stale)
 
+    def test_chunk_file_bytes_equal_streamed_json_dump(self, tmp_path, monkeypatch):
+        """Both chunk writers serialize a chunk with one ``json.dumps``
+        (the C encoder); the file must hold the bytes the streaming
+        ``json.dump(chunk, fh, default=str)`` writes, on every value type
+        a Form 700 row carries."""
+        import datetime
+        import decimal
+
+        import pyspark
+        from pyspark.sql import Row
+
+        from form700_etl_spark.sinks.chunked_datasource import ChunkedDirStreamWriter
+
+        chunk = [
+            {
+                "s": "plain",
+                "u": "Zoë — ☃ \"quoted\"\n",
+                "f": 0.1,
+                "big": 1e22,
+                "inf": float("inf"),
+                "ninf": float("-inf"),
+                "i": 2**63 - 1,
+                "b": True,
+                "n": None,
+                "d": datetime.date(2024, 2, 29),
+                "ts": datetime.datetime(2024, 2, 29, 23, 59, 59, 123456),
+                "dec": decimal.Decimal("12.30"),
+                "nested": {"xs": [1, 2.5, None, {"k": datetime.date(1999, 1, 1)}], "e": []},
+            },
+            {"s": "", "f": -0.0, "n": None},
+        ]
+        streamed = tmp_path / "streamed.json"
+        with open(streamed, "w") as fh:
+            json.dump(chunk, fh, default=str)
+        want = streamed.read_bytes()
+
+        client = LocalDirClient(str(tmp_path / "batch"))
+        assert client.upsert("c-00000", chunk) == len(chunk)
+        assert (tmp_path / "batch" / "c-00000.json").read_bytes() == want
+
+        class _Task:
+            def partitionId(self):
+                return 0
+
+        monkeypatch.setattr(pyspark.TaskContext, "get", staticmethod(lambda: _Task()))
+        writer = ChunkedDirStreamWriter({"path": str(tmp_path / "stream")})
+        commit = writer.write(iter([Row(**chunk[0]), Row(**chunk[1])]))
+        assert commit.rows == len(chunk)
+        (name,) = commit.files
+        assert (tmp_path / "stream" / name).read_bytes() == want
+
 
 class TestCreateDDL:
     """K3 dataset-create DDL (Form700.py:406-454): column metadata from
