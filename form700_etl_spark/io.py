@@ -132,10 +132,10 @@ def materialize(df: DataFrame, reason: str) -> DataFrame:
         sc.setLocalProperty("spark.job.description", prev)
 
 
-def local_frame(spark: SparkSession, schema: str, columns: list[list]) -> DataFrame:
-    """A result the driver already holds, as a frame whose plan is a
-    ``LocalTableScan``: ``columns`` (one list per field of the DDL
-    ``schema``) go to the JVM as one Arrow table.  A list of rows through
+def local_frame(spark: SparkSession, schema: str, rows: list[tuple]) -> DataFrame:
+    """Rows the driver already holds, as a frame whose plan is a
+    ``LocalTableScan``: ``rows`` (tuples in the field order of the DDL
+    ``schema``) go to the JVM as one Arrow table.  The same rows through
     ``createDataFrame`` would instead start a Python-worker task per
     partition just to re-pickle them."""
     import pyarrow as pa
@@ -143,6 +143,7 @@ def local_frame(spark: SparkSession, schema: str, columns: list[list]) -> DataFr
     from pyspark.sql.types import _parse_datatype_string
 
     struct = _parse_datatype_string(schema)
+    columns = [list(c) for c in zip(*rows)] or [[] for _ in struct.fields]
     return spark.createDataFrame(pa.table(columns, schema=to_arrow_schema(struct)), struct)
 
 

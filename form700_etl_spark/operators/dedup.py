@@ -26,12 +26,16 @@ The single path, one function per step:
   match threshold is the usual (1/b)^(1/r) S-curve.
 - ``verify_jaccard``: exact scores for candidate pairs, re-shingling
   only the candidate docs — cost scales with candidate count, not n².
+- ``hamming64_pairs``: all pairs of 64-bit perceptual hashes within
+  Hamming ``HAMMING_RADIUS`` (the multimodal dHash/pHash/audio paths),
+  by exact match on one of four 16-bit bands, then ``bit_count`` verify.
 - ``connected_components``: pairs -> clusters (min doc_id canonical).
 
 Constants: ``N_HASHES`` = 12 permutations in ``N_BANDS`` = 4 bands of
 ``BAND_ROWS`` = 3, ``MINHASH_P`` the affine-hash modulus,
 ``MAX_SHINGLE_DF`` = 16 the pair-join consumers' cap, ``SCORE_DECIMALS``
-= 6 the rounding of every Jaccard/containment score, ``CC_MAX_ITER`` = 20 label-propagation rounds.
+= 6 the rounding of every Jaccard/containment score, ``CC_MAX_ITER`` = 20 label-propagation rounds,
+``HAMMING_RADIUS`` = 3 the 64-bit hash pair radius.
 
 Algorithms from the public literature: MinHash resemblance sketches
 (Broder, "On the resemblance and containment of documents", 1997) with
@@ -51,6 +55,7 @@ BAND_ROWS = 3
 N_BANDS = N_HASHES // BAND_ROWS
 SCORE_DECIMALS = 6
 CC_MAX_ITER = 20
+HAMMING_RADIUS = 3  # < 4 bands, so every pair within it shares a band
 # Hot-shingle document-frequency cap used by the pair-join consumers
 # (queries.dedup.dedup_ngram_jaccard / dedup_clusters_connected read the
 # capped table, with the identical df filter in their DuckDB oracles): a
@@ -291,6 +296,47 @@ def verify_jaccard(pairs: DataFrame, documents: DataFrame,
     return _with_sizes(common, shingles).select(*cols)
 
 
+def hamming64_pairs(hashes: DataFrame, hash_col: str) -> DataFrame:
+    """(doc_a, doc_b, hamming): every pair of ``hashes`` rows (doc_id,
+    64-bit ``hash_col``) within Hamming ``HAMMING_RADIUS``, doc_a <
+    doc_b, sorted.  The hash splits into 4 16-bit bands; by pigeonhole
+    a pair within the radius agrees exactly on at least one, so the
+    band self-join is complete, and ``bit_count(xor)`` verifies each
+    candidate.  ``hashes`` feeds both join sides: materialize it first
+    when it is expensive."""
+    bands = hashes.select(
+        "doc_id",
+        hash_col,
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(b).alias("b"),
+                        F.expr(f"shiftrightunsigned({hash_col}, {16 * b}) & 65535").alias(
+                            "band_val"
+                        ),
+                    )
+                    for b in range(4)
+                ]
+            )
+        ).alias("bk"),
+    ).select("doc_id", hash_col, "bk.b", "bk.band_val")
+    a = bands.select(
+        "b", "band_val", F.col("doc_id").alias("doc_a"), F.col(hash_col).alias("ha")
+    )
+    x = bands.select(
+        "b", "band_val", F.col("doc_id").alias("doc_b"), F.col(hash_col).alias("hb")
+    )
+    return (
+        a.join(x, ["b", "band_val"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b", F.expr("bit_count(ha ^ hb)").alias("hamming"))
+        .distinct()
+        .filter(F.col("hamming") <= HAMMING_RADIUS)
+        .orderBy("doc_a", "doc_b")
+    )
+
+
 def connected_components(pairs: DataFrame,
                          driver_threshold: int = 1_000_000) -> DataFrame:
     """Connected components over an undirected pair graph
@@ -360,11 +406,10 @@ def connected_components(pairs: DataFrame,
                 # union by MIN root so the canonical label is min(doc_id)
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
-        nodes = list(parent)
         return local_frame(
             pairs.sparkSession,
             "doc_id long, component_id long",
-            [nodes, [find(x) for x in nodes]],
+            [(x, find(x)) for x in parent],
         )
     # Pregel path: both directions of the symmetrized edge list read the
     # probe cache, so the pair lineage still runs once, and the list is

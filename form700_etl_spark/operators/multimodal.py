@@ -1,22 +1,25 @@
 """Multimodal-column plumbing (build plan M5 / north-star mandate).
 
 Image/audio/video payloads are opaque ``binary`` columns with typed
-metadata; decode / feature-extract / frame-sample run as Arrow-batched
-``mapInPandas`` operators.  The real codec libraries (PIL, ffmpeg,
-torchaudio) are NOT in this container, so the decode step is a
-clearly-marked deterministic fake (sha256-derived pseudo-dimensions)
-behind an import-try — the Spark-side plumbing (schemas, binary
-handling, batch iteration, 1→N frame generation) is real and tested.
+metadata.  The real codec libraries (PIL, ffmpeg, torchaudio) are NOT
+in this container, so for image and video the decode step is a
+clearly-marked deterministic fake: pseudo-dimensions and frame/resize
+digests derived from the payload's sha256.  The fake is plain Spark SQL
+(``sha2``, ``conv``, integer ``div``, ``explode(sequence(...))``), so
+Catalyst sees through it and prunes what a query does not read.
+
+Python runs only where decoding is the point: the codec-true WAV, BMP
+and y4m parsers and the perceptual hashes (dHash, pHash, the audio
+energy fingerprint), each an Arrow-batched ``mapInPandas`` operator.
 
 Scale notes: payload bytes travel executor-side only (never collected);
 feature extraction is embarrassingly parallel over partitions; frame
-sampling is a generator (1 row → N) inside the same Arrow batch, the
-UDTF pattern for media expansion.
+sampling is a generator (1 row → N), the UDTF pattern for media
+expansion.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
 
 import pandas as pd
@@ -25,17 +28,8 @@ from pyspark.sql import functions as F
 
 from ..io import table
 
-MEDIA_SCHEMA = (
-    "doc_id long, media_type string, payload binary, "
-    "meta struct<n_bytes:long, declared_type:string>"
-)
-
-FEATURE_SCHEMA = (
-    "doc_id long, media_type string, n_bytes long, sha_prefix string, "
-    "fake_width int, fake_height int, decoder string"
-)
-
-FRAME_SCHEMA = "doc_id long, frame_index int, frame_ts_s double, frame_sha string"
+FRAME_EVERY_S = 2.0  # seconds between sampled video frames
+RESIZE_W, RESIZE_H = 96, 64  # the box every image is fitted into
 
 
 def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -59,123 +53,80 @@ def synthesize_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _try_real_decoder():
-    try:  # pragma: no cover - codec libs absent in this container
-        import PIL.Image  # noqa: F401
-
-        return "pillow"
-    except ImportError:
-        return None
+def _fake_decode(media: DataFrame) -> DataFrame:
+    """``media`` plus the decode fake: ``sha`` (the payload's sha256 hex)
+    and ``fake_width``/``fake_height`` in 64..127, from its first two
+    bytes."""
+    return media.selectExpr("*", "sha2(payload, 256) AS sha").selectExpr(
+        "*",
+        "64 + CAST(conv(substr(sha, 1, 2), 16, 10) AS INT) % 64 AS fake_width",
+        "64 + CAST(conv(substr(sha, 3, 2), 16, 10) AS INT) % 64 AS fake_height",
+    )
 
 
 def extract_features(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract per payload.  Uses a real decoder when
-    available; otherwise the deterministic sha256 fake (dimensions are
-    derived from the digest so results are stable and oracle-checkable)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        decoder = _try_real_decoder() or "fake-sha256"
-        for pdf in batches:
-            digests = [hashlib.sha256(bytes(p)).hexdigest() for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_type": pdf["media_type"],
-                    "n_bytes": [len(bytes(p)) for p in pdf["payload"]],
-                    "sha_prefix": [h[:16] for h in digests],
-                    "fake_width": [64 + int(h[:2], 16) % 64 for h in digests],
-                    "fake_height": [64 + int(h[2:4], 16) % 64 for h in digests],
-                    "decoder": decoder,
-                }
-            )
-
-    return media.mapInPandas(run, schema=FEATURE_SCHEMA)
+    """Decode + feature-extract per payload with the deterministic
+    sha256 fake (dimensions are derived from the digest so results are
+    stable and oracle-checkable)."""
+    return _fake_decode(media).selectExpr(
+        "doc_id",
+        "media_type",
+        "CAST(length(payload) AS BIGINT) AS n_bytes",
+        "substr(sha, 1, 16) AS sha_prefix",
+        "fake_width",
+        "fake_height",
+        "'fake-sha256' AS decoder",
+    )
 
 
-def sample_frames(media: DataFrame, fps_every_s: float = 2.0) -> DataFrame:
-    """1 video row → N frame rows (N = 1 + doc_id % 4): the media-UDTF
-    pattern.  Frame 'decode' is stubbed as a digest of (payload, idx)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                if row["media_type"] != "video":
-                    continue
-                n_frames = 1 + int(row["doc_id"]) % 4
-                payload = bytes(row["payload"])
-                for idx in range(n_frames):
-                    rows.append(
-                        (
-                            int(row["doc_id"]),
-                            idx,
-                            idx * fps_every_s,
-                            hashlib.sha256(payload + str(idx).encode()).hexdigest()[:16],
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=["doc_id", "frame_index", "frame_ts_s", "frame_sha"])
-
-    return media.mapInPandas(run, schema=FRAME_SCHEMA)
+def sample_frames(media: DataFrame) -> DataFrame:
+    """1 video row → N frame rows (N = 1 + doc_id % 4), one every
+    FRAME_EVERY_S seconds: the media-UDTF pattern.  Frame 'decode' is
+    stubbed as a digest of (payload, frame index)."""
+    return (
+        media.filter("media_type = 'video'")
+        .selectExpr(
+            "doc_id", "payload", "explode(sequence(0, CAST(doc_id % 4 AS INT))) AS frame_index"
+        )
+        .selectExpr(
+            "doc_id",
+            "frame_index",
+            f"CAST(frame_index AS DOUBLE) * {FRAME_EVERY_S} AS frame_ts_s",
+            "substr(sha2(concat(payload, encode(CAST(frame_index AS STRING), 'UTF-8')), 256),"
+            " 1, 16) AS frame_sha",
+        )
+    )
 
 
-RESIZE_SCHEMA = (
-    "doc_id long, media_type string, in_width int, in_height int, "
-    "out_width int, out_height int, resized_sha string"
-)
-
-
-def resize_media(media: DataFrame, target_w: int = 96, target_h: int = 64) -> DataFrame:
-    """Aspect-preserving fit of every image payload into (target_w,
-    target_h).  The decode is the same deterministic sha256 fake as
+def resize_media(media: DataFrame) -> DataFrame:
+    """Aspect-preserving fit of every image payload into (RESIZE_W,
+    RESIZE_H).  The decode is the same deterministic sha256 fake as
     extract_features; the FIT ARITHMETIC is the real operator — pure
     integers (cross-multiplication comparison + integer division), so
     both engines agree exactly — and the 'resized payload' is a digest
-    of (payload, out dims), standing in for re-encoded bytes with the
-    batch shape and binary handling fully real."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for _, row in pdf.iterrows():
-                if row["media_type"] != "image":
-                    continue
-                payload = bytes(row["payload"])
-                h = hashlib.sha256(payload).hexdigest()
-                in_w = 64 + int(h[:2], 16) % 64
-                in_h = 64 + int(h[2:4], 16) % 64
-                if in_w * target_h >= in_h * target_w:  # width-bound
-                    out_w = target_w
-                    out_h = in_h * target_w // in_w
-                else:
-                    out_h = target_h
-                    out_w = in_w * target_h // in_h
-                rows.append(
-                    (
-                        int(row["doc_id"]),
-                        row["media_type"],
-                        in_w,
-                        in_h,
-                        out_w,
-                        out_h,
-                        hashlib.sha256(
-                            payload + f"{out_w}x{out_h}".encode()
-                        ).hexdigest()[:16],
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "media_type",
-                    "in_width",
-                    "in_height",
-                    "out_width",
-                    "out_height",
-                    "resized_sha",
-                ],
-            )
-
-    return media.mapInPandas(run, schema=RESIZE_SCHEMA)
+    of (payload, out dims), standing in for re-encoded bytes."""
+    width_bound = f"fake_width * {RESIZE_H} >= fake_height * {RESIZE_W}"
+    fit = _fake_decode(media.filter("media_type = 'image'")).selectExpr(
+        "doc_id",
+        "media_type",
+        "payload",
+        "fake_width AS in_width",
+        "fake_height AS in_height",
+        f"CAST(IF({width_bound}, {RESIZE_W}, fake_width * {RESIZE_H} div fake_height) AS INT)"
+        " AS out_width",
+        f"CAST(IF({width_bound}, fake_height * {RESIZE_W} div fake_width, {RESIZE_H}) AS INT)"
+        " AS out_height",
+    )
+    return fit.selectExpr(
+        "doc_id",
+        "media_type",
+        "in_width",
+        "in_height",
+        "out_width",
+        "out_height",
+        "substr(sha2(concat(payload, encode(concat(CAST(out_width AS STRING), 'x',"
+        " CAST(out_height AS STRING)), 'UTF-8')), 256), 1, 16) AS resized_sha",
+    )
 
 
 # ------------------------------------------------------ real audio path

@@ -10,7 +10,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import materialize, table
+from ..io import local_frame, materialize, table
 from ..registry import register
 
 
@@ -1498,7 +1498,7 @@ def sketch_histogram_quantiles(spark, sf_dir):
     big_n = hist.agg(F.sum("cnt").alias("big_n"))
     cum = hist.withColumn("cum", F.sum("cnt").over(W.orderBy("bin")))
     targets = (
-        spark.createDataFrame([(0.5,), (0.9,), (0.99,)], "q double")
+        local_frame(spark, "q double", [(0.5,), (0.9,), (0.99,)])
         .crossJoin(F.broadcast(big_n))
         .select("q", F.ceil(F.col("q") * F.col("big_n")).cast("long").alias("t"))
     )
@@ -4311,9 +4311,7 @@ def events_markov_removal_attribution(spark, sf_dir):
         .agg(F.count(F.lit(1)).cast("long").alias("n"))
     )
     totals = trans.groupBy("from_state").agg(F.sum("n").cast("long").alias("n_from"))
-    chains = spark.createDataFrame(
-        [(c,) for c in ("FULL",) + _REMOVAL_CHANNELS], "chain string"
-    )
+    chains = local_frame(spark, "chain string", [(c,) for c in ("FULL",) + _REMOVAL_CHANNELS])
     trans_c = materialize(
         trans.join(F.broadcast(totals), "from_state")
         .crossJoin(F.broadcast(chains)),

@@ -13,7 +13,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import materialize, table
+from ..io import local_frame, materialize, table
 from ..registry import register
 
 
@@ -259,9 +259,10 @@ def range_join_lineitems_within_30d(spark, sf_dir):
 )
 def band_join_value_buckets(spark, sf_dir):
     e = table(spark, sf_dir, "events")
-    buckets = spark.createDataFrame(
-        [("tiny", 0.0, 1.0), ("small", 1.0, 10.0), ("medium", 10.0, 100.0), ("large", 100.0, 1000.0)],
+    buckets = local_frame(
+        spark,
         "bucket string, lo double, hi double",
+        [("tiny", 0.0, 1.0), ("small", 1.0, 10.0), ("medium", 10.0, 100.0), ("large", 100.0, 1000.0)],
     )
     return (
         F.broadcast(buckets)

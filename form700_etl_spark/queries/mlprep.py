@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import materialize, table
+from ..io import local_frame, materialize, table
 from ..registry import register
 
 # --------------------------------------------------- target encoding
@@ -722,9 +722,7 @@ def embedding_power_iteration_top_pc(spark, sf_dir):
         sc = {i: jround(1e6 * float(z[i]) / float(m)) for i in dims}
         nrm = math.sqrt(float(sum(s * s for s in sc.values())))
         v = {i: jround(1e6 * float(sc[i]) / nrm) for i in dims}
-    out = spark.createDataFrame(
-        sorted(v.items()), "i int, val long"
-    )
+    out = local_frame(spark, "i int, val long", sorted(v.items()))
     return out.select(
         F.col("i").cast("long").alias("dim"),
         F.round(F.col("val").cast("double") / 1e6, 6).alias("loading"),

@@ -1,17 +1,19 @@
 """Multimodal-column queries (build plan M5).
 
-The Spark side runs real binary-column plumbing through Arrow-batched
-``mapInPandas`` (operators/multimodal.py); the decode is a
-deterministic sha256 fake (codec libs absent here), which makes even
-these Python-operator pipelines DuckDB-oracle-checkable: the oracle
-recomputes the same digests in SQL.
+Two kinds of operator (operators/multimodal.py):
+
+- the image/video decode fake (codec libs absent here): sha256-derived
+  dimensions and digests over the binary payload, computed in Spark SQL
+  and DuckDB-oracle-checked (the oracle recomputes the same digests);
+- codec-true WAV/BMP/y4m decodes and perceptual hashes in Arrow-batched
+  ``mapInPandas``, law-tested, whose 64-bit hashes feed the one shared
+  Hamming band join (``operators.dedup.hamming64_pairs``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from ..io import materialize
+from ..operators.dedup import hamming64_pairs
 from ..operators.multimodal import extract_features, sample_frames, synthesize_media
 from ..registry import register
 
@@ -40,8 +42,9 @@ _B1 = f"({_hexval('substr(sha256(text), 3, 1)')} * 16 + {_hexval('substr(sha256(
     """,
     tags=("multimodal",),
     doc=(
-        "binary payload -> mapInPandas feature extraction (decode stubbed as "
-        "deterministic sha256 dims); oracle recomputes the digests in SQL."
+        "binary payload -> Spark SQL feature extraction (decode stubbed as "
+        "deterministic sha256 dims via sha2/conv); oracle recomputes the "
+        "digests in SQL."
     ),
 )
 def multimodal_feature_extract(spark, sf_dir):
@@ -58,13 +61,14 @@ def multimodal_feature_extract(spark, sf_dir):
     WHERE doc_id % 3 = 2
     """,
     tags=("multimodal",),
-    doc="video row -> N frame rows via mapInPandas generator (media UDTF pattern).",
+    doc="video row -> N frame rows via explode(sequence(...)) (media UDTF pattern).",
 )
 def multimodal_frame_sample(spark, sf_dir):
     frames = sample_frames(synthesize_media(spark, sf_dir))
-    # frame_sha is python-hashlib-only (no blob sha in the oracle) — project
-    # the SQL-checkable columns; the digest column is covered by tests
-    return frames.select("doc_id", "frame_index", F.col("frame_ts_s"))
+    # the oracle has no frame_sha (no blob sha in its SQL), so it is
+    # projected away, and Catalyst never computes it; the digest is
+    # covered by tests/test_functions.py
+    return frames.select("doc_id", "frame_index", "frame_ts_s")
 
 
 @register(
@@ -93,8 +97,8 @@ def multimodal_frame_sample(spark, sf_dir):
     doc=(
         "Aspect-preserving resize of every image payload into 96x64: "
         "the fit arithmetic is pure integers (cross-multiplied "
-        "comparison + integer division) so the mapInPandas operator and "
-        "the SQL oracle agree exactly; decode stays the documented "
+        "comparison + integer division) so the Spark SQL operator and "
+        "the DuckDB oracle agree exactly; decode stays the documented "
         "sha256 fake, re-encode stands in as a digest of (payload, out "
         "dims)."
     ),
@@ -193,45 +197,9 @@ def multimodal_image_dhash_neardup(spark, sf_dir):
 
     hashes = materialize(
         image_dhash(synthesize_dedup_images(spark, sf_dir)),
-        "multimodal_image_dhash_neardup hashes: bands and both join sides",
+        "multimodal_image_dhash_neardup hashes: both band-join sides",
     )
-    bands = hashes.select(
-        "doc_id",
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.expr(
-                            f"shiftrightunsigned(dhash, {16 * b}) & 65535"
-                        ).alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "dhash", "bk.b", "bk.band_val")
-    a = bands.select(
-        F.col("b"),
-        F.col("band_val"),
-        F.col("doc_id").alias("doc_a"),
-        F.col("dhash").alias("ha"),
-    )
-    x = bands.select(
-        F.col("b"),
-        F.col("band_val"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("dhash").alias("hb"),
-    )
-    return (
-        a.join(x, ["b", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.expr("bit_count(ha ^ hb)").alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= 3)
-        .orderBy("doc_a", "doc_b")
-    )
+    return hamming64_pairs(hashes, "dhash")
 
 
 @register(
@@ -257,39 +225,9 @@ def multimodal_audio_fp_neardup(spark, sf_dir):
 
     hashes = materialize(
         audio_fingerprints(synthesize_dedup_audio(spark, sf_dir)),
-        "multimodal_audio_fp_neardup fingerprints: bands and both join sides",
+        "multimodal_audio_fp_neardup fingerprints: both band-join sides",
     )
-    bands = hashes.select(
-        "doc_id",
-        "afp",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.expr(
-                            f"shiftrightunsigned(afp, {16 * b}) & 65535"
-                        ).alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "afp", "bk.b", "bk.band_val")
-    a = bands.select(
-        "b", "band_val", F.col("doc_id").alias("doc_a"), F.col("afp").alias("ha")
-    )
-    x = bands.select(
-        "b", "band_val", F.col("doc_id").alias("doc_b"), F.col("afp").alias("hb")
-    )
-    return (
-        a.join(x, ["b", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.expr("bit_count(ha ^ hb)").alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= 3)
-        .orderBy("doc_a", "doc_b")
-    )
+    return hamming64_pairs(hashes, "afp")
 
 
 @register(
@@ -319,42 +257,6 @@ def multimodal_image_phash_neardup(spark, sf_dir):
 
     hashes = materialize(
         image_phash(synthesize_dedup_images(spark, sf_dir)),
-        "multimodal_image_phash_neardup hashes: bands and both join sides",
+        "multimodal_image_phash_neardup hashes: both band-join sides",
     )
-    bands = hashes.select(
-        "doc_id",
-        "phash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.expr(
-                            f"shiftrightunsigned(phash, {16 * b}) & 65535"
-                        ).alias("band_val"),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "phash", "bk.b", "bk.band_val")
-    a = bands.select(
-        F.col("b"),
-        F.col("band_val"),
-        F.col("doc_id").alias("doc_a"),
-        F.col("phash").alias("ha"),
-    )
-    x = bands.select(
-        F.col("b"),
-        F.col("band_val"),
-        F.col("doc_id").alias("doc_b"),
-        F.col("phash").alias("hb"),
-    )
-    return (
-        a.join(x, ["b", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.expr("bit_count(ha ^ hb)").alias("hamming"))
-        .distinct()
-        .filter(F.col("hamming") <= 3)
-        .orderBy("doc_a", "doc_b")
-    )
+    return hamming64_pairs(hashes, "phash")

@@ -2025,7 +2025,7 @@ def graph_kcore_peel_profile(spark, sf_dir):
     return local_frame(
         spark,
         "round bigint, nodes_remaining bigint, converged boolean",
-        [list(range(1, _KCORE_ROUNDS + 1)), counts, [converged] * _KCORE_ROUNDS],
+        [(r, c, converged) for r, c in enumerate(counts, 1)],
     ).orderBy("round")
 
 
@@ -2247,7 +2247,10 @@ def audit_observe_single_pass(spark, sf_dir):
     )
     observed.write.format("noop").mode("overwrite").save()
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
+        "n_rows bigint, total_cents bigint, null_priorities bigint,"
+        " nonpositive_totals bigint, n_urgent bigint",
         [
             (
                 m["n_rows"],
@@ -2257,8 +2260,6 @@ def audit_observe_single_pass(spark, sf_dir):
                 m["n_urgent"],
             )
         ],
-        "n_rows bigint, total_cents bigint, null_priorities bigint,"
-        " nonpositive_totals bigint, n_urgent bigint",
     )
 
 

@@ -151,7 +151,7 @@ def stream_cdc_snapshot_latest(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
-    from ..io import table
+    from ..io import local_frame, table
     from ..streaming.events_stream import stream_cdc_merge_apply
 
     root = tempfile.mkdtemp(prefix="cdc_snapshot_")
@@ -168,7 +168,7 @@ def stream_cdc_snapshot_latest(spark, sf_dir):
             F.round("value", 2).alias("value"),
         )
         # materialize before the temp dir disappears
-        out = spark.createDataFrame(out.collect(), out.schema)
+        out = local_frame(spark, out.schema.simpleString(), out.collect())
         return out
     finally:
         shutil.rmtree(root, ignore_errors=True)

@@ -13,7 +13,7 @@ import math
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import materialize, table
+from ..io import local_frame, materialize, table
 from ..registry import register
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
@@ -3646,9 +3646,10 @@ def text_ndcg_retrieval_eval(spark, sf_dir):
         term = F.when(padded.like(f"% {t} %"), 1).otherwise(0)
         rel_expr = term if rel_expr is None else rel_expr + term
     rel = d.select("doc_id", rel_expr.cast("long").alias("rel"))
-    disc = spark.createDataFrame(
-        [(i, round(1e9 / math.log2(i + 1.0))) for i in range(1, _NDCG_K + 1)],
+    disc = local_frame(
+        spark,
         "rk int, disc_nano long",
+        [(i, round(1e9 / math.log2(i + 1.0))) for i in range(1, _NDCG_K + 1)],
     )
     dcg = (
         ranked.join(rel, "doc_id")

@@ -13,7 +13,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import table
+from ..io import local_frame, table
 from ..registry import register
 
 
@@ -210,7 +210,7 @@ def window_ntile_quartiles(spark, sf_dir):
     for r in hist:
         offs.append((r["bucket"], acc))
         acc += r["cnt"]
-    offsets = spark.createDataFrame(offs, "bucket int, offset long")
+    offsets = local_frame(spark, "bucket int, offset long", offs)
 
     # pass 2: local rank within each bucket (parallel window) + offset =
     # exact global rank; then ntile's size rule in closed form:

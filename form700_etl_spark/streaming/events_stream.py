@@ -853,7 +853,7 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     update per group is that group's final count), NOT input - dropped —
     the two are reconciled by the oracle instead.
     """
-    from ..io import table
+    from ..io import local_frame, table
 
     events = table(spark, sf_dir, "events").select("event_id", "event_type", "ts")
     recent = F.lit(LATE_AUDIT_SPLIT_RECENT).cast("timestamp")
@@ -900,7 +900,8 @@ def stream_late_data_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()[0]["s"]
         or 0
     )
-    return spark.createDataFrame(
-        [(input_rows, int(accepted), dropped_groups)],
+    return local_frame(
+        spark,
         "input_rows bigint, accepted_rows bigint, dropped_groups bigint",
+        [(input_rows, int(accepted), dropped_groups)],
     )

@@ -231,12 +231,40 @@ def test_lsh_multiprobe_recall_against_exact(spark, sf_dir):
 
 
 def test_multimodal_frame_digests_deterministic(spark, sf_dir):
-    from form700_etl_spark.operators.multimodal import sample_frames, synthesize_media
+    """frame_sha and resized_sha are stable across runs and equal the
+    sha256 digests recomputed locally from each document's text: frames
+    of every video doc (doc_id % 3 == 2), one per index 0..doc_id % 4,
+    and one resize row per image doc (doc_id % 3 == 0)."""
+    import hashlib
+
+    from form700_etl_spark.io import table
+    from form700_etl_spark.operators.multimodal import (
+        resize_media,
+        sample_frames,
+        synthesize_media,
+    )
 
     media = synthesize_media(spark, sf_dir)
     f1 = {(r.doc_id, r.frame_index): r.frame_sha for r in sample_frames(media).collect()}
     f2 = {(r.doc_id, r.frame_index): r.frame_sha for r in sample_frames(media).collect()}
     assert f1 == f2 and len(f1) > 0
+
+    def sha16(data: bytes) -> str:
+        return hashlib.sha256(data).hexdigest()[:16]
+
+    texts = dict(table(spark, sf_dir, "documents").select("doc_id", "text").collect())
+    assert f1 == {
+        (d, idx): sha16(t.encode() + str(idx).encode())
+        for d, t in texts.items()
+        if d % 3 == 2
+        for idx in range(1 + d % 4)
+    }
+    resized = resize_media(media).collect()
+    assert sorted(r.doc_id for r in resized) == sorted(d for d in texts if d % 3 == 0)
+    for r in resized:
+        assert r.resized_sha == sha16(
+            texts[r.doc_id].encode() + f"{r.out_width}x{r.out_height}".encode()
+        ), r
 
 
 def test_redact_text_masks_pii_shapes(spark):

@@ -21,6 +21,12 @@ from form700_etl_spark.registry import all_queries
 QUERIES = all_queries()
 
 
+# Every Python plan node: MapInPandas, MapInArrow / PythonMapInArrow,
+# FlatMap(Co)GroupsInPandas, ArrowEvalPython, BatchEvalPython and the
+# other Arrow*Python nodes (ArrowAggregatePython, ArrowWindowPython).
+_PYTHON_NODE = re.compile(r"\b(?:\w*InPandas\w*|\w*InArrow|\w*EvalPython|Arrow\w*Python)\b")
+
+
 def plan_of(spark, sf_dir, name: str) -> str:
     df = QUERIES[name].fn(spark, sf_dir)
     return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
@@ -130,10 +136,10 @@ def test_deterministic_sample_is_scan_side(spark, sf_dir):
     ["q1_pricing_summary", "q6_forecast_revenue", "text_quality_score"],
 )
 def test_no_python_udfs_in_builtin_paths(spark, sf_dir, name):
-    """These queries advertise pure-JVM execution; a BatchEvalPython /
-    ArrowEvalPython node would mean a Python UDF crept in."""
+    """These queries advertise pure-JVM execution; any Python node
+    (a Python UDF, a mapInPandas) would mean Python crept in."""
     plan = plan_of(spark, sf_dir, name)
-    assert "EvalPython" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
 
 
 def test_partitioned_write_enables_partition_pruning(spark, sf_dir, tmp_path):
@@ -407,17 +413,26 @@ def test_inverted_index_topk_is_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
 
 
-# Queries whose plans INTENTIONALLY contain Python-eval or nested-loop
-# nodes: Arrow/pandas operators (multimodal, UDAF, scalar pandas_udf,
-# as-of merge), and 1-row broadcast "JVM variable" cross joins
-# (bloom bitmap, BPE top-pair, combine-style aggregates).
+# The queries whose plans INTENTIONALLY contain a Python node, each with
+# the one-line reason it stays Python.  The list is exact: a query with
+# a Python node that is not listed fails the screen, and so does a
+# listed query without one.
 _PYTHON_OK = {
-    "multimodal_feature_extract",
-    "multimodal_frame_sample",
-    "multimodal_resize_audit",
-    "pandas_udaf_cents_sum",
-    "pandas_udf_scalar_normalize",
-    "embedding_pca_project",  # mapInPandas Gram partials + projection
+    "ann_cosine_topk_matmul": "numpy matmul + partial top-k per Arrow batch is the operator",
+    "ann_ivf_topk": "numpy exact-cosine rerank of the probed buckets",
+    "ann_pq_topk": "numpy PQ encode and exact-cosine rerank of the shortlist",
+    "dedup_cdc_chunks": "gear-hash content-defined chunking walks each payload's bytes",
+    "embedding_pca_project": "numpy Gram partials and projection per Arrow batch",
+    "multimodal_audio_decode": "codec-true WAV synthesis and decode",
+    "multimodal_audio_fp_neardup": "codec-true WAV decode into the energy fingerprint",
+    "multimodal_image_decode": "codec-true BMP synthesis and decode",
+    "multimodal_image_dhash_neardup": "codec-true BMP decode into the dHash",
+    "multimodal_image_phash_neardup": "codec-true BMP decode into the DCT pHash",
+    "multimodal_video_frames_real": "codec-true y4m synthesis and frame parse",
+    "pandas_udaf_cents_sum": "the GROUPED_AGG pandas_udf surface is what the query shows",
+    "pandas_udaf_weighted_avg": "the GROUPED_AGG pandas_udf surface is what the query shows",
+    "pandas_udf_scalar_normalize": "the scalar pandas_udf surface is what the query shows",
+    "text_zlib_compression_quality": "stdlib zlib DEFLATE has no Spark SQL analog",
 }
 
 
@@ -471,17 +486,23 @@ def registry_plan_sweep(spark, sf_dir):
 
 
 def test_registry_wide_no_accidental_python_or_cartesian(registry_plan_sweep):
-    """EVERY registered query's analyzed plan is screened: Python-eval
-    nodes only in the declared Arrow-operator set, and no
-    CartesianProduct anywhere (1-row combine crossJoins lower to
-    broadcast nested loop, which is fine; a true cartesian is always a
-    bug)."""
+    """EVERY registered query's plans are screened: Python nodes, in the
+    final plan or in any materialized subplan, exactly in the declared
+    _PYTHON_OK set, and no CartesianProduct anywhere (1-row combine
+    crossJoins lower to broadcast nested loop, which is fine; a true
+    cartesian is always a bug)."""
     plans, streaming_skips, other_skips = registry_plan_sweep
+    python = {}
     for name, p in plans.items():
-        plan = p["formatted"]
-        if name not in _PYTHON_OK:
-            assert "EvalPython" not in plan, f"{name}: unexpected Python node"
-        assert "CartesianProduct" not in plan, f"{name}: cartesian product"
+        nodes = {n for plan in [p["formatted"], *p["executed"]] for n in _PYTHON_NODE.findall(plan)}
+        if nodes:
+            python[name] = sorted(nodes)
+        assert "CartesianProduct" not in p["formatted"], f"{name}: cartesian product"
+    unexpected = {n: v for n, v in python.items() if n not in _PYTHON_OK}
+    assert not unexpected, f"unexpected Python nodes: {unexpected}"
+    assert set(_PYTHON_OK) <= set(python), (
+        f"listed but no Python node: {sorted(set(_PYTHON_OK) - set(python))}"
+    )
     # the screen must actually cover the registry, not silently skip it:
     # streaming queries are structurally excluded (they execute on
     # build), anything else skipping is capped and named.
@@ -620,7 +641,7 @@ def test_feature_hash_is_pure_scan_side(spark, sf_dir):
     assert tree_nodes(plan, "Window") == 0, plan
     assert "Join" not in plan, plan
     assert "HashAggregate" not in plan, plan
-    assert "EvalPython" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
 
 
 def test_quantile_bins_window_runs_over_value_grain(spark, sf_dir):
@@ -735,7 +756,7 @@ def test_config_pipeline_compiles_to_single_scan_plan(spark, sf_dir):
     # a bare "Window" substring would miscount)
     assert plan.count("+- Window (") == 2, plan
     assert "WindowGroupLimit" in plan, plan  # rank<=1 pushed below sort
-    assert "EvalPython" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
     assert "CartesianProduct" not in plan, plan
 
 
@@ -1150,7 +1171,7 @@ def test_knn_eval_broadcasts_capped_query_side_corpus_never_sorted(spark, sf_dir
     assert tree_nodes(plan, "BroadcastNestedLoopJoin") >= 1, plan
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    assert "EvalPython" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
 
 
 def test_schedule_pipeline_single_agg_broadcast_enrichment(spark, sf_dir):
@@ -1167,7 +1188,7 @@ def test_schedule_pipeline_single_agg_broadcast_enrichment(spark, sf_dir):
     # nodes + 2 for the pruned count columns; more means a schedule
     # array is being re-aggregated per consumer
     assert tree_nodes(plan, "HashAggregate") <= 4, plan
-    assert "EvalPython" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
 
 
 def test_filing_synthesis_shuffle_is_sized_by_aqe(spark, sf_dir):
@@ -1218,7 +1239,7 @@ def test_prefix_filter_ssjoin_all_hash_no_python(spark, sf_dir):
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
-    assert "EvalPython" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
 
 
 def test_bpe_heldout_iterations_checkpoint_and_topk_partial(spark, sf_dir):
@@ -1284,7 +1305,7 @@ def test_tfidf_cosine_pairs_no_quadratic_shapes(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "text_tfidf_cosine_pairs")
     assert "CartesianProduct" not in plan, plan
     assert "SortMergeJoin" not in plan, plan
-    assert "EvalPython" not in plan, plan
+    assert not _PYTHON_NODE.search(plan), plan
 
 
 def test_ann_ivf_probe_is_joinless_windowed_scan(spark, sf_dir):
