@@ -26,9 +26,10 @@ The single path, one function per step:
   match threshold is the usual (1/b)^(1/r) S-curve.
 - ``verify_jaccard``: exact scores for candidate pairs, re-shingling
   only the candidate docs — cost scales with candidate count, not n².
-- ``hamming64_pairs``: all pairs of 64-bit perceptual hashes within
-  Hamming ``HAMMING_RADIUS`` (the multimodal dHash/pHash/audio paths),
-  by exact match on one of four 16-bit bands, then ``bit_count`` verify.
+- ``hamming64_bands`` / ``hamming64_pairs``: all pairs of 64-bit
+  hashes within Hamming ``HAMMING_RADIUS`` (the SimHash and multimodal
+  dHash/pHash/audio paths, and the SimHash stream's state keys), by
+  exact match on one of four 16-bit bands, then ``bit_count`` verify.
 - ``connected_components``: pairs -> clusters (min doc_id canonical).
 
 Constants: ``N_HASHES`` = 12 permutations in ``N_BANDS`` = 4 bands of
@@ -296,44 +297,54 @@ def verify_jaccard(pairs: DataFrame, documents: DataFrame,
     return _with_sizes(common, shingles).select(*cols)
 
 
+def _band16(hash_expr: str, b: int) -> Column:
+    return F.expr(f"shiftrightunsigned({hash_expr}, {16 * b}) & 65535")
+
+
+def hamming64_bands(hash_expr: str) -> Column:
+    """The 4 16-bit bands of the 64-bit SQL expression ``hash_expr``
+    exploded to one (``b``, ``band_val``) struct per band.  By
+    pigeonhole a pair within Hamming ``HAMMING_RADIUS`` agrees exactly
+    on at least one band, so a join on the band is complete."""
+    return F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(b).alias("b"), _band16(hash_expr, b).alias("band_val"))
+                for b in range(4)
+            ]
+        )
+    )
+
+
 def hamming64_pairs(hashes: DataFrame, hash_col: str) -> DataFrame:
-    """(doc_a, doc_b, hamming): every pair of ``hashes`` rows (doc_id,
-    64-bit ``hash_col``) within Hamming ``HAMMING_RADIUS``, doc_a <
-    doc_b, sorted.  The hash splits into 4 16-bit bands; by pigeonhole
-    a pair within the radius agrees exactly on at least one, so the
-    band self-join is complete, and ``bit_count(xor)`` verifies each
-    candidate.  ``hashes`` feeds both join sides: materialize it first
-    when it is expensive."""
-    bands = hashes.select(
-        "doc_id",
-        hash_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("b"),
-                        F.expr(f"shiftrightunsigned({hash_col}, {16 * b}) & 65535").alias(
-                            "band_val"
-                        ),
-                    )
-                    for b in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", hash_col, "bk.b", "bk.band_val")
+    """(doc1, doc2, hamming): every pair of ``hashes`` rows (doc_id,
+    64-bit ``hash_col``) within Hamming ``HAMMING_RADIUS``, doc1 <
+    doc2.  The band self-join (``hamming64_bands``) finds the
+    candidates and ``bit_count(xor)`` verifies each.  A pair sharing
+    several bands is kept only at its lowest shared band (every lower
+    band differs), a filter in place of a DISTINCT exchange.
+    ``hashes`` feeds both join sides: materialize it first when it is
+    expensive."""
+    bands = hashes.select("doc_id", hash_col, hamming64_bands(hash_col).alias("bk")).select(
+        "doc_id", hash_col, "bk.b", "bk.band_val"
+    )
     a = bands.select(
-        "b", "band_val", F.col("doc_id").alias("doc_a"), F.col(hash_col).alias("ha")
+        "b", "band_val", F.col("doc_id").alias("doc1"), F.col(hash_col).alias("ha")
     )
     x = bands.select(
-        "b", "band_val", F.col("doc_id").alias("doc_b"), F.col(hash_col).alias("hb")
+        "b", "band_val", F.col("doc_id").alias("doc2"), F.col(hash_col).alias("hb")
     )
+    lowest = F.when(F.col("b") == 0, F.lit(True))
+    lower_differ = None
+    for b in range(1, 4):
+        d = _band16("ha", b - 1) != _band16("hb", b - 1)
+        lower_differ = d if lower_differ is None else lower_differ & d
+        lowest = lowest.when(F.col("b") == b, lower_differ)
     return (
         a.join(x, ["b", "band_val"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", F.expr("bit_count(ha ^ hb)").alias("hamming"))
-        .distinct()
+        .filter((F.col("doc1") < F.col("doc2")) & lowest)
+        .select("doc1", "doc2", F.expr("bit_count(ha ^ hb)").alias("hamming"))
         .filter(F.col("hamming") <= HAMMING_RADIUS)
-        .orderBy("doc_a", "doc_b")
     )
 
 

@@ -1,4 +1,5 @@
-"""Similarity-search operator library (build plan M5).
+"""Similarity-search operator library (build plan M5): the one copy of
+every ANN step.
 
 Cosine math is double-precision end to end with a sequential fold so
 results are reproducible bit-for-bit across engines (the oracle
@@ -11,20 +12,58 @@ computes partial similarities and the top-k collapses via
 TakeOrderedAndProject / window-per-query.  Bucketed variants (sign-bit
 LSH here, learned IVF centroids in production) turn the O(Q·N) scan
 into O(Q·N/buckets) with the same plan shape.
+
+Queries are (query_id, qvec [, bucket]) frames and the corpus is
+(neighbor_id, nvec [, nbucket]).  The single path, one function per
+step:
+
+- ``vec_double`` / ``dot`` / ``cosine``: the exact JVM similarity.
+- ``signbit_bucket``: hyperplane-sign LSH bucket of ``embedding``.
+- ``rank_topk``: the per-query top-k window (cosine desc, neighbor_id)
+  every search ends with.
+- ``topk_neighbors`` (exact, optionally bucket-joined),
+  ``lsh_multiprobe_topk`` and ``topk_neighbors_matmul`` (numpy
+  partial top-k per Arrow batch).
+- ``kmeans_centroids`` / ``assign_clusters`` / ``ivf_topk``: IVF.
+- ``pq_train_codebooks`` / ``pq_encode`` / ``pq_topk``: PQ.
+
+The numpy kernels behind them are one copy each: ``_sq_dists`` (squared
+distance to every centroid, up to the row's own norm), ``_lloyd``,
+``_sample_matrix`` (the deterministic training sample) and
+``_block_topk`` (a block's partial top-k).
+
+Constants: ``COSINE_DECIMALS`` = 6 the rounding of every cosine,
+``SIGNBIT_BITS`` = 8 the default bucket width, ``PROBE_RADIUS`` = 3 the
+multi-probe Hamming radius, ``TRAIN_ROWS`` = 16 384 the training-sample
+bound, ``IVF_ITERS`` = 8 and ``PQ_ITERS`` = 5 Lloyd iterations,
+``PQ_SUBSPACES`` = 8 and ``PQ_MAX_QUERIES`` = 1024.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..io import ensure_parallelism, materialize
 
+COSINE_DECIMALS = 6
+SIGNBIT_BITS = 8
+PROBE_RADIUS = 3
+TRAIN_ROWS = 16_384
+IVF_ITERS = 8
+PQ_SUBSPACES = 8
+PQ_ITERS = 5
+PQ_MAX_QUERIES = 1024
 
-def vec_double(col: str | Column = "embedding") -> Column:
-    """Promote a float32 vector to double BEFORE any arithmetic."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.transform(c, lambda x: x.cast("double"))
+_CAND_COLS = ["query_id", "neighbor_id", "cosine"]
+_CAND_SCHEMA = "query_id long, neighbor_id long, cosine double"
+
+
+def vec_double() -> Column:
+    """Promote the float32 ``embedding`` to double BEFORE any arithmetic."""
+    return F.transform(F.col("embedding"), lambda x: x.cast("double"))
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -32,14 +71,15 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
 
 
-def cosine(a: Column, b: Column, round_to: int = 6) -> Column:
-    return F.round(dot(a, b) / F.sqrt(dot(a, a)) / F.sqrt(dot(b, b)), round_to)
+def cosine(a: Column, b: Column) -> Column:
+    return F.round(dot(a, b) / F.sqrt(dot(a, a)) / F.sqrt(dot(b, b)), COSINE_DECIMALS)
 
 
-def signbit_bucket(col: str | Column = "embedding", bits: int = 8) -> Column:
+def signbit_bucket(bits: int = SIGNBIT_BITS) -> Column:
     """Hyperplane-sign LSH bucket id from the signs of the first
-    ``bits`` dimensions (stand-in for random projections / IVF)."""
-    c = F.col(col) if isinstance(col, str) else col
+    ``bits`` dimensions of ``embedding`` (stand-in for random
+    projections / IVF)."""
+    c = F.col("embedding")
     bucket = None
     for i in range(bits):
         term = F.when(c.getItem(i) >= 0, F.lit(1 << i)).otherwise(F.lit(0))
@@ -47,11 +87,70 @@ def signbit_bucket(col: str | Column = "embedding", bits: int = 8) -> Column:
     return bucket.cast("int")
 
 
-def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int,
-                        bits: int = 8, radius: int = 3) -> DataFrame:
+def rank_topk(sims: DataFrame, k: int) -> DataFrame:
+    """Each query's ``k`` best rows of ``sims`` by ``cosine``, ties to
+    the lower ``neighbor_id``, ranked 1..k in the int column ``rk``."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
+    return sims.withColumn("rk", F.row_number().over(w).cast("int")).filter(F.col("rk") <= k)
+
+
+def _sq_dists(x, cm):
+    """||x - c||^2 - ||x||^2 for every row of ``x`` and centroid of
+    ``cm``: the row's own norm is constant per row, so the argmin over
+    centroids needs only these columns."""
+    return -2.0 * (x @ cm.T) + (cm * cm).sum(axis=1)[None, :]
+
+
+def _lloyd(x, cm, iters: int):
+    """``iters`` Lloyd rounds over ``x`` updating ``cm`` in place; an
+    empty cluster keeps its centroid."""
+    for _ in range(iters):
+        labels = np.argmin(_sq_dists(x, cm), axis=1)
+        for ci in range(len(cm)):
+            members = x[labels == ci]
+            if len(members):
+                cm[ci] = members.mean(axis=0)
+    return cm
+
+
+def _sample_matrix(corpus: DataFrame):
+    """The training sample: at most ``TRAIN_ROWS`` corpus vectors in
+    hashed-neighbor_id order, collected in ONE distributed job.  The
+    hash order makes the sample reproducible and unbiased by storage
+    order, and bounds driver memory at TRAIN_ROWS x dim floats whatever
+    the corpus size (faiss trains its quantizers the same way)."""
+    rows = (
+        corpus.select("nvec")
+        .orderBy(F.xxhash64(F.col("neighbor_id")))
+        .limit(TRAIN_ROWS)
+        .collect()
+    )
+    return np.array([r["nvec"] for r in rows], dtype=np.float64)
+
+
+def _block_topk(vecs, nids, qids, qn, k: int) -> list:
+    """(query_id, neighbor_id, cosine) rows: each query's ``k`` + 1 best
+    matches within one corpus block (``vecs`` with ids ``nids``) minus
+    the query itself, so at least ``k`` survive.  ``qn`` holds the
+    unit-norm query rows of ``qids``."""
+    n_mat = np.array(list(vecs), dtype=np.float64)
+    n_mat = n_mat / np.linalg.norm(n_mat, axis=1, keepdims=True)
+    sims = n_mat @ qn.T  # (block rows, queries)
+    out = []
+    for qi, qid in enumerate(qids):
+        col = sims[:, qi]
+        take = min(k + 1, len(col))  # +1 in case self is in the block
+        for j in np.argpartition(-col, take - 1)[:take]:
+            nid = int(nids[j])
+            if nid != qid:
+                out.append((int(qid), nid, round(float(col[j]), COSINE_DECIMALS)))
+    return out
+
+
+def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
     """Multi-probe sign-bit LSH top-k (Lv et al., "Multi-probe LSH",
     VLDB 2007): each query probes every bucket within Hamming distance
-    ``radius`` of its own, then exact-reranks inside the probed set.
+    ``PROBE_RADIUS`` of its own, then exact-reranks inside the probed set.
 
     The probe expansion is an explode of the (C(bits,0..radius)) XOR
     masks on the BROADCAST query side — the corpus is still reached by
@@ -65,12 +164,12 @@ def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int,
 
     Fixture calibration (sf0.1, 2000x64, true-neighbor cosine ~0.37 =>
     per-bit agreement ~0.62): radius 0/1/2/3 measures recall 0.0/0.125/
-    0.392/0.650 at scan fractions 0.004/0.035/0.146/0.363 — radius 3 is
-    the shipped default (the single-probe r<=12 variant returned zero
-    true neighbors on this weakly-separated fixture and was a user
-    trap).  ``queries`` must carry a ``bucket`` column; ``corpus`` an
-    ``nbucket`` column (as produced by ``signbit_bucket``)."""
-    masks = [m for m in range(1 << bits) if bin(m).count("1") <= radius]
+    0.392/0.650 at scan fractions 0.004/0.035/0.146/0.363 — hence radius
+    3 (the single-probe r<=12 variant returned zero true neighbors on
+    this weakly-separated fixture and was a user trap).  ``queries``
+    must carry a ``bucket`` column; ``corpus`` an ``nbucket`` column
+    (as produced by ``signbit_bucket()``)."""
+    masks = [m for m in range(1 << SIGNBIT_BITS) if bin(m).count("1") <= PROBE_RADIUS]
     probes = queries.withColumn(
         "__mask", F.explode(F.array(*[F.lit(m) for m in masks]))
     ).withColumn("__probe", F.col("bucket").bitwiseXOR(F.col("__mask")))
@@ -80,122 +179,64 @@ def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int,
     )
     joined = F.broadcast(probes).join(corpus, cond)
     sims = joined.withColumn("cosine", cosine(F.col("qvec"), F.col("nvec")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .drop("qvec", "nvec", "nbucket", "__mask", "__probe")
-    )
+    return rank_topk(sims, k).drop("qvec", "nvec", "nbucket", "__mask", "__probe")
 
 
-def kmeans_centroids(corpus: DataFrame, n_centroids: int = 8, iters: int = 2,
-                     id_col: str = "neighbor_id", vec_col: str = "nvec",
-                     train_sample: int | None = 16_384) -> list:
+def kmeans_centroids(corpus: DataFrame, n_centroids: int) -> list:
     """Deterministic Lloyd's k-means for IVF training.  Returns
     driver-side [(cluster_id, [float,...])] — centroids are tiny by
-    construction.  Init = the ``n_centroids`` lowest-id vectors.
+    construction.  The first seed is the lowest-id vector.
 
-    Default path (``train_sample`` set): train on a deterministic
-    hash-ordered sample of at most ``train_sample`` vectors, collected
-    once and iterated in numpy on the driver.  This is how IVF indexes
-    are actually trained over huge corpora (faiss trains its
-    quantizer on a subsample, not the full set): driver memory is
-    bounded at sample×dim floats regardless of corpus size, the whole
-    training costs ONE distributed job (a TakeOrdered sample), and
-    Lloyd iterations are then free — vs. two distributed passes per
-    iteration.  The hash order (xxhash64 of the id) makes the sample
-    reproducible and unbiased by storage order.
-
-    ``train_sample=None`` keeps the fully-distributed loop: assign =
-    Arrow-batched argmin pass, update = per-dimension mean via
-    posexplode + groupBy; one broadcast + one (cluster, dim)-keyed
-    aggregation per iteration, only K×dim floats ever on the driver.
-    Use it when the training set itself must exceed driver memory —
-    rarely right for IVF, where sample quality saturates long before
-    that."""
-    import numpy as np
-
-    init_rows = corpus.orderBy(id_col).limit(n_centroids).collect()
-    init = [(i, [float(x) for x in r[vec_col]]) for i, r in enumerate(init_rows)]
-    if train_sample is not None:
-        sample = (
-            corpus.select(vec_col)
-            .orderBy(F.xxhash64(F.col(id_col)))
-            .limit(train_sample)
-            .collect()
+    Trains on ``_sample_matrix``'s bounded sample, iterated
+    ``IVF_ITERS`` times in numpy on the driver: the whole training costs
+    one distributed job for the seeds and one for the sample, and Lloyd
+    iterations are then free."""
+    init_rows = corpus.orderBy("neighbor_id").limit(n_centroids).collect()
+    init = [(i, [float(x) for x in r["nvec"]]) for i, r in enumerate(init_rows)]
+    mat = _sample_matrix(corpus)
+    # farthest-point init over the sample (deterministic k-means++
+    # analogue): start from the lowest-id seed, then greedily take
+    # the sample vector farthest from the chosen set.  Spreads the
+    # seeds across the data instead of the lowest-id clump — on
+    # clusterable corpora this is what recovers the clusters;
+    # on the isotropic-noise fixture it is measured neutral
+    # (0.605 -> 0.615 recall), see ANN_EVAL.json crossover notes.
+    cm = np.array([init[0][1]], dtype=np.float64)
+    for j in range(n_centroids - 1):
+        d = np.min(
+            [((mat - c) ** 2).sum(axis=1) for c in cm], axis=0
         )
-        mat = np.array([r[vec_col] for r in sample], dtype=np.float64)
-        # farthest-point init over the sample (deterministic k-means++
-        # analogue): start from the lowest-id seed, then greedily take
-        # the sample vector farthest from the chosen set.  Spreads the
-        # seeds across the data instead of the lowest-id clump — on
-        # clusterable corpora this is what recovers the clusters;
-        # on the isotropic-noise fixture it is measured neutral
-        # (0.605 -> 0.615 recall), see ANN_EVAL.json crossover notes.
-        cm = np.array([init[0][1]], dtype=np.float64)
-        for j in range(n_centroids - 1):
-            d = np.min(
-                [((mat - c) ** 2).sum(axis=1) for c in cm], axis=0
-            )
-            if float(d.max()) == 0.0:
-                # fewer distinct sample vectors than centroids: argmax
-                # over all-zero distances would re-pick index 0 forever,
-                # yielding duplicate centroids and permanently empty
-                # clusters (ADVICE r13) — pad from the lowest-id init
-                # rows instead and stop seeding.
-                # dedupe the pad against the chosen set AND against
-                # itself — duplicate vectors among init[1:] would
-                # otherwise still yield duplicate centroids, the exact
-                # condition this branch exists to avoid (ADVICE r14)
-                pad: list = []
-                seen = {tuple(np.asarray(c).tolist()) for c in cm}
-                for _, v in init[1:]:
-                    key = tuple(np.asarray(v, dtype=np.float64).tolist())
-                    if key not in seen:
-                        seen.add(key)
-                        pad.append(v)
-                need = n_centroids - 1 - j
-                cm = np.vstack([cm, np.array(pad[:need], dtype=np.float64)]) if pad else cm
-                break
-            cm = np.vstack([cm, mat[int(np.argmax(d))]])
-        for _ in range(iters):
-            d = -2.0 * (mat @ cm.T) + (cm * cm).sum(axis=1)[None, :]
-            labels = np.argmin(d, axis=1)
-            for ci in range(len(cm)):
-                members = mat[labels == ci]
-                if len(members):  # empty cluster keeps its centroid
-                    cm[ci] = members.mean(axis=0)
-        return [(i, [float(x) for x in cm[i]]) for i in range(len(cm))]
-    centroids = init
-    for _ in range(iters):
-        assigned = assign_clusters(corpus, centroids, vec_col=vec_col)
-        dims = assigned.select(
-            "cluster", F.posexplode(F.col(vec_col)).alias("pos", "val")
-        )
-        means = (
-            dims.groupBy("cluster", "pos")
-            .agg(F.avg("val").alias("m"))
-            .groupBy("cluster")
-            .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("pm"))
-            .select("cluster", F.transform("pm", lambda s: s.getField("m")).alias("vec"))
-        )
-        centroids = [
-            (int(r.cluster), [float(x) for x in r.vec]) for r in means.collect()
-        ]
-        centroids.sort()
-    return centroids
+        if float(d.max()) == 0.0:
+            # fewer distinct sample vectors than centroids: argmax
+            # over all-zero distances would re-pick index 0 forever,
+            # yielding duplicate centroids and permanently empty
+            # clusters (ADVICE r13) — pad from the lowest-id init
+            # rows instead and stop seeding.
+            # dedupe the pad against the chosen set AND against
+            # itself — duplicate vectors among init[1:] would
+            # otherwise still yield duplicate centroids, the exact
+            # condition this branch exists to avoid (ADVICE r14)
+            pad: list = []
+            seen = {tuple(np.asarray(c).tolist()) for c in cm}
+            for _, v in init[1:]:
+                key = tuple(np.asarray(v, dtype=np.float64).tolist())
+                if key not in seen:
+                    seen.add(key)
+                    pad.append(v)
+            need = n_centroids - 1 - j
+            cm = np.vstack([cm, np.array(pad[:need], dtype=np.float64)]) if pad else cm
+            break
+        cm = np.vstack([cm, mat[int(np.argmax(d))]])
+    cm = _lloyd(mat, cm, IVF_ITERS)
+    return [(i, [float(x) for x in cm[i]]) for i in range(len(cm))]
 
 
-def assign_clusters(df: DataFrame, centroids: list, vec_col: str = "nvec") -> DataFrame:
-    """Nearest-centroid assignment via an Arrow-batched numpy pass (no
-    join, no shuffle; centroids broadcast).  A folded Column-expression
-    variant works too but K×dim literal trees blow up codegen — the
-    vectorized distance matrix is the practical IVF assignment."""
-    import numpy as np
-    import pandas as pd
-
+def assign_clusters(df: DataFrame, centroids: list) -> DataFrame:
+    """Nearest-centroid ``cluster`` of each ``nvec`` via an
+    Arrow-batched numpy pass (no join, no shuffle; centroids broadcast).
+    A folded Column-expression variant works too but K×dim literal trees
+    blow up codegen — the vectorized distance matrix is the practical
+    IVF assignment."""
     c_ids = [cid for cid, _ in centroids]
     c_mat = [vec for _, vec in centroids]
     spark = df.sparkSession
@@ -208,16 +249,15 @@ def assign_clusters(df: DataFrame, centroids: list, vec_col: str = "nvec") -> Da
         cm = np.array(mat, dtype=np.float64)  # (K, dim)
         id_arr = np.array(ids)
         for pdf in batches:
-            v = np.array(list(pdf[vec_col]), dtype=np.float64)  # (n, dim)
-            # ||v - c||^2 = ||v||^2 - 2 v.c + ||c||^2 ; argmin over c
-            d = -2.0 * (v @ cm.T) + (cm * cm).sum(axis=1)[None, :]
+            v = np.array(list(pdf["nvec"]), dtype=np.float64)  # (n, dim)
+            d = _sq_dists(v, cm)
             yield pdf.assign(cluster=id_arr[np.argmin(d, axis=1)].astype("int32"))
 
     return df.mapInPandas(assign, schema=out_schema)
 
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, n_centroids: int = 8,
-             n_probe: int = 2, iters: int = 8) -> DataFrame:
+             n_probe: int = 2) -> DataFrame:
     """IVF ANN: train centroids, bucket the corpus by nearest centroid,
     probe each query's ``n_probe`` nearest clusters, exact-rerank inside.
     Scanned fraction ≈ n_probe / n_centroids of the corpus.
@@ -234,10 +274,7 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, n_centroids: int = 8
     this variant measures ~0.2-0.3 s above the old JVM-fold shape —
     accepted: the same trade is 43.8 s -> 2.2 s at 10x and widens with
     the corpus."""
-    import numpy as np
-    import pandas as pd
-
-    centroids = kmeans_centroids(corpus, n_centroids=n_centroids, iters=iters)
+    centroids = kmeans_centroids(corpus, n_centroids=n_centroids)
     # the rerank runs on the corpus side's tasks — spread an
     # under-partitioned scan first
     bucketed = assign_clusters(ensure_parallelism(corpus), centroids)
@@ -267,31 +304,13 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, n_centroids: int = 8
             out = []
             for cid, grp in pdf.groupby("cluster"):
                 probe = tabs.get(int(cid))
-                if probe is None:
-                    continue
-                qid_arr, qn = probe
-                n_mat = np.array(list(grp["nvec"]), dtype=np.float64)
-                n_mat = n_mat / np.linalg.norm(n_mat, axis=1, keepdims=True)
-                sims = n_mat @ qn.T  # (batch rows, queries probing this cluster)
-                nids = grp["neighbor_id"].to_numpy()
-                for qi, qid in enumerate(qid_arr):
-                    col = sims[:, qi]
-                    take = min(k + 1, len(col))  # +1 in case self is present
-                    for j in np.argpartition(-col, take - 1)[:take]:
-                        nid = int(nids[j])
-                        if nid != qid:
-                            out.append((int(qid), nid, round(float(col[j]), 6)))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cosine"])
+                if probe is not None:
+                    qid_arr, qn = probe
+                    out += _block_topk(grp["nvec"], grp["neighbor_id"].to_numpy(), qid_arr, qn, k)
+            yield pd.DataFrame(out, columns=_CAND_COLS)
 
-    candidates = bucketed.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        candidates.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "rk", "neighbor_id", "cosine")
-    )
+    candidates = bucketed.mapInPandas(score, schema=_CAND_SCHEMA)
+    return rank_topk(candidates, k).select("query_id", "rk", "neighbor_id", "cosine")
 
 
 def topk_neighbors_matmul(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
@@ -306,9 +325,6 @@ def topk_neighbors_matmul(queries: DataFrame, corpus: DataFrame, k: int) -> Data
     registered rows-only; tests assert neighbor-set agreement with the
     exact JVM plan.
     """
-    import numpy as np
-    import pandas as pd
-
     q_rows = queries.select("query_id", "qvec").collect()
     q_ids = [r.query_id for r in q_rows]
     q_mat = np.array([r.qvec for r in q_rows], dtype=np.float64)
@@ -319,38 +335,18 @@ def topk_neighbors_matmul(queries: DataFrame, corpus: DataFrame, k: int) -> Data
     def block_topk(batches):
         ids, qn = bc.value
         for pdf in batches:
-            n_mat = np.array(list(pdf["nvec"]), dtype=np.float64)
-            n_mat = n_mat / np.linalg.norm(n_mat, axis=1, keepdims=True)
-            sims = n_mat @ qn.T  # (batch, queries)
-            out = []
-            for qi, qid in enumerate(ids):
-                col = sims[:, qi]
-                take = min(k + 1, len(col))  # +1 in case self is in the batch
-                idx = np.argpartition(-col, take - 1)[:take]
-                for j in idx:
-                    nid = int(pdf["neighbor_id"].iloc[j])
-                    if nid != qid:
-                        out.append((qid, nid, round(float(col[j]), 6)))
-            yield pd.DataFrame(out, columns=["query_id", "neighbor_id", "cosine"])
+            out = _block_topk(pdf["nvec"], pdf["neighbor_id"].to_numpy(), ids, qn, k)
+            yield pd.DataFrame(out, columns=_CAND_COLS)
 
-    partial = corpus.select("neighbor_id", "nvec").mapInPandas(
-        block_topk, schema="query_id long, neighbor_id long, cosine double"
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        partial.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-    )
+    partial = corpus.select("neighbor_id", "nvec").mapInPandas(block_topk, schema=_CAND_SCHEMA)
+    return rank_topk(partial, k)
 
 
 def topk_neighbors(queries: DataFrame, corpus: DataFrame, k: int,
                    bucket_join: bool = False) -> DataFrame:
-    """Top-k cosine neighbors per query.
-
-    ``queries``: (query_id, qvec [, bucket]); ``corpus``:
-    (neighbor_id, nvec [, nbucket]).  With ``bucket_join`` only
-    same-bucket candidates are scanned.
-    """
+    """Top-k cosine neighbors per query.  With ``bucket_join`` only
+    candidates whose ``nbucket`` equals the query's ``bucket`` are
+    scanned."""
     cond = F.col("query_id") != F.col("neighbor_id")
     if bucket_join:
         cond = cond & (F.col("bucket") == F.col("nbucket"))
@@ -361,69 +357,43 @@ def topk_neighbors(queries: DataFrame, corpus: DataFrame, k: int,
     corpus = ensure_parallelism(corpus)
     joined = F.broadcast(queries).join(corpus, cond)
     sims = joined.withColumn("cosine", cosine(F.col("qvec"), F.col("nvec")))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= k)
-        .drop("qvec", "nvec", "nbucket")
-    )
+    return rank_topk(sims, k).drop("qvec", "nvec", "nbucket")
 
 
 # ------------------------------------------------------------------ PQ ANN
 
 
-def pq_train_codebooks(corpus: DataFrame, n_subspaces: int = 8, n_codes: int = 16,
-                       iters: int = 5, train_sample: int = 16_384,
-                       id_col: str = "neighbor_id", vec_col: str = "nvec") -> list:
+def pq_train_codebooks(corpus: DataFrame, n_codes: int = 16) -> list:
     """Product-quantization codebooks (Jégou et al., "Product
     quantization for nearest neighbor search", TPAMI 2011): split the
-    vector into ``n_subspaces`` contiguous sub-vectors and k-means each
+    vector into ``PQ_SUBSPACES`` contiguous sub-vectors and k-means each
     subspace independently to ``n_codes`` centroids.
 
-    Training follows the same bounded-sample recipe as
-    ``kmeans_centroids``: ONE distributed job collects a deterministic
-    hash-ordered sample, Lloyd runs in numpy on the driver, and the
-    codebooks (n_subspaces × n_codes × sub_dim floats — kilobytes)
-    broadcast to every encoder task.  Returns a nested python list
+    Training follows ``kmeans_centroids``' bounded-sample recipe: ONE
+    distributed job collects ``_sample_matrix``, ``PQ_ITERS`` Lloyd
+    rounds run in numpy on the driver, and the codebooks
+    (PQ_SUBSPACES × n_codes × sub_dim floats — kilobytes) broadcast to
+    every encoder task.  Returns a nested python list
     ``codebooks[m][k] = [float,...]``."""
-    import numpy as np
-
-    rows = (
-        corpus.select(vec_col)
-        .orderBy(F.xxhash64(F.col(id_col)))
-        .limit(train_sample)
-        .collect()
-    )
-    mat = np.array([r[vec_col] for r in rows], dtype=np.float64)
+    mat = _sample_matrix(corpus)
     dim = mat.shape[1]
-    if dim % n_subspaces:
-        raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
-    sub = dim // n_subspaces
+    if dim % PQ_SUBSPACES:
+        raise ValueError(f"dim {dim} not divisible by PQ_SUBSPACES {PQ_SUBSPACES}")
+    sub = dim // PQ_SUBSPACES
     books = []
-    for m in range(n_subspaces):
+    for m in range(PQ_SUBSPACES):
         x = mat[:, m * sub:(m + 1) * sub]
         # deterministic init: first n_codes distinct-ish rows of the sample
-        cm = x[:n_codes].copy()
-        for _ in range(iters):
-            d = -2.0 * (x @ cm.T) + (cm * cm).sum(axis=1)[None, :]
-            labels = np.argmin(d, axis=1)
-            for ci in range(n_codes):
-                members = x[labels == ci]
-                if len(members):
-                    cm[ci] = members.mean(axis=0)
+        cm = _lloyd(x, x[:n_codes].copy(), PQ_ITERS)
         books.append([[float(v) for v in row] for row in cm])
     return books
 
 
-def pq_encode(corpus: DataFrame, codebooks: list,
-              id_col: str = "neighbor_id", vec_col: str = "nvec") -> DataFrame:
-    """Encode each vector as ``n_subspaces`` uint8 codes (nearest
+def pq_encode(corpus: DataFrame, codebooks: list) -> DataFrame:
+    """Encode each ``nvec`` as ``PQ_SUBSPACES`` uint8 codes (nearest
     centroid per subspace) — an Arrow-batched numpy pass, no shuffle.
     At 64-dim float32 → 8 codes this is a 32× memory compression of
     the corpus index."""
-    import numpy as np
-    import pandas as pd
-
     spark = corpus.sparkSession
     bc = spark.sparkContext.broadcast(codebooks)
 
@@ -431,25 +401,23 @@ def pq_encode(corpus: DataFrame, codebooks: list,
         books = [np.array(b, dtype=np.float64) for b in bc.value]
         sub = books[0].shape[1]
         for pdf in batches:
-            v = np.array(list(pdf[vec_col]), dtype=np.float64)
+            v = np.array(list(pdf["nvec"]), dtype=np.float64)
             codes = np.empty((len(v), len(books)), dtype=np.int32)
             for m, cm in enumerate(books):
-                x = v[:, m * sub:(m + 1) * sub]
-                d = -2.0 * (x @ cm.T) + (cm * cm).sum(axis=1)[None, :]
-                codes[:, m] = np.argmin(d, axis=1)
-            yield pd.DataFrame({id_col: pdf[id_col], "codes": list(codes.tolist())})
+                codes[:, m] = np.argmin(_sq_dists(v[:, m * sub:(m + 1) * sub], cm), axis=1)
+            yield pd.DataFrame({"neighbor_id": pdf["neighbor_id"], "codes": list(codes.tolist())})
 
-    return corpus.mapInPandas(encode, schema=f"{id_col} long, codes array<int>")
+    return corpus.mapInPandas(encode, schema="neighbor_id long, codes array<int>")
 
 
-def pq_topk(queries: DataFrame, corpus: DataFrame, k: int, n_subspaces: int = 8,
-            n_codes: int = 16, rerank: int = 4, max_queries: int = 1024) -> DataFrame:
+def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
+            n_codes: int = 16, rerank: int = 4) -> DataFrame:
     """PQ ANN with asymmetric distance (ADC) + exact rerank:
 
     1. train codebooks on a bounded sample (one job);
     2. encode the corpus to uint8 codes (Arrow pass, no shuffle) —
        the only per-vector state the search touches;
-    3. per query, precompute the (n_subspaces × n_codes) distance
+    3. per query, precompute the (PQ_SUBSPACES × n_codes) distance
        table driver-side and broadcast it; each partition scores its
        codes by ``rerank*k`` table lookups per row and emits a partial
        candidate top-k — the corpus float vectors are NOT read here;
@@ -461,24 +429,20 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int, n_subspaces: int = 8,
     raw float32 corpus) — the standard memory-bound ANN trade.
 
     Query-side contract: the query set is collected to the driver (its
-    ADC tables broadcast), so it must be BOUNDED — ``max_queries`` is
-    enforced, not advisory (each query costs ~n_subspaces*n_codes*8 B
+    ADC tables broadcast), so it must be BOUNDED — ``PQ_MAX_QUERIES`` is
+    enforced, not advisory (each query costs ~PQ_SUBSPACES*n_codes*8 B
     of broadcast plus one scoring pass per corpus batch).  For larger
     probe sets, chunk the queries and union the results, or use the
     IVF/matmul paths whose probe side stays a DataFrame."""
-    import numpy as np
-    import pandas as pd
-
     spark = queries.sparkSession
-    books = pq_train_codebooks(corpus, n_subspaces=n_subspaces, n_codes=n_codes)
+    books = pq_train_codebooks(corpus, n_codes=n_codes)
     encoded = materialize(pq_encode(corpus, books), "pq_topk codes: both shortlist branches")
 
-    q_rows = queries.select("query_id", "qvec").limit(max_queries + 1).collect()
-    if len(q_rows) > max_queries:
+    q_rows = queries.select("query_id", "qvec").limit(PQ_MAX_QUERIES + 1).collect()
+    if len(q_rows) > PQ_MAX_QUERIES:
         raise ValueError(
-            f"pq_topk collected more than max_queries={max_queries} query rows; "
-            "chunk the query set (union the per-chunk results) or raise the "
-            "bound explicitly if the driver can hold the ADC tables"
+            f"pq_topk collected more than PQ_MAX_QUERIES={PQ_MAX_QUERIES} query "
+            "rows; chunk the query set and union the per-chunk results"
         )
     books_np = [np.array(b, dtype=np.float64) for b in books]
     sub = books_np[0].shape[1]
@@ -529,9 +493,4 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int, n_subspaces: int = 8,
         .filter(F.col("query_id") != F.col("neighbor_id"))
     )
     sims = joined.withColumn("cosine", cosine(F.col("qvec"), F.col("nvec")))
-    w2 = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w2).cast("int"))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "rk", "neighbor_id", "cosine")
-    )
+    return rank_topk(sims, k).select("query_id", "rk", "neighbor_id", "cosine")

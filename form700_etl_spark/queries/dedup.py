@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from ..io import materialize, session_cached, table
 from ..operators.dedup import (
     BAND_ROWS,
+    HAMMING_RADIUS,
     MAX_SHINGLE_DF,
     MINHASH_P,
     N_BANDS,
@@ -37,6 +38,7 @@ from ..operators.dedup import (
     connected_components,
     containment,
     drop_hot_shingles,
+    hamming64_pairs,
     incremental_lsh_probe,
     jaccard,
     lsh_candidates,
@@ -343,11 +345,12 @@ def dedup_clusters_connected(spark, sf_dir):
 # bits each.  The signature is carried as TWO non-negative 32-bit
 # halves (simhash_lo = bits 0..31, simhash_hi = bits 32..63) so that
 # neither engine ever touches the sign bit of a 64-bit integer; Hamming
-# distance is bit_count(xor(lo)) + bit_count(xor(hi)).
+# distance is bit_count(xor(lo)) + bit_count(xor(hi)).  The Spark pair
+# join packs the halves into one 64-bit hash (SIMHASH64): both halves
+# are below 2^32, so its 16-bit bands and bit_count equal the halves'.
 
 _SIMHASH_BITS = 64
-_HAMMING_MAX = 3
-_SIMHASH_BANDS = 4  # 16 bits each; pigeonhole: hamming <= 3 -> >= 1 exact band
+SIMHASH64 = "shiftleft(simhash_hi, 32) | simhash_lo"
 
 
 def _simhash_halves_sql() -> tuple[str, str]:
@@ -497,7 +500,7 @@ SIMHASH_HAMMING_ORACLE = f"""
     SELECT doc1, doc2,
            CAST(bit_count(xor(l1, l2)) + bit_count(xor(h1, h2)) AS INT) AS hamming
     FROM cand
-    WHERE bit_count(xor(l1, l2)) + bit_count(xor(h1, h2)) <= {_HAMMING_MAX}
+    WHERE bit_count(xor(l1, l2)) + bit_count(xor(h1, h2)) <= {HAMMING_RADIUS}
     """
 
 
@@ -507,8 +510,8 @@ SIMHASH_HAMMING_ORACLE = f"""
     tags=("dedup", "lsh"),
     doc=(
         "SimHash near-duplicate PAIRS within Hamming distance "
-        f"{_HAMMING_MAX} (Manku/Jain/Sarma, WWW 2007): the 64-bit signature "
-        f"splits into {_SIMHASH_BANDS} 16-bit bands; by pigeonhole any pair "
+        f"{HAMMING_RADIUS} (Manku/Jain/Sarma, WWW 2007): the 64-bit signature "
+        "splits into 4 16-bit bands; by pigeonhole any pair "
         "within the distance budget shares at least one band exactly, so "
         "band-equality blocking is COMPLETE (not approximate) for this "
         "radius — candidates verify with bit_count(xor).  Band-key "
@@ -524,71 +527,13 @@ SIMHASH_HAMMING_ORACLE = f"""
     ),
 )
 def dedup_simhash_hamming(spark, sf_dir):
-    sigs = materialize(_simhash_sigs(spark, sf_dir), "dedup_simhash_hamming sigs: both band sides")
-    band_structs = [
-        F.struct(F.lit(0).alias("b"), F.col("simhash_lo").bitwiseAND(F.lit(65535)).alias("band_val")),
-        F.struct(F.lit(1).alias("b"), F.shiftright("simhash_lo", 16).alias("band_val")),
-        F.struct(F.lit(2).alias("b"), F.col("simhash_hi").bitwiseAND(F.lit(65535)).alias("band_val")),
-        F.struct(F.lit(3).alias("b"), F.shiftright("simhash_hi", 16).alias("band_val")),
-    ]
-    bands = sigs.select(
-        "doc_id", "simhash_lo", "simhash_hi", F.explode(F.array(*band_structs)).alias("bk")
-    ).select(
-        "doc_id",
-        "simhash_lo",
-        "simhash_hi",
-        F.col("bk.b").alias("b"),
-        F.col("bk.band_val").alias("band_val"),
+    sigs = materialize(
+        _simhash_sigs(spark, sf_dir).select("doc_id", F.expr(SIMHASH64).alias("simhash")),
+        "dedup_simhash_hamming sigs: both band sides",
     )
-    a = bands.select(
-        F.col("doc_id").alias("doc1"),
-        F.col("simhash_lo").alias("l1"),
-        F.col("simhash_hi").alias("h1"),
-        "b",
-        "band_val",
-    )
-    x = bands.select(
-        F.col("doc_id").alias("doc2"),
-        F.col("simhash_lo").alias("l2"),
-        F.col("simhash_hi").alias("h2"),
-        "b",
-        "band_val",
-    )
-    # First-match-only emission replaces a wide DISTINCT exchange: a
-    # pair sharing several bands would surface once per shared band, so
-    # keep the row only at its LOWEST matching band — computable inline
-    # from the carried signatures (bands b' < b must all differ), which
-    # turns the dedup into a pure filter.  The oracle keeps its DISTINCT
-    # formulation; both emit exactly one row per qualifying pair.
-    def _band_eq(bp: int) -> F.Column:
-        extract = [
-            lambda lo, hi: lo.bitwiseAND(F.lit(65535)),
-            lambda lo, hi: F.shiftright(lo, 16),
-            lambda lo, hi: hi.bitwiseAND(F.lit(65535)),
-            lambda lo, hi: F.shiftright(hi, 16),
-        ][bp]
-        return extract(F.col("l1"), F.col("h1")) == extract(F.col("l2"), F.col("h2"))
-
-    first_match = (
-        F.when(F.col("b") == 0, F.lit(True))
-        .when(F.col("b") == 1, ~_band_eq(0))
-        .when(F.col("b") == 2, ~_band_eq(0) & ~_band_eq(1))
-        .otherwise(~_band_eq(0) & ~_band_eq(1) & ~_band_eq(2))
-    )
-    cand = (
-        a.join(x, ["b", "band_val"])
-        .filter((F.col("doc1") < F.col("doc2")) & first_match)
-        .select("doc1", "l1", "h1", "doc2", "l2", "h2")
-    )
-    hamming = (
-        F.bit_count(F.col("l1").bitwiseXOR(F.col("l2")))
-        + F.bit_count(F.col("h1").bitwiseXOR(F.col("h2")))
-    ).cast("int")
-    return (
-        cand.withColumn("hamming", hamming)
-        .filter(F.col("hamming") <= _HAMMING_MAX)
-        .select("doc1", "doc2", "hamming")
-    )
+    # the oracle keeps its DISTINCT formulation; hamming64_pairs emits
+    # each pair once, at its lowest shared band
+    return hamming64_pairs(sigs, "simhash")
 
 
 # --------------------------------------------------- canonical selection

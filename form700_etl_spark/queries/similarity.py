@@ -5,6 +5,11 @@ promoted first) with a sequential fold, so Spark and DuckDB produce
 bit-identical similarities; ranking keys round to 6 decimals with a
 vec_id tie-break for full determinism.
 
+The ANN queries are thin callers of ``operators/similarity.py`` (one
+copy of each step: the cosine, the bucket, the per-query top-k window,
+the k-means and block-scoring kernels); ``_probe_sides`` builds the
+every-50th-vector query side and the corpus side they share.
+
 Scale design (100 TB / billions of vectors):
 - brute-force top-k: O(Q*N) — kept as the exactness baseline; at scale
   Q is a small broadcast side, so the plan is a broadcast
@@ -20,6 +25,18 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import ensure_parallelism, materialize, table
+from ..operators.similarity import cosine as _cosine
+from ..operators.similarity import dot as _dot
+from ..operators.similarity import (
+    ivf_topk,
+    lsh_multiprobe_topk,
+    pq_topk,
+    rank_topk,
+    signbit_bucket,
+    topk_neighbors,
+    topk_neighbors_matmul,
+    vec_double as _vec_double,
+)
 from ..registry import register
 
 _COS_SQL = """
@@ -31,15 +48,16 @@ _COS_SQL = """
 
 _VEC_DOUBLE_SQL = "list_transform(embedding, x -> CAST(x AS DOUBLE))"
 
-# Spark-side implementations live in operators/similarity.py
-from ..operators.similarity import cosine as _cosine  # noqa: E402
-from ..operators.similarity import dot as _dot  # noqa: E402
-from ..operators.similarity import (  # noqa: E402
-    signbit_bucket,
-    topk_neighbors,
-    topk_neighbors_matmul,
-    vec_double as _vec_double,
-)
+
+def _probe_sides(spark, sf_dir):
+    """(queries, corpus) of the ANN operators: every 50th vector as
+    (query_id, qvec) against the whole table as (neighbor_id, nvec)."""
+    v = table(spark, sf_dir, "embeddings").select("vec_id", _vec_double().alias("vec"))
+    q = v.filter(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
+    )
+    cand = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
+    return q, cand
 
 
 @register(
@@ -57,14 +75,7 @@ from ..operators.similarity import (  # noqa: E402
     ),
 )
 def ann_ivf_topk(spark, sf_dir):
-    from ..operators.similarity import ivf_topk
-
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vec_double().alias("vec"))
-    q = v.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    cand = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
-    return ivf_topk(q, cand, k=5, n_centroids=10, n_probe=3)
+    return ivf_topk(*_probe_sides(spark, sf_dir), k=5, n_centroids=10, n_probe=3)
 
 
 @register(
@@ -78,12 +89,7 @@ def ann_ivf_topk(spark, sf_dir):
     ),
 )
 def ann_cosine_topk_matmul(spark, sf_dir):
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vec_double().alias("vec"))
-    q = v.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    cand = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
-    return topk_neighbors_matmul(q, cand, k=5)
+    return topk_neighbors_matmul(*_probe_sides(spark, sf_dir), k=5)
 
 
 @register(
@@ -159,14 +165,12 @@ _BUCKET_SQL = (
         "bucket within Hamming radius 3 (93 of 256 — the broadcast side "
         "explodes, the corpus side stays an equi-join on its one bucket), "
         "exact rerank inside.  Measured recall@3 0.65 at 36% scan on the "
-        "fixture; the prior single-probe default returned ZERO true "
-        "neighbors there (weakly-separated vectors, per-bit agreement "
-        "~0.62) and survives only as the radius=0 parameterization."
+        "fixture; a single-probe search returned ZERO true neighbors "
+        "there (weakly-separated vectors, per-bit agreement ~0.62), so "
+        "the operator fixes the radius at 3 (PROBE_RADIUS)."
     ),
 )
 def ann_lsh_signbit_topk(spark, sf_dir):
-    from ..operators.similarity import lsh_multiprobe_topk
-
     v = table(spark, sf_dir, "embeddings").select(
         "vec_id", "label", _vec_double().alias("vec"), signbit_bucket().alias("bucket")
     )
@@ -176,7 +180,7 @@ def ann_lsh_signbit_topk(spark, sf_dir):
     cand = v.select(
         F.col("vec_id").alias("neighbor_id"), F.col("bucket").alias("nbucket"), F.col("vec").alias("nvec")
     )
-    return lsh_multiprobe_topk(q, cand, k=3, bits=8, radius=3).select(
+    return lsh_multiprobe_topk(q, cand, k=3).select(
         "query_id", "bucket", "rk", "neighbor_id", "cosine"
     )
 
@@ -199,7 +203,7 @@ def ann_lsh_signbit_topk(spark, sf_dir):
 )
 def embedding_label_stats(spark, sf_dir):
     v = table(spark, sf_dir, "embeddings").select(
-        "label", F.sqrt(_dot(_vec_double("embedding"), _vec_double("embedding"))).alias("norm")
+        "label", F.sqrt(_dot(_vec_double(), _vec_double())).alias("norm")
     )
     return v.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vectors"),
@@ -321,14 +325,7 @@ def embedding_quantize_int8(spark, sf_dir):
     ),
 )
 def ann_pq_topk(spark, sf_dir):
-    from ..operators.similarity import pq_topk
-
-    v = table(spark, sf_dir, "embeddings").select("vec_id", _vec_double().alias("vec"))
-    q = v.filter(F.col("vec_id") % 50 == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("vec").alias("qvec")
-    )
-    cand = v.select(F.col("vec_id").alias("neighbor_id"), F.col("vec").alias("nvec"))
-    return pq_topk(q, cand, k=5, n_codes=32, rerank=16)
+    return pq_topk(*_probe_sides(spark, sf_dir), k=5, n_codes=32, rerank=16)
 
 
 # --------------------------------------------- random projection (JL)
@@ -474,10 +471,13 @@ def ann_filtered_topk(spark, sf_dir):
 # half-away vs Python banker's divergence at exact .5.  At the
 # sf0.01/sf0.1 fixtures (500 / 2k vectors) the rule resolves to the
 # 8-bit instance, so oracle values there are identical to the fixed form.
-_ADAPTIVE_BITS_SQL = """
+_ADAPTIVE_OCCUPANCY = 8
+_ADAPTIVE_BITS_LO = 8
+_ADAPTIVE_BITS_HI = 16
+_ADAPTIVE_BITS_SQL = f"""
     params AS (
-        SELECT GREATEST(8, LEAST(16,
-               CAST(FLOOR(LOG2(COUNT(*) / 8.0) + 0.5) AS INT))) AS bits
+        SELECT GREATEST({_ADAPTIVE_BITS_LO}, LEAST({_ADAPTIVE_BITS_HI},
+               CAST(FLOOR(LOG2(COUNT(*) / {_ADAPTIVE_OCCUPANCY}.0) + 0.5) AS INT))) AS bits
         FROM embeddings
     )
 """
@@ -487,16 +487,16 @@ _ADAPTIVE_BUCKET_SQL = (
 )
 
 
-def _adaptive_signbit_bits(n: int, target_occupancy: int = 8,
-                           lo: int = 8, hi: int = 16) -> int:
-    """bits ~ round(log2(N / target_occupancy)), clamped to [lo, hi].
+def _adaptive_signbit_bits(n: int) -> int:
+    """bits ~ round(log2(N / _ADAPTIVE_OCCUPANCY)), clamped to
+    [_ADAPTIVE_BITS_LO, _ADAPTIVE_BITS_HI].
 
     Rounding is floor(x + 0.5) to match the DuckDB oracle expression
     bit-for-bit (both engines evaluate the same binary64 arithmetic)."""
     import math
 
-    return max(lo, min(hi, math.floor(
-        math.log2(max(n, 1) / float(target_occupancy)) + 0.5)))
+    return max(_ADAPTIVE_BITS_LO, min(_ADAPTIVE_BITS_HI, math.floor(
+        math.log2(max(n, 1) / float(_ADAPTIVE_OCCUPANCY)) + 0.5)))
 
 
 @register(
@@ -545,8 +545,6 @@ def _adaptive_signbit_bits(n: int, target_occupancy: int = 8,
     ),
 )
 def ann_knn_graph_bucketed(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     emb = table(spark, sf_dir, "embeddings")
     bits = _adaptive_signbit_bits(emb.count())
     # Precompute each vector's norm ONCE before the self-join: the naive
@@ -572,12 +570,7 @@ def ann_knn_graph_bucketed(spark, sf_dir):
                     / F.col("qnorm") / F.col("nnorm"), 6).alias("cosine"),
         )
     )
-    w = W.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        sims.withColumn("rk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rk") <= 3)
-        .select("query_id", "rk", "neighbor_id", "cosine")
-    )
+    return rank_topk(sims, 3).select("query_id", "rk", "neighbor_id", "cosine")
 
 
 @register(

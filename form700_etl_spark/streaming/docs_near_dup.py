@@ -30,9 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import HAMMING_RADIUS, hamming64_bands
 from .events_stream import replay_stream, run_to_completion
-
-_HAMMING_MAX = 3
 
 
 def _lowest_shared_band(lo1: int, hi1: int, lo2: int, hi2: int) -> int:
@@ -103,7 +102,7 @@ def _make_update(window_batches: int | None):
         for doc, lo, hi, ab in arrivals:
             for d2, l2, h2 in zip(docs, los, his):
                 h = (lo ^ l2).bit_count() + (hi ^ h2).bit_count()
-                if h <= _HAMMING_MAX and _lowest_shared_band(lo, hi, l2, h2) == b:
+                if h <= HAMMING_RADIUS and _lowest_shared_band(lo, hi, l2, h2) == b:
                     a, c = (doc, d2) if doc < d2 else (d2, doc)
                     out1.append(a)
                     out2.append(c)
@@ -137,29 +136,13 @@ def stream_simhash_near_dup(
     see ``_make_update`` and ``stream_simhash_near_dup_windowed``."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..queries.dedup import _simhash_sigs  # late import: no cycle
+    from ..queries.dedup import SIMHASH64, _simhash_sigs  # late import: no cycle
 
     sigs = _simhash_sigs(spark, sf_dir)
     slices = [
         sigs.filter(F.col("doc_id") % n_batches == i) for i in range(n_batches)
     ]
     with replay_stream(spark, slices) as raw:
-        band_structs = [
-            F.struct(
-                F.lit(0).alias("b"),
-                F.col("simhash_lo").bitwiseAND(F.lit(65535)).alias("band_val"),
-            ),
-            F.struct(
-                F.lit(1).alias("b"), F.shiftright("simhash_lo", 16).alias("band_val")
-            ),
-            F.struct(
-                F.lit(2).alias("b"),
-                F.col("simhash_hi").bitwiseAND(F.lit(65535)).alias("band_val"),
-            ),
-            F.struct(
-                F.lit(3).alias("b"), F.shiftright("simhash_hi", 16).alias("band_val")
-            ),
-        ]
         bands = raw.select(
             "doc_id",
             "simhash_lo",
@@ -167,7 +150,7 @@ def stream_simhash_near_dup(
             # arrival batch is the replay slice — deterministic, which
             # is what makes the windowed variant's oracle expressible
             (F.col("doc_id") % n_batches).alias("arrival_batch"),
-            F.explode(F.array(*band_structs)).alias("bk"),
+            hamming64_bands(SIMHASH64).alias("bk"),
         ).select(
             "doc_id",
             "simhash_lo",

@@ -9,6 +9,8 @@ neighbors, or the operator (not the fixture) is broken."""
 
 from __future__ import annotations
 
+import pytest
+
 
 def _corpus(spark, n=600, dim=32, clusters=6):
     from tools.clustered_fixture import exact_topk, make_clustered_embeddings
@@ -76,8 +78,30 @@ def test_kmeans_seeding_survives_fewer_distinct_vectors_than_centroids(spark):
 
     rows = [(i, [float(i % 2), 1.0]) for i in range(10)]  # 2 distinct vecs
     df = spark.createDataFrame(rows, "neighbor_id long, nvec array<double>")
-    cents = kmeans_centroids(df, n_centroids=4, iters=1)
+    cents = kmeans_centroids(df, n_centroids=4)
     assert 2 <= len(cents) <= 4
     seen = {tuple(v) for _, v in cents}
     # the 2 distinct input points must both be represented
     assert len(seen) >= 2, cents
+
+
+def test_pq_topk_input_guards(spark, monkeypatch):
+    """pq_topk refuses a vector dimension that PQ_SUBSPACES does not
+    divide, and a query set larger than PQ_MAX_QUERIES (patched down to
+    2 so the corpus stays tiny)."""
+    from form700_etl_spark.operators import similarity
+
+    monkeypatch.setattr(similarity, "PQ_MAX_QUERIES", 2)
+
+    def sides(dim):
+        rows = [(i, [float(1 + (i + j) % 3) for j in range(dim)]) for i in range(6)]
+        df = spark.createDataFrame(rows, "vec_id long, vec array<double>")
+        return (
+            df.selectExpr("vec_id AS query_id", "vec AS qvec"),
+            df.selectExpr("vec_id AS neighbor_id", "vec AS nvec"),
+        )
+
+    with pytest.raises(ValueError, match="not divisible"):
+        similarity.pq_topk(*sides(similarity.PQ_SUBSPACES + 1), k=1)
+    with pytest.raises(ValueError, match="PQ_MAX_QUERIES=2"):
+        similarity.pq_topk(*sides(similarity.PQ_SUBSPACES), k=1)

@@ -853,7 +853,7 @@ class TestImageDhash:
                 if bin(hashes[a] ^ hashes[b]).count("1") <= 3:
                     expect.add((a, b))
         got = {
-            (r["doc_a"], r["doc_b"])
+            (r["doc1"], r["doc2"])
             for r in all_queries()["multimodal_image_dhash_neardup"]
             .fn(spark, sf_dir)
             .collect()
@@ -928,7 +928,7 @@ class TestAudioFingerprint:
             if bin(hs[a] ^ hs[b]).count("1") <= 3
         }
         got = {
-            (r["doc_a"], r["doc_b"])
+            (r["doc1"], r["doc2"])
             for r in all_queries()["multimodal_audio_fp_neardup"]
             .fn(spark, sf_dir)
             .collect()

@@ -48,7 +48,7 @@ def test_band_join_matches_bruteforce(spark, sf_dir):
         .fn(spark, sf_dir)
         .collect()
     )
-    got = {(r["doc_a"], r["doc_b"]): r["hamming"] for r in pairs}
+    got = {(r["doc1"], r["doc2"]): r["hamming"] for r in pairs}
     hashes = {
         r["doc_id"]: r["phash"] for r in image_phash(imgs).collect()
     }
