@@ -14,7 +14,7 @@ artifacts; it is dropped whole when a new SparkContext starts.
 ``materialize`` is the one place a query cuts its plan: an eager local
 checkpoint whose jobs carry the description ``materialize: <reason>``.
 ``local_frame`` hands a driver-held result back to Spark without a
-Python worker.
+Python worker.  ``width`` is the one reading of how wide work runs.
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from __future__ import annotations
 import os
 from typing import Callable, Hashable, TypeVar
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 
 V = TypeVar("V")
 
@@ -46,9 +46,9 @@ ORACLE_SF_DIR = "/root/testdata/sf0.01"
 
 def ensure_session_confs(spark: SparkSession) -> None:
     """Make the engine's semantics independent of who built the
-    SparkSession (the harness driver builds its own): these are
-    runtime-settable SQL confs, applied idempotently on every table
-    access.
+    SparkSession (a driver may build its own): these are
+    runtime-settable SQL confs, applied once per SparkContext (through
+    ``session_cached``) by the first table or stream read.
 
     - nanosAsLong: events.parquet carries TIMESTAMP(NANOS), which the
       parquet reader otherwise rejects outright;
@@ -56,13 +56,16 @@ def ensure_session_confs(spark: SparkSession) -> None:
       UTC-naive DuckDB oracle;
     - AQE on: runtime coalesce + skew handling (Spark 4 default, pinned).
     """
-    for key, value in (
-        ("spark.sql.legacy.parquet.nanosAsLong", "true"),
-        ("spark.sql.session.timeZone", "UTC"),
-        ("spark.sql.adaptive.enabled", "true"),
-    ):
-        if spark.conf.get(key, None) != value:
-            spark.conf.set(key, value)
+    def apply() -> None:
+        for key, value in (
+            ("spark.sql.legacy.parquet.nanosAsLong", "true"),
+            ("spark.sql.session.timeZone", "UTC"),
+            ("spark.sql.adaptive.enabled", "true"),
+        ):
+            if spark.conf.get(key, None) != value:
+                spark.conf.set(key, value)
+
+    session_cached(spark, "session confs", apply)
 
 
 _SESSION_CACHE: dict = {}
@@ -178,14 +181,20 @@ def register_views(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TA
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
-def ensure_parallelism(df: DataFrame) -> DataFrame:
-    """Round-robin repartition up to the cluster's default parallelism
-    when the frame arrives with fewer partitions.  Per-row compute that
-    runs ON a frame's own tasks (a broadcast join's probe side, an
-    Arrow scoring pass) serializes if the scan produced 1-2 splits — a
-    local small-file artifact; at 100 TB the scan already has thousands
-    of splits and this is a no-op."""
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < parallelism:
-        return df.repartition(parallelism)
-    return df
+def width(spark: SparkSession) -> int:
+    """How wide work runs: the cluster's core count.  Work is sized from
+    this, never from ``spark.sql.shuffle.partitions`` (AQE's start)."""
+    return spark.sparkContext.defaultParallelism
+
+
+def fan_out(df: DataFrame, *keys: Column | str) -> DataFrame:
+    """``df`` repartitioned to ``width`` (hashed on ``keys``, round-robin
+    without them) when it reads fewer files than the width, else ``df``:
+    per-row compute on a frame's own tasks serializes when a small-file
+    scan yields one split.  ``inputFiles()`` runs no job, where a
+    partition probe would run the AQE stages below an exchange or
+    broadcast twice.  A materialized or driver-held leaf reads 0 files."""
+    n = width(df.sparkSession)
+    if len(df.inputFiles()) >= n:
+        return df
+    return df.repartition(n, *keys)

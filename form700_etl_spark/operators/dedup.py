@@ -49,7 +49,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism, local_frame, materialize
+from ..io import fan_out, local_frame, materialize, width
 
 N_HASHES = 12
 BAND_ROWS = 3
@@ -88,12 +88,12 @@ def shingle(documents: DataFrame, n: int = 3, distinct: bool = True) -> DataFram
     the single biggest cost at scale; set-semantics consumers (Jaccard)
     should dedup AFTER restricting to the docs they actually touch.
 
-    If the source exposes fewer partitions than cores (one small file),
-    the per-shingle hash work downstream would serialize onto one task;
-    fan the docs out first.  On a real corpus (many files >> cores) the
-    condition is false and no extra shuffle happens.
+    If the source reads fewer files than cores (one small file), the
+    per-shingle hash work downstream would serialize onto one task;
+    ``io.fan_out`` spreads the docs first.  On a real corpus (many files
+    >> cores) it passes the frame through and no extra shuffle happens.
     """
-    documents = ensure_parallelism(documents)
+    documents = fan_out(documents)
     idx = ", ".join(f"toks[i+{k}]" for k in range(n))
     expr = (
         f"CASE WHEN size(toks) >= {n} THEN "
@@ -425,10 +425,10 @@ def connected_components(pairs: DataFrame,
     # Pregel path: both directions of the symmetrized edge list read the
     # probe cache, so the pair lineage still runs once, and the list is
     # exactly 2 * n_pairs rows.  Size the loop's parallelism to the
-    # graph, not the session default — per-iteration scheduling overhead
+    # graph, capped at io.width — per-iteration scheduling overhead
     # dominates at high partition counts.  materialize is eager, so the
     # probe cache can be dropped right after.
-    n_parts = max(1, min(32, 2 * n_pairs // 100_000 + 1))
+    n_parts = max(1, min(width(pairs.sparkSession), 2 * n_pairs // 100_000 + 1))
     edges = materialize(
         pairs.select(F.col("doc1").alias("a"), F.col("doc2").alias("b"))
         .unionByName(pairs.select(F.col("doc2").alias("a"), F.col("doc1").alias("b")))

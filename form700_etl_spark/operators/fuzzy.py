@@ -77,9 +77,9 @@ def fuzzy_join(left: DataFrame, right: DataFrame, left_col: str, right_col: str,
     # the left side's tasks when the right side broadcasts; a small scan
     # arriving as 1-2 partitions would serialize millions of verifies on
     # one core.
-    from ..io import ensure_parallelism
+    from ..io import fan_out
 
-    left = ensure_parallelism(left)
+    left = fan_out(left)
 
     lkey = F.lower(F.substring(F.col(left_col), 1, prefix_len))
     llen = F.length(F.col(left_col))

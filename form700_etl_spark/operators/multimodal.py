@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import fan_out, table
 
 FRAME_EVERY_S = 2.0  # seconds between sampled video frames
 RESIZE_W, RESIZE_H = 96, 64  # the box every image is fitted into
@@ -701,16 +701,15 @@ def synthesize_dedup_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     consecutive doc_ids; every 13th doc volume-scaled).
 
     The doc-id list arrives as ONE parquet scan partition, which made
-    the whole synth+decode chain a single serial Python task; hash-
-    repartitioning on the CONTENT key (doc_id DIV group) spreads the
+    the whole synth+decode chain a single serial Python task;
+    ``io.fan_out`` on the CONTENT key (doc_id DIV group) spreads the
     Python work across every core while keeping each dup group's 3
     docs in one task, so the per-key WAV synthesizes once per group
     (a generator-local memo — per task, never across runs) instead of
     once per doc.  Row values are unchanged (fingerprints are order-
     insensitive)."""
     d = table(spark, sf_dir, "documents").select("doc_id")
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    d = d.repartition(nparts, (F.col("doc_id") / DHASH_GROUP).cast("long"))
+    d = fan_out(d, (F.col("doc_id") / DHASH_GROUP).cast("long"))
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         base: dict[int, bytes] = {}

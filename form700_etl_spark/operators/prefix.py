@@ -48,20 +48,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import materialize
-
-
-def _default_partitions(df: DataFrame) -> int:
-    """Pass-1 partition count when the caller does not size it: the
-    session's shuffle parallelism (`spark.sql.shuffle.partitions`).  A
-    fixed constant (the pre-r15 `32`) made pass-2's per-task sort size corpus/32 — an
-    O(N) per-task term that silently undercut the operator's 100 TB
-    contract (ADVICE r14).  On a real cluster shuffle.partitions is
-    sized to the fleet, so deriving from it keeps each pass-2 sort at
-    corpus/parallelism; scale-sensitive callers with better knowledge
-    of their input size should still pass ``num_partitions``
-    explicitly."""
-    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+from ..io import materialize, width
 
 
 def partitioned_prefix_sum(
@@ -89,10 +76,14 @@ def partitioned_prefix_sum(
 
     No row-grain data ever crosses a SinglePartition exchange: the only
     single-partition window runs over the <= ``num_partitions``
-    per-partition totals (defaulting to the session's shuffle
-    parallelism — see ``_default_partitions``)."""
+    per-partition totals.
+
+    ``num_partitions`` defaults to ``io.width``, the cluster's core
+    count, so each pass-2 sort holds corpus/width rows (a fixed
+    constant would make that an O(N) per-task term at 100 TB).
+    Callers that know their input size better should still pass it."""
     if num_partitions is None:
-        num_partitions = _default_partitions(df)
+        num_partitions = width(df.sparkSession)
     order_cols = list(order_cols)
     parts = materialize(
         df.repartitionByRange(num_partitions, *order_cols)

@@ -46,7 +46,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism, materialize
+from ..io import fan_out, materialize
 
 COSINE_DECIMALS = 6
 SIGNBIT_BITS = 8
@@ -157,10 +157,9 @@ def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFr
     a plain equi-join on its single bucket id, so the corpus side never
     shuffles ON THE JOIN; only the tiny probe table grows (x93 at
     bits=8, radius=3).  (One caveat, scoped like shingle()'s fan-out
-    note: when the corpus arrives in fewer partitions than the cluster
-    has slots — a local-fixture artifact — it is repartitioned once for
-    parallelism, a real shuffle that a well-partitioned 100 TB corpus
-    would never take.)
+    note: when the corpus is read from fewer files than the cluster has
+    cores — a local-fixture artifact — ``io.fan_out`` repartitions it
+    once, a real shuffle that a many-file 100 TB corpus never takes.)
 
     Fixture calibration (sf0.1, 2000x64, true-neighbor cosine ~0.37 =>
     per-bit agreement ~0.62): radius 0/1/2/3 measures recall 0.0/0.125/
@@ -173,7 +172,7 @@ def lsh_multiprobe_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFr
     probes = queries.withColumn(
         "__mask", F.explode(F.array(*[F.lit(m) for m in masks]))
     ).withColumn("__probe", F.col("bucket").bitwiseXOR(F.col("__mask")))
-    corpus = ensure_parallelism(corpus)  # see the docstring caveat
+    corpus = fan_out(corpus)  # see the docstring caveat
     cond = (F.col("query_id") != F.col("neighbor_id")) & (
         F.col("__probe") == F.col("nbucket")
     )
@@ -275,9 +274,9 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, k: int, n_centroids: int = 8
     accepted: the same trade is 43.8 s -> 2.2 s at 10x and widens with
     the corpus."""
     centroids = kmeans_centroids(corpus, n_centroids=n_centroids)
-    # the rerank runs on the corpus side's tasks — spread an
-    # under-partitioned scan first
-    bucketed = assign_clusters(ensure_parallelism(corpus), centroids)
+    # the rerank runs on the corpus side's tasks — spread a scan of
+    # too few files first
+    bucketed = assign_clusters(fan_out(corpus), centroids)
     # queries are tiny (the broadcast side): probe sets computed driver-side
     spark = queries.sparkSession
     q_rows = queries.select("query_id", "qvec").collect()
@@ -353,8 +352,8 @@ def topk_neighbors(queries: DataFrame, corpus: DataFrame, k: int,
     # the per-pair cosine work parallelizes over CORPUS partitions (the
     # query side is broadcast); a small-file corpus scan would pin the
     # whole O(|Q| x |C| x d) compute onto one task — fan it out.  On a
-    # real sharded corpus (partitions >= cores) this is a no-op.
-    corpus = ensure_parallelism(corpus)
+    # real sharded corpus (files >= cores) this is a no-op.
+    corpus = fan_out(corpus)
     joined = F.broadcast(queries).join(corpus, cond)
     sims = joined.withColumn("cosine", cosine(F.col("qvec"), F.col("nvec")))
     return rank_topk(sims, k).drop("qvec", "nvec", "nbucket")
@@ -435,15 +434,15 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, k: int,
     probe sets, chunk the queries and union the results, or use the
     IVF/matmul paths whose probe side stays a DataFrame."""
     spark = queries.sparkSession
-    books = pq_train_codebooks(corpus, n_codes=n_codes)
-    encoded = materialize(pq_encode(corpus, books), "pq_topk codes: both shortlist branches")
-
+    # the bound is checked before the codebooks train or the corpus encodes
     q_rows = queries.select("query_id", "qvec").limit(PQ_MAX_QUERIES + 1).collect()
     if len(q_rows) > PQ_MAX_QUERIES:
         raise ValueError(
             f"pq_topk collected more than PQ_MAX_QUERIES={PQ_MAX_QUERIES} query "
             "rows; chunk the query set and union the per-chunk results"
         )
+    books = pq_train_codebooks(corpus, n_codes=n_codes)
+    encoded = materialize(pq_encode(corpus, books), "pq_topk codes: both shortlist branches")
     books_np = [np.array(b, dtype=np.float64) for b in books]
     sub = books_np[0].shape[1]
     tables = {}

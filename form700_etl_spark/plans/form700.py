@@ -561,7 +561,7 @@ def clean_dataset(df: DataFrame, cols: Columns, info: TableInfo) -> DataFrame:
     (keys in declared field order), except gifts/realProperties, which
     explode (realProperties with the E2 prefix).  Then ONE
     ``selectExpr`` renders P1 -> C7 -> C1 -> C9 per schema field.
-    Redacted twins share the base schema CSV."""
+    Redacted twins share the base schema CSV (from ``info.resource_dir``)."""
     cols = dict(cols)
     for col in info.list_columns:
         if col not in cols:
@@ -573,7 +573,7 @@ def clean_dataset(df: DataFrame, cols: Columns, info: TableInfo) -> DataFrame:
         else:
             src, dtype = cols[col]
             cols[col] = (stringify_structs(src, dtype.elementType.names), T.StringType())
-    schema = load_schema(info.base_name)
+    schema = load_schema(info.base_name, info.resource_dir)
     sources = schema_projection({n: src for n, (src, _) in cols.items()}, schema.fields)
     return df.selectExpr(
         *(

@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import materialize, session_cached, table
+from ..io import materialize, session_cached, table, width
 from ..operators.dedup import (
     BAND_ROWS,
     HAMMING_RADIUS,
@@ -993,11 +993,10 @@ def dedup_prefix_filter_join(spark, sf_dir):
     )
     # explicit partition count: at fixture scale AQE coalesces the
     # ~2 MB candidate list to ONE partition, which would serialize all
-    # the array intersections onto a single core; an explicit N keeps
-    # the verify stage parallel (and at real scale the shuffle is a
-    # rounding error next to candidate generation)
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    cand = cand.repartition(nparts, "doc1")
+    # the array intersections onto a single core; pinning it at
+    # io.width keeps the verify stage parallel (and at real scale the
+    # shuffle is a rounding error next to candidate generation)
+    cand = cand.repartition(width(spark), "doc1")
     common = (
         cand.join(
             doc_sets.select(

@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..io import ensure_parallelism, materialize, table
+from ..io import fan_out, materialize, table
 from ..operators.similarity import cosine as _cosine
 from ..operators.similarity import dot as _dot
 from ..operators.similarity import (
@@ -726,7 +726,7 @@ def ann_hybrid_rrf_fusion(spark, sf_dir):
     )
     # small-file corpus scan would pin the O(Q x N x d) fold onto one
     # task (the topk_neighbors precedent) — fan it out first
-    cand = ensure_parallelism(cand)
+    cand = fan_out(cand)
     d = _dot(F.col("qvec"), F.col("nvec"))
     pairs = (
         F.broadcast(q)
@@ -880,12 +880,9 @@ def mlprep_knn_classifier_eval(spark, sf_dir):
         F.col("vec").alias("va"),
     )
     # BroadcastNLJ parallelism follows the stream (corpus) side; the sf
-    # parquet is a single split, so spread the cosine work across the
-    # configured shuffle width (fleet-sized on a real cluster, = core
-    # count under the local bench conf) rather than a hard-coded 16
-    # that would cap the dominant stage at half this host's cores.
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    b = v.repartition(nparts).select(
+    # parquet is a single split, so io.fan_out spreads the cosine work
+    # across every core
+    b = fan_out(v).select(
         F.col("vec_id").alias("j"),
         F.col("label").alias("nbr_label"),
         F.col("vec").alias("vb"),

@@ -73,7 +73,8 @@ class TableInfo:
     """One row of the table registry (reference ``form700_tables.csv``,
     consumed at /root/reference/Form700.py:325-344, 402-404, 428-437):
     per-dataset metadata driving list-column routing (N3), sink DDL
-    (K3) and the redacted twin bookkeeping (O2)."""
+    (K3) and the redacted twin bookkeeping (O2), and the registry CSV's
+    directory (``resource_dir``), which holds the dataset's schema CSV."""
 
     df_name: str
     dataset_name: str
@@ -83,6 +84,7 @@ class TableInfo:
     list_columns: tuple  # ':'-split, in routing order
     four_by_four: str  # sink dataset id; "0" = not yet created (K3 gate)
     redacted: bool
+    resource_dir: str = RESOURCE_DIR
 
     @property
     def base_name(self) -> str:
@@ -113,6 +115,7 @@ def load_table_registry(
                 list_columns=lc,
                 four_by_four=(row.get("FourByFour") or "0").strip() or "0",
                 redacted=row["redacted"].strip().lower() == "true",
+                resource_dir=os.path.dirname(path),
             )
     return out
 

@@ -1,13 +1,13 @@
 """SparkSession factory.
 
 Local-mode settings mirror what we would set fleet-wide on a real
-cluster: AQE on (runtime coalesce, skew-join handling), shuffle
-partitions sized to the executor-core count instead of the 200
+cluster: AQE on (runtime coalesce, skew-join handling), AQE's
+starting shuffle count sized to the core count instead of the 200
 default, UTC session timezone (so timestamp semantics match the
 UTC-naive DuckDB oracle), and Arrow enabled for every pandas-UDF
 exchange.  On a 1000-executor cluster the only knobs that change are
-master/memory/shuffle-partitions — nothing in the engine code assumes
-local mode.
+master/memory/shuffle-partitions; the engine sizes work by the core
+count (``io.width``), and nothing in it assumes local mode.
 """
 
 from __future__ import annotations
@@ -41,14 +41,12 @@ def _default_driver_mem() -> str:
     return f"{max(2, min(32, int(total_gib / 2)))}g"
 
 
-def get_spark(app_name: str = "form700_etl_spark", shuffle_partitions: int | None = None) -> SparkSession:
+def get_spark(app_name: str = "form700_etl_spark") -> SparkSession:
     cpus = cpu_count()
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 4)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 4)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

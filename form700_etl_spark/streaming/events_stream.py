@@ -214,9 +214,10 @@ def run_to_completion(
     return result, progress
 
 
-def derive_stream_state_partitions(
-    rows_per_batch: int, session_partitions: int, target_rows: int = 25_000
-) -> int:
+STATE_TARGET_ROWS = 25_000
+
+
+def derive_stream_state_partitions(rows_per_batch: int, width: int) -> int:
     """State-store partition count for a stateful streaming query, derived
     from per-batch input volume instead of the blanket batch
     ``spark.sql.shuffle.partitions`` (VERDICT r15 task 5).
@@ -228,17 +229,17 @@ def derive_stream_state_partitions(
     measured 180k ev/s at 8 cores (8 partitions) vs 106k at 32 cores (32
     partitions) on the same fixture — anti-scaling from pure partition
     overhead.  Sizing rule: enough rows per partition that compute dominates
-    the fixed term (``target_rows`` ~25k at ~1 µs/row ≈ 25 ms >> commit),
-    capped by the session's shuffle parallelism so a genuinely large stream
-    still fans out to the full cluster: at 100 TB/day the derivation yields
+    the fixed term (``STATE_TARGET_ROWS`` ~25k at ~1 µs/row ≈ 25 ms >> commit),
+    capped at ``width`` (``io.width``) so a genuinely large stream still
+    fans out to the full cluster: at 100 TB/day the derivation yields
     the cap, locally it yields a handful.  The count only changes HOW the
     state is sharded, never the aggregation result (asserted by the
     streaming equivalence tests).
     """
     if rows_per_batch <= 0:
-        return max(1, session_partitions)
-    want = (rows_per_batch + target_rows - 1) // target_rows
-    return max(1, min(int(session_partitions), int(want)))
+        return max(1, width)
+    want = (rows_per_batch + STATE_TARGET_ROWS - 1) // STATE_TARGET_ROWS
+    return max(1, min(int(width), int(want)))
 
 
 def _tumbling_hourly_agg(events: DataFrame) -> DataFrame:
@@ -295,15 +296,13 @@ def bench_tumbling_throughput(
     """
     import time
 
-    from ..io import table
+    from ..io import table, width
 
     events = table(spark, sf_dir, "events")
     n_events = events.count()
     # the stateful operator's partition count is derived from the
     # per-batch volume (one full-table replay per micro-batch)
-    state_parts = derive_stream_state_partitions(
-        n_events, int(spark.conf.get("spark.sql.shuffle.partitions"))
-    )
+    state_parts = derive_stream_state_partitions(n_events, width(spark))
     with replay_stream(spark, [events] * n_batches) as stream:
         start = time.perf_counter()
         result, progress = run_to_completion(

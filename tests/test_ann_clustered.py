@@ -88,20 +88,26 @@ def test_kmeans_seeding_survives_fewer_distinct_vectors_than_centroids(spark):
 def test_pq_topk_input_guards(spark, monkeypatch):
     """pq_topk refuses a vector dimension that PQ_SUBSPACES does not
     divide, and a query set larger than PQ_MAX_QUERIES (patched down to
-    2 so the corpus stays tiny)."""
+    2 so the corpus stays tiny) before it trains codebooks or encodes
+    the corpus: no job but the query-side collect runs."""
+    from form700_etl_spark import profile
     from form700_etl_spark.operators import similarity
 
     monkeypatch.setattr(similarity, "PQ_MAX_QUERIES", 2)
 
-    def sides(dim):
+    def sides(dim, n_queries=6):
         rows = [(i, [float(1 + (i + j) % 3) for j in range(dim)]) for i in range(6)]
         df = spark.createDataFrame(rows, "vec_id long, vec array<double>")
         return (
-            df.selectExpr("vec_id AS query_id", "vec AS qvec"),
+            df.where(f"vec_id < {n_queries}").selectExpr("vec_id AS query_id", "vec AS qvec"),
             df.selectExpr("vec_id AS neighbor_id", "vec AS nvec"),
         )
 
     with pytest.raises(ValueError, match="not divisible"):
-        similarity.pq_topk(*sides(similarity.PQ_SUBSPACES + 1), k=1)
+        similarity.pq_topk(*sides(similarity.PQ_SUBSPACES + 1, n_queries=2), k=1)
+    before = profile.last_job_id(spark)
     with pytest.raises(ValueError, match="PQ_MAX_QUERIES=2"):
         similarity.pq_topk(*sides(similarity.PQ_SUBSPACES), k=1)
+    # the limit-collect may take more than one job, all from its one call site
+    names = {j["name"] for j in profile.jobs(spark, after=before)}
+    assert len(names) <= 1 and all(n.startswith("collect at ") for n in names), names

@@ -569,7 +569,8 @@ log_dir: {log_dir}
         assert cfg.source("cover", is_redacted=True).is_redacted
         assert not cfg.source("cover").is_redacted
 
-        # the configured schema_dir drives the registry + dual pipeline
+        # the configured schema_dir holds the registry the dual pipeline
+        # routes by (the projection reading it too is pinned below)
         registry = load_table_registry(resource_dir=cfg.schema_dir)
         assert len(registry) == 16
         filings = synthesize_filings(spark, sf_dir)
@@ -585,6 +586,35 @@ log_dir: {log_dir}
             )
         assert len(out) == 16
         assert out["scheduleB"].count() > 0
+
+    def test_configured_schema_dir_drives_the_projection(self, spark, sf_dir, tmp_path):
+        """The clean pass reads each dataset's schema CSV from the
+        configured ``schema_dir``, not the bundled resources: a field
+        dropped from a copied cover schema is absent from the cover
+        table."""
+        import shutil
+
+        from form700_etl_spark.config import load_job_config
+        from form700_etl_spark.plans.form700 import run_form700_pipeline, synthesize_filings
+        from form700_etl_spark.schema_registry import RESOURCE_DIR, load_table_registry
+
+        schema_dir = tmp_path / "resources"
+        shutil.copytree(RESOURCE_DIR, schema_dir)
+        cover_csv = schema_dir / "form700_cover_schema.csv"
+        lines = cover_csv.read_text().splitlines(keepends=True)
+        dropped = lines[1].split(",")[1]
+        cover_csv.write_text("".join(lines[:1] + lines[2:]))
+        path = tmp_path / "fieldConfig.yaml"
+        path.write_text(self.YAML.format(schema_dir=schema_dir, log_dir=tmp_path))
+        cfg = load_job_config(str(path))
+
+        registry = load_table_registry(resource_dir=cfg.schema_dir)
+        out = run_form700_pipeline(
+            synthesize_filings(spark, sf_dir), registry=registry, datasets=("cover",)
+        )
+        bundled = run_form700_pipeline(synthesize_filings(spark, sf_dir), datasets=("cover",))
+        assert dropped in bundled["cover"].columns
+        assert out["cover"].columns == [c for c in bundled["cover"].columns if c != dropped]
 
 
 class TestParquetSink:

@@ -360,19 +360,21 @@ def test_bench_tumbling_throughput_steady_state(spark, sf_dir):
     assert sum(b["num_input_rows"] for b in steady) == (
         (run["n_batches"] - 1) * run["events"]
     )
-    # the drive derives its state-partition count from batch volume and
-    # must restore the session's shuffle.partitions afterwards (r16)
-    assert 1 <= run["state_partitions"] <= int(
-        spark.conf.get("spark.sql.shuffle.partitions")
-    )
+    # the drive derives its state-partition count from batch volume,
+    # capped at the cluster's width
+    from form700_etl_spark.io import width
+
+    assert 1 <= run["state_partitions"] <= width(spark)
 
 
 def test_bench_stream_reports_applied_state_partitions(spark, sf_dir):
     """The drive's ``state_partitions`` is the count the stateful operator
     reported in its progress, so it must equal the count derived from
-    batch volume.  At the fixture's volume that is 1, below the session's
-    ``shuffle.partitions`` (>= 4): a conf restore that landed before the
-    query read its conf would show up here as the session value."""
+    batch volume and capped at ``io.width``.  At the fixture's volume
+    that is 1, below the session's ``shuffle.partitions`` (>= 4): a conf
+    restore that landed before the query read its conf would show up
+    here as the session value, and the session value must be back."""
+    from form700_etl_spark.io import width
     from form700_etl_spark.streaming.events_stream import (
         bench_tumbling_throughput,
         derive_stream_state_partitions,
@@ -381,7 +383,7 @@ def test_bench_stream_reports_applied_state_partitions(spark, sf_dir):
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     run = bench_tumbling_throughput(spark, sf_dir, n_batches=2)
     assert run["state_partitions"] == derive_stream_state_partitions(
-        run["events"], session_parts
+        run["events"], width(spark)
     )
     assert int(spark.conf.get("spark.sql.shuffle.partitions")) == session_parts
 
