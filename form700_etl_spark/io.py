@@ -15,11 +15,15 @@ artifacts; it is dropped whole when a new SparkContext starts.
 checkpoint whose jobs carry the description ``materialize: <reason>``.
 ``local_frame`` hands a driver-held result back to Spark without a
 Python worker.  ``width`` is the one reading of how wide work runs.
+``conf_scope`` is the one temporary change of session confs, and
+``retry`` the one retry loop (sink chunk upserts, REST page fetches).
 """
 
 from __future__ import annotations
 
 import os
+import time
+from contextlib import contextmanager
 from typing import Callable, Hashable, TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -198,3 +202,35 @@ def fan_out(df: DataFrame, *keys: Column | str) -> DataFrame:
     if len(df.inputFiles()) >= n:
         return df
     return df.repartition(n, *keys)
+
+
+@contextmanager
+def conf_scope(spark: SparkSession, confs: dict[str, str]):
+    """Run the enclosed block with ``confs`` set on the session, then
+    restore each key's previous value (unsetting those that were unset),
+    on failure too."""
+    old = {key: spark.conf.get(key, None) for key in confs}
+    for key, value in confs.items():
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            if value is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, value)
+
+
+def retry(call: Callable[[], V], tries: int, delay_s: float, backoff: float) -> V:
+    """``call()``, re-attempted after each failure up to ``tries``
+    attempts in all, sleeping ``delay_s``, ``delay_s * backoff``, ...
+    between them; the last attempt's error propagates (the reference's
+    ``@retry(tries, delay, backoff)``, Form700.py:491)."""
+    for _ in range(tries - 1):
+        try:
+            return call()
+        except Exception:
+            time.sleep(delay_s)
+            delay_s *= backoff
+    return call()

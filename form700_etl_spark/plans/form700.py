@@ -431,16 +431,13 @@ def synthesize_filings(
         if nm in wanted_arrays
     ]
     if need_cover:
+        # cover's audit counts, __nA1 .. __nE, one per SCHEDULE_CONDS entry
         agg_exprs += [
-            F.expr(s)
-            for s in (
-                "count(1) AS __nA1",
-                f"count(CASE WHEN {m} % 2 = 0 THEN 1 END) AS __nA2",
-                f"count(CASE WHEN {m} % 3 = 1 THEN 1 END) AS __nB",
-                f"count(CASE WHEN {m} % 3 = 2 THEN 1 END) AS __nC",
-                f"count(CASE WHEN {m} % 4 = 1 THEN 1 END) AS __nD",
-                f"count(CASE WHEN {m} % 5 = 2 THEN 1 END) AS __nE",
+            F.expr(
+                ("count(1)" if cond == "true" else f"count(CASE WHEN {cond} THEN 1 END)")
+                + f" AS __n{nm.removeprefix('schedule')}"
             )
+            for nm, cond in SCHEDULE_CONDS
         ]
     items = l.groupBy("l_orderkey").agg(*agg_exprs) if agg_exprs else None
 

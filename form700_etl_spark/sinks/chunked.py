@@ -26,7 +26,7 @@ SURVEY §7 "hard parts" says design that out, not port it):
    only surfaces results from each task's final successful attempt
    (the commit-message pattern; the streaming writer in
    ``sinks/chunked_datasource.py`` commits per micro-batch the same way
-   and cuts its chunks with the same ``row_chunks``).
+   and writes through the same ``write_chunks`` and ``write_json``).
 
 The client is an injectable protocol; ``LocalDirClient`` (one JSON
 file per chunk id — naturally idempotent) serves tests and local runs.
@@ -37,11 +37,15 @@ from __future__ import annotations
 import json
 import os
 import time
-from collections.abc import Iterable, Iterator
+from collections.abc import Iterable
 from dataclasses import dataclass
+from functools import partial
+from itertools import islice
 from typing import Protocol
 
 from pyspark.sql import DataFrame, Row
+
+from ..io import retry
 
 
 class SinkClient(Protocol):
@@ -100,20 +104,17 @@ class LocalDirClient:
                 return json.load(fh)["id"]
         h = hashlib.sha256(name.encode()).hexdigest()[:8]
         dataset_id = f"{h[:4]}-{h[4:]}"
-        tmp = meta_path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "id": dataset_id,
-                    "name": name,
-                    "columns": columns,
-                    "description": description,
-                    "category": category,
-                    "tags": tags or [],
-                },
-                fh,
-            )
-        os.replace(tmp, meta_path)
+        write_json(
+            meta_path,
+            {
+                "id": dataset_id,
+                "name": name,
+                "columns": columns,
+                "description": description,
+                "category": category,
+                "tags": tags or [],
+            },
+        )
         return dataset_id
 
     def upsert(self, chunk_id: str, rows: list[dict]) -> int:
@@ -131,12 +132,19 @@ class LocalDirClient:
                     with open(marker, "w") as fh:
                         fh.write(str(remaining - 1))
                     raise IOError("injected transient failure")
-        tmp = os.path.join(self.path, f".{chunk_id}.tmp")
-        final = os.path.join(self.path, f"{chunk_id}.json")
-        with open(tmp, "w") as fh:
-            fh.write(json.dumps(rows, default=str))
-        os.replace(tmp, final)
+        write_json(os.path.join(self.path, f"{chunk_id}.json"), rows)
         return len(rows)
+
+
+def write_json(path: str, obj) -> None:
+    """``json.dumps(obj, default=str)`` at ``path``, published from a
+    dot-prefixed temp file by one atomic ``os.replace``: no reader ever
+    sees a partial file."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.tmp")
+    with open(tmp, "w") as fh:
+        fh.write(json.dumps(obj, default=str))
+    os.replace(tmp, path)
 
 
 @dataclass(frozen=True)
@@ -234,18 +242,27 @@ def write_job_report(reports: list[SinkReport], path: str, job_name: str = "form
     return "\n".join(lines)
 
 
-def row_chunks(rows: Iterable[Row], chunk_size: int) -> Iterator[list[dict]]:
-    """K1/K2: a task's rows as successive lists of at most ``chunk_size``
-    row dicts (``asDict(recursive=True)``, nested rows included) — the
-    chunking both the batch and the streaming writer deliver."""
-    chunk: list[dict] = []
-    for row in rows:
-        chunk.append(row.asDict(recursive=True))
-        if len(chunk) >= chunk_size:
-            yield chunk
-            chunk = []
-    if chunk:
-        yield chunk
+def write_chunks(
+    client: SinkClient, prefix: str, rows: Iterable[Row], config: ChunkedSinkConfig
+) -> tuple[list[str], int, int]:
+    """The one per-task chunk loop (K1/K2/K5): ``rows`` cut into
+    successive lists of at most ``config.chunk_size`` row dicts
+    (``asDict(recursive=True)``, nested rows included), each upserted
+    as chunk ``f"{prefix}-c{idx:05d}"`` through ``io.retry`` with the
+    config's policy, then throttled.  Returns the chunk ids, the rows
+    read and the rows the client acknowledged."""
+    chunk_ids: list[str] = []
+    rows_read = rows_acked = 0
+    it = iter(rows)
+    while chunk := [row.asDict(recursive=True) for row in islice(it, config.chunk_size)]:
+        chunk_id = f"{prefix}-c{len(chunk_ids):05d}"
+        upsert = partial(client.upsert, chunk_id, chunk)
+        rows_acked += retry(upsert, config.tries, config.delay_s, config.backoff)
+        chunk_ids.append(chunk_id)
+        rows_read += len(chunk)
+        if config.throttle_s:
+            time.sleep(config.throttle_s)
+    return chunk_ids, rows_read, rows_acked
 
 
 class ChunkedSink:
@@ -276,23 +293,9 @@ class ChunkedSink:
             from pyspark import TaskContext
 
             pid = TaskContext.get().partitionId()
-            rows_read = 0
-            rows_reported = 0
-            for chunk_idx, chunk in enumerate(row_chunks(rows_iter, config.chunk_size)):
-                chunk_id = f"{dataset}-p{pid:05d}-c{chunk_idx:05d}"
-                rows_read += len(chunk)
-                delay = config.delay_s
-                for attempt in range(config.tries):
-                    try:
-                        rows_reported += client.upsert(chunk_id, chunk)
-                        break
-                    except Exception:
-                        if attempt == config.tries - 1:
-                            raise
-                        time.sleep(delay)
-                        delay *= config.backoff
-                if config.throttle_s:
-                    time.sleep(config.throttle_s)
+            _, rows_read, rows_reported = write_chunks(
+                client, f"{dataset}-p{pid:05d}", rows_iter, config
+            )
             yield (rows_read, rows_reported)
 
         counts = df.rdd.mapPartitions(write_partition).collect()

@@ -8,8 +8,9 @@ continuous ETL:
        .option("path", "/sink/dir").option("chunk_size", "500")
        .option("checkpointLocation", "/ckpt").start())
 
-The batch load is ``sinks/chunked.py::ChunkedSink``; both cut a task's
-rows with the same ``row_chunks``.
+The batch load is ``sinks/chunked.py::ChunkedSink``; both write a
+task's rows through the same ``write_chunks`` (chunking, per-chunk
+retry) into ``LocalDirClient`` files.
 """
 
 from __future__ import annotations
@@ -24,7 +25,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
-from .chunked import row_chunks
+from .chunked import ChunkedSinkConfig, LocalDirClient, write_chunks, write_json
 
 
 @dataclass
@@ -46,7 +47,8 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
     fresh chunk files and re-publishes the same manifest name, so
     readers that resolve through manifests (``read_committed``) never
     observe duplicates or partial batches.  ``abort`` deletes the
-    orphaned chunk files of a failed attempt.
+    orphaned chunk files of a failed attempt.  A failed chunk write is
+    retried in the task with the batch sink's K5 policy, unthrottled.
 
     This is the streaming answer to the reference's
     retry-after-partial-success double-count (Form700.py:479-502):
@@ -56,7 +58,9 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
 
     def __init__(self, options):
         self.path = options["path"]
-        self.chunk_size = int(options.get("chunk_size", "1000"))
+        self.config = ChunkedSinkConfig(
+            chunk_size=int(options.get("chunk_size", "1000")), throttle_s=0.0
+        )
         os.makedirs(self.path, exist_ok=True)
 
     def write(self, iterator) -> ChunkCommit:
@@ -66,17 +70,10 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
 
         pid = TaskContext.get().partitionId()
         attempt = uuid.uuid4().hex[:8]  # unique per task attempt AND batch
-        files: list[str] = []
-        rows = 0
-        for chunk_idx, chunk in enumerate(row_chunks(iterator, self.chunk_size)):
-            name = f"stream-p{pid:05d}-{attempt}-c{chunk_idx:05d}.json"
-            tmp = os.path.join(self.path, f".{name}.tmp")
-            with open(tmp, "w") as fh:
-                fh.write(json.dumps(chunk, default=str))
-            os.replace(tmp, os.path.join(self.path, name))
-            files.append(name)
-            rows += len(chunk)
-        return ChunkCommit(files=tuple(files), rows=rows)
+        chunk_ids, _, rows = write_chunks(
+            LocalDirClient(self.path), f"stream-p{pid:05d}-{attempt}", iterator, self.config
+        )
+        return ChunkCommit(files=tuple(f"{c}.json" for c in chunk_ids), rows=rows)
 
     def commit(self, messages, batchId: int) -> None:
         manifest = {
@@ -84,10 +81,7 @@ class ChunkedDirStreamWriter(DataSourceStreamWriter):
             "files": sorted(f for m in messages if m is not None for f in m.files),
             "rows_inserted": sum(m.rows for m in messages if m is not None),
         }
-        tmp = os.path.join(self.path, f"._BATCH-{batchId}.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(manifest, fh)
-        os.replace(tmp, os.path.join(self.path, f"_BATCH-{batchId}"))
+        write_json(os.path.join(self.path, f"_BATCH-{batchId}"), manifest)
 
     def abort(self, messages, batchId: int) -> None:
         for m in messages:

@@ -17,18 +17,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def write_partitioned(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Initial load: hive-style partition directories."""
-    df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-
-
 def insert_overwrite_partitions(df: DataFrame, path: str, partition_cols: list[str]) -> None:
-    """Replace ONLY the partitions present in ``df`` (dynamic overwrite);
-    all other partitions are left physically untouched."""
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.partitionBy(*partition_cols).mode("overwrite").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    """Replace ONLY the partitions present in ``df`` (dynamic overwrite,
+    set on this write alone); all other partitions are left physically
+    untouched."""
+    writer = df.write.partitionBy(*partition_cols).mode("overwrite")
+    writer.option("partitionOverwriteMode", "dynamic").parquet(path)

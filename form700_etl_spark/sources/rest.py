@@ -12,7 +12,7 @@ Reference behavior (SURVEY §2.1, /root/reference/Form700.py):
 The scan itself is the Python DataSource in ``rest_datasource.py``
 (``read_rest`` for batch, ``readStream.format("paginated_rest")`` for
 streaming): the driver probes page 1 for the page count, then the pages
-are fetched in parallel on executors, each through ``_fetch_with_retry``.
+are fetched in parallel on executors, each through ``io.retry``.
 
 The HTTP transport is injectable (``fetch_page``) so tests run against
 an in-process fake; the real transport uses ``requests`` behind an
@@ -43,21 +43,6 @@ class RestSourceConfig:
     tries: int = 5
     retry_delay_s: float = 0.2
     retry_backoff: float = 2.0
-
-
-def _fetch_with_retry(fetch_page: FetchPage, config: RestSourceConfig, page: int) -> dict:
-    import time
-
-    delay = config.retry_delay_s
-    for attempt in range(config.tries):
-        try:
-            return fetch_page(config, page)
-        except Exception:
-            if attempt == config.tries - 1:
-                raise
-            time.sleep(delay)
-            delay *= config.retry_backoff
-    raise AssertionError("unreachable")
 
 
 def requests_fetch_page(config: RestSourceConfig, page: int) -> dict:

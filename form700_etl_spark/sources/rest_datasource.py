@@ -45,7 +45,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 
-from .rest import FetchPage, RestSourceConfig, _fetch_with_retry, requests_fetch_page
+from ..io import retry
+from .rest import FetchPage, RestSourceConfig, requests_fetch_page
 
 
 def _load_transport(spec: str):
@@ -99,7 +100,8 @@ class _PageScan:
         self.key_to_pluck = options.get("key_to_pluck")
 
     def _fetch(self, page: int) -> dict:
-        return _fetch_with_retry(_load_transport(self.transport_spec), self.config, page)
+        c, fetch_page = self.config, _load_transport(self.transport_spec)
+        return retry(lambda: fetch_page(c, page), c.tries, c.retry_delay_s, c.retry_backoff)
 
     def _total_pages(self) -> int:
         return int(self._fetch(1).get("totalMatchingPages", 1))

@@ -45,6 +45,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..io import conf_scope
+
 # Bundled with Spark since 3.2: per-key state in embedded RocksDB
 # instead of the JVM heap.  At 100 TB a stateful query's state
 # (sessions, dedup horizons, custom GroupState) exceeds executor heap
@@ -56,30 +58,20 @@ ROCKSDB_PROVIDER = (
 )
 
 
-@contextmanager
 def rocksdb_state_store(spark: SparkSession):
     """Run the enclosed streaming queries with the RocksDB state store
     and changelog checkpointing (restores the previous settings on
     exit).  Results are identical to the default HDFS-backed provider —
     this trades heap for local disk, it does not change semantics —
     which is exactly what the equivalence test asserts."""
-    conf = spark.conf
-    keys = {
-        "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
-    }
-    old: dict[str, str | None] = {}
-    for k, v in keys.items():
-        old[k] = conf.get(k, None)
-        conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in old.items():
-            if v is None:
-                conf.unset(k)
-            else:
-                conf.set(k, v)
+    return conf_scope(
+        spark,
+        {
+            "spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER,
+            "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+        },
+    )
+
 
 # mtime of replay batch 0, in seconds; batch i gets REPLAY_MTIME0 + i
 REPLAY_MTIME0 = 1_000_000_000
@@ -185,12 +177,8 @@ def run_to_completion(
     if state_partitions is None:
         q = writer.start()
     else:
-        session_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        try:
+        with conf_scope(spark, {"spark.sql.shuffle.partitions": str(state_partitions)}):
             q = writer.start()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", session_parts)
     try:
         q.processAllAvailable()
         progress = [
@@ -599,7 +587,7 @@ def stream_drift_monitor(
 ) -> None:
     """Streaming data-quality gate: score every incoming micro-batch's
     value distribution against a broadcast REFERENCE histogram (built
-    once, batch-side, from the pre-``DRIFT_CUT`` window) and append one PSI
+    once, batch-side, from the pre-``DRIFT_CUT`` window) and write one PSI
     report row per batch to ``out_dir`` — the shape of a per-shard
     drift gate in a training-ingest pipeline: reference stats are tiny
     and broadcast; each batch costs one scan + a 10-bin agg; the
@@ -609,6 +597,7 @@ def stream_drift_monitor(
     (``drift_psi_event_values``): fixed-width bins, per-bin terms
     (p-q)*ln(p/q) in integer nano-units, summed exactly."""
     from ..io import normalize_ts
+    from ..sinks.partitioned import insert_overwrite_partitions
 
     feed = spark.read.parquet(feed_dir)
     bin_col = F.least(F.floor(F.col("value") / 50.0).cast("int"), F.lit(9)).alias("bin")
@@ -649,7 +638,8 @@ def stream_drift_monitor(
                 F.sum("psi_term_nano").cast("bigint").alias("psi_nano"),
             )
         )
-        report.write.mode("append").parquet(out_dir)
+        # foreachBatch is at-least-once: a replay replaces its own row
+        insert_overwrite_partitions(report, out_dir, ["batch_id"])
 
     raw = parquet_stream(
         spark, feed_dir, "*.parquet", max_files_per_trigger, schema=feed.schema

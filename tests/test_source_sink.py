@@ -380,6 +380,36 @@ class TestChunkedSink:
             report = ChunkedSink(client, config).write(df, dataset="region")
             assert report.success
 
+    def test_retry_backs_off_then_reraises_the_last_error(self, monkeypatch):
+        import time
+
+        from form700_etl_spark.io import retry
+
+        sleeps: list[float] = []
+        monkeypatch.setattr(time, "sleep", sleeps.append)
+        calls: list[int] = []
+
+        def failing():
+            calls.append(1)
+            raise IOError(f"attempt {len(calls)}")
+
+        with pytest.raises(IOError, match="attempt 4"):
+            retry(failing, tries=4, delay_s=0.5, backoff=3.0)
+        assert len(calls) == 4
+        assert sleeps == [0.5, 1.5, 4.5]
+
+        sleeps.clear()
+        outcomes = iter([IOError("transient"), "ok"])
+
+        def flaky():
+            out = next(outcomes)
+            if isinstance(out, Exception):
+                raise out
+            return out
+
+        assert retry(flaky, tries=3, delay_s=1.0, backoff=2.0) == "ok"
+        assert sleeps == [1.0]
+
     def test_replace_truncates_previous_contents(self, spark, sf_dir):
         df = table(spark, sf_dir, "region")
         with tempfile.TemporaryDirectory() as tmp:
@@ -390,12 +420,15 @@ class TestChunkedSink:
             assert not os.path.exists(stale)
 
     def test_chunk_file_bytes_equal_streamed_json_dump(self, tmp_path, monkeypatch):
-        """Both chunk writers serialize a chunk with one ``json.dumps``
-        (the C encoder); the file must hold the bytes the streaming
+        """The batch client and the streaming writer write a chunk through
+        one ``json.dumps`` (the C encoder); the file must hold the bytes
         ``json.dump(chunk, fh, default=str)`` writes, on every value type
-        a Form 700 row carries."""
+        a Form 700 row carries.  The stream's chunk files keep their
+        names, and its ``_BATCH-{id}`` manifest holds the bytes
+        ``json.dump(manifest, fh)`` writes."""
         import datetime
         import decimal
+        import re
 
         import pyspark
         from pyspark.sql import Row
@@ -438,7 +471,14 @@ class TestChunkedSink:
         commit = writer.write(iter([Row(**chunk[0]), Row(**chunk[1])]))
         assert commit.rows == len(chunk)
         (name,) = commit.files
+        assert re.fullmatch(r"stream-p00000-[0-9a-f]{8}-c00000\.json", name), name
         assert (tmp_path / "stream" / name).read_bytes() == want
+
+        writer.commit([commit], 0)
+        manifest = tmp_path / "manifest.json"
+        with open(manifest, "w") as fh:
+            json.dump({"batch_id": 0, "files": [name], "rows_inserted": len(chunk)}, fh)
+        assert (tmp_path / "stream" / "_BATCH-0").read_bytes() == manifest.read_bytes()
 
 
 class TestCreateDDL:
@@ -883,16 +923,13 @@ def test_dynamic_partition_overwrite_backfills_one_day_only(spark, sf_dir, tmp_p
     from pyspark.sql import functions as F
 
     from form700_etl_spark.io import table
-    from form700_etl_spark.sinks.partitioned import (
-        insert_overwrite_partitions,
-        write_partitioned,
-    )
+    from form700_etl_spark.sinks.partitioned import insert_overwrite_partitions
 
     path = str(tmp_path / "events_by_day")
     e = table(spark, sf_dir, "events").withColumn(
         "day", F.date_format("ts", "yyyy-MM-dd")
     )
-    write_partitioned(e, path, ["day"])
+    e.write.partitionBy("day").mode("overwrite").parquet(path)
     day = "2024-01-05"
     others_before = {
         p for p in glob.glob(os.path.join(path, "day=*", "*.parquet"))
@@ -903,7 +940,10 @@ def test_dynamic_partition_overwrite_backfills_one_day_only(spark, sf_dir, tmp_p
     assert n_day > 0
 
     redo = e.filter(F.col("day") == day).withColumn("value", F.col("value") * 2)
+    mode_key = "spark.sql.sources.partitionOverwriteMode"
+    session_mode = spark.conf.get(mode_key, None)
     insert_overwrite_partitions(redo, path, ["day"])
+    assert spark.conf.get(mode_key, None) == session_mode  # a write option, not a conf
 
     others_after = {
         p for p in glob.glob(os.path.join(path, "day=*", "*.parquet"))

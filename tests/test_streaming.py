@@ -165,10 +165,11 @@ def test_stream_cdc_merge_apply_converges_to_batch_latest(spark, sf_dir, tmp_pat
 
 
 def test_stream_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_path):
-    """Per-micro-batch PSI reports: one row per batch, batch row counts
-    sum to the feed size, PSI terms are finite and non-negative, and a
-    single-batch run over the whole feed reproduces the batch twin's
-    summed PSI exactly (shared bins + shared nano-unit arithmetic)."""
+    """Per-micro-batch PSI reports: one row per batch (a replayed batch
+    replaces its own row), batch row counts sum to the feed size, PSI
+    terms are finite and non-negative, and a single-batch run over the
+    whole feed reproduces the batch twin's summed PSI exactly (shared
+    bins + shared nano-unit arithmetic)."""
     from pyspark.sql import functions as F
 
     from form700_etl_spark.io import table
@@ -179,7 +180,15 @@ def test_stream_drift_monitor_matches_batch_psi(spark, sf_dir, tmp_path):
     table(spark, sf_dir, "events").repartition(4).write.parquet(feed)
 
     out = str(tmp_path / "psi")
-    stream_drift_monitor(spark, feed, str(tmp_path / "ck1"), out)
+    ck1 = tmp_path / "ck1"
+    stream_drift_monitor(spark, feed, str(ck1), out)
+    assert spark.read.parquet(out).count() == 4
+    # foreachBatch is at-least-once: without the last batch's commit the
+    # rerun replays that batch, whose report must replace its own row
+    last = max(int(f.name) for f in (ck1 / "commits").iterdir() if f.name.isdigit())
+    for name in (str(last), f".{last}.crc"):
+        (ck1 / "commits" / name).unlink(missing_ok=True)
+    stream_drift_monitor(spark, feed, str(ck1), out)
     reports = spark.read.parquet(out).collect()
     assert len(reports) == 4
     assert sum(r.n_rows for r in reports) == spark.read.parquet(feed).count()
