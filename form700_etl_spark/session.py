@@ -5,9 +5,12 @@ cluster: AQE on (runtime coalesce, skew-join handling), AQE's
 starting shuffle count sized to the core count instead of the 200
 default, UTC session timezone (so timestamp semantics match the
 UTC-naive DuckDB oracle), and Arrow enabled for every pandas-UDF
-exchange.  On a 1000-executor cluster the only knobs that change are
-master/memory/shuffle-partitions; the engine sizes work by the core
-count (``io.width``), and nothing in it assumes local mode.
+exchange.  Two more settings remove fixed costs every task paid:
+heap-sized Tungsten pages (``page_size_bytes``) and a Python worker
+daemon that keeps Spark's bundled archives off the workers' ``sys.path``
+(``worker_daemon``).  On a 1000-executor cluster the only knobs that
+change are master/memory/shuffle-partitions; the engine sizes work by
+the core count (``io.width``), and nothing in it assumes local mode.
 """
 
 from __future__ import annotations
@@ -41,8 +44,21 @@ def _default_driver_mem() -> str:
     return f"{max(2, min(32, int(total_gib / 2)))}g"
 
 
+def page_size_bytes(driver_mem: str) -> int:
+    """Tungsten page for a heap of ``driver_mem`` ("7g", "2048m"; a bare
+    number is MiB, as for ``spark.driver.memory``): the smallest power of
+    two with which a task's 8192-entry page table spans the heap, capped
+    at 8 MiB.  That is a quarter of JDK 17's G1 region for the heap, so a
+    page is never a humongous object."""
+    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30, "t": 1 << 40}
+    mem = driver_mem.strip().lower()
+    heap = int(mem[:-1]) * units[mem[-1]] if mem[-1] in units else int(mem) << 20
+    return min(8 << 20, 1 << (-(-heap // 8192) - 1).bit_length())
+
+
 def get_spark(app_name: str = "form700_etl_spark") -> SparkSession:
     cpus = cpu_count()
+    driver_mem = _default_driver_mem()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -72,7 +88,28 @@ def get_spark(app_name: str = "form700_etl_spark") -> SparkSession:
         # executor sizing (4 GiB/core), not a driver-side requirement.
         # (capped at half of physical RAM on smaller hosts, see
         # _default_driver_mem)
-        .config("spark.driver.memory", _default_driver_mem())
+        .config("spark.driver.memory", driver_mem)
+        # Spark's default page is 64 MB - 16 B whatever the input size, and
+        # the JDK 17 G1 region of a 7g heap is 4 MB, so every hash, sort and
+        # aggregate task allocated and zeroed a humongous 64 MB array: a GC
+        # log over 9 warm ETL operations showed 26 humongous-allocation
+        # concurrent starts and 67-91 live humongous regions per young GC,
+        # about 0.4 CPU-s of G1 and GC threads per pass.  A page of a quarter region
+        # (1 MiB at 7g, 4 MiB at 32g) still lets one task's page table
+        # address the whole heap; a larger record still gets its own page.
+        .config("spark.buffer.pageSize", str(page_size_bytes(driver_mem)))
+        # Spark puts pyspark.zip, the py4j zip and the spark-core jar first
+        # on every Python worker's sys.path, and each task's
+        # importlib.invalidate_caches() re-reads their central directories
+        # (about 80 ms CPU per task on a 4-core host).  The daemon drops them
+        # when pyspark and py4j are installed outside an archive at the
+        # same version.  The daemon starts with `python -m` in the JVM's
+        # cwd, so the package root goes on the workers' PYTHONPATH too.
+        .config("spark.python.daemon.module", "form700_etl_spark.worker_daemon")
+        .config(
+            "spark.executorEnv.PYTHONPATH",
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        )
         # The JVM default 240 MB code cache fills during a multi-query
         # session of wide whole-stage-codegen plans (the filing-synthesis
         # plan alone generates 39-field struct builders); once full, the
