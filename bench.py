@@ -683,18 +683,12 @@ def _run_presteps(spark, sf_dir: str) -> dict[str, float]:
         MAX_SHINGLE_DF,
         _shingles_cached,
     )
-    from form700_etl_spark.queries.scale import (
-        _co_pairs_cached,
-        _stable_co_edges,
-    )
+    from form700_etl_spark.operators.graph import co_pairs, stable_co
 
     presteps = {}
     steps = [
-        ("cache_co_pairs", lambda: _co_pairs_cached(spark, sf_dir).count()),
-        (
-            "cache_stable_co_edges",
-            lambda: _stable_co_edges(spark, sf_dir)[0].count(),
-        ),
+        ("cache_co_pairs", lambda: co_pairs(spark, sf_dir).count()),
+        ("cache_stable_co_edges", lambda: stable_co(spark, sf_dir)[0].count()),
         (
             "cache_shingles_uncapped",
             lambda: _shingles_cached(spark, sf_dir).count(),

@@ -36,6 +36,7 @@ Constants: ``N_HASHES`` = 12 permutations in ``N_BANDS`` = 4 bands of
 ``BAND_ROWS`` = 3, ``MINHASH_P`` the affine-hash modulus,
 ``MAX_SHINGLE_DF`` = 16 the pair-join consumers' cap, ``SCORE_DECIMALS``
 = 6 the rounding of every Jaccard/containment score, ``CC_MAX_ITER`` = 20 label-propagation rounds,
+``CC_DRIVER_MAX_PAIRS`` = 1 000 000 the largest pair graph whose components run on the driver,
 ``HAMMING_RADIUS`` = 3 the 64-bit hash pair radius.
 
 Algorithms from the public literature: MinHash resemblance sketches
@@ -56,6 +57,7 @@ BAND_ROWS = 3
 N_BANDS = N_HASHES // BAND_ROWS
 SCORE_DECIMALS = 6
 CC_MAX_ITER = 20
+CC_DRIVER_MAX_PAIRS = 1_000_000
 HAMMING_RADIUS = 3  # < 4 bands, so every pair within it shares a band
 # Hot-shingle document-frequency cap used by the pair-join consumers
 # (queries.dedup.dedup_ngram_jaccard / dedup_clusters_connected read the
@@ -348,8 +350,7 @@ def hamming64_pairs(hashes: DataFrame, hash_col: str) -> DataFrame:
     )
 
 
-def connected_components(pairs: DataFrame,
-                         driver_threshold: int = 1_000_000) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components over an undirected pair graph
     ((doc1, doc2) edges) — near-dup PAIRS become dedup CLUSTERS (each
     cluster keeps min-doc_id as canonical).  Returns (doc_id,
@@ -357,7 +358,7 @@ def connected_components(pairs: DataFrame,
 
     Hybrid strategy, chosen by undirected pair count:
 
-    - ``n_pairs <= driver_threshold``: pull the pair list to the driver
+    - ``n_pairs <= CC_DRIVER_MAX_PAIRS``: pull the pair list to the driver
       as Arrow columns and run union-find there.  The LSH/Jaccard pair
       graph is already the similarity-pruned RESIDUE of the corpus —
       even at 100 TB it is typically millions of edges, not billions,
@@ -372,9 +373,9 @@ def connected_components(pairs: DataFrame,
       stops early at a fixed point).  No collect — scales to any edge
       count.
 
-    ``driver_threshold`` counts UNDIRECTED pairs as emitted by the
+    ``CC_DRIVER_MAX_PAIRS`` counts UNDIRECTED pairs as emitted by the
     LSH/Jaccard stage (one row per {doc1, doc2}), not symmetrized
-    directed edges — a threshold of 1M admits graphs of up to 2M
+    directed edges — its 1M admits graphs of up to 2M
     directed edges to the driver path.  Both paths produce identical
     labels (min doc_id per component)."""
     # Probe WITHOUT a driver transfer: persist the pair frame (lazy),
@@ -396,7 +397,7 @@ def connected_components(pairs: DataFrame,
 
     pairs = pairs.select("doc1", "doc2").persist(StorageLevel.DISK_ONLY)
     n_pairs = pairs.count()
-    if n_pairs <= driver_threshold:
+    if n_pairs <= CC_DRIVER_MAX_PAIRS:
         pdf = pairs.toPandas()  # Arrow path: two int64 numpy columns
         pairs.unpersist()
         parent: dict = {}

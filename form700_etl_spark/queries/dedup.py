@@ -48,6 +48,7 @@ from ..operators.dedup import (
     shingle,
     verify_jaccard,
 )
+from ..operators.graph import components_sql
 from ..registry import register
 
 # ------------------------------------------------------------- shared pieces
@@ -274,11 +275,15 @@ def _minhash_lsh_verified(spark, sf_dir, with_containment: bool = False) -> Data
     return verify_jaccard(lsh_candidates(sig), docs, with_containment=with_containment)
 
 
-# Shared CTE chain: capped shingles -> Jaccard>=0.1 pairs -> true
-# reachability (recursive CTE) -> per-doc min-label component.  Used by
-# dedup_clusters_connected AND split_leakage_safe_assignment so the two
-# oracles can never drift apart.
-_COMPONENTS_WITH_SQL = f"""
+def _components_oracle(tail: str) -> str:
+    """The shared CTE chain — capped shingles -> Jaccard>=0.1 pairs ->
+    true reachability (recursive CTE) -> per-doc min-label component
+    ``comp`` — followed by ``tail``.  The oracle of
+    dedup_clusters_connected, split_leakage_safe_assignment,
+    dedup_canonical_per_cluster and
+    training_pipeline_near_dedup_curriculum, so they can never drift
+    apart."""
+    return f"""
     WITH shingles_all AS ({_SHINGLES_SQL}),
     shingles AS ({_CAPPED_SHINGLES_SQL.format(max_df=MAX_SHINGLE_DF)}),
     sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
@@ -294,36 +299,15 @@ _COMPONENTS_WITH_SQL = f"""
                      JOIN sizes s2 ON p.doc2 = s2.doc_id
         WHERE CAST(p.common AS DOUBLE) / (s1.n + s2.n - p.common) >= 0.1
     ),
-    edges AS (
-        SELECT doc1 AS a, doc2 AS b FROM sim_pairs
-        UNION ALL SELECT doc2, doc1 FROM sim_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT a AS doc, a AS label FROM edges
-        UNION
-        (
-            WITH RECURSIVE walk(doc, label) AS (
-                SELECT DISTINCT a, a FROM edges
-                UNION
-                SELECT e.a, w.label FROM edges e JOIN walk w ON e.b = w.doc
-            )
-            SELECT doc, label FROM walk
-        )
-    ),
-    comp AS (
-        SELECT doc AS doc_id,
-               CAST(MIN(label) AS BIGINT) AS component_id
-        FROM reach GROUP BY doc
-    )
-"""
+    {components_sql("sim_pairs")}
+""" + tail
 
 
 @register(
     "dedup_clusters_connected",
-    oracle=_COMPONENTS_WITH_SQL
-    + """
+    oracle=_components_oracle("""
     SELECT doc_id, component_id FROM comp
-    """,
+    """),
     tags=("dedup", "graph"),
     doc=(
         "Near-dup pairs (Jaccard >= 0.1, hot-shingle df cap applied on both "
@@ -564,48 +548,13 @@ def _quality_sql() -> str:
 
 @register(
     "dedup_canonical_per_cluster",
-    oracle=f"""
-    WITH shingles_all AS ({_SHINGLES_SQL}),
-    shingles AS ({_CAPPED_SHINGLES_SQL.format(max_df=MAX_SHINGLE_DF)}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-    pairs AS (
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS common
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    sim_pairs AS (
-        SELECT p.doc1, p.doc2
-        FROM pairs p JOIN sizes s1 ON p.doc1 = s1.doc_id
-                     JOIN sizes s2 ON p.doc2 = s2.doc_id
-        WHERE CAST(p.common AS DOUBLE) / (s1.n + s2.n - p.common) >= 0.1
-    ),
-    edges AS (
-        SELECT doc1 AS a, doc2 AS b FROM sim_pairs
-        UNION ALL SELECT doc2, doc1 FROM sim_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT a AS doc, a AS label FROM edges
-        UNION
-        (
-            WITH RECURSIVE walk(doc, label) AS (
-                SELECT DISTINCT a, a FROM edges
-                UNION
-                SELECT e.a, w.label FROM edges e JOIN walk w ON e.b = w.doc
-            )
-            SELECT doc, label FROM walk
-        )
-    ),
-    clusters AS (
-        SELECT doc AS doc_id, MIN(label) AS component_id
-        FROM reach GROUP BY doc
-    ),
-    quality AS ({{quality}}),
+    oracle=_components_oracle(f"""
+    , quality AS ({_quality_sql()}),
     ranked AS (
         SELECT c.component_id, c.doc_id, q.q,
                row_number() OVER (PARTITION BY c.component_id
                                   ORDER BY q.q DESC, c.doc_id) AS rn
-        FROM clusters c JOIN quality q ON q.doc_id = c.doc_id
+        FROM comp c JOIN quality q ON q.doc_id = c.doc_id
     )
     SELECT CAST(component_id AS BIGINT) AS component_id,
            CAST(MAX(CASE WHEN rn = 1 THEN doc_id END) AS BIGINT) AS canonical_doc,
@@ -613,7 +562,7 @@ def _quality_sql() -> str:
            CAST(COUNT(*) AS BIGINT) AS n_docs,
            CAST(COUNT(*) - 1 AS BIGINT) AS n_to_drop
     FROM ranked GROUP BY component_id
-    """.format(quality="{QUALITY}").replace("{QUALITY}", _quality_sql()),
+    """),
     tags=("dedup", "graph", "pipeline"),
     doc=(
         "Canonical-document selection per near-dup cluster: Jaccard "
@@ -1346,8 +1295,8 @@ def text_ngram_novelty_score(spark, sf_dir):
 
 @register(
     "split_leakage_safe_assignment",
-    oracle=_COMPONENTS_WITH_SQL
-    + """
+    oracle=_components_oracle(
+        """
     , assign AS (
         SELECT d.doc_id,
                COALESCE(c.component_id, d.doc_id) AS component_id
@@ -1358,7 +1307,8 @@ def text_ngram_novelty_score(spark, sf_dir):
     + _split_case_sql("component_id")
     + """ AS split
     FROM assign
-    """,
+    """
+    ),
     tags=("dedup", "graph", "split", "curation"),
     doc=(
         "CONSTRUCTIVE leakage-safe train/val/test split: near-dup "

@@ -583,49 +583,10 @@ def sample_temperature_mixture(spark, sf_dir):
 
 
 def _near_dedup_curriculum_oracle() -> str:
-    from .dedup import (
-        MAX_SHINGLE_DF,
-        _CAPPED_SHINGLES_SQL,
-        _SHINGLES_SQL,
-        _quality_sql,
-    )
+    from .dedup import _components_oracle, _quality_sql
 
-    return f"""
-    WITH shingles_all AS ({_SHINGLES_SQL}),
-    shingles AS ({_CAPPED_SHINGLES_SQL.format(max_df=MAX_SHINGLE_DF)}),
-    sizes AS (SELECT doc_id, COUNT(*) AS n FROM shingles GROUP BY doc_id),
-    cpairs AS (
-        SELECT a.doc_id AS doc1, b.doc_id AS doc2, COUNT(*) AS common
-        FROM shingles a JOIN shingles b
-          ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    sim_pairs AS (
-        SELECT p.doc1, p.doc2
-        FROM cpairs p JOIN sizes s1 ON p.doc1 = s1.doc_id
-                      JOIN sizes s2 ON p.doc2 = s2.doc_id
-        WHERE CAST(p.common AS DOUBLE) / (s1.n + s2.n - p.common) >= 0.1
-    ),
-    edges AS (
-        SELECT doc1 AS a, doc2 AS b FROM sim_pairs
-        UNION ALL SELECT doc2, doc1 FROM sim_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT a AS doc, a AS label FROM edges
-        UNION
-        (
-            WITH RECURSIVE walk(doc, label) AS (
-                SELECT DISTINCT a, a FROM edges
-                UNION
-                SELECT e.a, w.label FROM edges e JOIN walk w ON e.b = w.doc
-            )
-            SELECT doc, label FROM walk
-        )
-    ),
-    clusters AS (
-        SELECT doc AS doc_id, MIN(label) AS component_id FROM reach GROUP BY doc
-    ),
-    quality AS ({_quality_sql()}),
+    return _components_oracle(f"""
+    , quality AS ({_quality_sql()}),
     qm AS (
         SELECT doc_id, CAST(round(q * 1000000) AS BIGINT) AS m FROM quality
     ),
@@ -633,7 +594,7 @@ def _near_dedup_curriculum_oracle() -> str:
         SELECT c.doc_id,
                row_number() OVER (PARTITION BY c.component_id
                                   ORDER BY q.m DESC, c.doc_id) AS rn
-        FROM clusters c JOIN qm q ON q.doc_id = c.doc_id
+        FROM comp c JOIN qm q ON q.doc_id = c.doc_id
     ),
     drops AS (SELECT doc_id FROM ranked WHERE rn > 1),
     survivors AS (
@@ -658,7 +619,7 @@ def _near_dedup_curriculum_oracle() -> str:
            CAST(SUM(n_tokens) AS BIGINT) AS total_tokens
     FROM survivors, t
     GROUP BY 1, 2
-    """
+    """)
 
 
 @register(

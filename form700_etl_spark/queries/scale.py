@@ -10,7 +10,24 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
-from ..io import local_frame, materialize, session_cached, table
+from ..io import local_frame, materialize, table
+from ..operators.graph import (
+    ADJ_SQL,
+    CO_SQL,
+    DEG_SQL,
+    MAX_CENTER_DEGREE,
+    PURCHASE_SQL,
+    STABLE_CO_SQL,
+    adjacency,
+    bipartite,
+    capped_wedges,
+    co_pairs,
+    degrees,
+    purchases,
+    stable_co,
+    top_ranked,
+    top_ranked_sql,
+)
 from ..registry import register
 
 
@@ -564,12 +581,7 @@ _PR_ITERS = 3
 
 def _pagerank_sql(iters: int) -> str:
     parts = [
-        """pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS u, l.l_suppkey * 2 + 1 AS v
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
-    deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY u),
+        f"""{PURCHASE_SQL},
     r0 AS (SELECT u AS node, CAST(1000000 AS BIGINT) AS rank FROM deg)"""
     ]
     for i in range(1, iters + 1):
@@ -582,13 +594,7 @@ def _pagerank_sql(iters: int) -> str:
         JOIN deg d ON d.u = e.u
         GROUP BY e.v
     )""")
-    return (
-        "WITH " + ",".join(parts) + f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-           CAST(node // 2 AS BIGINT) AS key, rank AS rank_micro
-    FROM r{iters} ORDER BY rank_micro DESC, node LIMIT 20
-    """
-    )
+    return "WITH " + ",".join(parts) + top_ranked_sql(f"r{iters}")
 
 
 @register(
@@ -606,44 +612,19 @@ def _pagerank_sql(iters: int) -> str:
     ),
 )
 def graph_pagerank_bipartite(spark, sf_dir):
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-    )
-    edges = materialize(
-        pairs.unionByName(
-            pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ),
-        "graph_pagerank_bipartite edges: degrees and every iteration",
-    )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    ranks = deg.select(F.col("u").alias("node"), F.lit(1000000).cast("long").alias("rank"))
+    adj = bipartite(purchases(spark, sf_dir))
+    deg = degrees(adj)
+    ranks = deg.select(F.col("w").alias("node"), F.lit(1000000).cast("long").alias("rank"))
     for _ in range(_PR_ITERS):
         contrib = (
-            edges.join(ranks, edges.u == ranks.node)
-            .join(deg, "u")
-            .select("v", F.expr("rank DIV d").alias("c"))
+            adj.join(ranks, adj.w == ranks.node)
+            .join(deg, "w")
+            .select("nbr", F.expr("rank DIV d").alias("c"))
         )
-        ranks = contrib.groupBy("v").agg(
+        ranks = contrib.groupBy("nbr").agg(
             F.expr("CAST(150000 + (850 * SUM(c)) DIV 1000 AS BIGINT)").alias("rank")
-        ).select(F.col("v").alias("node"), "rank")
-    return (
-        ranks.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.expr("CAST(node DIV 2 AS BIGINT)").alias("key"),
-            F.col("rank").alias("rank_micro"),
-        )
-        .orderBy(F.desc("rank_micro"), F.asc(F.expr("key * 2 + CAST(node_type = 'supplier' AS INT)")))
-        .limit(20)
-    )
+        ).select(F.col("nbr").alias("node"), "rank")
+    return top_ranked(ranks)
 
 
 _PPR_ITERS = 3
@@ -651,12 +632,7 @@ _PPR_ITERS = 3
 
 def _ppr_sql(iters: int) -> str:
     parts = [
-        """pairs AS (
-        SELECT DISTINCT o.o_custkey * 2 AS u, l.l_suppkey * 2 + 1 AS v
-        FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-    ),
-    edges AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
-    deg AS (SELECT u, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY u),
+        f"""{PURCHASE_SQL},
     src AS (SELECT MIN(u) AS s FROM edges WHERE u % 2 = 0),
     r0 AS (SELECT s AS node, CAST(1000000 AS BIGINT) AS rank FROM src)"""
     ]
@@ -674,13 +650,7 @@ def _ppr_sql(iters: int) -> str:
             SELECT s AS node, CAST(150000 AS BIGINT) AS val FROM src
         ) GROUP BY node
     )""")
-    return (
-        "WITH " + ",".join(parts) + f"""
-    SELECT CASE WHEN node % 2 = 0 THEN 'customer' ELSE 'supplier' END AS node_type,
-           CAST(node // 2 AS BIGINT) AS key, rank AS rank_micro
-    FROM r{iters} ORDER BY rank_micro DESC, node LIMIT 20
-    """
-    )
+    return "WITH " + ",".join(parts) + top_ranked_sql(f"r{iters}")
 
 
 @register(
@@ -705,24 +675,9 @@ def _ppr_sql(iters: int) -> str:
     ),
 )
 def graph_personalized_pagerank(spark, sf_dir):
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    pairs = (
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("u"),
-            (F.col("l_suppkey") * 2 + 1).alias("v"),
-        )
-        .distinct()
-    )
-    edges = materialize(
-        pairs.unionByName(
-            pairs.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        ),
-        "graph_personalized_pagerank edges: degrees, sources and every iteration",
-    )
-    deg = edges.groupBy("u").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    src = edges.filter(F.col("u") % 2 == 0).agg(F.min("u").alias("node"))
+    adj = bipartite(purchases(spark, sf_dir))
+    deg = degrees(adj)
+    src = adj.filter(F.col("w") % 2 == 0).agg(F.min("w").alias("node"))
     ranks = src.select("node", F.lit(1000000).cast("long").alias("rank"))
     # the restart mass rides the SAME edge-grain aggregate as the walk
     # (q = per-edge rank DIV d, rv = restart units): one groupBy per
@@ -739,10 +694,10 @@ def graph_personalized_pagerank(spark, sf_dir):
     )
     for _ in range(_PPR_ITERS):
         contrib = (
-            edges.join(ranks, edges.u == ranks.node)
-            .join(deg, "u")
+            adj.join(ranks, adj.w == ranks.node)
+            .join(deg, "w")
             .select(
-                F.col("v").alias("node"),
+                F.col("nbr").alias("node"),
                 F.expr("rank DIV d").alias("q"),
                 F.lit(0).cast("long").alias("rv"),
             )
@@ -757,20 +712,7 @@ def graph_personalized_pagerank(spark, sf_dir):
                 ).alias("rank")
             )
         )
-    return (
-        ranks.select(
-            F.when(F.col("node") % 2 == 0, F.lit("customer"))
-            .otherwise(F.lit("supplier"))
-            .alias("node_type"),
-            F.expr("CAST(node DIV 2 AS BIGINT)").alias("key"),
-            F.col("rank").alias("rank_micro"),
-        )
-        .orderBy(
-            F.desc("rank_micro"),
-            F.asc(F.expr("key * 2 + CAST(node_type = 'supplier' AS INT)")),
-        )
-        .limit(20)
-    )
+    return top_ranked(ranks)
 
 
 @register(
@@ -1299,45 +1241,10 @@ def clean_winsorize_event_values(spark, sf_dir):
     )
 
 
-# One cached DISTINCT co-purchase pair table per (session, sf_dir):
-# four graph queries (triangle, BFS, jaccard, adamic-adar) consume the
-# IDENTICAL edge list and each rebuilt it from lineitem per invocation
-# (~1.5-2 s of per-query wall at sf0.1) — the same legitimate
-# shared-materialized-view pattern queries/dedup._shingles_cached
-# established for the dedup family.  Pair generation: per-order sorted
-# part arrays -> ONE shuffle of the fact table (groupBy orderkey)
-# instead of a self-join's two, pairs emitted by an array transform
-# inside codegen (measured 1.4x faster than the equi-self-join at
-# sf0.1).  Order baskets are small (<= ~7 parts), so the per-row
-# quadratic transform is constant-bounded.
-def _co_pairs_cached(spark, sf_dir):
-    """DISTINCT (u < v) part co-purchase pairs, session-cached."""
-
-    def build():
-        li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        return (
-            li.groupBy("l_orderkey")
-            .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-            .select(F.explode(F.expr(
-                "flatten(transform(ps, (x, i) ->"
-                " transform(slice(ps, i+2, size(ps)), y -> struct(x AS u, y AS v))))"
-            )).alias("p"))
-            .select("p.u", "p.v")
-            .distinct()
-            .cache()
-        )
-
-    return session_cached(spark, ("co_pairs", sf_dir), build)
-
-
 @register(
     "graph_triangle_count",
-    oracle="""
-    WITH co AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
+    oracle=f"""
+    WITH {CO_SQL},
     deg AS (
         SELECT node, CAST(COUNT(*) AS BIGINT) AS d FROM (
             SELECT u AS node FROM co UNION ALL SELECT v FROM co
@@ -1385,19 +1292,11 @@ def _co_pairs_cached(spark, sf_dir):
     ),
 )
 def graph_triangle_count(spark, sf_dir):
-    # shared session-cached DISTINCT co-purchase pairs (see
-    # _co_pairs_cached) — reused by deg + orientation here and by the
-    # BFS / jaccard / adamic-adar queries
-    co = _co_pairs_cached(spark, sf_dir)
-    deg = (
-        co.select(F.col("u").alias("node"))
-        .unionByName(co.select(F.col("v").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).cast("long").alias("d"))
-    )
-    okey = deg.select("node", (F.col("d") * 1000000000 + F.col("node")).alias("k"))
-    ku = okey.select(F.col("node").alias("u"), F.col("k").alias("ku"))
-    kv = okey.select(F.col("node").alias("v"), F.col("k").alias("kv"))
+    co = co_pairs(spark, sf_dir)
+    deg = degrees(adjacency(co))
+    okey = deg.select("w", (F.col("d") * 1000000000 + F.col("w")).alias("k"))
+    ku = okey.select(F.col("w").alias("u"), F.col("k").alias("ku"))
+    kv = okey.select(F.col("w").alias("v"), F.col("k").alias("kv"))
     oriented = materialize(
         co.join(ku, "u").join(kv, "v")
         .select(
@@ -1495,37 +1394,21 @@ def clean_impute_group_median(spark, sf_dir):
     )
 
 
-# Adamic-Adar: cap wedge centers at this degree.  Standard in link
-# prediction (a center of degree d contributes 1/ln(d) ~ 0 when d is
-# large but costs d^2 wedges to enumerate — the cap removes the
-# quadratic hub blowup while discarding near-zero signal).  64 sits
-# just above this graph's minimum degree (38-42, SF-stable since
-# basket sizes don't grow with SF), keeping the informative low-
-# degree centers while excluding the 115-220-degree bulk; measured
-# at sf0.01 -> sf0.1 the wedge count grows 13k -> 252k (~linear in
-# edges).  Mirrored verbatim in the oracle.
-_AA_MAX_CENTER_DEGREE = 64
 _AA_TOP_K = 50
 
 
 @register(
     "graph_adamic_adar_links",
     oracle=f"""
-    WITH co AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (
-        SELECT u AS w, v AS nbr FROM co UNION ALL SELECT v, u FROM co
-    ),
-    deg AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY w),
+    WITH {CO_SQL},
+    {ADJ_SQL},
+    {DEG_SQL},
     contrib AS (
         SELECT a.w, a.nbr,
                CAST(round(1000000000.0 / ln(CAST(deg.d AS DOUBLE))) AS BIGINT)
                  AS c_e9
         FROM adj a JOIN deg ON a.w = deg.w
-        WHERE deg.d BETWEEN 2 AND {_AA_MAX_CENTER_DEGREE}
+        WHERE deg.d BETWEEN 2 AND {MAX_CENTER_DEGREE}
     ),
     wedges AS (
         SELECT x.nbr AS u, y.nbr AS v, x.c_e9
@@ -1552,7 +1435,7 @@ _AA_TOP_K = 50
         "Adamic-Adar link prediction over the part co-purchase graph: "
         "for each non-adjacent pair, sum 1/ln(deg(w)) over common "
         "neighbors w (Adamic & Adar 2003).  Wedges enumerate per CENTER "
-        f"node with a degree cap of {_AA_MAX_CENTER_DEGREE} "
+        f"node with a degree cap of {MAX_CENTER_DEGREE} "
         "(high-degree centers contribute "
         "~0 signal but quadratic cost — the cap is the hub guard, "
         "mirrored in the oracle), existing edges drop via an anti join, "
@@ -1562,31 +1445,12 @@ _AA_TOP_K = 50
     ),
 )
 def graph_adamic_adar_links(spark, sf_dir):
-    # shared session-cached co-purchase pairs (feeds adjacency, the
-    # anti join, and degrees; see _co_pairs_cached)
-    co = _co_pairs_cached(spark, sf_dir)
-    adj = co.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
-        co.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
-    )
-    deg = adj.groupBy("w").agg(F.count(F.lit(1)).alias("d"))
-    contrib = (
-        adj.join(deg, "w")
-        .filter(F.col("d").between(2, _AA_MAX_CENTER_DEGREE))
-        .select(
-            "w",
-            "nbr",
-            F.round(F.lit(1000000000.0) / F.log(F.col("d").cast("double")))
-            .cast("long")
-            .alias("c_e9"),
-        )
-    )
-    x = contrib.alias("x")
-    y = contrib.alias("y")
-    wedges = x.join(
-        y, (F.col("x.w") == F.col("y.w")) & (F.col("x.nbr") < F.col("y.nbr"))
-    ).select(F.col("x.nbr").alias("u"), F.col("y.nbr").alias("v"), F.col("x.c_e9"))
-    scored = wedges.groupBy("u", "v").agg(
-        F.sum("c_e9").alias("score_e9"), F.count(F.lit(1)).alias("n_common")
+    co = co_pairs(spark, sf_dir)
+    adj = adjacency(co)
+    # each wedge's center contributes 1/ln(d), quantized to integer e9
+    c_e9 = F.round(F.lit(1000000000.0) / F.log(F.col("d").cast("double"))).cast("long")
+    scored = capped_wedges(adj, degrees(adj)).groupBy("u", "v").agg(
+        F.sum(c_e9).alias("score_e9"), F.count(F.lit(1)).alias("n_common")
     )
     novel = scored.join(co, ["u", "v"], "left_anti")
     return (
@@ -1609,12 +1473,8 @@ _BFS_MAX_HOPS = 3
 @register(
     "graph_bfs_hops",
     oracle=f"""
-    WITH RECURSIVE co AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (SELECT u AS w, v AS nbr FROM co UNION ALL SELECT v, u FROM co),
+    WITH RECURSIVE {CO_SQL},
+    {ADJ_SQL},
     src AS (SELECT MIN(u) AS s FROM co),
     bfs AS (
         SELECT (SELECT s FROM src) AS node, 0 AS hop
@@ -1641,12 +1501,8 @@ _BFS_MAX_HOPS = 3
     ),
 )
 def graph_bfs_hops(spark, sf_dir):
-    # shared session-cached co-purchase pairs (adjacency consumed once
-    # per BFS level; see _co_pairs_cached)
-    co = _co_pairs_cached(spark, sf_dir)
-    adj = co.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
-        co.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
-    )
+    co = co_pairs(spark, sf_dir)
+    adj = adjacency(co)
     src = co.agg(F.min("u").alias("node")).select(
         "node", F.lit(0).cast("long").alias("hop")
     )
@@ -1756,18 +1612,12 @@ def audit_benford_first_digit(spark, sf_dir):
 @register(
     "graph_jaccard_neighbors",
     oracle=f"""
-    WITH co AS (
-        SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-        FROM lineitem a JOIN lineitem b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-    ),
-    adj AS (
-        SELECT u AS w, v AS nbr FROM co UNION ALL SELECT v, u FROM co
-    ),
-    deg AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY w),
+    WITH {CO_SQL},
+    {ADJ_SQL},
+    {DEG_SQL},
     capped AS (
         SELECT a.w, a.nbr FROM adj a JOIN deg ON a.w = deg.w
-        WHERE deg.d BETWEEN 2 AND {_AA_MAX_CENTER_DEGREE}
+        WHERE deg.d BETWEEN 2 AND {MAX_CENTER_DEGREE}
     ),
     wedges AS (
         SELECT x.nbr AS u, y.nbr AS v
@@ -1806,27 +1656,12 @@ def audit_benford_first_digit(spark, sf_dir):
     ),
 )
 def graph_jaccard_neighbors(spark, sf_dir):
-    # shared session-cached co-purchase pairs (feeds adjacency, the
-    # anti join, and degrees; see _co_pairs_cached)
-    co = _co_pairs_cached(spark, sf_dir)
-    adj = co.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
-        co.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
-    )
+    co = co_pairs(spark, sf_dir)
+    adj = adjacency(co)
     deg = materialize(
-        adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("d")),
-        "graph_jaccard_neighbors degrees: the cap join and both degree sides",
+        degrees(adj), "graph_jaccard_neighbors degrees: the cap join and both degree sides"
     )
-    capped = (
-        adj.join(deg, "w")
-        .filter(F.col("d").between(2, _AA_MAX_CENTER_DEGREE))
-        .select("w", "nbr")
-    )
-    x = capped.alias("x")
-    y = capped.alias("y")
-    wedges = x.join(
-        y, (F.col("x.w") == F.col("y.w")) & (F.col("x.nbr") < F.col("y.nbr"))
-    ).select(F.col("x.nbr").alias("u"), F.col("y.nbr").alias("v"))
-    common = wedges.groupBy("u", "v").agg(
+    common = capped_wedges(adj, deg).groupBy("u", "v").agg(
         F.count(F.lit(1)).cast("long").alias("n_common")
     )
     novel = (
@@ -1863,68 +1698,6 @@ _KCORE_ROUNDS = 10  # sf0.001 is stable after round 1; sf0.01 has not
 #                     converged by round 10 (936 -> 935), which the
 #                     `converged` column reports at any SF
 
-# co/adj MATERIALIZED: consumers reference them many times (the k-core
-# oracle's 10 unrolled layers each hit adj), and DuckDB inlines plain
-# CTEs — materializing keeps the base scans O(1) instead of O(layers).
-_STABLE_CO_SQL = """
-    op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-    co AS MATERIALIZED (
-        SELECT a.l_partkey AS u, b.l_partkey AS v
-        FROM op a JOIN op b
-          ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-        GROUP BY 1, 2 HAVING COUNT(*) >= 2
-    ),
-    adj AS MATERIALIZED (SELECT u AS w, v AS nbr FROM co UNION ALL SELECT v, u FROM co)
-"""
-
-
-def _stable_co_edges(spark, sf_dir):
-    """DISTINCT (u < v) part pairs co-purchased in >= 2 orders, plus the
-    symmetric adjacency — the per-order pair explode is linear via the
-    sorted-set transform (no order-level self-join), then one (u, v)
-    hash agg applies the support filter.  The support-filtered pair
-    table is session-cached per (application, sf_dir), the
-    _co_pairs_cached twin: its four consumers (k-core, LPA, modularity,
-    local clustering) previously each rebuilt it from lineitem
-    (~1.5-2 s per query at sf0.1).  NOTE: the per-ORDER explode here is
-    NOT derivable from _co_pairs_cached — the support count needs one
-    row per co-purchasing order, which the distinct table has already
-    collapsed."""
-
-    def build():
-        li = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-        return (
-            li.groupBy("l_orderkey")
-            .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
-            .select(
-                F.explode(
-                    F.expr(
-                        "flatten(transform(ps, (x, i) ->"
-                        " transform(slice(ps, i+2, size(ps)), y -> struct(x AS u, y AS v))))"
-                    )
-                ).alias("p")
-            )
-            .select("p.u", "p.v")
-            .groupBy("u", "v")
-            .agg(F.count(F.lit(1)).alias("support"))
-            .filter(F.col("support") >= 2)
-            .select("u", "v")
-            .cache()
-        )
-
-    co = session_cached(spark, ("stable_co", sf_dir), build)
-    # materialize OVER the cache: each call reads the cached table (one
-    # cheap scan instead of the lineitem rebuild) and truncates it out of
-    # downstream plans, so every consumer's plan contract ("Scan
-    # ExistingRDD", no parquet re-scan) holds verbatim and per-round
-    # loops iterate over an RDD leaf exactly as before.
-    co = materialize(co, "_stable_co_edges co-pairs: every consumer's adjacency and loop")
-    adj = co.select(F.col("u").alias("w"), F.col("v").alias("nbr")).unionAll(
-        co.select(F.col("v").alias("w"), F.col("u").alias("nbr"))
-    )
-    return co, adj
-
-
 def _kcore_oracle() -> str:
     # AS MATERIALIZED is load-bearing: DuckDB inlines plain CTEs, and
     # each layer references its predecessor twice, so 10 unrolled
@@ -1946,7 +1719,7 @@ def _kcore_oracle() -> str:
     last, second = f"k{_KCORE_ROUNDS}", f"k{_KCORE_ROUNDS - 1}"
     layers_sql = ",\n    ".join(layers)
     return f"""
-    WITH {_STABLE_CO_SQL},
+    WITH {STABLE_CO_SQL},
     n0 AS MATERIALIZED (SELECT DISTINCT w FROM adj),
     {layers_sql}
     SELECT CAST(round AS BIGINT) AS round,
@@ -1987,8 +1760,7 @@ def _kcore_oracle() -> str:
 def graph_kcore_peel_profile(spark, sf_dir):
     from pyspark.sql import Observation
 
-    _, adj = _stable_co_edges(spark, sf_dir)
-    adj = materialize(adj, "graph_kcore_peel_profile adjacency: every peel round")
+    _, adj = stable_co(spark, sf_dir)
 
     def survivors(df, reason):
         # the survivor count rides on the materialization's own job (an
@@ -2032,8 +1804,8 @@ def graph_kcore_peel_profile(spark, sf_dir):
 @register(
     "graph_local_clustering_coeff",
     oracle=f"""
-    WITH {_STABLE_CO_SQL},
-    deg AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY w),
+    WITH {STABLE_CO_SQL},
+    {DEG_SQL},
     tri AS (
         SELECT x.w, CAST(COUNT(*) AS BIGINT) AS t
         FROM adj x JOIN adj y ON x.w = y.w AND x.nbr < y.nbr
@@ -2066,9 +1838,8 @@ def graph_kcore_peel_profile(spark, sf_dir):
     ),
 )
 def graph_local_clustering_coeff(spark, sf_dir):
-    co, adj = _stable_co_edges(spark, sf_dir)
-    adj = materialize(adj, "graph_local_clustering_coeff adjacency: degrees and the wedge joins")
-    deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    co, adj = stable_co(spark, sf_dir)
+    deg = degrees(adj)
     x = adj.alias("x")
     y = adj.alias("y")
     wedges = x.join(
@@ -2125,7 +1896,7 @@ def _lpa_layers() -> tuple[str, str]:
 def _lpa_oracle() -> str:
     layers_sql, prev = _lpa_layers()
     return f"""
-    WITH {_STABLE_CO_SQL},
+    WITH {STABLE_CO_SQL},
     l0 AS MATERIALIZED (SELECT DISTINCT w, w AS label FROM adj),
     {layers_sql}
     SELECT CAST(label AS BIGINT) AS community,
@@ -2138,8 +1909,7 @@ def _lpa_oracle() -> str:
 
 def _lpa_labels(spark, sf_dir):
     """Run the synchronous LPA rounds; returns (co, adj, labels)."""
-    co, adj = _stable_co_edges(spark, sf_dir)
-    adj = materialize(adj, "_lpa_labels adjacency: every LPA round")
+    co, adj = stable_co(spark, sf_dir)
     labels = adj.select("w").distinct().select("w", F.col("w").alias("label"))
     for _ in range(_LPA_ROUNDS):
         counted = (
@@ -2465,14 +2235,7 @@ def _hits_sql(iters: int) -> str:
     ),
 )
 def graph_hits_hubs_authorities(spark, sf_dir):
-    o = table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    l = table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = materialize(
-        o.join(l, o.o_orderkey == l.l_orderkey)
-        .select(F.col("o_custkey").alias("c"), F.col("l_suppkey").alias("s"))
-        .distinct(),
-        "graph_hits_hubs_authorities edges: every half-round",
-    )
+    edges = purchases(spark, sf_dir)
     h = edges.select("c").distinct().select(
         "c", F.lit(1000000).cast("long").alias("h")
     )
@@ -2565,10 +2328,10 @@ def hilbert_key_events(spark, sf_dir):
 def _modularity_oracle() -> str:
     layers_sql, prev = _lpa_layers()
     return f"""
-    WITH {_STABLE_CO_SQL},
+    WITH {STABLE_CO_SQL},
     l0 AS MATERIALIZED (SELECT DISTINCT w, w AS label FROM adj),
     {layers_sql},
-    deg AS (SELECT w, CAST(COUNT(*) AS BIGINT) AS d FROM adj GROUP BY w),
+    {DEG_SQL},
     mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM co),
     ein AS (
         SELECT lu.label AS community, CAST(COUNT(*) AS BIGINT) AS e_in
@@ -2620,7 +2383,7 @@ def _modularity_oracle() -> str:
 def graph_modularity_lpa(spark, sf_dir):
     co, adj, labels = _lpa_labels(spark, sf_dir)
     labels = materialize(labels, "graph_modularity_lpa labels: three aggregates")
-    deg = adj.groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("d"))
+    deg = degrees(adj)
     m = co.agg(F.count(F.lit(1)).cast("long").alias("m"))
     lu = labels.select(F.col("w").alias("u"), F.col("label").alias("lab_u"))
     lv = labels.select(F.col("w").alias("v"), F.col("label").alias("lab_v"))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..io import fan_out, materialize, table
+from ..operators.graph import components_sql
 from ..operators.similarity import cosine as _cosine
 from ..operators.similarity import dot as _dot
 from ..operators.similarity import (
@@ -586,26 +587,7 @@ def ann_knn_graph_bucketed(spark, sf_dir):
         FROM v a JOIN v b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         WHERE {_COS_SQL} >= {_NEAR_COS}
     ),
-    edges AS (
-        SELECT vec1 AS a, vec2 AS b FROM sim_pairs
-        UNION ALL SELECT vec2, vec1 FROM sim_pairs
-    ),
-    reach AS (
-        SELECT DISTINCT a AS vec, a AS label FROM edges
-        UNION
-        (
-            WITH RECURSIVE walk(vec, label) AS (
-                SELECT DISTINCT a, a FROM edges
-                UNION
-                SELECT e.a, w.label FROM edges e JOIN walk w ON e.b = w.vec
-            )
-            SELECT vec, label FROM walk
-        )
-    ),
-    comp AS (
-        SELECT vec AS vec_id, CAST(MIN(label) AS BIGINT) AS cluster_id
-        FROM reach GROUP BY vec
-    )
+    {components_sql("sim_pairs", "vec1", "vec2", "vec_id", "cluster_id")}
     SELECT c.vec_id, c.cluster_id,
            CAST(COUNT(*) OVER (PARTITION BY c.cluster_id) AS BIGINT) AS cluster_size,
            c.vec_id = c.cluster_id AS keep

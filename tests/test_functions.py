@@ -339,9 +339,10 @@ def test_hll_sketch_mergeability_law(spark, sf_dir):
         assert abs(est - exact[t]) <= max(3, 0.05 * exact[t]), (t, est, exact[t])
 
 
-def test_connected_components_paths_agree(spark, sf_dir):
+def test_connected_components_paths_agree(spark, sf_dir, monkeypatch):
     """Driver union-find and distributed label propagation must produce
     the identical (doc_id, component_id) labeling."""
+    from form700_etl_spark.operators import dedup as dedup_ops
     from form700_etl_spark.operators.dedup import connected_components
     from form700_etl_spark.queries.dedup import dedup_ngram_jaccard
 
@@ -349,18 +350,19 @@ def test_connected_components_paths_agree(spark, sf_dir):
     fast = {
         (r.doc_id, r.component_id) for r in connected_components(pairs).collect()
     }
+    monkeypatch.setattr(dedup_ops, "CC_DRIVER_MAX_PAIRS", 0)
     distributed = {
-        (r.doc_id, r.component_id)
-        for r in connected_components(pairs, driver_threshold=0).collect()
+        (r.doc_id, r.component_id) for r in connected_components(pairs).collect()
     }
     assert fast == distributed and len(fast) > 0
 
 
 def test_connected_components_big_path_ships_no_pair_rows(spark, sf_dir, monkeypatch):
-    """With the graph above driver_threshold, the path probe must be a
+    """With the graph above CC_DRIVER_MAX_PAIRS, the path probe must be a
     count (a single long to the driver) — never a collect/toPandas of
     pair rows (the pre-r12 shape collected threshold+1 Row objects just
     to discard them)."""
+    from form700_etl_spark.operators import dedup as dedup_ops
     from form700_etl_spark.operators.dedup import connected_components
     from form700_etl_spark.queries.dedup import dedup_ngram_jaccard
 
@@ -372,9 +374,10 @@ def test_connected_components_big_path_ships_no_pair_rows(spark, sf_dir, monkeyp
     def _boom(self, *a, **k):  # noqa: ANN001
         raise AssertionError("big-graph path must not transfer pair rows")
 
+    monkeypatch.setattr(dedup_ops, "CC_DRIVER_MAX_PAIRS", 0)
     monkeypatch.setattr(DataFrame, "collect", _boom)
     monkeypatch.setattr(DataFrame, "toPandas", _boom)
-    out = connected_components(pairs, driver_threshold=0)
+    out = connected_components(pairs)
     monkeypatch.undo()
     assert out.count() > 0
 

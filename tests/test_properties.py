@@ -272,10 +272,8 @@ class TestKCorePeel:
         >= k among surviving nodes."""
         from pyspark.sql import functions as F
 
-        from form700_etl_spark.queries.scale import (
-            _KCORE_K,
-            _stable_co_edges,
-        )
+        from form700_etl_spark.operators.graph import stable_co
+        from form700_etl_spark.queries.scale import _KCORE_K
         from form700_etl_spark.registry import all_queries
 
         rows = (
@@ -289,7 +287,7 @@ class TestKCorePeel:
 
         # Independent fixpoint replay: peel to convergence (not a fixed
         # round count) and check the invariant degree bound.
-        _, adj = _stable_co_edges(spark, sf_dir)
+        _, adj = stable_co(spark, sf_dir)
         adj_pdf = adj.toPandas()
         import collections
 
