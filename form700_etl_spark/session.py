@@ -8,9 +8,20 @@ UTC-naive DuckDB oracle), and Arrow enabled for every pandas-UDF
 exchange.  Two more settings remove fixed costs every task paid:
 heap-sized Tungsten pages (``page_size_bytes``) and a Python worker
 daemon that keeps Spark's bundled archives off the workers' ``sys.path``
-(``worker_daemon``).  On a 1000-executor cluster the only knobs that
-change are master/memory/shuffle-partitions; the engine sizes work by
-the core count (``io.width``), and nothing in it assumes local mode.
+(``worker_daemon``).  Two more remove a fixed cost outside any task:
+without libhadoop's ``NativeIO`` the local filesystem forks a ``chmod``
+for every file and directory it creates and a ``readlink`` for both ends
+of every FileContext rename, and the ``file:`` scheme resolved to Hive's
+checksum filesystem, which doubles every file with a ``.crc`` sibling.
+A warm 3-batch tumbling-window stream drive forked 198 processes (144
+``readlink``, 54 ``chmod``); with ``RawLocalFileSystem`` and the
+FileSystem-based checkpoint manager it forks 34 ``chmod`` and no
+``readlink``.  Those two confs hold for local files only, which is all a
+``get_spark`` session (``local[N]``) writes.  On a 1000-executor cluster
+the only knobs that change are master/memory/shuffle-partitions and the
+checkpoint manager (HDFS and object stores keep their own, see below);
+the engine sizes work by the core count (``io.width``), and nothing else
+in it assumes local mode.
 """
 
 from __future__ import annotations
@@ -144,6 +155,29 @@ def get_spark(app_name: str = "form700_etl_spark") -> SparkSession:
         # keep the whole bench run's stages in the status store, so the
         # profile.jobs readout after a timed region still finds them
         .config("spark.ui.retainedStages", "10000")
+        # `file:` resolved to Hive's ProxyLocalFileSystem, a checksum
+        # filesystem: every local file Hadoop writes (stream offsets,
+        # commits, source logs and state deltas, replay_stream's parquet,
+        # the parquet sinks, shards and compaction) got a `.crc` sibling,
+        # and without NativeIO the file and its sibling each forked a
+        # `chmod`, and each of their renames a `readlink` per end.  The raw
+        # filesystem writes the file alone; the checksums it drops guarded
+        # only Hadoop readers of these files against a bad local disk.
+        .config("spark.hadoop.fs.file.impl", "org.apache.hadoop.fs.RawLocalFileSystem")
+        # Spark's default checkpoint manager renames through FileContext,
+        # which calls FileUtil.readLink (a `readlink` fork) on source and
+        # target: 144 of the 198 forks of a warm 3-batch stream drive.
+        # The FileSystem-based manager renames with FileSystem.rename, on
+        # the raw filesystem File.renameTo, i.e. POSIX rename(2), which
+        # replaces an existing target atomically and forks nothing.  Local
+        # only: HDFS's rename does not replace an existing target, so a
+        # cluster whose checkpoints live on HDFS or an object store keeps
+        # Spark's FileContext default (or the store's own manager).
+        .config(
+            "spark.sql.streaming.checkpointFileManagerClass",
+            "org.apache.spark.sql.execution.streaming.checkpointing."
+            "FileSystemBasedCheckpointFileManager",
+        )
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

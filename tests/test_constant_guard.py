@@ -103,30 +103,13 @@ def test_constants_defined_above_their_registration_site(path):
     assert not violations, f"{path.name}: {sorted(set(violations))}"
 
 
-@pytest.mark.parametrize(
-    "path",
-    sorted(QUERIES_DIR.glob("*.py")),
-    ids=lambda p: p.name,
-)
-def test_helper_generated_oracles_stable_after_import(path):
-    """Freeze-at-registration audit for HELPER-GENERATED oracles
-    (VERDICT r10 task 7): some oracles are built by a module function
-    (e.g. ``_modularity_oracle`` splicing ``_lpa_layers()``) whose
-    output depends on other module state.  The registry froze the
-    helper's output at import; if later module state would make the
-    helper emit different SQL today, the engine (which reads that state
-    late-bound) and the frozen oracle have silently diverged.  Re-run
-    every helper-call oracle expression in the module's CURRENT
-    namespace and require byte-identical output to the registered
-    string."""
-    import importlib
-
-    from form700_etl_spark.registry import all_queries
-
-    src = path.read_text()
-    tree = ast.parse(src, filename=str(path))
+def _computed_oracle_sites(path):
+    """(query name, code) of every ``register`` oracle in ``path`` that
+    is not a plain string constant: a helper call, an f-string (with or
+    without calls inside) or a ``+`` concatenation, any of which reads
+    module state when the ``register`` line runs."""
     sites = []
-    for node in ast.walk(tree):
+    for node in ast.walk(ast.parse(path.read_text(), filename=str(path))):
         if not (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Name)
@@ -142,17 +125,46 @@ def test_helper_generated_oracles_stable_after_import(path):
             kw.value for kw in node.keywords if kw.arg == "oracle"
         ] + node.args[1:2]
         for expr in oracle_exprs:
-            if isinstance(expr, ast.Call):
-                sites.append((qname, ast.get_source_segment(src, expr)))
-    if not sites:
-        pytest.skip("no helper-generated oracles in this module")
+            if not isinstance(expr, ast.Constant):
+                code = compile(ast.Expression(expr), str(path), "eval")
+                sites.append((qname, code))
+    return sites
+
+
+_ORACLE_SITES = {
+    path: sites
+    for path in sorted(QUERIES_DIR.glob("*.py"))
+    if (sites := _computed_oracle_sites(path))
+}
+
+
+@pytest.mark.parametrize("path", list(_ORACLE_SITES), ids=lambda p: p.name)
+def test_helper_generated_oracles_stable_after_import(path):
+    """Freeze-at-registration audit for COMPUTED oracles (VERDICT r10
+    task 7): an oracle built by a module function (e.g.
+    ``_modularity_oracle`` splicing ``_lpa_layers()``), an f-string that
+    embeds a helper's output or a constant (``{_quality_sql()}``,
+    ``{_H2}``) or a ``+`` concatenation depends on other module state.
+    The registry froze its value at import; if later module state would
+    make it read differently today, the engine (which reads that state
+    late-bound) and the frozen oracle have silently diverged.  Re-run
+    every such oracle expression in the module's CURRENT namespace and
+    require byte-identical output to the registered string.  Only
+    modules with at least one such oracle are collected."""
+    import importlib
+
+    from form700_etl_spark.registry import all_queries
+
     qs = all_queries()
     mod = importlib.import_module(f"form700_etl_spark.queries.{path.stem}")
-    for qname, seg in sites:
-        assert qname in qs, f"{path.name}: unparsed register() name for {seg}"
-        live = eval(seg, vars(mod))  # noqa: S307 — repo-controlled source
-        assert live == qs[qname].oracle, (
-            f"{qname}: oracle helper {seg!r} emits different SQL now than "
-            f"at registration — module state it reads was changed after "
-            f"the @register line ran"
-        )
+    drifted = []
+    for qname, code in _ORACLE_SITES[path]:
+        assert qname in qs, f"{path.name}: unparsed register() name at {code}"
+        live = eval(code, vars(mod))  # noqa: S307 — repo-controlled source
+        if live != qs[qname].oracle:
+            drifted.append(qname)
+    assert not drifted, (
+        f"{path.name}: {drifted} oracles read different SQL now than at "
+        f"registration — module state they read was changed after the "
+        f"@register line ran"
+    )

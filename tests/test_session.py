@@ -1,12 +1,17 @@
-"""The fixed per-task costs ``get_spark`` removes: Tungsten pages sized to
-the heap, and Python workers without Spark's bundled archives."""
+"""The fixed costs ``get_spark`` removes: Tungsten pages sized to the heap,
+Python workers without Spark's bundled archives, and the ``readlink`` and
+``chmod`` processes Hadoop's local filesystem forks for each checkpoint
+file."""
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import subprocess
 import sys
 import textwrap
+import uuid
 import zipfile
 
 import py4j.version
@@ -168,3 +173,125 @@ def test_pages_are_never_humongous_and_span_the_heap(spark):
     # a long[] page carries a 16-byte header; G1 calls half a region humongous
     assert page + 16 < region / 2, (page, region)
     assert 8192 * page >= jvm.java.lang.Runtime.getRuntime().maxMemory() or page == 8 << 20
+
+
+def test_local_files_use_raw_filesystem_and_filesystem_checkpoints(spark, tmp_path):
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    fs = jvm.org.apache.hadoop.fs.FileSystem.get(jvm.java.net.URI("file:///"), conf)
+    assert fs.getClass().getName() == "org.apache.hadoop.fs.RawLocalFileSystem"
+    manager = jvm.org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
+    created = manager.create(jvm.org.apache.hadoop.fs.Path(str(tmp_path)), conf)
+    assert created.getClass().getSimpleName() == "FileSystemBasedCheckpointFileManager"
+
+
+def _drive_on_checkpoint(stream, checkpoint):
+    """Run the tumbling-hourly aggregation over ``stream`` in complete mode
+    on ``checkpoint``; return the sink's sorted rows and the ids of the
+    batches that read input."""
+    from form700_etl_spark.streaming.events_stream import _tumbling_hourly_agg
+
+    spark = stream.sparkSession
+    name = f"ckpt_{uuid.uuid4().hex[:12]}"
+    q = (
+        _tumbling_hourly_agg(stream).writeStream.outputMode("complete")
+        .format("memory").queryName(name)
+        .option("checkpointLocation", str(checkpoint)).start()
+    )
+    try:
+        q.processAllAvailable()
+        batches = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+        return sorted(spark.table(name).collect()), batches
+    finally:
+        q.stop()
+        spark.catalog.dropTempView(name)
+
+
+def _events_replay(spark, sf_dir):
+    from form700_etl_spark.io import table
+    from form700_etl_spark.streaming.events_stream import replay_stream
+
+    return replay_stream(spark, [table(spark, sf_dir, "events")] * 3)
+
+
+def test_stateful_checkpoint_has_no_hadoop_checksum_files(spark, sf_dir, tmp_path):
+    """RawLocalFileSystem writes no ``.<name>.crc`` sibling.  Spark's own
+    state-file checksums (``<version>.delta.crc``) are data, not siblings."""
+    with _events_replay(spark, sf_dir) as stream:
+        rows, _ = _drive_on_checkpoint(stream, tmp_path / "ck")
+    assert rows
+    files = [f for _, _, names in os.walk(tmp_path / "ck") for f in names]
+    assert any(f.endswith(".delta") for f in files), files
+    assert not [f for f in files if f.startswith(".") and f.endswith(".crc")]
+
+
+def test_replayed_batch_rewrites_its_state_over_the_old_delta(spark, sf_dir, tmp_path):
+    """Without the last batch's commit a restart replays that batch: it
+    loads the state of the batch before and renames its new delta over the
+    one the first run wrote.  The rows must equal an uninterrupted run."""
+    ck = tmp_path / "ck"
+    with _events_replay(spark, sf_dir) as stream:
+        expected, batches = _drive_on_checkpoint(stream, tmp_path / "whole")
+        assert _drive_on_checkpoint(stream, ck) == (expected, batches)
+        last = batches[-1]
+        deltas = sorted((ck / "state").glob(f"*/*/{last + 1}.delta"))
+        assert deltas
+        inodes = [d.stat().st_ino for d in deltas]
+        for name in (str(last), f".{last}.crc"):
+            (ck / "commits" / name).unlink(missing_ok=True)
+        replayed, rerun = _drive_on_checkpoint(stream, ck)
+    assert rerun == [last]
+    assert replayed == expected
+    assert (ck / "commits" / str(last)).exists()
+    assert all(d.stat().st_ino != i for d, i in zip(deltas, inodes))
+
+
+_FORK_COUNT_SCRIPT = """
+import json, sys
+sys.path.insert(0, {repo!r})
+from form700_etl_spark.session import get_spark
+from form700_etl_spark.streaming.events_stream import bench_tumbling_throughput
+spark = get_spark("forks")
+bench_tumbling_throughput(spark, {sf_dir!r}, n_batches=3)  # warm-up
+with open({log!r}) as f:
+    before = len(f.readlines())
+bench_tumbling_throughput(spark, {sf_dir!r}, n_batches=3)
+with open({log!r}) as f:
+    print(json.dumps([line.split()[0] for line in f.readlines()[before:]]))
+"""
+
+# what Hadoop's Shell and FileUtil, and Spark's recursive delete, exec on Linux
+_SHIMMED = ("readlink", "chmod", "chown", "ls", "stat", "rm", "df", "du", "bash", "setsid")
+
+
+def test_warm_stream_drive_forks_no_readlink(tmp_path, sf_dir):
+    """Without libhadoop's NativeIO, every ``setPermission`` forks a
+    ``chmod`` and every FileContext rename a ``readlink`` of source and
+    target.  Logging shims first on the JVM's ``PATH`` count the forks of
+    one warm 3-batch drive: the checksum filesystem and the FileContext
+    manager forked 198 (144 ``readlink``), these confs leave the 34
+    ``chmod`` of the files and directories the drive creates."""
+    shims, log = tmp_path / "bin", tmp_path / "forks.log"
+    shims.mkdir()
+    log.touch()
+    for name in _SHIMMED:
+        real = shutil.which(name)
+        if real:
+            shim = shims / name
+            shim.write_text(f'#!/bin/sh\necho "{name} $*" >> {log}\nexec {real} "$@"\n')
+            shim.chmod(0o755)
+    script = tmp_path / "run.py"
+    script.write_text(textwrap.dedent(
+        _FORK_COUNT_SCRIPT.format(repo=REPO, sf_dir=sf_dir, log=str(log))
+    ))
+    # one core, so one state partition whatever the fixture's size
+    env = dict(os.environ, PATH=f"{shims}{os.pathsep}{os.environ['PATH']}",
+               SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g")
+    run = subprocess.run(
+        [sys.executable, str(script)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300,
+    )
+    assert run.returncode == 0, run.stderr[-2000:]
+    forks = json.loads(run.stdout.strip().splitlines()[-1])
+    assert "readlink" not in forks, forks
+    assert len(forks) <= 40, forks
