@@ -14,7 +14,11 @@ artifacts; it is dropped whole when a new SparkContext starts.
 ``materialize`` is the one place a query cuts its plan: an eager local
 checkpoint whose jobs carry the description ``materialize: <reason>``.
 ``local_frame`` hands a driver-held result back to Spark without a
-Python worker.  ``width`` is the one reading of how wide work runs.
+Python worker.  ``map_records`` is the one per-record Python operator
+(codec decoders, byte-level hashes, stdlib compressors): every
+``mapInPandas`` whose unit is one row goes through it, so the Python
+boundary of such a plan is one named place.  ``width`` is the one
+reading of how wide work runs.
 ``conf_scope`` is the one temporary change of session confs, and
 ``retry`` the one retry loop (sink chunk upserts, REST page fetches).
 """
@@ -24,7 +28,7 @@ from __future__ import annotations
 import os
 import time
 from contextlib import contextmanager
-from typing import Callable, Hashable, TypeVar
+from typing import Callable, Hashable, Iterable, TypeVar
 
 from pyspark.sql import Column, DataFrame, SparkSession
 
@@ -152,6 +156,29 @@ def local_frame(spark: SparkSession, schema: str, rows: list[tuple]) -> DataFram
     struct = _parse_datatype_string(schema)
     columns = [list(c) for c in zip(*rows)] or [[] for _ in struct.fields]
     return spark.createDataFrame(pa.table(columns, schema=to_arrow_schema(struct)), struct)
+
+
+def map_records(df: DataFrame, fn: Callable[..., Iterable[tuple]], schema: str) -> DataFrame:
+    """Per-record Python over ``df``: ``fn`` takes one row's values in
+    ``df``'s column order and returns that row's output tuples (none,
+    one or many) in the field order of the DDL ``schema``.  Values are
+    plain Python scalars as pandas holds them: a NULL string or binary
+    is ``None``, a NULL in a numeric column is ``NaN``.  One Arrow batch
+    in, one frame out; a plan shows it as ``MapInPandas run(...)``.  An
+    operator whose unit is the whole batch (a numpy kernel over every
+    row at once) calls ``mapInPandas`` itself."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    names = [f.name for f in _parse_datatype_string(schema).fields]
+
+    def run(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            rows = [out for row in pdf.itertuples(index=False, name=None) for out in fn(*row)]
+            yield pd.DataFrame(rows, columns=names)
+
+    return df.mapInPandas(run, schema=schema)
 
 
 def normalize_ts(dtype, col: str = "ts"):

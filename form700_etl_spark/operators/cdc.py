@@ -14,11 +14,11 @@ so boundaries realign within one window of any edit and every chunk
 after the edit region hashes identically (the locality law the tests
 assert).
 
-Spark shape: the whole pipeline is one ``mapInPandas`` pass (Arrow
-batches; the per-byte work is vectorized numpy — 64 shifted adds per
-batch, no per-byte Python) producing (doc_id, chunk_idx, chunk_len,
-chunk_hash) rows, then ordinary hash aggregation on chunk_hash for
-dedup stats.  At 100 TB the chunk table is the shuffle-side object;
+Spark shape: the whole pipeline is one ``io.map_records`` pass (one
+document in, its chunks out; the per-byte work is vectorized numpy —
+64 shifted adds per payload, no per-byte Python) producing (doc_id,
+chunk_idx, chunk_len, chunk_hash) rows, then ordinary hash aggregation
+on chunk_hash for dedup stats.  At 100 TB the chunk table is the shuffle-side object;
 payload bytes never shuffle.
 
 Determinism: the gear table derives from md5(byte value), boundaries
@@ -29,11 +29,11 @@ any partitioning or retry.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from ..io import map_records
 
 _WINDOW = 64  # gear window: bits shift out after 64 steps
 _MASK_BITS = 6  # boundary when (h & mask) == 0 -> expected 64-byte chunks
@@ -84,24 +84,13 @@ def cdc_chunk_table(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, chunk_idx, chunk_len, chunk_hash) — one row per
     content-defined chunk of the utf-8 payload."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "chunk_idx": [],
-                "chunk_len": [],
-                "chunk_hash": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                data = (text or "").encode("utf-8")
-                prev = 0
-                for idx, end in enumerate(chunk_bounds(data)):
-                    chunk = data[prev:end]
-                    out["doc_id"].append(doc_id)
-                    out["chunk_idx"].append(idx)
-                    out["chunk_len"].append(len(chunk))
-                    out["chunk_hash"].append(hashlib.md5(chunk).hexdigest())
-                    prev = end
-            yield pd.DataFrame(out)
+    def chunks(doc_id: int, text: str | None) -> list[tuple]:
+        data = (text or "").encode("utf-8")
+        rows, prev = [], 0
+        for idx, end in enumerate(chunk_bounds(data)):
+            chunk = data[prev:end]
+            rows.append((doc_id, idx, len(chunk), hashlib.md5(chunk).hexdigest()))
+            prev = end
+        return rows
 
-    return docs.select("doc_id", text_col).mapInPandas(run, schema=CHUNK_SCHEMA)
+    return map_records(docs.select("doc_id", text_col), chunks, CHUNK_SCHEMA)

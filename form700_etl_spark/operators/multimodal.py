@@ -10,7 +10,7 @@ Catalyst sees through it and prunes what a query does not read.
 
 Python runs only where decoding is the point: the codec-true WAV, BMP
 and y4m parsers and the perceptual hashes (dHash, pHash, the audio
-energy fingerprint), each an Arrow-batched ``mapInPandas`` operator.
+energy fingerprint), each a per-record ``io.map_records`` operator.
 
 Scale notes: payload bytes travel executor-side only (never collected);
 feature extraction is embarrassingly parallel over partitions; frame
@@ -20,13 +20,12 @@ expansion.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import fan_out, table
+from ..io import fan_out, map_records, table
 
 FRAME_EVERY_S = 2.0  # seconds between sampled video frames
 RESIZE_W, RESIZE_H = 96, 64  # the box every image is fitted into
@@ -140,7 +139,7 @@ def resize_media(media: DataFrame) -> DataFrame:
 WAV_SAMPLE_RATE = 8000
 WAV_N_SAMPLES = 400  # 50 ms per clip
 
-AUDIO_SCHEMA = "doc_id long, payload binary"
+PAYLOAD_SCHEMA = "doc_id long, payload binary"  # every synthesized audio, image and video table
 AUDIO_FEATURE_SCHEMA = (
     "doc_id long, sample_rate int, n_channels int, n_samples int, "
     "duration_ms int, rms_e3 long, peak int, decoder string"
@@ -171,20 +170,17 @@ def synth_wav_bytes(doc_id: int) -> bytes:
     return buf.getvalue()
 
 
+def _payloads(docs: DataFrame, make: Callable[[int], bytes]) -> DataFrame:
+    """``(doc_id, make(doc_id))`` for every document of ``docs`` — the
+    payload-table shape every synthesized medium shares."""
+    return map_records(
+        docs.select("doc_id"), lambda doc_id: [(doc_id, make(doc_id))], PAYLOAD_SCHEMA
+    )
+
+
 def synthesize_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One WAV payload per document — the audio-table shape."""
-    d = table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [synth_wav_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return d.mapInPandas(gen, schema=AUDIO_SCHEMA)
+    return _payloads(table(spark, sf_dir, "documents"), synth_wav_bytes)
 
 
 def decode_audio_features(audio: DataFrame) -> DataFrame:
@@ -193,49 +189,33 @@ def decode_audio_features(audio: DataFrame) -> DataFrame:
     squared-sample sum is exact integer arithmetic; only the final RMS
     sqrt is float (quantized to e3 for stability)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def features(doc_id: int, payload: bytes) -> list[tuple]:
         import io
         import math
         import struct
         import wave
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                with wave.open(io.BytesIO(bytes(payload)), "rb") as w:
-                    sr = w.getframerate()
-                    nc = w.getnchannels()
-                    n = w.getnframes()
-                    raw = w.readframes(n)
-                s = struct.unpack(f"<{n * nc}h", raw)
-                sq = sum(x * x for x in s)  # exact int
-                rows.append(
-                    (
-                        int(doc_id),
-                        sr,
-                        nc,
-                        n,
-                        round(1000 * n / sr),
-                        round(1000 * math.sqrt(sq / len(s))),
-                        max(abs(min(s)), abs(max(s))),
-                        "stdlib-wave",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id",
-                    "sample_rate",
-                    "n_channels",
-                    "n_samples",
-                    "duration_ms",
-                    "rms_e3",
-                    "peak",
-                    "decoder",
-                ],
+        with wave.open(io.BytesIO(payload), "rb") as w:
+            sr = w.getframerate()
+            nc = w.getnchannels()
+            n = w.getnframes()
+            raw = w.readframes(n)
+        s = struct.unpack(f"<{n * nc}h", raw)
+        sq = sum(x * x for x in s)  # exact int
+        return [
+            (
+                doc_id,
+                sr,
+                nc,
+                n,
+                round(1000 * n / sr),
+                round(1000 * math.sqrt(sq / len(s))),
+                max(abs(min(s)), abs(max(s))),
+                "stdlib-wave",
             )
+        ]
 
-    return audio.mapInPandas(run, schema=AUDIO_FEATURE_SCHEMA)
+    return map_records(audio, features, AUDIO_FEATURE_SCHEMA)
 
 
 # ----------------------------------------------------- real image path
@@ -279,18 +259,7 @@ def synth_bmp_bytes(doc_id: int) -> bytes:
 
 
 def synthesize_images(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [synth_bmp_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return d.mapInPandas(gen, schema=AUDIO_SCHEMA)  # same (doc_id, payload) shape
+    return _payloads(table(spark, sf_dir, "documents"), synth_bmp_bytes)
 
 
 def decode_bmp_features(images: DataFrame) -> DataFrame:
@@ -298,42 +267,32 @@ def decode_bmp_features(images: DataFrame) -> DataFrame:
     bottom-up pixel rows, and produce header dims + exact integer
     channel sums (e3-quantized means)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def features(doc_id: int, buf: bytes) -> list[tuple]:
         import struct
 
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                magic, _, _, _, off = struct.unpack_from("<2sIHHI", buf, 0)
-                assert magic == b"BM", "not a BMP payload"
-                hsz, w, h, _, bpp = struct.unpack_from("<IiiHH", buf, 14)
-                row_stride = (w * 3 + 3) & ~3
-                sr = sg = sb = 0
-                for y in range(h):
-                    base = off + y * row_stride
-                    for x in range(w):
-                        i = base + x * 3
-                        sb += buf[i]
-                        sg += buf[i + 1]
-                        sr += buf[i + 2]
-                n = w * h
-                rows.append(
-                    (
-                        int(doc_id), w, h, bpp, n,
-                        round(1000 * sr / n), round(1000 * sg / n),
-                        round(1000 * sb / n), "stdlib-struct-bmp",
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "width", "height", "bpp", "n_pixels",
-                    "mean_r_e3", "mean_g_e3", "mean_b_e3", "decoder",
-                ],
+        magic, _, _, _, off = struct.unpack_from("<2sIHHI", buf, 0)
+        if magic != b"BM":
+            raise ValueError(f"doc {doc_id}: not a BMP payload")
+        hsz, w, h, _, bpp = struct.unpack_from("<IiiHH", buf, 14)
+        row_stride = (w * 3 + 3) & ~3
+        sr = sg = sb = 0
+        for y in range(h):
+            base = off + y * row_stride
+            for x in range(w):
+                i = base + x * 3
+                sb += buf[i]
+                sg += buf[i + 1]
+                sr += buf[i + 2]
+        n = w * h
+        return [
+            (
+                doc_id, w, h, bpp, n,
+                round(1000 * sr / n), round(1000 * sg / n),
+                round(1000 * sb / n), "stdlib-struct-bmp",
             )
+        ]
 
-    return images.mapInPandas(run, schema=BMP_FEATURE_SCHEMA)
+    return map_records(images, features, BMP_FEATURE_SCHEMA)
 
 
 # ----------------------------------------------------- real video path
@@ -367,18 +326,7 @@ def synth_y4m_bytes(doc_id: int) -> bytes:
 
 
 def synthesize_videos(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = table(spark, sf_dir, "documents").select("doc_id")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [synth_y4m_bytes(int(i)) for i in pdf["doc_id"]],
-                }
-            )
-
-    return d.mapInPandas(gen, schema=AUDIO_SCHEMA)
+    return _payloads(table(spark, sf_dir, "documents"), synth_y4m_bytes)
 
 
 def decode_y4m_frames(videos: DataFrame) -> DataFrame:
@@ -386,42 +334,35 @@ def decode_y4m_frames(videos: DataFrame) -> DataFrame:
     tokens), walk FRAME markers, and emit per-frame luma means from
     exact integer sums — one output row per frame of each clip."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                buf = bytes(payload)
-                nl = buf.index(b"\n")
-                tokens = buf[:nl].decode().split(" ")
-                assert tokens[0] == "YUV4MPEG2", "not a y4m payload"
-                w = int(next(t[1:] for t in tokens if t.startswith("W")))
-                h = int(next(t[1:] for t in tokens if t.startswith("H")))
-                c = next((t[1:] for t in tokens if t.startswith("C")), "420")
-                plane = w * h
-                frame_bytes = plane * 3 if c == "444" else plane * 3 // 2
-                pos, idx = nl + 1, 0
-                while pos < len(buf):
-                    fnl = buf.index(b"\n", pos)
-                    assert buf[pos:fnl].startswith(b"FRAME")
-                    y_plane = buf[fnl + 1 : fnl + 1 + plane]
-                    rows.append(
-                        (
-                            int(doc_id), idx, w, h,
-                            round(1000 * sum(y_plane) / plane),
-                            "stdlib-y4m",
-                        )
-                    )
-                    pos = fnl + 1 + frame_bytes
-                    idx += 1
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "frame_index", "width", "height",
-                    "mean_y_e3", "decoder",
-                ],
+    def frames(doc_id: int, buf: bytes) -> list[tuple]:
+        nl = buf.index(b"\n")
+        tokens = buf[:nl].decode().split(" ")
+        if tokens[0] != "YUV4MPEG2":
+            raise ValueError(f"doc {doc_id}: not a y4m payload")
+        w = int(next(t[1:] for t in tokens if t.startswith("W")))
+        h = int(next(t[1:] for t in tokens if t.startswith("H")))
+        c = next((t[1:] for t in tokens if t.startswith("C")), "420")
+        plane = w * h
+        frame_bytes = plane * 3 if c == "444" else plane * 3 // 2
+        rows = []
+        pos, idx = nl + 1, 0
+        while pos < len(buf):
+            fnl = buf.index(b"\n", pos)
+            if not buf[pos:fnl].startswith(b"FRAME"):
+                raise ValueError(f"doc {doc_id}: no FRAME marker at byte {pos}")
+            y_plane = buf[fnl + 1 : fnl + 1 + plane]
+            rows.append(
+                (
+                    doc_id, idx, w, h,
+                    round(1000 * sum(y_plane) / plane),
+                    "stdlib-y4m",
+                )
             )
+            pos = fnl + 1 + frame_bytes
+            idx += 1
+        return rows
 
-    return videos.mapInPandas(run, schema=Y4M_FRAME_SCHEMA)
+    return map_records(videos, frames, Y4M_FRAME_SCHEMA)
 
 
 # ----------------------------------------------- image dHash near-dup
@@ -506,39 +447,21 @@ def synthesize_dedup_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id // 3 (every 3 consecutive docs share an image, so dup-group
     size is CONSTANT at every SF and pair volume stays linear), and
     every 13th doc gets the perturbed near-dup variant."""
-    d = table(spark, sf_dir, "documents").select("doc_id")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                buf = synth_noise_bmp_bytes(i // DHASH_GROUP)
-                if i % DHASH_PERTURB_EVERY == 0:
-                    buf = perturb_bmp_bytes(buf)
-                payloads.append(buf)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def make(i: int) -> bytes:
+        buf = synth_noise_bmp_bytes(i // DHASH_GROUP)
+        return perturb_bmp_bytes(buf) if i % DHASH_PERTURB_EVERY == 0 else buf
 
-    return d.mapInPandas(gen, schema=AUDIO_SCHEMA)
+    return _payloads(table(spark, sf_dir, "documents"), make)
 
 
 def image_dhash(images: DataFrame) -> DataFrame:
-    """Decode + dHash per image inside Arrow-batched mapInPandas —
-    Python IS the point here (binary container walk); everything
-    downstream (banding, joins, Hamming verify) stays JVM-side."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "dhash": [
-                        bmp_dhash64(bytes(p)) for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return images.mapInPandas(run, schema="doc_id long, dhash long")
+    """Decode + dHash per image inside ``io.map_records`` — Python IS
+    the point here (binary container walk); everything downstream
+    (banding, joins, Hamming verify) stays JVM-side."""
+    return map_records(
+        images, lambda doc_id, buf: [(doc_id, bmp_dhash64(buf))], "doc_id long, dhash long"
+    )
 
 
 # --------------------------------------------- audio fingerprint dedup
@@ -705,43 +628,27 @@ def synthesize_dedup_audio(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``io.fan_out`` on the CONTENT key (doc_id DIV group) spreads the
     Python work across every core while keeping each dup group's 3
     docs in one task, so the per-key WAV synthesizes once per group
-    (a generator-local memo — per task, never across runs) instead of
-    once per doc.  Row values are unchanged (fingerprints are order-
-    insensitive)."""
+    instead of once per doc (a memo in ``make``'s closure, which every
+    task unpickles afresh — per task, never across runs).  Row values
+    are unchanged (fingerprints are order-insensitive)."""
     d = table(spark, sf_dir, "documents").select("doc_id")
     d = fan_out(d, (F.col("doc_id") / DHASH_GROUP).cast("long"))
+    base: dict[int, bytes] = {}
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        base: dict[int, bytes] = {}
-        for pdf in batches:
-            payloads = []
-            for i in pdf["doc_id"]:
-                i = int(i)
-                key = i // DHASH_GROUP
-                buf = base.get(key)
-                if buf is None:
-                    buf = base[key] = _synth_noise_wav_bytes_np(key)
-                if i % DHASH_PERTURB_EVERY == 0:
-                    buf = _volume_scale_wav_bytes_np(buf)
-                payloads.append(buf)
-            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+    def make(i: int) -> bytes:
+        key = i // DHASH_GROUP
+        buf = base.get(key)
+        if buf is None:
+            buf = base[key] = _synth_noise_wav_bytes_np(key)
+        return _volume_scale_wav_bytes_np(buf) if i % DHASH_PERTURB_EVERY == 0 else buf
 
-    return d.mapInPandas(gen, schema=AUDIO_SCHEMA)
+    return _payloads(d, make)
 
 
 def audio_fingerprints(audio: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "afp": [
-                        _wav_energy_fp64_np(bytes(p)) for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return audio.mapInPandas(run, schema="doc_id long, afp long")
+    return map_records(
+        audio, lambda doc_id, buf: [(doc_id, _wav_energy_fp64_np(buf))], "doc_id long, afp long"
+    )
 
 
 # --------------------------------------------------- perceptual pHash
@@ -786,19 +693,9 @@ def bmp_phash64(buf: bytes) -> int:
 
 
 def image_phash(images: DataFrame) -> DataFrame:
-    """Decode + pHash per image inside Arrow-batched mapInPandas (the
+    """Decode + pHash per image inside ``io.map_records`` (the
     image_dhash shape: Python touches each payload once, everything
     downstream stays JVM-side)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "phash": [
-                        bmp_phash64(bytes(p)) for p in pdf["payload"]
-                    ],
-                }
-            )
-
-    return images.mapInPandas(run, schema="doc_id long, phash long")
+    return map_records(
+        images, lambda doc_id, buf: [(doc_id, bmp_phash64(buf))], "doc_id long, phash long"
+    )

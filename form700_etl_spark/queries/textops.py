@@ -13,7 +13,7 @@ import math
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..io import local_frame, materialize, table
+from ..io import local_frame, map_records, materialize, table
 from ..registry import register
 
 _STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
@@ -306,7 +306,8 @@ def text_top_terms(spark, sf_dir):
     doc=(
         "TF-IDF top-3 terms per document (sampled doc subset): term "
         "frequency x ln(N/df), ranked per doc — the classic relevance "
-        "pipeline as two aggregations and a broadcast-joined doc-frequency table."
+        "pipeline as two aggregations, a broadcast-joined doc-frequency "
+        "table and a broadcast one-row document count."
     ),
 )
 def text_tfidf_top_terms(spark, sf_dir):
@@ -316,11 +317,17 @@ def text_tfidf_top_terms(spark, sf_dir):
     toks = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = toks.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = d.count()
-    scored = tf.join(F.broadcast(df_), "term").select(
-        "doc_id",
-        "term",
-        F.round(F.col("tf") * F.log(F.lit(float(n_docs)) / F.col("df")), 6).alias("tfidf"),
+    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    scored = (
+        tf.join(F.broadcast(df_), "term")
+        .crossJoin(F.broadcast(n_docs))
+        .select(
+            "doc_id",
+            "term",
+            F.round(
+                F.col("tf") * F.log(F.col("n_docs").cast("double") / F.col("df")), 6
+            ).alias("tfidf"),
+        )
     )
     w = W.partitionBy("doc_id").orderBy(F.col("tfidf").desc(), F.col("term"))
     return (
@@ -3706,7 +3713,7 @@ def text_ndcg_retrieval_eval(spark, sf_dir):
         "repetition signal (the Gopher/C4 family's cheap entropy "
         "proxy: boilerplate and template spam compress far better "
         "than natural prose; near-random noise barely compresses).  "
-        "One Arrow-batched mapInPandas pass (stdlib zlib level 6, "
+        "One io.map_records pass (stdlib zlib level 6, "
         "Python IS the point — there is no JVM-side DEFLATE "
         "expression), emitting exact byte counts; the ratio and the "
         "corpus-level flag are plain column math.  Flags docs whose "
@@ -3716,29 +3723,16 @@ def text_ndcg_retrieval_eval(spark, sf_dir):
     ),
 )
 def text_zlib_compression_quality(spark, sf_dir):
-    import pandas as pd
-
     d = table(spark, sf_dir, "documents")
 
-    def run(batches):
+    def sizes(doc_id, text):
         import zlib
 
-        for pdf in batches:
-            raw = [len((t or "").encode("utf-8")) for t in pdf["text"]]
-            comp = [
-                len(zlib.compress((t or "").encode("utf-8"), 6))
-                for t in pdf["text"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "raw_bytes": raw,
-                    "deflate_bytes": comp,
-                }
-            )
+        raw = (text or "").encode("utf-8")
+        return [(doc_id, len(raw), len(zlib.compress(raw, 6)))]
 
-    scored = d.select("doc_id", "text").mapInPandas(
-        run, schema="doc_id long, raw_bytes long, deflate_bytes long"
+    scored = map_records(
+        d.select("doc_id", "text"), sizes, "doc_id long, raw_bytes long, deflate_bytes long"
     )
     return scored.select(
         "doc_id",

@@ -415,20 +415,11 @@ def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
 
 
-def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join: every (click, purchase) pair of the
-    same user where the purchase lands within 1 hour after the click —
-    the conversion-attribution shape.
-
-    Both sides carry watermarks and the join condition carries a time
-    RANGE, so the state store can evict: a click older than the
-    watermark minus the join window can never match a future purchase
-    and is dropped.  Without both bounds a stream-stream join's state
-    grows forever — this is the canonical bounded-state formulation
-    (Structured Streaming stream-stream join semantics).
-
-    On the static fixture the result equals the batch self-join, so
-    the DuckDB oracle checks it exactly."""
+def _click_purchase_pairs(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """The event stream's clicks ``how``-joined to the same user's
+    purchases within 1 hour after each click, run to completion
+    (append mode): (c_user, click_ts, click_id, p_user, purchase_ts,
+    purchase_id).  Both sides carry a 2 hour watermark."""
     events = read_events_stream(spark, sf_dir)
     clicks = (
         events.filter(F.col("event_type") == "click")
@@ -454,8 +445,27 @@ def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_user = p_user AND purchase_ts >= click_ts "
             "AND purchase_ts <= click_ts + interval 1 hour"
         ),
+        how,
     )
     pairs, _ = run_to_completion(joined, "append")
+    return pairs
+
+
+def stream_stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join: every (click, purchase) pair of the
+    same user where the purchase lands within 1 hour after the click —
+    the conversion-attribution shape.
+
+    Both sides carry watermarks and the join condition carries a time
+    RANGE, so the state store can evict: a click older than the
+    watermark minus the join window can never match a future purchase
+    and is dropped.  Without both bounds a stream-stream join's state
+    grows forever — this is the canonical bounded-state formulation
+    (Structured Streaming stream-stream join semantics).
+
+    On the static fixture the result equals the batch self-join, so
+    the DuckDB oracle checks it exactly."""
+    pairs = _click_purchase_pairs(spark, sf_dir, "inner")
     # batch-side audit: conversions per user (the pair list itself is
     # the operator output; the aggregate keeps the oracle result small)
     return pairs.groupBy(F.col("c_user").alias("user_id")).agg(
@@ -672,34 +682,7 @@ def stream_stream_left_outer_conversions(spark: SparkSession, sf_dir: str) -> Da
     anyway (downstream of ANY outer join, rows near the watermark are
     by definition provisional).  The DuckDB oracle applies the same
     horizon to the exact batch left join."""
-    events = read_events_stream(spark, sf_dir)
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-        .withWatermark("click_ts", "2 hours")
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("ts").alias("purchase_ts"),
-            F.col("event_id").alias("purchase_id"),
-        )
-        .withWatermark("purchase_ts", "2 hours")
-    )
-    joined = clicks.join(
-        purchases,
-        F.expr(
-            "c_user = p_user AND purchase_ts >= click_ts "
-            "AND purchase_ts <= click_ts + interval 1 hour"
-        ),
-        "leftOuter",
-    )
-    pairs, _ = run_to_completion(joined, "append")
+    pairs = _click_purchase_pairs(spark, sf_dir, "leftOuter")
     # deterministic emission horizon from the static fixture (one
     # bounded scalar agg; in production this is the live watermark)
     from ..io import table as _table

@@ -1,9 +1,12 @@
-"""The one width and the one fan-out rule (``io.width``, ``io.fan_out``).
+"""The one width and the one fan-out rule (``io.width``, ``io.fan_out``),
+and the one per-record Python operator (``io.map_records``).
 
 ``fan_out`` decides from the files a frame reads, so deciding runs no
 job even below a broadcast or an exchange; a frame read from at least
 ``width`` files passes through unshuffled; and the sites that size work
-read ``io.width``, never ``spark.sql.shuffle.partitions``."""
+read ``io.width``, never ``spark.sql.shuffle.partitions``.
+``map_records`` returns exactly the rows its ``fn`` yields for each
+input row, as a driver-side loop over the same rows would."""
 
 from __future__ import annotations
 
@@ -12,7 +15,7 @@ import re
 from pyspark.sql import functions as F
 
 from form700_etl_spark import profile
-from form700_etl_spark.io import fan_out, materialize, table, width
+from form700_etl_spark.io import fan_out, map_records, materialize, table, width
 
 
 def _plan(df) -> str:
@@ -90,3 +93,46 @@ def test_sizing_sites_read_width_not_shuffle_partitions(spark, sf_dir, monkeypat
     assert re.search(rf"hashpartitioning\(.*, {n}\), REPARTITION_BY_NUM", audio), audio
     assert len(subplans) == 1
     assert re.search(rf"rangepartitioning\(id#\d+L? ASC NULLS FIRST, {n}\)", subplans[0]), subplans[0]
+
+
+def _same_as_driver_loop(df, fn, schema: str) -> list:
+    got = [tuple(r) for r in map_records(df, fn, schema).collect()]
+    assert got == [out for row in df.collect() for out in fn(*row)]
+    return got
+
+
+def test_map_records_zero_one_or_many_rows_per_record(spark):
+    def fn(i):
+        return [(i, k) for k in range((0, 1, 3)[i % 3])]
+
+    got = _same_as_driver_loop(spark.range(0, 9, 1, 2), fn, "id long, k int")
+    assert len(got) == 3 * (0 + 1 + 3)
+
+
+def test_map_records_null_input_arrives_as_none(spark):
+    df = spark.range(6).selectExpr("IF(id % 2 = 0, NULL, CAST(id AS STRING)) AS s")
+    got = _same_as_driver_loop(df, lambda s: [(s, s is None)], "s string, was_null boolean")
+    assert [r[1] for r in got] == [True, False] * 3
+
+
+def test_map_records_passes_columns_in_frame_order(spark):
+    df = spark.range(5).selectExpr("CAST(id AS STRING) AS a", "id * 10 AS b")
+    got = _same_as_driver_loop(df, lambda a, b: [(f"{a}:{b}", b - int(a))], "ab string, d long")
+    assert got[2] == ("2:20", 18)
+
+
+def test_map_records_empty_partitions_keep_the_schema_types(spark):
+    """A filter empties two of four partitions, and ``fn`` drops every
+    row of a third: a frame built from no rows must still convert to
+    each field's Arrow type."""
+    schema = "id long, s string, b binary, x double, f boolean, n array<int>"
+    df = spark.range(0, 16, 1, 4).filter("id >= 8")
+
+    def fn(i):
+        if i < 12:
+            return []
+        return [(i, str(i), bytes([i]), i / 2, i % 2 == 0, [i, -i])]
+
+    got = _same_as_driver_loop(df, fn, schema)
+    assert [r[0] for r in got] == [12, 13, 14, 15]
+    assert got[0][2] == bytearray(b"\x0c") and got[0][5] == [12, -12]

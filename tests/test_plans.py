@@ -436,6 +436,29 @@ _PYTHON_OK = {
 }
 
 
+# The modules that may call ``mapInPandas`` directly, each with the
+# one-line reason; every operator whose unit is one row goes through
+# ``io.map_records`` instead, so the per-record Python boundary is one
+# function an audit (or a move to Arrow UDFs) finds in one place.
+_DIRECT_MAP_IN_PANDAS = {
+    "io.py": "map_records itself, the one per-record Python operator",
+    "operators/similarity.py": "the ANN kernels score a whole Arrow batch in one numpy call",
+    "operators/pca.py": "Gram partials and the projection are numpy over a whole Arrow batch",
+}
+
+
+def test_direct_map_in_pandas_only_in_batch_operators():
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1] / "form700_etl_spark"
+    calls = {
+        path.relative_to(root).as_posix(): n
+        for path in sorted(root.rglob("*.py"))
+        if (n := path.read_text().count(".mapInPandas("))
+    }
+    assert set(calls) == set(_DIRECT_MAP_IN_PANDAS), calls
+
+
 @pytest.fixture(scope="module")
 def registry_plan_sweep(spark, sf_dir):
     """ONE build pass over every non-streaming registered query, shared
