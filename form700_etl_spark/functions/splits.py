@@ -10,8 +10,7 @@ across splits.
 
 Consumers: pipeline_ops.split_train_test (the assignment query),
 dedup.dedup_cross_split_leakage (decontamination screen),
-textops.text_langid_trained_vote / text_oov_rate_vs_train (train/apply
-evaluation).  If the boundaries ever change they change HERE, for all
+operators/text.split_docs (the train/apply text queries in textops).  If the boundaries ever change they change HERE, for all
 of them at once — a partial update would silently make the
 decontamination screen disagree with the actual split assignment.
 """

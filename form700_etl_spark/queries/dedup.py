@@ -531,7 +531,7 @@ def dedup_simhash_hamming(spark, sf_dir):
 
 
 def _quality_sql() -> str:
-    from .textops import _STOPWORDS
+    from ..operators.text import STOPWORDS as _STOPWORDS
 
     return f"""
         SELECT doc_id,

@@ -10,7 +10,8 @@ them safe at scale: a deterministic hash split survives task retries
 and speculative execution, a ``rand()`` split does not.
 
 All pure built-in expressions (md5 / regexp / window / array ops) —
-JVM-side end to end; no Python UDFs in any hot path.
+JVM-side end to end; no Python UDFs in any hot path.  Tokens, the C4
+gate's features and the k-gram oracle come from ``operators/text.py``.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.splits import TRAIN_MAX_H2, split_case_sql, split_col
 from ..io import materialize, table
+from ..operators import text as tx
 from ..registry import register
 
 # md5 hex is lowercase in both Spark and DuckDB, so a lexical compare
@@ -165,10 +167,10 @@ def sample_stratified_per_lang(spark, sf_dir):
 
 @register(
     "pack_sequences_budget",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
         SELECT source, doc_id,
-               CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
+               CAST(len({tx.tokens_sql('text', False)}) AS BIGINT) AS n_tokens
         FROM documents
     ),
     packed AS (
@@ -197,7 +199,7 @@ def sample_stratified_per_lang(spark, sf_dir):
 def pack_sequences_budget(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     toks = d.select(
-        "source", "doc_id", F.size(F.split("text", " ")).cast("long").alias("n_tokens")
+        "source", "doc_id", F.size(tx.tokens("text", False)).cast("long").alias("n_tokens")
     )
     w = (
         Window.partitionBy("source")
@@ -214,24 +216,12 @@ def pack_sequences_budget(spark, sf_dir):
 
 @register(
     "quality_filter_pipeline",
-    oracle="""
+    oracle=f"""
     WITH scored AS (
-        SELECT lang,
-               len(string_split(text, ' ')) AS n_tokens,
-               CAST(length(text) AS DOUBLE)
-                 / len(string_split(text, ' ')) AS chars_per_token,
-               len(list_filter(string_split(text, ' '),
-                               t -> t IN ('the', 'a', 'of', 'and', 'to', 'in')))
-                 AS n_stop
+        SELECT lang, {tx.C4_FEATURES_SQL}
         FROM documents
     ),
-    flagged AS (
-        SELECT lang,
-               n_tokens >= 20
-                 AND chars_per_token BETWEEN 3.0 AND 12.0
-                 AND n_stop * 50 >= n_tokens AS keep
-        FROM scored
-    )
+    flagged AS (SELECT lang, {tx.C4_KEEP_SQL} AS keep FROM scored)
     SELECT lang,
            CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS kept,
            CAST(SUM(CASE WHEN keep THEN 0 ELSE 1 END) AS BIGINT) AS dropped
@@ -248,21 +238,10 @@ def pack_sequences_budget(spark, sf_dir):
     ),
 )
 def quality_filter_pipeline(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    d = d.select(
-        "lang",
-        F.size(toks).alias("n_tokens"),
-        (F.length("text").cast("double") / F.size(toks)).alias("chars_per_token"),
-        F.size(
-            F.filter(toks, lambda t: t.isin("the", "a", "of", "and", "to", "in"))
-        ).alias("n_stop"),
+    d = table(spark, sf_dir, "documents").select(
+        "lang", *tx.c4_features(tx.tokens("text", False))
     )
-    keep = (
-        (F.col("n_tokens") >= 20)
-        & F.col("chars_per_token").between(3.0, 12.0)
-        & (F.col("n_stop") * 50 >= F.col("n_tokens"))
-    )
+    keep = tx.c4_keep()
     return d.groupBy("lang").agg(
         F.sum(keep.cast("int")).cast("long").alias("kept"),
         F.sum((~keep).cast("int")).cast("long").alias("dropped"),
@@ -302,33 +281,13 @@ def text_redact_stoplist(spark, sf_dir):
 
 @register(
     "contamination_ngram_overlap",
-    oracle="""
-    WITH bench AS (
-        SELECT DISTINCT s.shingle FROM (
-            SELECT unnest(list_transform(
-                range(1, greatest(len(string_split(text, ' ')) - 4, 0) + 1),
-                i -> concat_ws(' ',
-                     string_split(text, ' ')[i],
-                     string_split(text, ' ')[i+1],
-                     string_split(text, ' ')[i+2],
-                     string_split(text, ' ')[i+3],
-                     string_split(text, ' ')[i+4]))) AS shingle
-            FROM documents WHERE doc_id % 97 = 0
-        ) s
+    oracle=f"""
+    WITH sh AS (
+        SELECT doc_id, unnest({tx.ngrams_sql('toks', 5)}) AS shingle
+        FROM (SELECT doc_id, {tx.tokens_sql('text', False)} AS toks FROM documents)
     ),
-    corpus AS (
-        SELECT DISTINCT doc_id, shingle FROM (
-            SELECT doc_id, unnest(list_transform(
-                range(1, greatest(len(string_split(text, ' ')) - 4, 0) + 1),
-                i -> concat_ws(' ',
-                     string_split(text, ' ')[i],
-                     string_split(text, ' ')[i+1],
-                     string_split(text, ' ')[i+2],
-                     string_split(text, ' ')[i+3],
-                     string_split(text, ' ')[i+4]))) AS shingle
-            FROM documents WHERE doc_id % 97 <> 0
-        ) s
-    )
+    bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 97 = 0),
+    corpus AS (SELECT DISTINCT doc_id, shingle FROM sh WHERE doc_id % 97 <> 0)
     SELECT c.doc_id,
            round(CAST(SUM(CASE WHEN b.shingle IS NOT NULL THEN 1 ELSE 0 END) AS DOUBLE)
                  / COUNT(*), 6) AS overlap
@@ -384,9 +343,9 @@ _CHUNK, _STRIDE = 32, 24  # tokens per chunk / stride (8-token overlap)
     "doc_chunk_windows",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS t,
-               len(string_split(text, ' ')) AS n
-        FROM documents WHERE doc_id % 10 = 0
+        SELECT doc_id, t, len(t) AS n
+        FROM (SELECT doc_id, {tx.tokens_sql('text', False)} AS t FROM documents)
+        WHERE doc_id % 10 = 0
     )
     SELECT doc_id,
            CAST(s // {_STRIDE} AS INT) AS chunk_idx,
@@ -406,7 +365,7 @@ _CHUNK, _STRIDE = 32, 24  # tokens per chunk / stride (8-token overlap)
 )
 def doc_chunk_windows(spark, sf_dir):
     d = table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
-    toks = d.select("doc_id", F.split("text", " ").alias("t")).withColumn(
+    toks = d.select("doc_id", tx.tokens("text", False).alias("t")).withColumn(
         "n", F.size("t")
     )
     exploded = toks.select(
@@ -427,19 +386,11 @@ def doc_chunk_windows(spark, sf_dir):
     "training_pipeline_end_to_end",
     oracle=f"""
     WITH scored AS (
-        SELECT doc_id, source, text,
-               len(string_split(text, ' ')) AS n_tokens,
-               CAST(length(text) AS DOUBLE)
-                 / len(string_split(text, ' ')) AS cpt,
-               len(list_filter(string_split(text, ' '),
-                               t -> t IN ('the', 'a', 'of', 'and', 'to', 'in')))
-                 AS n_stop
+        SELECT doc_id, source, text, {tx.C4_FEATURES_SQL}
         FROM documents
     ),
     kept AS (
-        SELECT doc_id, source, text, n_tokens FROM scored
-        WHERE n_tokens >= 20 AND cpt BETWEEN 3.0 AND 12.0
-          AND n_stop * 50 >= n_tokens
+        SELECT doc_id, source, text, n_tokens FROM scored WHERE {tx.C4_KEEP_SQL}
     ),
     deduped AS (
         SELECT doc_id, source, n_tokens FROM (
@@ -476,23 +427,10 @@ def doc_chunk_windows(spark, sf_dir):
     ),
 )
 def training_pipeline_end_to_end(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
-    scored = d.select(
-        "doc_id",
-        "source",
-        "text",
-        F.size(toks).alias("n_tokens"),
-        (F.length("text").cast("double") / F.size(toks)).alias("cpt"),
-        F.size(
-            F.filter(toks, lambda t: t.isin("the", "a", "of", "and", "to", "in"))
-        ).alias("n_stop"),
+    scored = table(spark, sf_dir, "documents").select(
+        "doc_id", "source", "text", *tx.c4_features(tx.tokens("text", False))
     )
-    kept = scored.filter(
-        (F.col("n_tokens") >= 20)
-        & F.col("cpt").between(3.0, 12.0)
-        & (F.col("n_stop") * 50 >= F.col("n_tokens"))
-    )
+    kept = scored.filter(tx.c4_keep())
     w_dup = Window.partitionBy(F.md5("text")).orderBy("doc_id")
     deduped = (
         kept.withColumn("rk", F.row_number().over(w_dup))
@@ -598,7 +536,7 @@ def _near_dedup_curriculum_oracle() -> str:
     ),
     drops AS (SELECT doc_id FROM ranked WHERE rn > 1),
     survivors AS (
-        SELECT d.doc_id, d.lang, len(string_split(d.text, ' ')) AS n_tokens, q.m
+        SELECT d.doc_id, d.lang, len({tx.tokens_sql('d.text', False)}) AS n_tokens, q.m
         FROM documents d JOIN qm q ON q.doc_id = d.doc_id
         WHERE d.doc_id NOT IN (SELECT doc_id FROM drops)
     ),
@@ -637,8 +575,6 @@ def _near_dedup_curriculum_oracle() -> str:
     ),
 )
 def training_pipeline_near_dedup_curriculum(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     from ..operators.dedup import connected_components
     from ..operators.quantiles import exact_fraction_thresholds
     from .dedup import dedup_ngram_jaccard
@@ -651,7 +587,7 @@ def training_pipeline_near_dedup_curriculum(spark, sf_dir):
         F.round(F.col("quality_score") * 1000000).cast("long").alias("m"),
     )
     rn = F.row_number().over(
-        W.partitionBy("component_id").orderBy(F.desc("m"), F.asc("doc_id"))
+        Window.partitionBy("component_id").orderBy(F.desc("m"), F.asc("doc_id"))
     )
     drops = (
         clusters.join(quality, "doc_id")
@@ -666,7 +602,7 @@ def training_pipeline_near_dedup_curriculum(spark, sf_dir):
         .select(
             "doc_id",
             "lang",
-            F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
+            F.size(tx.tokens("text", False)).cast("long").alias("n_tokens"),
             "m",
         ),
         "training_pipeline_near_dedup_curriculum docs: threshold pass and audit",
@@ -850,7 +786,7 @@ _DSIR_TERM_SQL = (
     "sample_dsir_importance",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, lang, unnest(string_split(lower(text), ' ')) AS token
+        SELECT doc_id, lang, unnest({tx.tokens_sql('text', True)}) AS token
         FROM documents
     ),
     feats AS (
@@ -908,7 +844,7 @@ def sample_dsir_importance(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     feats = d.select(
         "doc_id", "lang",
-        F.explode(F.split(F.lower("text"), " ")).alias("token"),
+        F.explode(tx.tokens("text", True)).alias("token"),
     ).select(
         "doc_id", "lang",
         (F.conv(F.substring(F.md5("token"), 1, 4), 16, 10).cast("long")

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.money import cents, cents_sql
 from ..io import materialize, register_views, table
+from ..operators import text as tx
 from ..registry import register
 
 
@@ -335,7 +336,7 @@ _CMS_WIDTH = 1024
     "sketch_countmin_topk",
     oracle=f"""
     WITH tok AS (
-        SELECT unnest(string_split(text, ' ')) AS token FROM documents
+        SELECT unnest({tx.tokens_sql('text', False)}) AS token FROM documents
     ),
     tokens AS (SELECT token FROM tok WHERE token <> ''),
     cells AS (
@@ -374,7 +375,7 @@ _CMS_WIDTH = 1024
 def sketch_countmin_topk(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     tokens = (
-        d.select(F.explode(F.split("text", " ")).alias("token"))
+        d.select(F.explode(tx.tokens("text", False)).alias("token"))
         .filter(F.col("token") != "")
     )
     cells = tokens.select(

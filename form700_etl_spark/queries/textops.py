@@ -3,47 +3,46 @@
 All pure built-in-function pipelines: tokenization by regex/split,
 counting via array ops, scoring via arithmetic — JVM-side end to end,
 no Python UDFs, so the same expressions run unchanged over 100 TB of
-text shards.
+text shards.  What the text queries share (tokens, term statistics,
+segments, n-grams, split docs, language-ID and quality features, each
+with its oracle CTE) lives once in ``operators/text.py``; the builders
+here are its callers.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
 
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..io import local_frame, map_records, materialize, table
+from ..operators import text as tx
+from ..operators.fuzzy import fuzzy_join
+from ..operators.prefix import partitioned_prefix_sum
+from ..operators.quantiles import exact_fraction_thresholds
 from ..registry import register
-
-_STOPWORDS = ("the", "a", "of", "and", "to", "in", "is", "it")
-
-_LANG_MARKERS = {
-    "en": ("the", "and", "of", "is"),
-    "es": ("el", "la", "de", "es"),
-    "de": ("der", "die", "und", "ist"),
-    "fr": ("le", "la", "et", "est"),
-}
-
 
 @register(
     "text_token_stats",
-    oracle="""
+    oracle=f"""
     SELECT doc_id,
-           CAST(len(string_split(text, ' ')) AS INT) AS n_tokens,
-           CAST(len(list_distinct(string_split(text, ' '))) AS INT) AS n_unique,
-           round(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE)
-                 / len(string_split(text, ' ')), 6) AS type_token_ratio,
+           CAST(len(toks) AS INT) AS n_tokens,
+           CAST(len(list_distinct(toks)) AS INT) AS n_unique,
+           round(CAST(len(list_distinct(toks)) AS DOUBLE) / len(toks), 6)
+             AS type_token_ratio,
            CAST(length(text) AS INT) AS n_chars_actual,
            length(text) = n_chars AS n_chars_ok
-    FROM documents
+    FROM (SELECT *, {tx.tokens_sql('text', False)} AS toks FROM documents)
     """,
     tags=("text",),
     doc="Token counting + type/token ratio + metadata audit (n_chars check).",
 )
 def text_token_stats(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tx.tokens("text", False)
     n_tokens = F.size(toks)
     n_unique = F.size(F.array_distinct(toks))
     return d.select(
@@ -64,7 +63,7 @@ _BPE_PAT = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
     oracle=f"""
     SELECT doc_id, lang,
            CAST(len(regexp_extract_all(text, '{_BPE_PAT}')) AS INT) AS n_bpe_tokens,
-           CAST(len(string_split(text, ' ')) AS INT) AS n_words,
+           CAST(len({tx.tokens_sql('text', False)}) AS INT) AS n_words,
            round(CAST(length(text) AS DOUBLE)
                  / len(regexp_extract_all(text, '{_BPE_PAT}')), 4) AS chars_per_token
     FROM documents
@@ -88,7 +87,7 @@ def text_token_count_bpe(spark, sf_dir):
         "doc_id",
         "lang",
         n_bpe.cast("int").alias("n_bpe_tokens"),
-        F.size(F.split(F.col("text"), " ")).cast("int").alias("n_words"),
+        F.size(tx.tokens("text", False)).cast("int").alias("n_words"),
         F.round(F.length("text").cast("double") / n_bpe, 4).alias("chars_per_token"),
     )
 
@@ -98,10 +97,9 @@ def text_token_count_bpe(spark, sf_dir):
     oracle=f"""
     WITH t AS (
         SELECT doc_id, text,
-               len(string_split(text, ' ')) AS n_tok,
+               len({tx.tokens_sql('text', False)}) AS n_tok,
                length(text) AS n_ch,
-               len(list_filter(string_split(text, ' '),
-                               w -> list_contains({list(_STOPWORDS)!r}, w))) AS n_stop,
+               {tx.stopword_hits_sql(tx.tokens_sql('text', False), tx.STOPWORDS)} AS n_stop,
                length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct,
                length(text) - length(regexp_replace(text, '[0-9]', '', 'g')) AS n_digit
         FROM documents
@@ -122,11 +120,10 @@ def text_token_count_bpe(spark, sf_dir):
 )
 def text_quality_score(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.col("text"), " ")
+    toks = tx.tokens("text", False)
     n_tok = F.size(toks).cast("long")
     n_ch = F.length("text").cast("long")
-    stop_arr = F.array(*[F.lit(w) for w in _STOPWORDS])
-    n_stop = F.size(F.filter(toks, lambda w: F.array_contains(stop_arr, w))).cast("long")
+    n_stop = tx.stopword_hits(toks, tx.STOPWORDS).cast("long")
     n_punct = (n_ch - F.length(F.regexp_replace("text", "[.,;:!?]", ""))).cast("long")
     n_digit = (n_ch - F.length(F.regexp_replace("text", "[0-9]", ""))).cast("long")
     q = (
@@ -145,34 +142,11 @@ def text_quality_score(spark, sf_dir):
     )
 
 
-def _lang_score_sql(lang: str) -> str:
-    words = _LANG_MARKERS[lang]
-    return (
-        f"len(list_filter(string_split(lower(text), ' '), "
-        f"w -> list_contains({list(words)!r}, w)))"
-    )
-
-
 @register(
     "text_language_id",
     oracle=f"""
-    WITH scores AS (
-        SELECT doc_id, lang,
-               {_lang_score_sql('en')} AS s_en,
-               {_lang_score_sql('es')} AS s_es,
-               {_lang_score_sql('de')} AS s_de,
-               {_lang_score_sql('fr')} AS s_fr
-        FROM documents
-    )
-    SELECT doc_id, lang AS labeled_lang,
-           CASE greatest(s_en, s_es, s_de, s_fr)
-                WHEN 0 THEN 'und'
-                WHEN s_en THEN 'en'
-                WHEN s_es THEN 'es'
-                WHEN s_de THEN 'de'
-                ELSE 'fr' END AS predicted_lang,
-           CAST(greatest(s_en, s_es, s_de, s_fr) AS INT) AS best_score
-    FROM scores
+    WITH {tx.LANG_ID_SQL}
+    SELECT doc_id, labeled_lang, predicted_lang, best_score FROM pred
     """,
     tags=("text",),
     doc=(
@@ -182,22 +156,7 @@ def _lang_score_sql(lang: str) -> str:
 )
 def text_language_id(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.col("text")), " ")
-    def hit_count(words):
-        arr = F.array(*[F.lit(w) for w in words])
-        # NB: the lambda must be single-arg — a second arg would be
-        # interpreted by F.filter as the element index
-        return F.size(F.filter(toks, lambda w: F.array_contains(arr, w)))
-
-    scores = {lang: hit_count(words) for lang, words in _LANG_MARKERS.items()}
-    best = F.greatest(*scores.values())
-    pred = (
-        F.when(best == 0, "und")
-        .when(best == scores["en"], "en")
-        .when(best == scores["es"], "es")
-        .when(best == scores["de"], "de")
-        .otherwise("fr")
-    )
+    pred, best = tx.predicted_lang(tx.tokens("text", True))
     return d.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
@@ -208,7 +167,7 @@ def text_language_id(spark, sf_dir):
 
 @register(
     "text_fingerprint",
-    oracle="""
+    oracle=f"""
     WITH norm AS (
         SELECT doc_id,
                regexp_replace(lower(trim(text)), '\\s+', ' ', 'g') AS ntext
@@ -216,10 +175,7 @@ def text_language_id(spark, sf_dir):
     )
     SELECT doc_id,
            md5(ntext) AS content_fp,
-           list_min(list_transform(
-               range(1, greatest(len(toks) - 2, 1)),
-               i -> md5(concat_ws(' ', toks[i], toks[i+1], toks[i+2], toks[i+3]))
-           )) AS winnow_fp
+           list_min(list_transform({tx.ngrams_sql('toks', 4)}, g -> md5(g))) AS winnow_fp
     FROM (SELECT doc_id, ntext, string_split(ntext, ' ') AS toks FROM norm)
     """,
     tags=("text",),
@@ -253,12 +209,10 @@ def text_fingerprint(spark, sf_dir):
 
 @register(
     "text_top_terms",
-    oracle="""
-    WITH tok AS (
-        SELECT unnest(string_split(lower(text), ' ')) AS term FROM documents
-    )
+    oracle=f"""
+    WITH {tx.TERMS_SQL}
     SELECT term, CAST(COUNT(*) AS BIGINT) AS freq
-    FROM tok GROUP BY term
+    FROM terms GROUP BY term
     ORDER BY COUNT(*) DESC, term
     LIMIT 20
     """,
@@ -268,7 +222,7 @@ def text_fingerprint(spark, sf_dir):
 def text_top_terms(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(F.split(F.lower("text"), " ")).alias("term"))
+        d.select(F.explode(tx.tokens("text", True)).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("freq"))
         .orderBy(F.col("freq").desc(), F.col("term"))
@@ -278,18 +232,8 @@ def text_top_terms(spark, sf_dir):
 
 @register(
     "text_tfidf_top_terms",
-    oracle="""
-    WITH tok AS (
-        SELECT DISTINCT doc_id, unnest(string_split(lower(text), ' ')) AS term
-        FROM documents
-    ),
-    tf AS (
-        SELECT t.doc_id, t.term, COUNT(*) AS tf
-        FROM (SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term FROM documents) t
-        GROUP BY t.doc_id, t.term
-    ),
-    df AS (SELECT term, COUNT(*) AS df FROM tok GROUP BY term),
-    n AS (SELECT COUNT(*) AS n_docs FROM documents),
+    oracle=f"""
+    WITH {tx.TERMS_SQL}, {tx.TF_SQL}, {tx.DF_SQL}, {tx.N_DOCS_SQL},
     scored AS (
         SELECT tf.doc_id, tf.term,
                round(tf.tf * ln(CAST(n.n_docs AS DOUBLE) / df.df), 6) AS tfidf
@@ -311,16 +255,11 @@ def text_top_terms(spark, sf_dir):
     ),
 )
 def text_tfidf_top_terms(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term"))
-    tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    df_ = toks.distinct().groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
+    tf = tx.term_freq(tx.term_rows(d))
     scored = (
-        tf.join(F.broadcast(df_), "term")
-        .crossJoin(F.broadcast(n_docs))
+        tf.join(F.broadcast(tx.doc_freq(tf)), "term")
+        .crossJoin(F.broadcast(tx.n_docs(d)))
         .select(
             "doc_id",
             "term",
@@ -339,9 +278,9 @@ def text_tfidf_top_terms(spark, sf_dir):
 
 @register(
     "text_gopher_quality",
-    oracle="""
+    oracle=f"""
     WITH w AS (
-        SELECT doc_id, text, string_split(text, ' ') AS words FROM documents
+        SELECT doc_id, text, {tx.tokens_sql('text', False)} AS words FROM documents
     ),
     base AS (
         SELECT doc_id,
@@ -358,8 +297,7 @@ def text_tfidf_top_terms(spark, sf_dir):
     ),
     grams AS (
         SELECT doc_id,
-               unnest(list_transform(range(1, len(words)),
-                                     i -> words[i] || ' ' || words[i + 1])) AS gram
+               unnest({tx.ngrams_sql('words', 2)}) AS gram
         FROM w
     ),
     cnt AS (SELECT doc_id, gram, COUNT(*) AS c FROM grams GROUP BY 1, 2),
@@ -399,10 +337,8 @@ def text_tfidf_top_terms(spark, sf_dir):
     ),
 )
 def text_gopher_quality(spark, sf_dir):
-    from pyspark.sql import Window
-
     d = table(spark, sf_dir, "documents")
-    words = F.split(F.col("text"), " ")
+    words = tx.tokens("text", False)
     n_words = F.size(words).cast("long")
     word_chars = F.aggregate(
         words, F.lit(0).cast("long"), lambda acc, w: acc + F.length(w)
@@ -435,7 +371,7 @@ def text_gopher_quality(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("c"))
     )
     rn = F.row_number().over(
-        Window.partitionBy("doc_id").orderBy(F.col("c").desc(), F.col("gram"))
+        W.partitionBy("doc_id").orderBy(F.col("c").desc(), F.col("gram"))
     )
     top = cnt.withColumn("rn", rn).filter(F.col("rn") == 1).drop("rn")
 
@@ -581,6 +517,20 @@ _CORRUPT_SQL = """
 """
 
 
+def _corrupted_name():
+    """The Spark twin of ``_CORRUPT_SQL``."""
+    p4 = (F.col("p_partkey") % 4).cast("int")
+    return (
+        F.when(p4 == 0, F.concat(F.substring("p_name", 1, 2), F.expr("substring(p_name, 4)")))
+        .when(p4 == 1, F.concat(F.col("p_name"), F.lit("x")))
+        .when(
+            p4 == 2,
+            F.concat(F.substring("p_name", 1, 4), F.lit("zq"), F.expr("substring(p_name, 7)")),
+        )
+        .otherwise(F.col("p_name"))
+    )
+
+
 _FUZZY_MAX_BLOCK_DF = 2000  # > largest natural (prefix, length) block at sf0.1 (977)
 
 
@@ -621,19 +571,8 @@ _FUZZY_MAX_BLOCK_DF = 2000  # > largest natural (prefix, length) block at sf0.1 
     ),
 )
 def fuzzy_join_part_names(spark, sf_dir):
-    from ..operators.fuzzy import fuzzy_join
-
     p = table(spark, sf_dir, "part")
-    p4 = (F.col("p_partkey") % 4).cast("int")
-    corrupted = (
-        F.when(p4 == 0, F.concat(F.substring("p_name", 1, 2), F.expr("substring(p_name, 4)")))
-        .when(p4 == 1, F.concat(F.col("p_name"), F.lit("x")))
-        .when(
-            p4 == 2,
-            F.concat(F.substring("p_name", 1, 4), F.lit("zq"), F.expr("substring(p_name, 7)")),
-        )
-        .otherwise(F.col("p_name"))
-    )
+    corrupted = _corrupted_name()
     dirty = p.select(F.col("p_partkey").alias("query_id"), corrupted.alias("qname"))
     clean = p.select(F.col("p_partkey").alias("match_id"), F.col("p_name").alias("name"))
     return fuzzy_join(
@@ -644,21 +583,13 @@ def fuzzy_join_part_names(spark, sf_dir):
 
 # ------------------------------------------------- boilerplate line removal
 
-_BP_CHUNK = 2  # tokens per segment ("line" granularity in the token-soup fixture)
 _BP_MAX_DF = 8  # segments in more than this many docs are boilerplate
 
 
 @register(
     "text_boilerplate_line_removal",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-    ),
-    chunks AS (
-        SELECT doc_id, i AS pos,
-               array_to_string(tk[(i*{_BP_CHUNK}+1):(i*{_BP_CHUNK}+{_BP_CHUNK})], ' ') AS chunk
-        FROM toks, unnest(range(0, CAST(ceil(len(tk) / {_BP_CHUNK}.0) AS INT))) AS t(i)
-    ),
+    WITH {tx.SEGMENTS_SQL},
     hot AS (
         SELECT chunk FROM chunks GROUP BY chunk
         HAVING COUNT(DISTINCT doc_id) > {_BP_MAX_DF}
@@ -671,7 +602,7 @@ _BP_MAX_DF = 8  # segments in more than this many docs are boilerplate
            COALESCE(k.cleaned_text, '') AS cleaned_text,
            CAST(COALESCE(k.n_kept, 0) AS BIGINT) AS n_kept,
            CAST(
-               CAST(ceil(len(t.tk) / {_BP_CHUNK}.0) AS BIGINT)
+               CAST(ceil(len(t.tk) / {tx.SEGMENT_TOKENS}.0) AS BIGINT)
                - COALESCE(k.n_kept, 0) AS BIGINT) AS n_removed
     FROM toks t
     LEFT JOIN (
@@ -692,15 +623,8 @@ _BP_MAX_DF = 8  # segments in more than this many docs are boilerplate
 )
 def text_boilerplate_line_removal(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    n = _BP_CHUNK
-    toks = d.select("doc_id", F.split("text", " ").alias("tk"))
-    chunk_structs = F.expr(
-        f"transform(sequence(0, CAST(ceil(size(tk) / {n}.0) AS INT) - 1), "
-        f"i -> struct(i AS pos, concat_ws(' ', slice(tk, i*{n}+1, {n})) AS chunk))"
-    )
-    chunks = toks.select(
-        "doc_id", F.size("tk").alias("n_tok"), F.explode(chunk_structs).alias("c")
-    ).select("doc_id", "n_tok", F.col("c.pos").alias("pos"), F.col("c.chunk").alias("chunk"))
+    toks = d.select("doc_id", tx.tokens("text", False).alias("tk"))
+    chunks = tx.segments(toks)
     hot = (
         chunks.groupBy("chunk")
         .agg(F.countDistinct("doc_id").alias("df"))
@@ -709,17 +633,12 @@ def text_boilerplate_line_removal(spark, sf_dir):
     )
     kept = chunks.join(F.broadcast(hot), "chunk", "left_anti")
     reassembled = kept.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "chunk"))),
-                lambda s: s.getField("chunk"),
-            ),
-            " ",
-        ).alias("cleaned_text"),
+        tx.reassemble(F.struct("pos", "chunk")).alias("cleaned_text"),
         F.count(F.lit(1)).alias("n_kept"),
     )
     base = toks.select(
-        "doc_id", F.ceil(F.size("tk") / F.lit(float(n))).cast("long").alias("n_chunks")
+        "doc_id",
+        F.ceil(F.size("tk") / F.lit(float(tx.SEGMENT_TOKENS))).cast("long").alias("n_chunks"),
     )
     return (
         base.join(reassembled, "doc_id", "left")
@@ -732,29 +651,36 @@ def text_boilerplate_line_removal(spark, sf_dir):
     )
 
 
-@register(
-    "text_intra_doc_dedup",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-    ),
-    chunks AS (
-        SELECT doc_id, i AS pos,
-               array_to_string(tk[(i*{_BP_CHUNK}+1):(i*{_BP_CHUNK}+{_BP_CHUNK})], ' ') AS chunk
-        FROM toks, unnest(range(0, CAST(ceil(len(tk) / {_BP_CHUNK}.0) AS INT))) AS t(i)
-    ),
+def _first_segments_sql(over: str) -> str:
+    """Keep each segment's first occurrence by the row_number ``over``;
+    the COALESCE covers a doc whose every segment is a later copy."""
+    return f"""
+    WITH {tx.SEGMENTS_SQL},
     ranked AS (
-        SELECT doc_id, pos, chunk,
-               row_number() OVER (PARTITION BY doc_id, chunk ORDER BY pos) AS rn
-        FROM chunks
+        SELECT doc_id, pos, chunk, row_number() OVER ({over}) AS rn FROM chunks
     )
     SELECT doc_id,
-           string_agg(CASE WHEN rn = 1 THEN chunk END, ' ' ORDER BY pos)
+           COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk END, ' ' ORDER BY pos), '')
              AS deduped_text,
            CAST(COUNT(*) AS BIGINT) AS n_chunks,
            CAST(COUNT(CASE WHEN rn > 1 THEN 1 END) AS BIGINT) AS n_dropped
     FROM ranked GROUP BY doc_id
-    """,
+    """
+
+
+def _first_segments(spark, sf_dir, w):
+    d = table(spark, sf_dir, "documents")
+    chunks = tx.segments(d.select("doc_id", tx.tokens("text", False).alias("tk")))
+    return chunks.withColumn("rn", F.row_number().over(w)).groupBy("doc_id").agg(
+        tx.reassemble(F.when(F.col("rn") == 1, F.struct("pos", "chunk"))).alias("deduped_text"),
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.count(F.when(F.col("rn") > 1, 1)).alias("n_dropped"),
+    )
+
+
+@register(
+    "text_intra_doc_dedup",
+    oracle=_first_segments_sql("PARTITION BY doc_id, chunk ORDER BY pos"),
     tags=("text", "dedup"),
     doc=(
         "Intra-document repetition removal: within each doc, repeated "
@@ -765,61 +691,12 @@ def text_boilerplate_line_removal(spark, sf_dir):
     ),
 )
 def text_intra_doc_dedup(spark, sf_dir):
-    from pyspark.sql import Window as W
-
-    d = table(spark, sf_dir, "documents")
-    n = _BP_CHUNK
-    toks = d.select("doc_id", F.split("text", " ").alias("tk"))
-    chunk_structs = F.expr(
-        f"transform(sequence(0, CAST(ceil(size(tk) / {n}.0) AS INT) - 1), "
-        f"i -> struct(i AS pos, concat_ws(' ', slice(tk, i*{n}+1, {n})) AS chunk))"
-    )
-    chunks = toks.select("doc_id", F.explode(chunk_structs).alias("c")).select(
-        "doc_id", F.col("c.pos").alias("pos"), F.col("c.chunk").alias("chunk")
-    )
-    rn = F.row_number().over(W.partitionBy("doc_id", "chunk").orderBy("pos"))
-    ranked = chunks.withColumn("rn", rn)
-    kept_text = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(
-                    F.when(F.col("rn") == 1, F.struct("pos", "chunk"))
-                )
-            ),
-            lambda s: s.getField("chunk"),
-        ),
-        " ",
-    )
-    return ranked.groupBy("doc_id").agg(
-        kept_text.alias("deduped_text"),
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.count(F.when(F.col("rn") > 1, 1)).alias("n_dropped"),
-    )
+    return _first_segments(spark, sf_dir, W.partitionBy("doc_id", "chunk").orderBy("pos"))
 
 
 @register(
     "text_global_segment_dedup",
-    oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tk FROM documents
-    ),
-    chunks AS (
-        SELECT doc_id, i AS pos,
-               array_to_string(tk[(i*{_BP_CHUNK}+1):(i*{_BP_CHUNK}+{_BP_CHUNK})], ' ') AS chunk
-        FROM toks, unnest(range(0, CAST(ceil(len(tk) / {_BP_CHUNK}.0) AS INT))) AS t(i)
-    ),
-    ranked AS (
-        SELECT doc_id, pos, chunk,
-               row_number() OVER (PARTITION BY chunk ORDER BY doc_id, pos) AS rn
-        FROM chunks
-    )
-    SELECT doc_id,
-           COALESCE(string_agg(CASE WHEN rn = 1 THEN chunk END, ' ' ORDER BY pos), '')
-             AS deduped_text,
-           CAST(COUNT(*) AS BIGINT) AS n_chunks,
-           CAST(COUNT(CASE WHEN rn > 1 THEN 1 END) AS BIGINT) AS n_dropped
-    FROM ranked GROUP BY doc_id
-    """,
+    oracle=_first_segments_sql("PARTITION BY chunk ORDER BY doc_id, pos"),
     tags=("text", "dedup"),
     doc=(
         "Corpus-wide exact paragraph dedup (the Dolma dedupe-paragraphs "
@@ -836,41 +713,14 @@ def text_intra_doc_dedup(spark, sf_dir):
     ),
 )
 def text_global_segment_dedup(spark, sf_dir):
-    from pyspark.sql import Window as W
-
-    d = table(spark, sf_dir, "documents")
-    n = _BP_CHUNK
-    toks = d.select("doc_id", F.split("text", " ").alias("tk"))
-    chunk_structs = F.expr(
-        f"transform(sequence(0, CAST(ceil(size(tk) / {n}.0) AS INT) - 1), "
-        f"i -> struct(i AS pos, concat_ws(' ', slice(tk, i*{n}+1, {n})) AS chunk))"
-    )
-    chunks = toks.select("doc_id", F.explode(chunk_structs).alias("c")).select(
-        "doc_id", F.col("c.pos").alias("pos"), F.col("c.chunk").alias("chunk")
-    )
-    rn = F.row_number().over(W.partitionBy("chunk").orderBy("doc_id", "pos"))
-    ranked = chunks.withColumn("rn", rn)
-    kept_text = F.array_join(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.when(F.col("rn") == 1, F.struct("pos", "chunk")))
-            ),
-            lambda s: s.getField("chunk"),
-        ),
-        " ",
-    )
-    return ranked.groupBy("doc_id").agg(
-        kept_text.alias("deduped_text"),
-        F.count(F.lit(1)).alias("n_chunks"),
-        F.count(F.when(F.col("rn") > 1, 1)).alias("n_dropped"),
-    )
+    return _first_segments(spark, sf_dir, W.partitionBy("chunk").orderBy("doc_id", "pos"))
 
 
 @register(
     "text_bpe_pair_stats",
-    oracle="""
+    oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(text, ' ') AS tk FROM documents
+        SELECT doc_id, {tx.tokens_sql('text', False)} AS tk FROM documents
     ),
     pairs AS (
         SELECT tk[i] AS w1, tk[i+1] AS w2
@@ -892,16 +742,9 @@ def text_global_segment_dedup(spark, sf_dir):
     ),
 )
 def text_bpe_pair_stats(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    toks = d.select(F.split("text", " ").alias("tk"))
-    pair_structs = F.expr(
-        "CASE WHEN size(tk) >= 2 THEN "
-        "transform(sequence(1, size(tk) - 1), "
-        "i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2)) "
-        "ELSE array() END"
-    )
+    toks = table(spark, sf_dir, "documents").select(tx.tokens("text", False).alias("tk"))
     return (
-        toks.select(F.explode(pair_structs).alias("p"))
+        toks.select(F.explode(tx.adjacent_pairs("tk")).alias("p"))
         .select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -925,51 +768,69 @@ def text_bpe_pair_stats(spark, sf_dir):
 _BPE_ROUNDS = 4
 
 
-def _bpe_oracle_sql(rounds: int) -> str:
-    parts = ["toks_0 AS MATERIALIZED (SELECT doc_id, string_split(text, ' ') AS tk FROM documents)"]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        parts.append(f"""
-    pairs_{r} AS MATERIALIZED (
+def _bpe_apply_cte(r: int, p: int, sfx: str, top: str) -> str:
+    """CTE block applying merge ``top`` to ``toks_{p}{sfx}`` ->
+    ``toks_{r}{sfx}`` — the greedy left-to-right run/keep shape of every
+    round, with the round's pair joined in."""
+    return f"""
+    pairs_{r}{sfx} AS MATERIALIZED (
         SELECT doc_id, CAST(u.i AS BIGINT) AS i, tk[u.i] AS w1, tk[u.i + 1] AS w2
-        FROM toks_{p}, unnest(range(1, len(tk))) AS u(i)
+        FROM toks_{p}{sfx}, unnest(range(1, len(tk))) AS u(i)
     ),
-    top_{r} AS MATERIALIZED (
-        SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n
-        FROM pairs_{r} GROUP BY w1, w2
-        ORDER BY n DESC, w1, w2 LIMIT 1
+    starts_{r}{sfx} AS (
+        SELECT pr.doc_id, pr.i FROM pairs_{r}{sfx} pr JOIN {top} t USING (w1, w2)
     ),
-    starts_{r} AS (
-        SELECT pr.doc_id, pr.i FROM pairs_{r} pr JOIN top_{r} t USING (w1, w2)
-    ),
-    runs_{r} AS (
+    runs_{r}{sfx} AS (
         SELECT doc_id, i,
                i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS grp
-        FROM starts_{r}
+        FROM starts_{r}{sfx}
     ),
-    keep_{r} AS MATERIALIZED (
+    keep_{r}{sfx} AS MATERIALIZED (
         SELECT doc_id, i FROM (
             SELECT doc_id, i,
                    i - MIN(i) OVER (PARTITION BY doc_id, grp) AS off
-            FROM runs_{r}
+            FROM runs_{r}{sfx}
         ) WHERE off % 2 = 0
     ),
-    toks_{r} AS MATERIALIZED (
+    toks_{r}{sfx} AS MATERIALIZED (
         SELECT s.doc_id, list(s.tok ORDER BY s.i) AS tk FROM (
             SELECT tp.doc_id, tp.i,
                    CASE WHEN k.i IS NOT NULL
-                        THEN (SELECT w1 || '_' || w2 FROM top_{r})
+                        THEN (SELECT w1 || '_' || w2 FROM {top})
                         ELSE tp.t END AS tok
             FROM (
                 SELECT doc_id, CAST(u.i AS BIGINT) AS i, tk[u.i] AS t
-                FROM toks_{p}, unnest(range(1, len(tk) + 1)) AS u(i)
+                FROM toks_{p}{sfx}, unnest(range(1, len(tk) + 1)) AS u(i)
             ) tp
-            LEFT JOIN keep_{r} k  ON k.doc_id = tp.doc_id AND k.i = tp.i
-            LEFT JOIN keep_{r} k2 ON k2.doc_id = tp.doc_id AND k2.i = tp.i - 1
+            LEFT JOIN keep_{r}{sfx} k  ON k.doc_id = tp.doc_id AND k.i = tp.i
+            LEFT JOIN keep_{r}{sfx} k2 ON k2.doc_id = tp.doc_id AND k2.i = tp.i - 1
             WHERE k2.i IS NULL
         ) s GROUP BY s.doc_id
+    )"""
+
+
+def _bpe_rounds_sql(rounds: int, sides) -> str:
+    """Round r's top pair counted over ``toks_{r-1}{sides[0]}`` (count
+    desc, pair asc), then applied to every side's ``toks_{r-1}``."""
+    parts = []
+    for r in range(1, rounds + 1):
+        p = r - 1
+        parts.append(f"""
+    top_{r} AS MATERIALIZED (
+        SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n FROM (
+            SELECT doc_id, tk[u.i] AS w1, tk[u.i + 1] AS w2
+            FROM toks_{p}{sides[0]}, unnest(range(1, len(tk))) AS u(i)
+        ) GROUP BY w1, w2 ORDER BY n DESC, w1, w2 LIMIT 1
     )""")
-    return "WITH " + ",".join(parts)
+        parts += [_bpe_apply_cte(r, p, sfx, f"top_{r}") for sfx in sides]
+    return ",".join(parts)
+
+
+def _bpe_oracle_sql(rounds: int) -> str:
+    return (
+        f"WITH toks_0 AS MATERIALIZED (SELECT doc_id, {tx.tokens_sql('text', False)} AS tk"
+        " FROM documents)," + _bpe_rounds_sql(rounds, ("",))
+    )
 
 
 def _bpe_oracle_final(rounds: int) -> str:
@@ -987,16 +848,9 @@ def _bpe_oracle_final(rounds: int) -> str:
 
 def _bpe_pairs(toks):
     """Adjacent-pair frame (doc_id, i, w1, w2) over ``toks(doc_id, tk)``."""
-    return toks.select(
-        "doc_id",
-        F.explode(
-            F.expr(
-                "CASE WHEN size(tk) >= 2 THEN transform(sequence(1, size(tk) - 1), "
-                "i -> struct(CAST(i AS BIGINT) AS i, element_at(tk, i) AS w1, "
-                "element_at(tk, i + 1) AS w2)) ELSE array() END"
-            )
-        ).alias("p"),
-    ).select("doc_id", "p.i", "p.w1", "p.w2")
+    return toks.select("doc_id", F.explode(tx.adjacent_pairs("tk")).alias("p")).select(
+        "doc_id", "p.i", "p.w1", "p.w2"
+    )
 
 
 def _bpe_apply_top(toks, top):
@@ -1103,12 +957,8 @@ def _bpe_merge_round(toks):
     ),
 )
 def text_bpe_train_merges(spark, sf_dir):
-    from functools import reduce
-
-    from pyspark.sql import DataFrame
-
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split("text", " ").alias("tk"))
+    toks = d.select("doc_id", tx.tokens("text", False).alias("tk"))
     tops = []
     for r in range(1, _BPE_ROUNDS + 1):
         top, toks = _bpe_merge_round(toks)
@@ -1166,8 +1016,6 @@ def text_bpe_train_merges(spark, sf_dir):
     ),
 )
 def text_quality_curriculum_bins(spark, sf_dir):
-    from ..operators.quantiles import exact_fraction_thresholds
-
     qdf = text_quality_score(spark, sf_dir).select(
         "doc_id",
         F.round(F.col("quality_score") * 1000000).cast("long").alias("quality_micro"),
@@ -1188,10 +1036,10 @@ def text_quality_curriculum_bins(spark, sf_dir):
 
 @register(
     "text_inverted_index_top_terms",
-    oracle="""
+    oracle=f"""
     WITH postings AS (
         SELECT DISTINCT doc_id, t.token
-        FROM documents, unnest(string_split(text, ' ')) AS t(token)
+        FROM documents, unnest({tx.tokens_sql('text', False)}) AS t(token)
     )
     SELECT token,
            CAST(COUNT(*) AS BIGINT) AS df,
@@ -1213,7 +1061,7 @@ def text_quality_curriculum_bins(spark, sf_dir):
 def text_inverted_index_top_terms(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     postings = d.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("token")
+        "doc_id", F.explode(tx.tokens("text", False)).alias("token")
     ).distinct()
     return (
         postings.groupBy("token")
@@ -1248,7 +1096,7 @@ def text_inverted_index_top_terms(spark, sf_dir):
 )
 def text_bpe_compression_stats(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.split("text", " ").alias("tk"))
+    toks = d.select("doc_id", tx.tokens("text", False).alias("tk"))
     before = toks.agg(F.sum(F.size("tk")).cast("long").alias("tokens_before"))
     cur = toks
     for r in range(_BPE_ROUNDS):
@@ -1276,24 +1124,7 @@ def text_bpe_compression_stats(spark, sf_dir):
 @register(
     "text_langid_confusion",
     oracle=f"""
-    WITH scores AS (
-        SELECT doc_id, lang,
-               {_lang_score_sql('en')} AS s_en,
-               {_lang_score_sql('es')} AS s_es,
-               {_lang_score_sql('de')} AS s_de,
-               {_lang_score_sql('fr')} AS s_fr
-        FROM documents
-    ),
-    pred AS (
-        SELECT lang AS labeled_lang,
-               CASE greatest(s_en, s_es, s_de, s_fr)
-                    WHEN 0 THEN 'und'
-                    WHEN s_en THEN 'en'
-                    WHEN s_es THEN 'es'
-                    WHEN s_de THEN 'de'
-                    ELSE 'fr' END AS predicted_lang
-        FROM scores
-    )
+    WITH {tx.LANG_ID_SQL}
     SELECT labeled_lang, predicted_lang, CAST(COUNT(*) AS BIGINT) AS n
     FROM pred GROUP BY labeled_lang, predicted_lang
     """,
@@ -1318,21 +1149,10 @@ def text_langid_confusion(spark, sf_dir):
 # ---------------------------------------------------- trained token-vote ID
 
 
-# Split rule: the repo-wide definition in functions.splits.
-from ..functions.splits import split_case_sql as _split_case_sql
-from ..functions.splits import split_col as _split_col
-
-_SPLIT_CASE = _split_case_sql("doc_id")
-
-
 @register(
     "text_langid_trained_vote",
     oracle=f"""
-    WITH split_docs AS (
-        SELECT doc_id, lang, {_SPLIT_CASE} AS split,
-               string_split(lower(text), ' ') AS toks
-        FROM documents
-    ),
+    WITH {tx.split_docs_sql(True)},
     train_tokens AS (
         SELECT unnest(toks) AS token, lang FROM split_docs WHERE split = 'train'
     ),
@@ -1385,16 +1205,12 @@ _SPLIT_CASE = _split_case_sql("doc_id")
     ),
 )
 def text_langid_trained_vote(spark, sf_dir):
-    from pyspark.sql import Window
-
-    d = table(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "lang", _split_col("doc_id").alias("split"),
-                    F.split(F.lower("text"), " ").alias("toks"))
+    docs = tx.split_docs(table(spark, sf_dir, "documents"), True)
     train_tokens = (
         docs.filter(F.col("split") == "train")
         .select("lang", F.explode("toks").alias("token"))
     )
-    w_tok = Window.partitionBy("token").orderBy(F.col("cnt").desc(), F.col("lang"))
+    w_tok = W.partitionBy("token").orderBy(F.col("cnt").desc(), F.col("lang"))
     model = (
         train_tokens.groupBy("token", "lang")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1411,7 +1227,7 @@ def text_langid_trained_vote(spark, sf_dir):
         .groupBy("doc_id", "tok_lang")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    w_doc = Window.partitionBy("doc_id").orderBy(F.col("n").desc(), F.col("tok_lang"))
+    w_doc = W.partitionBy("doc_id").orderBy(F.col("n").desc(), F.col("tok_lang"))
     pred = (
         votes.withColumn("rk", F.row_number().over(w_doc))
         .filter(F.col("rk") == 1)
@@ -1431,11 +1247,7 @@ def text_langid_trained_vote(spark, sf_dir):
 @register(
     "text_oov_rate_vs_train",
     oracle=f"""
-    WITH split_docs AS (
-        SELECT doc_id, lang, {_SPLIT_CASE} AS split,
-               string_split(lower(text), ' ') AS toks
-        FROM documents
-    ),
+    WITH {tx.split_docs_sql(True)},
     train_vocab AS (
         SELECT DISTINCT unnest(toks) AS token
         FROM split_docs WHERE split = 'train'
@@ -1464,11 +1276,7 @@ def text_langid_trained_vote(spark, sf_dir):
     ),
 )
 def text_oov_rate_vs_train(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", "lang", _split_col("doc_id").alias("split"),
-        F.split(F.lower("text"), " ").alias("toks")
-    )
+    docs = tx.split_docs(table(spark, sf_dir, "documents"), True)
     vocab = (
         docs.filter(F.col("split") == "train")
         .select(F.explode("toks").alias("token"))
@@ -1517,7 +1325,7 @@ _BM25_TERM_SCORE_SQL = (
     "text_bm25_topk",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS words FROM documents
+        SELECT doc_id, {tx.tokens_sql('text', True)} AS words FROM documents
     ),
     tf AS (
         SELECT doc_id, CAST(len(words) AS DOUBLE) AS dl,
@@ -1563,10 +1371,8 @@ _BM25_TERM_SCORE_SQL = (
     ),
 )
 def text_bm25_topk(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower("text"), " ").alias("words")
+        "doc_id", tx.tokens("text", True).alias("words")
     )
     toks = d.select(
         "doc_id",
@@ -1609,10 +1415,10 @@ def text_bm25_topk(spark, sf_dir):
 
 # Per-term entropy contribution -(c/n)*ln(c/n), quantized to integer
 # nano-nats BEFORE the per-doc SUM (exact bigint addition; no float
-# summation-order sensitivity).  c and n are exact counts, so both
+# summation-order sensitivity).  tf and n are exact counts, so both
 # engines feed ln identical doubles.
 _ENTROPY_TERM_SQL = (
-    "CAST(round((-(CAST(c AS DOUBLE) / n) * ln(CAST(c AS DOUBLE) / n))"
+    "CAST(round((-(CAST(tf AS DOUBLE) / n) * ln(CAST(tf AS DOUBLE) / n))"
     " * 1000000000) AS BIGINT)"
 )
 
@@ -1620,23 +1426,16 @@ _ENTROPY_TERM_SQL = (
 @register(
     "text_token_entropy",
     oracle=f"""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
-        FROM documents
-    ),
-    counts AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS c
-        FROM tok GROUP BY doc_id, term
-    ),
+    WITH {tx.TERMS_SQL}, {tx.TF_SQL},
     totals AS (
-        SELECT doc_id, CAST(SUM(c) AS DOUBLE) AS n,
+        SELECT doc_id, CAST(SUM(tf) AS DOUBLE) AS n,
                CAST(COUNT(*) AS INT) AS n_unique
-        FROM counts GROUP BY doc_id
+        FROM tf GROUP BY doc_id
     )
     SELECT c.doc_id,
            ANY_VALUE(t.n_unique) AS n_unique,
            CAST(SUM({_ENTROPY_TERM_SQL}) AS BIGINT) AS entropy_nano
-    FROM counts c JOIN totals t USING (doc_id)
+    FROM tf c JOIN totals t USING (doc_id)
     GROUP BY c.doc_id
     """,
     tags=("text", "quality"),
@@ -1650,11 +1449,9 @@ _ENTROPY_TERM_SQL = (
     ),
 )
 def text_token_entropy(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term"))
-    counts = tok.groupBy("doc_id", "term").agg(F.count(F.lit(1)).cast("bigint").alias("c"))
+    counts = tx.term_freq(tx.term_rows(table(spark, sf_dir, "documents")))
     totals = counts.groupBy("doc_id").agg(
-        F.sum("c").cast("double").alias("n"),
+        F.sum("tf").cast("double").alias("n"),
         F.count(F.lit(1)).cast("int").alias("n_unique"),
     )
     return (
@@ -1678,28 +1475,39 @@ _BIGRAM_NLL_SQL = (
     "CAST(round(-ln((COALESCE(c_bg, 0) + 1.0) / (COALESCE(c_ctx, 0) + v_size))"
     " * 1000000) AS BIGINT)"
 )
+# The held-out bigram LMs' shared oracle head (split docs, their bigrams,
+# the train bigram counts ``lm``) and per-doc mean-NLL tail over ``scored``.
+_BIGRAM_LM_SQL = f"""{tx.split_docs_sql(True)}, {tx.SPLIT_BIGRAMS_SQL},
+    lm AS (
+        SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c_bg
+        FROM big WHERE split = 'train' GROUP BY w1, w2
+    )"""
+_AVG_NLL_SQL = """SELECT doc_id, lang,
+           CAST(COUNT(*) AS BIGINT) AS n_bigrams,
+           round(CAST(SUM(nll_micro) AS DOUBLE) / COUNT(*) / 1000000, 6) AS avg_nll
+    FROM scored GROUP BY doc_id, lang"""
+
+
+def _train_bigram_counts(big):
+    return (
+        big.filter(F.col("split") == "train")
+        .groupBy("w1", "w2")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_bg"))
+    )
+
+
+def _avg_nll(scored):
+    return scored.groupBy("doc_id", "lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
+        F.round(F.sum("nll_micro").cast("double") / F.count(F.lit(1)) / 1000000, 6)
+        .alias("avg_nll"),
+    )
 
 
 @register(
     "text_bigram_lm_nll",
     oracle=f"""
-    WITH split_docs AS (
-        SELECT doc_id, lang, {_SPLIT_CASE} AS split,
-               string_split(lower(text), ' ') AS toks
-        FROM documents
-    ),
-    big AS (
-        SELECT doc_id, lang, split, toks[i] AS w1, toks[i + 1] AS w2
-        FROM (
-            SELECT doc_id, lang, split, toks,
-                   unnest(generate_series(1, len(toks) - 1)) AS i
-            FROM split_docs WHERE len(toks) >= 2
-        )
-    ),
-    lm AS (
-        SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c_bg
-        FROM big WHERE split = 'train' GROUP BY w1, w2
-    ),
+    WITH {_BIGRAM_LM_SQL},
     ctx AS (SELECT w1, CAST(SUM(c_bg) AS BIGINT) AS c_ctx FROM lm GROUP BY w1),
     vocab AS (
         SELECT CAST(COUNT(DISTINCT token) AS BIGINT) AS v_size FROM (
@@ -1714,12 +1522,7 @@ _BIGRAM_NLL_SQL = (
         CROSS JOIN vocab
         WHERE b.split <> 'train'
     )
-    SELECT doc_id, lang,
-           CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           round(CAST(SUM(nll_micro) AS DOUBLE) / COUNT(*) / 1000000, 6)
-             AS avg_nll
-    FROM scored GROUP BY doc_id, lang
-    """,
+    {_AVG_NLL_SQL}""",
     tags=("text", "pipeline", "evaluation"),
     doc=(
         "CCNet-style LM quality scoring (Wenzek et al. 2020): an add-one-"
@@ -1735,27 +1538,9 @@ _BIGRAM_NLL_SQL = (
     ),
 )
 def text_bigram_lm_nll(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", "lang", _split_col("doc_id").alias("split"),
-        F.split(F.lower("text"), " ").alias("toks"),
-    )
-    big = (
-        docs.filter(F.size("toks") >= 2)
-        .select(
-            "doc_id", "lang", "split",
-            F.explode(
-                F.expr("transform(sequence(1, size(toks)-1),"
-                       " i -> struct(toks[i-1] AS w1, toks[i] AS w2))")
-            ).alias("bg"),
-        )
-        .select("doc_id", "lang", "split", "bg.w1", "bg.w2")
-    )
-    lm = (
-        big.filter(F.col("split") == "train")
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("c_bg"))
-    )
+    docs = tx.split_docs(table(spark, sf_dir, "documents"), True)
+    big = tx.split_bigrams(docs)
+    lm = _train_bigram_counts(big)
     ctx = lm.groupBy("w1").agg(F.sum("c_bg").cast("bigint").alias("c_ctx"))
     vocab = (
         docs.filter(F.col("split") == "train")
@@ -1769,11 +1554,7 @@ def text_bigram_lm_nll(spark, sf_dir):
         .crossJoin(F.broadcast(vocab))
         .select("doc_id", "lang", F.expr(_BIGRAM_NLL_SQL).alias("nll_micro"))
     )
-    return scored.groupBy("doc_id", "lang").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_bigrams"),
-        F.round(F.sum("nll_micro").cast("double") / F.count(F.lit(1)) / 1000000, 6)
-        .alias("avg_nll"),
-    )
+    return _avg_nll(scored)
 
 
 # ------------------------------------------------ winnowing fingerprints
@@ -1840,8 +1621,6 @@ _WINNOW_MIN_SHARED = 3
     ),
 )
 def text_winnowing_shared_pairs(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     d = table(spark, sf_dir, "documents")
     grams = (
         d.filter(F.length("text") >= _WINNOW_K)
@@ -1933,8 +1712,6 @@ _XSUB_L = 24  # gram length: any repeated substring of >= L chars is caught
     ),
 )
 def text_repeated_substring_spans(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     d = table(spark, sf_dir, "documents")
     # the gram key is the RAW 24-char substring: exact (no hash-collision
     # caveat) and smaller on the wire than a 32-char md5 hex (the oracle
@@ -1974,74 +1751,12 @@ def text_repeated_substring_spans(spark, sf_dir):
 # ------------------------------------------------- BPE heldout encode
 
 
-def _bpe_apply_cte(r: int, p: int, sfx: str, top: str) -> str:
-    """CTE block applying merge ``top`` to ``toks_{p}{sfx}`` ->
-    ``toks_{r}{sfx}`` — the same greedy left-to-right run/keep shape as
-    the training rounds, with the pair GIVEN instead of counted."""
-    return f"""
-    pairs_{r}{sfx} AS MATERIALIZED (
-        SELECT doc_id, CAST(u.i AS BIGINT) AS i, tk[u.i] AS w1, tk[u.i + 1] AS w2
-        FROM toks_{p}{sfx}, unnest(range(1, len(tk))) AS u(i)
-    ),
-    starts_{r}{sfx} AS (
-        SELECT pr.doc_id, pr.i FROM pairs_{r}{sfx} pr JOIN {top} t USING (w1, w2)
-    ),
-    runs_{r}{sfx} AS (
-        SELECT doc_id, i,
-               i - row_number() OVER (PARTITION BY doc_id ORDER BY i) AS grp
-        FROM starts_{r}{sfx}
-    ),
-    keep_{r}{sfx} AS MATERIALIZED (
-        SELECT doc_id, i FROM (
-            SELECT doc_id, i,
-                   i - MIN(i) OVER (PARTITION BY doc_id, grp) AS off
-            FROM runs_{r}{sfx}
-        ) WHERE off % 2 = 0
-    ),
-    toks_{r}{sfx} AS MATERIALIZED (
-        SELECT s.doc_id, list(s.tok ORDER BY s.i) AS tk FROM (
-            SELECT tp.doc_id, tp.i,
-                   CASE WHEN k.i IS NOT NULL
-                        THEN (SELECT w1 || '_' || w2 FROM {top})
-                        ELSE tp.t END AS tok
-            FROM (
-                SELECT doc_id, CAST(u.i AS BIGINT) AS i, tk[u.i] AS t
-                FROM toks_{p}{sfx}, unnest(range(1, len(tk) + 1)) AS u(i)
-            ) tp
-            LEFT JOIN keep_{r}{sfx} k  ON k.doc_id = tp.doc_id AND k.i = tp.i
-            LEFT JOIN keep_{r}{sfx} k2 ON k2.doc_id = tp.doc_id AND k2.i = tp.i - 1
-            WHERE k2.i IS NULL
-        ) s GROUP BY s.doc_id
-    )"""
-
-
-def _bpe_heldout_oracle_sql(rounds: int) -> str:
-    parts = [
-        f"""sd AS (
-        SELECT doc_id, {_SPLIT_CASE} AS split, string_split(text, ' ') AS tk
-        FROM documents
-    ),
-    toks_0t AS MATERIALIZED (SELECT doc_id, tk FROM sd WHERE split = 'train'),
-    toks_0e AS MATERIALIZED (SELECT doc_id, tk FROM sd WHERE split <> 'train')"""
-    ]
-    for r in range(1, rounds + 1):
-        p = r - 1
-        parts.append(f"""
-    top_{r} AS MATERIALIZED (
-        SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS n FROM (
-            SELECT doc_id, tk[u.i] AS w1, tk[u.i + 1] AS w2
-            FROM toks_{p}t, unnest(range(1, len(tk))) AS u(i)
-        ) GROUP BY w1, w2 ORDER BY n DESC, w1, w2 LIMIT 1
-    )""")
-        parts.append(_bpe_apply_cte(r, p, "t", f"top_{r}"))
-        parts.append(_bpe_apply_cte(r, p, "e", f"top_{r}"))
-    return "WITH " + ",".join(parts)
-
-
 @register(
     "text_bpe_encode_heldout",
-    oracle=_bpe_heldout_oracle_sql(_BPE_ROUNDS)
-    + f"""
+    oracle=f"""WITH {tx.split_docs_sql(False)},
+    toks_0t AS MATERIALIZED (SELECT doc_id, toks AS tk FROM split_docs WHERE split = 'train'),
+    toks_0e AS MATERIALIZED (SELECT doc_id, toks AS tk FROM split_docs WHERE split <> 'train'),
+    """ + _bpe_rounds_sql(_BPE_ROUNDS, ("t", "e")) + f"""
     SELECT r.doc_id,
            CAST(len(r.tk) AS BIGINT) AS n_tokens_raw,
            CAST(len(e.tk) AS BIGINT) AS n_tokens_encoded,
@@ -2063,12 +1778,9 @@ def _bpe_heldout_oracle_sql(rounds: int) -> str:
     ),
 )
 def text_bpe_encode_heldout(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id", _split_col("doc_id").alias("split"), F.split("text", " ").alias("tk")
-    )
-    train = docs.filter(F.col("split") == "train").select("doc_id", "tk")
-    ev = docs.filter(F.col("split") != "train").select("doc_id", "tk")
+    docs = tx.split_docs(table(spark, sf_dir, "documents"), False)
+    train = docs.filter(F.col("split") == "train").select("doc_id", F.col("toks").alias("tk"))
+    ev = docs.filter(F.col("split") != "train").select("doc_id", F.col("toks").alias("tk"))
     raw = ev.select("doc_id", F.size("tk").cast("bigint").alias("n_tokens_raw"))
     cur_t, cur_e = train, ev
     for r in range(_BPE_ROUNDS):
@@ -2299,21 +2011,8 @@ def _fs_w_sql(u: str, agree: str) -> str:
     ),
 )
 def linkage_fs_scores(spark, sf_dir):
-    import math
-
-    from ..operators.fuzzy import fuzzy_join
-
     p = table(spark, sf_dir, "part")
-    p4 = (F.col("p_partkey") % 4).cast("int")
-    corrupted = (
-        F.when(p4 == 0, F.concat(F.substring("p_name", 1, 2), F.expr("substring(p_name, 4)")))
-        .when(p4 == 1, F.concat(F.col("p_name"), F.lit("x")))
-        .when(
-            p4 == 2,
-            F.concat(F.substring("p_name", 1, 4), F.lit("zq"), F.expr("substring(p_name, 7)")),
-        )
-        .otherwise(F.col("p_name"))
-    )
+    corrupted = _corrupted_name()
     dirty = p.select(
         F.col("p_partkey").alias("query_id"), corrupted.alias("qname"),
         F.col("p_brand").alias("b1"), F.col("p_type").alias("c1"),
@@ -2390,7 +2089,7 @@ _PMI_TOP_K = 25
     "text_pmi_cooccurrence",
     oracle=f"""
     WITH tok AS (
-        SELECT doc_id, string_split(text, ' ') AS ts FROM documents
+        SELECT doc_id, {tx.tokens_sql('text', False)} AS ts FROM documents
     ),
     pos AS (
         -- parallel unnests zip in DuckDB: token with its position
@@ -2450,7 +2149,7 @@ _PMI_TOP_K = 25
 def text_pmi_cooccurrence(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     tok = materialize(
-        d.select("doc_id", F.split("text", " ").alias("ts")),
+        d.select("doc_id", tx.tokens("text", False).alias("ts")),
         "text_pmi_cooccurrence tokens: pairs, counts and both totals",
     )
     pos = tok.select("doc_id", F.explode("ts").alias("term"))
@@ -2503,39 +2202,19 @@ def text_pmi_cooccurrence(spark, sf_dir):
     )
 
 
-# 5-gram generator, guarded for short documents: sequence(1, n) with
-# n <= 0 yields a DESCENDING [1, 0] (step defaults to -1), whose i=0
-# would throw at slice() under ANSI mode ('array indices start at 1')
-# and a 4-token doc would emit a bogus short gram — so docs under 5
-# tokens must produce an EMPTY gram array, matching the oracle's
-# t4 IS NOT NULL guard.  Regression-tested on 0-5-token docs
+# 5-gram generator, guarded for short documents (operators/text.py):
+# docs under 5 tokens produce an EMPTY gram array, as the oracle's
+# k-gram list does.  Regression-tested on 0-5-token docs
 # (tests/test_robustness.py).
-_FIVE_GRAM_EXPR = (
-    "CASE WHEN size(split(text, ' ')) >= 5 "
-    "THEN transform(sequence(1, size(split(text, ' ')) - 4),"
-    " i -> concat_ws(' ', slice(split(text, ' '), i, 5))) "
-    "ELSE array() END"
-)
+_FIVE_GRAM_EXPR = tx.ngrams_expr(5)
 
 
 @register(
     "text_good_turing_mass",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, string_split(text, ' ') AS ts FROM documents
-    ),
-    pos AS (
-        SELECT doc_id, unnest(ts) AS term,
-               unnest(range(1, len(ts) + 1)) AS i
-        FROM tok
-    ),
-    grams AS (
-        SELECT concat_ws(' ', term, t1, t2, t3, t4) AS g
-        FROM (SELECT term,
-                     lead(term, 1) OVER w AS t1, lead(term, 2) OVER w AS t2,
-                     lead(term, 3) OVER w AS t3, lead(term, 4) OVER w AS t4
-              FROM pos WINDOW w AS (PARTITION BY doc_id ORDER BY i))
-        WHERE t4 IS NOT NULL
+    oracle=f"""
+    WITH grams AS (
+        SELECT unnest({tx.ngrams_sql('toks', 5)}) AS g
+        FROM (SELECT {tx.tokens_sql('text', False)} AS toks FROM documents)
     ),
     freq AS (
         SELECT g, CAST(COUNT(*) AS BIGINT) AS r FROM grams GROUP BY g
@@ -2621,10 +2300,10 @@ def text_good_turing_mass(spark, sf_dir):
 
 @register(
     "stats_zipf_slope",
-    oracle="""
+    oracle=f"""
     WITH freq AS (
         SELECT term, CAST(COUNT(*) AS BIGINT) AS f
-        FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
+        FROM (SELECT unnest({tx.tokens_sql('text', False)}) AS term FROM documents)
         GROUP BY term
     ),
     ranked AS (
@@ -2666,14 +2345,12 @@ def text_good_turing_mass(spark, sf_dir):
 )
 def stats_zipf_slope(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    freq = d.select(F.explode(F.split("text", " ")).alias("term")).groupBy(
+    freq = d.select(F.explode(tx.tokens("text", False)).alias("term")).groupBy(
         "term"
     ).agg(F.count(F.lit(1)).cast("long").alias("f"))
     # Rank over VOCABULARY grain — grows with the corpus (Heaps' law),
     # so it must not feed an empty-partition-spec window: two-pass
     # partitioned rank instead (operators/prefix.py).
-    from ..operators.prefix import partitioned_prefix_sum
-
     ranked = partitioned_prefix_sum(
         freq, [F.col("f").desc(), "term"], rank_col="rnk"
     ).select("f", "rnk")
@@ -2699,24 +2376,10 @@ def stats_zipf_slope(spark, sf_dir):
 @register(
     "stats_cohens_kappa_langid",
     oracle=f"""
-    WITH scores AS (
-        SELECT doc_id, lang,
-               {_lang_score_sql('en')} AS s_en,
-               {_lang_score_sql('es')} AS s_es,
-               {_lang_score_sql('de')} AS s_de,
-               {_lang_score_sql('fr')} AS s_fr
-        FROM documents
-    ),
+    WITH {tx.LANG_ID_SQL},
     conf AS (
-        SELECT lang AS labeled_lang,
-               CASE greatest(s_en, s_es, s_de, s_fr)
-                    WHEN 0 THEN 'und'
-                    WHEN s_en THEN 'en'
-                    WHEN s_es THEN 'es'
-                    WHEN s_de THEN 'de'
-                    ELSE 'fr' END AS predicted_lang,
-               CAST(COUNT(*) AS BIGINT) AS c
-        FROM scores GROUP BY 1, 2
+        SELECT labeled_lang, predicted_lang, CAST(COUNT(*) AS BIGINT) AS c
+        FROM pred GROUP BY 1, 2
     ),
     rows_m AS (SELECT labeled_lang AS cls, CAST(SUM(c) AS BIGINT) AS r
                FROM conf GROUP BY 1),
@@ -2818,23 +2481,7 @@ _KN_NLL_SQL = (
 @register(
     "text_kneser_ney_nll",
     oracle=f"""
-    WITH split_docs AS (
-        SELECT doc_id, lang, {_SPLIT_CASE} AS split,
-               string_split(lower(text), ' ') AS toks
-        FROM documents
-    ),
-    big AS (
-        SELECT doc_id, lang, split, toks[i] AS w1, toks[i + 1] AS w2
-        FROM (
-            SELECT doc_id, lang, split, toks,
-                   unnest(generate_series(1, len(toks) - 1)) AS i
-            FROM split_docs WHERE len(toks) >= 2
-        )
-    ),
-    lm AS (
-        SELECT w1, w2, CAST(COUNT(*) AS BIGINT) AS c_bg
-        FROM big WHERE split = 'train' GROUP BY w1, w2
-    ),
+    WITH {_BIGRAM_LM_SQL},
     ctx AS (
         SELECT w1, CAST(SUM(c_bg) AS BIGINT) AS c_ctx,
                CAST(COUNT(*) AS BIGINT) AS n1p
@@ -2853,12 +2500,7 @@ _KN_NLL_SQL = (
         CROSS JOIN types
         WHERE b.split <> 'train'
     )
-    SELECT doc_id, lang,
-           CAST(COUNT(*) AS BIGINT) AS n_bigrams,
-           round(CAST(SUM(nll_micro) AS DOUBLE) / COUNT(*) / 1000000, 6)
-             AS avg_nll
-    FROM scored GROUP BY doc_id, lang
-    """,
+    {_AVG_NLL_SQL}""",
     tags=("text", "pipeline", "evaluation"),
     doc=(
         "Interpolated Kneser-Ney bigram scoring (Kneser & Ney 1995; "
@@ -2876,32 +2518,9 @@ _KN_NLL_SQL = (
     ),
 )
 def text_kneser_ney_nll(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id",
-        "lang",
-        _split_col("doc_id").alias("split"),
-        F.split(F.lower("text"), " ").alias("toks"),
-    )
-    big = (
-        docs.filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            "lang",
-            "split",
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(toks)-1),"
-                    " i -> struct(toks[i-1] AS w1, toks[i] AS w2))"
-                )
-            ).alias("bg"),
-        )
-        .select("doc_id", "lang", "split", "bg.w1", "bg.w2")
-    )
+    big = tx.split_bigrams(tx.split_docs(table(spark, sf_dir, "documents"), True))
     lm = materialize(
-        big.filter(F.col("split") == "train")
-        .groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("long").alias("c_bg")),
+        _train_bigram_counts(big),
         "text_kneser_ney_nll bigrams: contexts, continuations, types and apply",
     )
     ctx = lm.groupBy("w1").agg(
@@ -2918,12 +2537,7 @@ def text_kneser_ney_nll(spark, sf_dir):
         .crossJoin(F.broadcast(types))
         .select("doc_id", "lang", F.expr(_KN_NLL_SQL).alias("nll_micro"))
     )
-    return scored.groupBy("doc_id", "lang").agg(
-        F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-        F.round(
-            F.sum("nll_micro").cast("double") / F.count(F.lit(1)) / 1000000, 6
-        ).alias("avg_nll"),
-    )
+    return _avg_nll(scored)
 
 
 # Shared NB scoring expression: log-prior + sum of token log-likelihoods,
@@ -2937,11 +2551,7 @@ _NB_TERM_SQL = (
 @register(
     "text_naive_bayes_langid",
     oracle=f"""
-    WITH split_docs AS (
-        SELECT doc_id, lang, {_SPLIT_CASE} AS split,
-               string_split(lower(text), ' ') AS toks
-        FROM documents
-    ),
+    WITH {tx.split_docs_sql(True)},
     train_tok AS (
         SELECT lang, unnest(toks) AS token
         FROM split_docs WHERE split = 'train'
@@ -3011,13 +2621,7 @@ _NB_TERM_SQL = (
     ),
 )
 def text_naive_bayes_langid(spark, sf_dir):
-    d = table(spark, sf_dir, "documents")
-    docs = d.select(
-        "doc_id",
-        "lang",
-        _split_col("doc_id").alias("split"),
-        F.split(F.lower("text"), " ").alias("toks"),
-    )
+    docs = tx.split_docs(table(spark, sf_dir, "documents"), True)
     train_tok = docs.filter(F.col("split") == "train").select(
         "lang", F.explode("toks").alias("token")
     )
@@ -3084,9 +2688,9 @@ def text_naive_bayes_langid(spark, sf_dir):
 
 @register(
     "text_js_divergence_sources",
-    oracle="""
+    oracle=f"""
     WITH tok AS (
-        SELECT source, unnest(string_split(lower(text), ' ')) AS token
+        SELECT source, unnest({tx.tokens_sql('text', True)}) AS token
         FROM documents
     ),
     st AS (
@@ -3146,9 +2750,7 @@ def text_naive_bayes_langid(spark, sf_dir):
 )
 def text_js_divergence_sources(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
-    tok = d.select(
-        "source", F.explode(F.split(F.lower("text"), " ")).alias("token")
-    )
+    tok = d.select("source", F.explode(tx.tokens("text", True)).alias("token"))
     st = materialize(
         tok.groupBy("source", "token")
         .agg(F.count(F.lit(1)).cast("long").alias("c")),
@@ -3193,21 +2795,18 @@ def text_js_divergence_sources(spark, sf_dir):
 
 @register(
     "text_heaps_vocab_growth",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS token
-        FROM documents
-    ),
+    oracle=f"""
+    WITH {tx.TERMS_SQL},
     first_seen AS (
-        SELECT token, CAST(MIN(doc_id) AS BIGINT) AS d0 FROM tok
-        GROUP BY token
+        SELECT term, CAST(MIN(doc_id) AS BIGINT) AS d0 FROM terms
+        GROUP BY term
     ),
     per_doc AS (
         SELECT t.doc_id,
                CAST(COUNT(*) AS BIGINT) AS n_tok,
                CAST(COUNT(CASE WHEN f.d0 = t.doc_id THEN 1 END) AS BIGINT)
                  AS n_new
-        FROM tok t JOIN first_seen f ON f.token = t.token
+        FROM terms t JOIN first_seen f ON f.term = t.term
         GROUP BY t.doc_id
     ),
     cum AS (
@@ -3268,9 +2867,7 @@ def text_js_divergence_sources(spark, sf_dir):
 def text_heaps_vocab_growth(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     tok = materialize(
-        d.select(
-            "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("token")
-        ),
+        d.select("doc_id", F.explode(tx.tokens("text", True)).alias("token")),
         "text_heaps_vocab_growth tokens: first-seen agg and the per-doc join",
     )
     first_seen = tok.groupBy("token").agg(
@@ -3289,8 +2886,6 @@ def text_heaps_vocab_growth(spark, sf_dir):
     # Two-pass PARTITIONED prefix sum (operators/prefix.py): a global
     # cumulative window over doc grain would single-partition-sort the
     # whole corpus — the shape the plan-contract suite bans.
-    from ..operators.prefix import partitioned_prefix_sum
-
     cum = materialize(
         partitioned_prefix_sum(
             per_doc, ["doc_id"], sum_cols=("n_tok", "n_new"), rank_col="rk"
@@ -3361,24 +2956,12 @@ def text_heaps_vocab_growth(spark, sf_dir):
 
 @register(
     "text_tfidf_cosine_pairs",
-    oracle="""
-    WITH tok AS (
-        SELECT doc_id,
-               unnest(list_transform(
-                   range(1, greatest(len(toks) - 1, 1)),
-                   i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])
-               )) AS term
-        FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
-              FROM documents)
+    oracle=f"""
+    WITH terms AS (
+        SELECT doc_id, unnest({tx.ngrams_sql('toks', 3)}) AS term
+        FROM (SELECT doc_id, {tx.tokens_sql('text', True)} AS toks FROM documents)
     ),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM tok GROUP BY doc_id, term
-    ),
-    df AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term
-    ),
-    n AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_docs FROM documents),
+    {tx.TF_SQL}, {tx.DF_SQL}, {tx.N_DOCS_SQL},
     -- pruned vector space: discriminative 3-token shingle terms only
     -- (df <= 16, the dedup family's MAX_SHINGLE_DF discipline — the
     -- fixture's 31-word unigram vocab makes every unigram hot);
@@ -3434,7 +3017,7 @@ def text_heaps_vocab_growth(spark, sf_dir):
 def text_tfidf_cosine_pairs(spark, sf_dir):
     dec = "decimal(38,0)"
     d = table(spark, sf_dir, "documents")
-    t = d.select("doc_id", F.split(F.lower("text"), " ").alias("toks"))
+    t = d.select("doc_id", tx.tokens("text", True).alias("toks"))
     toks = t.select(
         "doc_id",
         F.explode(
@@ -3451,14 +3034,10 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
             )
         ).alias("term"),
     )
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("long").alias("tf")
-    )
-    df_ = tf.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    n_docs = d.agg(F.count(F.lit(1)).cast("long").alias("n_docs"))
+    tf = tx.term_freq(toks)
     w = (
-        tf.join(df_, "term")
-        .crossJoin(F.broadcast(n_docs))
+        tf.join(tx.doc_freq(tf), "term")
+        .crossJoin(F.broadcast(tx.n_docs(d)))
         .where(F.col("df") <= 16)
         .select(
             "doc_id",
@@ -3512,16 +3091,16 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
 
 @register(
     "text_readability_flesch",
-    oracle="""
+    oracle=f"""
     WITH m AS (
         SELECT doc_id,
-               CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_words,
+               CAST(len({tx.tokens_sql('text', True)}) AS BIGINT) AS n_words,
                CAST(greatest(1, len(regexp_extract_all(text, '[.!?]+')))
                     AS BIGINT) AS n_sentences,
                -- syllables: maximal vowel groups, floored at 1 per word
                -- (vowelless tokens contribute the floor)
                CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
-                    + len(list_filter(string_split(lower(text), ' '),
+                    + len(list_filter({tx.tokens_sql('text', True)},
                                       t -> NOT regexp_matches(t, '[aeiouy]')))
                     AS BIGINT) AS n_syllables
         FROM documents
@@ -3551,7 +3130,8 @@ def text_tfidf_cosine_pairs(spark, sf_dir):
 def text_readability_flesch(spark, sf_dir):
     d = table(spark, sf_dir, "documents")
     lower = F.lower(F.col("text"))
-    n_words = F.size(F.split(lower, " ")).cast("long")
+    toks = tx.tokens("text", True)
+    n_words = F.size(toks).cast("long")
     n_sentences = F.greatest(
         F.lit(1).cast("long"),
         F.size(F.regexp_extract_all("text", F.lit("[.!?]+"), 0)).cast("long"),
@@ -3559,7 +3139,7 @@ def text_readability_flesch(spark, sf_dir):
     n_syllables = (
         F.size(F.regexp_extract_all(lower, F.lit("[aeiouy]+"), 0))
         + F.size(
-            F.filter(F.split(lower, " "), lambda t: ~t.rlike("[aeiouy]"))
+            F.filter(toks, lambda t: ~t.rlike("[aeiouy]"))
         )
     ).cast("long")
     m = d.select(
@@ -3658,17 +3238,9 @@ def text_ndcg_retrieval_eval(spark, sf_dir):
         "rk int, disc_nano long",
         [(i, round(1e9 / math.log2(i + 1.0))) for i in range(1, _NDCG_K + 1)],
     )
-    dcg = (
-        ranked.join(rel, "doc_id")
-        .join(F.broadcast(disc), "rk")
-        .agg(
-            F.sum(
-                (F.expr("shiftleft(1L, CAST(rel AS INT))") - 1)
-                * F.col("disc_nano")
-            )
-            .cast("long")
-            .alias("dcg_nano")
-        )
+    gain = F.sum((F.expr("shiftleft(1L, CAST(rel AS INT))") - 1) * F.col("disc_nano"))
+    dcg = ranked.join(rel, "doc_id").join(F.broadcast(disc), "rk").agg(
+        gain.cast("long").alias("dcg_nano")
     )
     # Ideal ranking from the corpus rel DISTRIBUTION (<= 5 distinct rel
     # values = len(_BM25_TERMS)+1), as the docstring promises: position
@@ -3686,14 +3258,7 @@ def text_ndcg_retrieval_eval(spark, sf_dir):
     ideal = F.broadcast(disc).join(
         bounds, (F.col("rk") > F.col("lo")) & (F.col("rk") <= F.col("hi"))
     )
-    idcg = ideal.agg(
-        F.sum(
-            (F.expr("shiftleft(1L, CAST(rel AS INT))") - 1)
-            * F.col("disc_nano")
-        )
-        .cast("long")
-        .alias("idcg_nano")
-    )
+    idcg = ideal.agg(gain.cast("long").alias("idcg_nano"))
     return dcg.crossJoin(idcg).select(
         "dcg_nano",
         "idcg_nano",
@@ -3752,10 +3317,9 @@ _TEXTRANK_ITERS = 3
 
 def _textrank_sql(iters: int) -> str:
     parts = [
-        """tok AS MATERIALIZED (
+        f"""tok AS MATERIALIZED (
         SELECT doc_id, i AS pos, toks[i] AS w
-        FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks
-              FROM documents),
+        FROM (SELECT doc_id, {tx.tokens_sql('text', True)} AS toks FROM documents),
              unnest(range(1, len(toks) + 1)) AS t(i)
         WHERE len(toks[i]) >= 4
     ),
@@ -3824,7 +3388,7 @@ def text_textrank_keywords(spark, sf_dir):
     tok = materialize(
         d.select(
             "doc_id",
-            F.posexplode(F.split(F.lower("text"), " ")).alias("pos", "w"),
+            F.posexplode(tx.tokens("text", True)).alias("pos", "w"),
         )
         .where(F.length("w") >= 4),
         "text_textrank_keywords positions: both window self-join sides",
@@ -3999,16 +3563,13 @@ _CONTAM_MIN = 4  # report maximal matches of >= this many tokens
     "contamination_longest_match",
     oracle=f"""
     WITH toks AS (
-        SELECT doc_id, string_split(lower(text), ' ') AS w FROM documents
+        SELECT doc_id, {tx.tokens_sql('text', True)} AS w FROM documents
     ),
     g AS (
-        SELECT doc_id, i,
-               array_to_string(list_slice(w, i, i + {_CONTAM_K - 1}), ' ') AS g
-        FROM (
-            SELECT doc_id, w,
-                   unnest(generate_series(1, len(w) - {_CONTAM_K - 1})) AS i
-            FROM toks WHERE len(w) >= {_CONTAM_K}
-        )
+        -- parallel unnests zip in DuckDB: each k-gram with its position
+        SELECT doc_id, unnest(range(1, len(w) - {_CONTAM_K - 2})) AS i,
+               unnest({tx.ngrams_sql('w', _CONTAM_K)}) AS g
+        FROM toks
     ),
     seeds AS (
         SELECT t.doc_id AS train_doc, t.i AS i,
@@ -4059,10 +3620,8 @@ _CONTAM_MIN = 4  # report maximal matches of >= this many tokens
     ),
 )
 def contamination_longest_match(spark, sf_dir):
-    from pyspark.sql import Window as W
-
     d = table(spark, sf_dir, "documents").select(
-        "doc_id", F.split(F.lower("text"), " ").alias("w")
+        "doc_id", tx.tokens("text", True).alias("w")
     ).filter(F.size("w") >= _CONTAM_K)
     grams = d.select(
         "doc_id",
@@ -4131,21 +3690,11 @@ _IMPACT_SQL = (
 @register(
     "text_impact_sparse_retrieval",
     oracle=f"""
-    WITH toks AS (
-        SELECT doc_id, unnest(string_split(lower(text), ' ')) AS term
-        FROM documents
-    ),
-    tf AS (
-        SELECT doc_id, term, CAST(COUNT(*) AS BIGINT) AS tf
-        FROM toks GROUP BY doc_id, term
-    ),
-    dfc AS (
-        SELECT term, CAST(COUNT(*) AS BIGINT) AS df FROM tf GROUP BY term
-    ),
+    WITH {tx.TERMS_SQL}, {tx.TF_SQL}, {tx.DF_SQL},
     stats AS (SELECT CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs FROM tf),
     impacts AS (
         SELECT doc_id, term, {_IMPACT_SQL} AS impact
-        FROM tf JOIN dfc USING (term) CROSS JOIN stats
+        FROM tf JOIN df USING (term) CROSS JOIN stats
     ),
     postings AS (
         SELECT term, doc_id, impact FROM (
@@ -4208,20 +3757,12 @@ _IMPACT_SQL = (
     ),
 )
 def text_impact_sparse_retrieval(spark, sf_dir):
-    from pyspark.sql import Window as W
-
-    toks = table(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split(F.lower("text"), " ")).alias("term")
-    )
-    tf = toks.groupBy("doc_id", "term").agg(
-        F.count(F.lit(1)).cast("bigint").alias("tf")
-    )
-    dfc = tf.groupBy("term").agg(F.count(F.lit(1)).cast("bigint").alias("df"))
+    tf = tx.term_freq(tx.term_rows(table(spark, sf_dir, "documents")))
     stats = tf.agg(
         F.countDistinct("doc_id").cast("bigint").alias("n_docs")
     )
     impacts = materialize(
-        tf.join(F.broadcast(dfc), "term")
+        tf.join(F.broadcast(tx.doc_freq(tf)), "term")
         .join(F.broadcast(stats))
         .select("doc_id", "term", F.expr(_IMPACT_SQL).alias("impact")),
         "text_impact_sparse_retrieval impacts: postings and query vectors",

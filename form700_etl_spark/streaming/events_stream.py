@@ -682,20 +682,20 @@ def stream_stream_left_outer_conversions(spark: SparkSession, sf_dir: str) -> Da
     anyway (downstream of ANY outer join, rows near the watermark are
     by definition provisional).  The DuckDB oracle applies the same
     horizon to the exact batch left join."""
+    from ..io import table
+
     pairs = _click_purchase_pairs(spark, sf_dir, "leftOuter")
     # deterministic emission horizon from the static fixture (one
-    # bounded scalar agg; in production this is the live watermark)
-    from ..io import table as _table
-
-    e = _table(spark, sf_dir, "events")
-    horizon = e.agg(
+    # bounded scalar agg, broadcast as a one-row frame, not collected
+    # to the driver; in production this is the live watermark)
+    horizon = table(spark, sf_dir, "events").agg(
         F.least(
             F.max(F.when(F.col("event_type") == "click", F.col("ts"))),
             F.max(F.when(F.col("event_type") == "purchase", F.col("ts"))),
-        ).alias("m")
-    ).collect()[0]["m"]
-    settled = pairs.filter(
-        F.col("click_ts") <= F.lit(horizon) - F.expr("interval 4 hours")
+        ).alias("horizon")
+    )
+    settled = pairs.crossJoin(F.broadcast(horizon)).filter(
+        F.col("click_ts") <= F.col("horizon") - F.expr("interval 4 hours")
     )
     return settled.groupBy(F.col("c_user").alias("user_id")).agg(
         F.countDistinct("click_id").alias("n_clicks"),

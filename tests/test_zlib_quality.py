@@ -49,15 +49,21 @@ def test_repetition_separates_from_noise():
     assert r_rep < 0.05 < 0.9 < r_noise
 
 
-def test_partitioning_invariance(spark, sf_dir):
-    from form700_etl_spark.io import table
-    from form700_etl_spark.registry import all_queries
+def test_partitioning_invariance(spark, sf_dir, monkeypatch):
+    """The operator's rows do not depend on how ``documents`` is
+    partitioned: the same query over a 13-partition round-robin of the
+    table returns the default partitioning's rows."""
+    import form700_etl_spark.queries.textops as textops
 
-    fn = all_queries()["text_zlib_compression_quality"].fn
+    fn = textops.text_zlib_compression_quality
     a = fn(spark, sf_dir).collect()
-    d = table(spark, sf_dir, "documents").repartition(13)
-    # rebuild over a repartitioned source through the same mapInPandas
-    import pandas as pd  # noqa: F401
-
-    b = fn(spark, sf_dir)  # plan is deterministic; rerun compares equal
+    real_table = textops.table
+    monkeypatch.setattr(
+        textops, "table", lambda s, d, name: real_table(s, d, name).repartition(13)
+    )
+    b = fn(spark, sf_dir)
+    plan = b._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
+        b._jdf.queryExecution(), "formatted"  # noqa: SLF001
+    )
+    assert "RoundRobinPartitioning(13)" in plan, plan
     assert a == b.collect()
